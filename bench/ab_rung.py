@@ -32,6 +32,20 @@ OVERLAYS: dict[str, dict[str, str]] = {
 }
 
 
+def _event_log_files(app_id: str) -> list[str]:
+    """Every file of the app's event log: the plain log, or all rolled
+    ``events_<n>_<app>`` segments in numeric order (a lexical sort puts
+    events_10 before events_2, and the first segment alone misses every
+    job after the first roll)."""
+    evp = os.path.join(EVDIR, app_id)
+    if os.path.exists(evp):
+        return [evp]
+    d = os.path.join(EVDIR, f"eventlog_v2_{app_id}")
+    parts = [p for p in os.listdir(d) if p.startswith("events_")]
+    parts.sort(key=lambda p: int(p.split("_")[1]))
+    return [os.path.join(d, p) for p in parts]
+
+
 def main() -> None:
     overlay_name = sys.argv[1] if len(sys.argv) > 1 else "base"
     n_base = int(sys.argv[2]) if len(sys.argv) > 2 else 20000
@@ -71,25 +85,21 @@ def main() -> None:
 
     n_jobs = n_stages = n_tasks = 0
     sh_write_mb = 0.0
-    evp = os.path.join(EVDIR, app_id)
-    if not os.path.exists(evp):
-        d = os.path.join(EVDIR, f"eventlog_v2_{app_id}")
-        parts = [p for p in os.listdir(d) if p.startswith("events_")]
-        evp = os.path.join(d, sorted(parts)[0])
-    with open(evp) as f:
-        for line in f:
-            ev = json.loads(line)
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                n_jobs += 1
-            elif e == "SparkListenerStageCompleted":
-                n_stages += 1
-                n_tasks += ev["Stage Info"]["Number of Tasks"]
-            elif e == "SparkListenerTaskEnd":
-                tm = ev.get("Task Metrics") or {}
-                sh_write_mb += (tm.get("Shuffle Write Metrics") or {}).get(
-                    "Shuffle Bytes Written", 0
-                ) / 1e6
+    for evp in _event_log_files(app_id):
+        with open(evp) as f:
+            for line in f:
+                ev = json.loads(line)
+                e = ev.get("Event")
+                if e == "SparkListenerJobStart":
+                    n_jobs += 1
+                elif e == "SparkListenerStageCompleted":
+                    n_stages += 1
+                    n_tasks += ev["Stage Info"]["Number of Tasks"]
+                elif e == "SparkListenerTaskEnd":
+                    tm = ev.get("Task Metrics") or {}
+                    sh_write_mb += (tm.get("Shuffle Write Metrics") or {}).get(
+                        "Shuffle Bytes Written", 0
+                    ) / 1e6
 
     print(json.dumps({
         "overlay": overlay_name, "n_base": n_base, "wall_s": wall,

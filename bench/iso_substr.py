@@ -87,7 +87,10 @@ def main() -> None:
 
     t0 = time.time()
     if variant == "v0":
-        pairs, hot = substr_candidates(fps, cfg, eager=True)
+        # scratch=[] as the pipeline passes it: the shipped path then
+        # materializes the join-back too (substr_candidates tags only
+        # when a release list is given)
+        pairs, hot = substr_candidates(fps, cfg, scratch=[], eager=True)
     elif variant == "v0copy":
         pairs = variant_candidates(fps)
     elif variant == "tag_cache":

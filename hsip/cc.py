@@ -3,8 +3,8 @@
 
 Converges in O(log^2 n) rounds (O(log n) observed); every round is two
 groupBy+join passes over the edge set. Lineage is truncated each round
-with localCheckpoint (plan growth is exponential otherwise — SURVEY.md
-§4.2.3); convergence is detected with a cheap (count, hash-sum) checksum
+through the engine's one barrier, barrier.materialize (plan growth is
+exponential otherwise — SURVEY.md §4.2.3); convergence is detected with a cheap (count, hash-sum) checksum
 action instead of a full set comparison.
 
 Output convention (X2): cluster_id = min id in the component; singletons
@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+
+from .barrier import job_label, materialize
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -113,6 +115,7 @@ def connected_components(
     max_iter: int = 50,
     checkpoint_dir: str | None = None,
     local_max_edges: int = 1_000_000,
+    release: list | None = None,
 ) -> DataFrame:
     """edges(a, b) -> (id, cluster_id); covers only ids present in edges.
 
@@ -139,13 +142,16 @@ def connected_components(
     (measured ~3.2 s per action on the 57k-turn bench corpus, turning
     the fast path into a net loss before this ordering).
 
-    Lineage truncation per round: ``localCheckpoint`` (executor-local,
-    fast — right for benchmarks and ephemeral jobs) unless
-    ``checkpoint_dir`` is set, in which case reliable ``checkpoint()``
-    writes each round to fault-tolerant storage — on a real cluster an
-    executor loss then recovers from the checkpoint instead of
-    recomputing a truncated lineage that no longer exists (SURVEY
-    §4.2.3; VERDICT.md r1 finding 7).
+    Lineage truncation per round: ``barrier.materialize`` — executor-
+    local blocks (fast — right for benchmarks and ephemeral jobs) unless
+    ``checkpoint_dir`` is set, in which case each round is also written
+    to fault-tolerant storage — on a real cluster an executor loss then
+    recovers from the checkpoint instead of recomputing a truncated
+    lineage that no longer exists (SURVEY §4.2.3; VERDICT.md r1 finding
+    7). Each round's blocks are dropped once the next round has
+    materialized; the returned frame reads the last round's, which go to
+    ``release`` (when given) for the caller to drop after it has
+    materialized the labels.
     """
     spark = edges.sparkSession
     sc = spark.sparkContext
@@ -154,27 +160,17 @@ def connected_components(
         if set(edges.columns) >= {"a", "b"}
         else edges.select(F.col(edges.columns[0]).alias("src"), F.col(edges.columns[1]).alias("dst"))
     ).filter(F.col("src") != F.col("dst"))
-    if checkpoint_dir:
-        sc.setCheckpointDir(checkpoint_dir)
-
-        def _trunc(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-        def _trunc(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
     # Dedupe + truncate FIRST (see docstring): one materialization, with
     # ambient AQE still on for this one genuinely-large shuffle (skew
     # handling matters for the initial distinct at 10^12-turn scale; the
     # AQE-off tuning below targets the loop's tiny per-round exchanges).
-    sc.setJobDescription("hsip:cc_edges")
-    e = _trunc(sel.distinct())
-    sc.setJobDescription(None)
+    e = materialize(sel.distinct(), "cc_edges", checkpoint_dir)
     if local_max_edges > 0:
-        sc.setJobDescription("hsip:cc_size_probe")
-        n_edges = e.count()  # flat scan of the truncated RDD — no shuffle
-        sc.setJobDescription(None)
+        with job_label(sc, "cc_size_probe"):
+            n_edges = e.count()  # flat scan of the truncated RDD — no shuffle
         if n_edges <= local_max_edges:
+            if release is not None:
+                release.append(e)
             return _local_union_find(e)
 
     # Latency-tune the iterative loop: each round is tiny (the edge set
@@ -197,10 +193,12 @@ def connected_components(
     try:
         prev = _checksum(e)
         for rnd in range(max_iter):
-            sc.setJobDescription(f"hsip:cc_round_{rnd}")
-            e = _trunc(_small_star(_large_star(e)))
-            cur = _checksum(e)
-            sc.setJobDescription(None)
+            with job_label(sc, f"cc_round_{rnd}"):
+                nxt = materialize(_small_star(_large_star(e)),
+                                  checkpoint_dir=checkpoint_dir)
+                cur = _checksum(nxt)
+            e.unpersist()  # nxt's lineage no longer reaches e's blocks
+            e = nxt
             if cur == prev:
                 break
             prev = cur
@@ -222,6 +220,8 @@ def connected_components(
             else:
                 spark.conf.set(k, v)
     # converged: star graphs, every edge points (member -> component min)
+    if release is not None:
+        release.append(e)
     members = e.select(F.col("src").alias("id"), F.col("dst").alias("cluster_id"))
     roots = e.select(F.col("dst").alias("id")).distinct().withColumn(
         "cluster_id", F.col("id")
@@ -234,10 +234,13 @@ def connected_components(
 def assign_clusters(
     all_ids: DataFrame, edges: DataFrame, id_col: str = "id",
     checkpoint_dir: str | None = None, local_max_edges: int = 1_000_000,
+    release: list | None = None,
 ) -> DataFrame:
-    """X2: full cluster table over every id; singletons -> own id."""
+    """X2: full cluster table over every id; singletons -> own id.
+    ``release``: see connected_components."""
     comp = connected_components(
-        edges, checkpoint_dir=checkpoint_dir, local_max_edges=local_max_edges
+        edges, checkpoint_dir=checkpoint_dir, local_max_edges=local_max_edges,
+        release=release,
     )
     ids = all_ids.select(F.col(id_col).alias("id")).distinct()
     return ids.join(comp, "id", "left").select(

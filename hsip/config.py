@@ -123,22 +123,31 @@ class DedupConfig:
     nfc: bool = False               # Unicode NFC (pandas UDF; off for oracle parity)
     # ops
     max_turns_per_conv: int = 10_000  # spill guard, logged when hit (§4.2.5)
-    # scale-proportional materialization barriers (VERDICT r4 item 1):
-    # the eager cache+count barriers that stop AQE's concurrent
-    # query-stage futures from rebuilding a shared subtree N times are a
-    # 2x win at 2.76M turns (BENCH/BASELINE.md r4) but pure serialization
-    # overhead on small corpora, where the rebuilt subtree is cheaper
-    # than the extra Spark actions (same-session A/B r5: +26% on the 57k
-    # bench). Below this doc count the pipeline keeps the caches lazy and
-    # skips the extra counts; at/above it the barriers engage. Calibrated
-    # between the measured regimes: the 57k-turn/2.8k-conv and 5k-doc
-    # bench corpora sit lazy; the 554k-turn/27k-conv and 2.76M-turn/136k-
-    # conv scaling ladders (where the barriers measured ~2x) sit eager.
-    # NON-SEMANTIC — identical output either way
+    # scale-proportional physical regime (VERDICT r4 item 1): at/above
+    # this doc count the pipeline runs the eager regime — AQE on at the
+    # ambient shuffle width, the channel-aware split verify, and the extra
+    # eager barriers (barrier.materialize) on the bucket join-backs and
+    # pruned hydration tables that stop AQE's concurrent query-stage
+    # futures from rebuilding a shared subtree N times, a 2x win at 2.76M
+    # turns (BENCH/BASELINE.md r4). Below it the latency regime runs: AQE
+    # off, a corpus-derived shuffle width, the fused verify and lazy
+    # caches in place of those extra barriers, whose jobs cost more than
+    # the rebuilt subtrees on small corpora (same-session A/B r5: +26% on
+    # the 57k bench). The reused stages (base, features, fingerprints,
+    # channel outputs, results) pass the barrier in both regimes.
+    # Calibrated between the measured regimes: the 57k-turn/2.8k-conv and
+    # 5k-doc bench corpora sit in the latency regime; the 554k-turn/27k-
+    # conv and 2.76M-turn/136k-conv scaling ladders sit eager.
+    # NON-SEMANTIC — identical output either way (pinned by
+    # tests/test_pipeline_e2e.py just below and just above the threshold)
     eager_barrier_min_docs: int = 25_000
-    # reliable CC lineage truncation: when set, connected-components rounds
-    # checkpoint to this fault-tolerant dir (survives executor loss) instead
-    # of localCheckpoint (bench-fast, executor-local). SURVEY §4.2.3.
+    # reliable barriers: when set, EVERY eager barrier (barrier.materialize:
+    # base, features, bucket tables, channel outputs, results, and each
+    # connected-components round) also writes a reliable checkpoint to
+    # this fault-tolerant dir, so an executor loss recovers from it;
+    # unset, barriers hold executor-local blocks only (fast, but an
+    # executor lost mid-run fails the run — lineage is truncated).
+    # SURVEY §4.2.3, DEPLOYMENT.md §3.
     # NON-SEMANTIC — excluded from the fingerprint (same clusters either way)
     cc_checkpoint_dir: str | None = None
 

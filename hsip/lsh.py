@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .barrier import materialize
 from .config import DedupConfig
 
 
@@ -43,6 +44,7 @@ def pairs_from_buckets(
     payload_cols: tuple[str, ...] = (),
     scratch: list | None = None,
     eager: bool = False,
+    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Generic bucket -> candidate-pair expansion with hot-bucket control.
 
@@ -89,7 +91,7 @@ def pairs_from_buckets(
     # in one task, while partitionBy windows sort the whole bucket in a
     # single task (the skew the cap exists to prevent). The join-back is
     # skew-safe too (AQE skew-join splits it). Callers must pass a
-    # CACHED/materialized `bucketed` — both branches scan it.
+    # materialized `bucketed` (barrier.materialize) — both branches scan it.
     #
     # bsz >= 2 (r6, guide §2.3): singleton buckets can never pair — the
     # self-join's id < id condition and the hot path (bsz > cap >= 1)
@@ -102,21 +104,21 @@ def pairs_from_buckets(
     sizes = bucketed.groupBy(*cols).agg(F.count(F.lit(1)).alias("bsz")) \
         .filter(F.col("bsz") >= 2)
     tagged = bucketed.join(sizes, cols)
-    # ``scratch`` + ``eager``: cache the join-back ONCE for its four
+    # ``scratch`` + ``eager``: materialize the join-back ONCE for its four
     # consumer legs (small x/y self-join, hot, hot_min; hot_stats is a
     # fifth). Without it each leg re-runs the size join over the full
     # bucket table — r6 rung iso (bench/iso_substr.py): the tagged table
-    # is 1.9M rows where the bucket table is 8.4M, and caching it cut
-    # the substr expansion 10.5 s -> 8.4 s with identical pairs. Gated
-    # exactly like the channel caches: eager count (AQE's concurrent
-    # leg futures would race a lazy cache and re-run the subtree per
-    # leg), caller owns the unpersist via ``scratch``. Latency-mode
-    # callers pass eager=False — at kB scale the extra materialization
-    # job costs more than the duplicated tiny joins it saves.
+    # is 1.9M rows where the bucket table is 8.4M, and materializing it
+    # cut the substr expansion 10.5 s -> 8.4 s with identical pairs. The
+    # barrier (barrier.materialize) keeps the bucket table's hash layout,
+    # so the legs join it with no exchange; caller releases it via
+    # ``scratch``; ``checkpoint_dir`` (DedupConfig.cc_checkpoint_dir) makes
+    # it a reliable checkpoint. Latency-mode callers pass eager=False — at
+    # kB scale the extra materialization job costs more than the
+    # duplicated tiny joins it saves.
     if eager and scratch is not None:
-        tagged = tagged.cache()
-        tagged.count()
-        scratch.append(tagged)
+        tagged = materialize(tagged, checkpoint_dir=checkpoint_dir,
+                             release=scratch)
 
     small = tagged.filter(F.col("bsz") <= cap).drop("bsz")
     x = small.alias("x")
@@ -211,7 +213,7 @@ def lsh_candidates(sig_df: DataFrame, cfg: DedupConfig,
     return pairs_from_buckets(
         bands, cfg.bucket_cap, channel=channel,
         hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
-        scratch=scratch, eager=eager,
+        scratch=scratch, eager=eager, checkpoint_dir=cfg.cc_checkpoint_dir,
     )
 
 

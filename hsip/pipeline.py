@@ -9,7 +9,8 @@ Two frontends:
                          (conv_id, turn_idx) order, then the same engine.
 
 Every stage builds a logical plan; materialization happens only at the
-stage checkpoint write (or cache for ephemeral runs). Candidate channels:
+stage checkpoint write (or the flat barrier, barrier.materialize, for
+ephemeral runs). Candidate channels:
   minhash_lsh — Jaccard near-dups      (shingle -> MinHash -> LSH bands)
   simhash     — near-identical text    (bit-vote fingerprint -> Hamming blocks)
   substr      — long exact substrings  (winnowed rolling-hash fingerprints)
@@ -27,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import verify as V
+from .barrier import job_label, materialize, measured_size_bytes
 from .catalog import Catalog
 from .cc import assign_clusters, canonical_representatives, quality_representatives
 from .checkpoint import Checkpointer, input_fingerprint
@@ -69,9 +71,10 @@ def _run_channels(spark: SparkSession, builders) -> list[DataFrame]:
     at small executor counts (BENCH/BASELINE.md). Submitting the chains
     from separate threads (one FAIR scheduler pool each — see session.py)
     lets one channel's tasks backfill another's straggler waves. Shared
-    upstream frames (base, features) are cached + eagerly materialized
-    BEFORE the threads start, so no subtree is recomputed concurrently
-    (the lazy-cache trap the eager counts exist to prevent).
+    upstream frames (base, features) pass an eager barrier
+    (barrier.materialize) before any consumer reads them, so no subtree
+    is recomputed concurrently (the lazy-cache trap the barriers exist
+    to prevent).
 
     Checkpointed runs are safe too: each stage writes its own table and
     the Recorder only appends driver-side. Channel order in the result is
@@ -101,25 +104,6 @@ def _run_channels(spark: SparkSession, builders) -> list[DataFrame]:
         return list(ex.map(run, builders))
 
 
-def _reused(df: DataFrame, reuse: bool, name: str = "") -> DataFrame:
-    """Cache + EAGERLY materialize frames that feed >1 downstream consumer.
-
-    Eager matters: AQE materializes independent query-stage futures
-    concurrently, so a lazily-cached subtree gets recomputed by every
-    concurrent consumer before the cache populates — measured 9,546
-    CPU-s of task time vs ~300 intrinsic on the 554k-turn corpus (each
-    channel re-running reassembly+normalization). One count() per reused
-    frame serializes the dependency order and caps total work.
-    """
-    if reuse:
-        df = df.cache()
-        sc = df.sparkSession.sparkContext
-        sc.setJobDescription(f"hsip:{name or 'materialize'}")
-        df.count()
-        sc.setJobDescription(None)
-    return df
-
-
 def run_documents(
     spark: SparkSession,
     docs: DataFrame,
@@ -135,7 +119,9 @@ def run_documents(
 
     With ``warehouse`` set, every stage is checkpointed through the
     Catalog and the run is resumable under the same run_id + config
-    fingerprint; without it, stages are cached in memory.
+    fingerprint; without it, reused stages pass the flat in-memory
+    barrier (barrier.materialize; reliable when cfg.cc_checkpoint_dir is
+    set).
     ``resume=False`` forces recomputation of every stage (checkpoints
     are overwritten) even when matching ones exist for the run_id.
     """
@@ -143,18 +129,25 @@ def run_documents(
     use_ckpt = warehouse is not None
     catalog = Catalog(spark, warehouse) if use_ckpt else None
 
-    # always cache base: >1 channel consumes it, and in checkpointed mode
-    # the input fingerprint below is an extra consumer
-    base = _reused(
+    # Always materialize base: >1 channel consumes it, and in checkpointed
+    # mode the input fingerprint below is an extra consumer. Eager
+    # barriers matter: AQE materializes independent query-stage futures
+    # concurrently, so a lazily-cached subtree gets recomputed by every
+    # concurrent consumer before the cache populates — measured 9,546
+    # CPU-s of task time vs ~300 intrinsic on the 554k-turn corpus (each
+    # channel re-running reassembly+normalization). One barrier job per
+    # reused frame serializes the dependency order and caps total work.
+    base = materialize(
         docs.select(
             F.col(id_col).cast("string").alias("id"), F.col(text_col).alias("text")
         ),
-        reuse=True,
+        "materialize", checkpoint_dir=cfg.cc_checkpoint_dir,
     )
 
     # stage fingerprint = config + INPUT content: resuming the same run_id
     # over changed data must recompute, not serve stale checkpoints
-    # (ADVICE.md r2). The input hash is one aggregate over the cached base.
+    # (ADVICE.md r2). The input hash is one aggregate over the materialized
+    # base.
     fp = cfg.fingerprint()
     if use_ckpt:
         fp = f"{fp}-{input_fingerprint(base)}"
@@ -166,6 +159,7 @@ def run_documents(
     rec = Recorder(spark, catalog, run_id) if use_ckpt else None
 
     stage_walls: dict[str, float] = {}
+    barrier_bytes: dict[str, int | None] = {"materialize": measured_size_bytes(base)}
 
     def stage(name: str, build, reuse: bool = True):
         # per-stage wall (driver-observed, includes materialization for
@@ -173,41 +167,30 @@ def run_documents(
         # folds into the downstream consumer). Surfaces in
         # PipelineResult.stats["stage_walls"] -> BENCH_r{N}.json so a
         # straggler hunt doesn't need the event log (VERDICT.md r3 item 9).
+        # Ephemeral mode labels the stage's jobs, the barriers nested in
+        # its build included, and materializes reused stages through the
+        # flat barrier: downstream consumers plan over one leaf instead
+        # of the stage's whole logical tree (PLANS.md).
         t0 = time.time()
         if ckpt:
             with StageTimer(rec, name):
                 out = ckpt.materialize(name, build)
             rec.lineage(name, out, fp)
         else:
-            out = _reused(build(), reuse, name)
+            with job_label(spark.sparkContext, name):
+                out = build()
+                if reuse:
+                    out = materialize(out, checkpoint_dir=cfg.cc_checkpoint_dir)
+                    barrier_bytes[name] = measured_size_bytes(out)
         stage_walls[name] = round(time.time() - t0, 3)
         return out
 
-    def flat_stage(name: str, build):
-        """Ephemeral-mode materialization into a FLAT plan: one eager
-        localCheckpoint job instead of cache+count. Same barrier, same
-        rows, but downstream consumers plan over a LogicalRDD instead of
-        re-canonicalizing the channel's full logical tree on every
-        action — the r6 rung event log shows 2.5 s + 1.4 s of pure
-        driver gap just planning the `verified` combine over the two
-        cached channel outputs (plan text ~12 MB). Checkpoint mode keeps
-        the parquet-backed stage() path, which is already flat."""
-        t0 = time.time()
-        sc = spark.sparkContext
-        sc.setJobDescription(f"hsip:{name}")
-        try:
-            out = build().localCheckpoint(eager=True)
-        finally:
-            sc.setJobDescription(None)
-        stage_walls[name] = round(time.time() - t0, 3)
-        return out
-
-    stats: dict = {"stage_walls": stage_walls}
+    stats: dict = {"stage_walls": stage_walls, "barrier_bytes": barrier_bytes}
     need_mh = "minhash_lsh" in channels
     need_sh = "simhash" in channels
 
     # scale-proportional barriers (config.py eager_barrier_min_docs):
-    # base is cached+materialized above, so this count is a metadata read
+    # base is materialized above, so this count is one flat scan
     n_docs = base.count()
     eager_barriers = n_docs >= cfg.eager_barrier_min_docs
     stats["eager_barriers"] = eager_barriers
@@ -226,7 +209,7 @@ def run_documents(
     # session defaults — AQE coalescing, skew splits and the wide
     # shuffle width are exactly right for data that size.
     _tuned_conf: dict[str, str] = {}
-    base_cached = base
+    base_flat = base
     if not eager_barriers:
         ambient = spark.conf.get("spark.sql.shuffle.partitions", "200")
         width = max(8, min(int(ambient), -(-n_docs // 500)))
@@ -237,8 +220,8 @@ def run_documents(
         # base materialized under the ambient (wide) conf; narrow the
         # downstream VIEW of it to the derived width so channel scans
         # don't schedule dozens of near-empty tasks per pass. coalesce
-        # is a narrow op over the already-populated cache — no shuffle,
-        # no recompute; base_cached keeps the handle unpersist() needs.
+        # is a narrow op over the materialized blocks — no shuffle, no
+        # recompute; base_flat keeps the handle unpersist() needs.
         if base.rdd.getNumPartitions() > 2 * width:
             base = base.coalesce(width)
     _saved_conf = {k: spark.conf.get(k, None) for k in _tuned_conf}
@@ -272,10 +255,11 @@ def run_documents(
                     stacklevel=2,
                 )
 
-        # caches whose LAST consumer is the channel verify phase — released
-        # in one sweep after the `verified` stage materializes, so a long
-        # session running many pipelines doesn't accrete executor storage
-        # (VERDICT.md r3 item 5). Threads only append (GIL-atomic).
+        # barriers and caches whose LAST consumer is the channel verify
+        # phase — released in one sweep after the `verified` stage
+        # materializes, so a long session running many pipelines doesn't
+        # accrete executor storage (VERDICT.md r3 item 5). Threads only
+        # append (GIL-atomic).
         scratch: list[DataFrame] = []
 
         # Exact-collapse pre-pass (config.py collapse_exact): byte-identical
@@ -402,11 +386,12 @@ def run_documents(
 
         def _mh_sh_channel() -> DataFrame:
             """Fused MinHash+SimHash chain (VERDICT.md r2 item 1): both
-            channels' buckets union into ONE cached table, expand through ONE
-            shuffle chain, and verify through ONE hydration against the
-            cached features table — roughly half the shuffle stages of the
-            two separate chains, with identical pairs and verdicts (pinned by
-            tests/test_e2e_oracle.py's 3-channel brute-force oracle)."""
+            channels' buckets union into ONE materialized table, expand
+            through ONE shuffle chain, and verify through ONE hydration
+            against the materialized features table — roughly half the
+            shuffle stages of the two separate chains, with identical pairs
+            and verdicts (pinned by tests/test_e2e_oracle.py's 3-channel
+            brute-force oracle)."""
             _ensure_features()
 
             def build_cands():
@@ -430,21 +415,20 @@ def run_documents(
                     F.col("table_id").alias("bkt_id"),
                     F.col("key_hash").alias("bkt_hash"), "simhash",
                 )
-                # cache + eager count: pairs_from_buckets contract (sizes
-                # groupBy and join-back both scan the bucket table)
-                both = (
-                    mh.unionByName(sh)
-                    .repartition("channel", "bkt_id", "bkt_hash")
-                    .cache()
+                # eager barrier: pairs_from_buckets contract (sizes groupBy
+                # and join-back both scan the bucket table, which keeps its
+                # hash layout through the barrier)
+                both = materialize(
+                    mh.unionByName(sh).repartition("channel", "bkt_id", "bkt_hash"),
+                    checkpoint_dir=cfg.cc_checkpoint_dir, release=scratch,
                 )
-                both.count()
-                scratch.append(both)
                 pairs, hot = pairs_from_buckets(
                     both, cfg.bucket_cap,
                     bucket_cols=("channel", "bkt_id", "bkt_hash"), channel=None,
                     hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
                     payload_cols=("simhash",),
                     scratch=scratch, eager=eager_barriers,
+                    checkpoint_dir=cfg.cc_checkpoint_dir,
                 )
                 if rec:
                     for r in hot.groupBy("channel").count().collect():
@@ -460,20 +444,18 @@ def run_documents(
             # `verified` job on the main thread, serializing it against the
             # other channel's tail; materializing here overlaps the two
             # channels' verify work (the FAIR-pool design _run_channels
-            # exists for). Ephemeral mode flattens the plan too
-            # (flat_stage) so the combine/stats/CC actions stop paying
-            # multi-second canonicalization of the channel's full tree.
-            build_v = lambda: V.verify_jaccard_hamming(  # noqa: E731
-                cands, feats, cfg, scratch=scratch, eager=eager_barriers)
-            if use_ckpt:
-                out = stage("verify_mh_sh", build_v)
-                scratch.append(out)
-            else:
-                out = flat_stage("verify_mh_sh", build_v)
+            # exists for). The flat barrier also spares the combine/stats/CC
+            # actions the multi-second canonicalization of the channel's
+            # full tree (r6 rung event log: 2.5 s + 1.4 s of driver gap
+            # planning `verified` over two cached channel outputs).
+            out = stage("verify_mh_sh", lambda: V.verify_jaccard_hamming(
+                cands, feats, cfg, scratch=scratch, eager=eager_barriers))
+            scratch.append(out)
             return out
 
         def _sub_channel() -> DataFrame:
-            # cache: the bucket expansion filters this table along two branches
+            # materialized: the bucket expansion filters this table along two
+            # branches
             fps = stage("substr_fps", lambda: fingerprint_table(chan_base, "id", "text", cfg))
             scratch.append(fps)
 
@@ -481,12 +463,11 @@ def run_documents(
                 pairs, hot = substr_candidates(fps, cfg, scratch=scratch,
                                                eager=eager_barriers)
                 if rec:
-                    # cache + eager count BEFORE the metric scans: without it
-                    # the hot.count() + truncation filter re-execute the whole
+                    # materialize BEFORE the metric scans: without it the
+                    # hot.count() + truncation filter re-execute the whole
                     # candidate chain in warehouse runs (VERDICT.md r3 item 3)
-                    pairs = pairs.cache()
-                    pairs.count()
-                    scratch.append(pairs)
+                    pairs = materialize(pairs, checkpoint_dir=cfg.cc_checkpoint_dir,
+                                        release=scratch)
                     rec.metric("substr_candidates", "hot_fingerprints_star_paired", hot.count())
                     rec.metric(
                         "substr_candidates", "anchor_truncated_pairs",
@@ -499,21 +480,17 @@ def run_documents(
             sub_pairs = stage("substr_candidates", build_substr, reuse=False)
             # same in-thread materialization as verify_mh_sh (r6): the span
             # UDF runs here, overlapped with the mh_sh channel, instead of
-            # inside the serial `verified` job; flat in ephemeral mode
-            build_v = lambda: verify_substr(  # noqa: E731
+            # inside the serial `verified` job
+            out = stage("verify_substr", lambda: verify_substr(
                 sub_pairs, chan_base, "id", "text", cfg,
-                scratch=scratch, eager=eager_barriers)
-            if use_ckpt:
-                out = stage("verify_substr", build_v)
-                scratch.append(out)
-            else:
-                out = flat_stage("verify_substr", build_v)
+                scratch=scratch, eager=eager_barriers))
+            scratch.append(out)
             return out
 
         builders = []
         if need_mh and need_sh and cfg.fused_kernel:
-            # fused-kernel runs hold (shingles, sig, simhash) in one cached
-            # frame -> the unified single-hydration chain applies
+            # fused-kernel runs hold (shingles, sig, simhash) in one
+            # materialized frame -> the unified single-hydration chain applies
             builders.append(("mh_sh", _mh_sh_channel))
         else:
             if need_mh:
@@ -530,38 +507,22 @@ def run_documents(
             # (a, b, channels, verdict) shape as channel output
             verified_parts = [*verified_parts, exact_edges]
 
-        if use_ckpt:
-            verified = stage("verified", lambda: V.combine_verified(*verified_parts))
-        else:
-            # Ephemeral mode: materialize ONCE, straight into a flat plan.
-            # Keeping the full 3-channel logical plan behind a cached
-            # `verified` makes every downstream action (metric counts, the
-            # CC seed job, representatives) re-run Catalyst over that
-            # thousand-node plan — the event-log decomposition measured a
-            # ~14 s pure-driver gap on the 2.76M-turn corpus just planning
-            # the CC seed (BENCH/BASELINE.md round 5) — and a cached-only
-            # `verified` is fragile: the scratch release below and the final
-            # base.unpersist() clear dependent cache buffers, so every later
-            # consumer re-executed the whole verify DAG. Round 5 cached +
-            # counted and THEN localCheckpointed (two materialization jobs
-            # back-to-back); the eager localCheckpoint alone is the same
-            # barrier with the same flat result, one job fewer (r6).
-            # (Checkpoint mode already reads back from parquet — flat plan.)
-            _t0 = time.time()
-            sc = spark.sparkContext
-            sc.setJobDescription("hsip:verified")
-            verified = V.combine_verified(*verified_parts).localCheckpoint(
-                eager=True
-            )
-            sc.setJobDescription(None)
-            stage_walls["verified"] = round(time.time() - _t0, 3)
-        # `verified` just materialized (cache+count or checkpoint write), so
-        # every feature/band/bucket cache has served its last consumer —
-        # release executor storage before CC runs (VERDICT.md r3 item 5).
-        # Downstream stages touch only `base` + `verified`.
-        for cached in scratch:
-            cached.unpersist()
-        scratch.clear()
+        # Materialize `verified` ONCE, straight into a flat plan (parquet in
+        # checkpoint mode, the flat barrier otherwise). Keeping the full
+        # 3-channel logical plan behind a cached `verified` made every
+        # downstream action (metric counts, the CC seed job,
+        # representatives) re-run Catalyst over that thousand-node plan —
+        # the event-log decomposition measured a ~14 s pure-driver gap on
+        # the 2.76M-turn corpus just planning the CC seed (BENCH/BASELINE.md
+        # round 5) — and a cached-only `verified` is fragile: the scratch
+        # release below and the final base release clear dependent cache
+        # buffers, so every later consumer re-executed the verify DAG.
+        verified = stage("verified", lambda: V.combine_verified(*verified_parts))
+        # `verified` just materialized, so every feature/band/bucket
+        # barrier and cache has served its last consumer — release executor
+        # storage before CC runs (VERDICT.md r3 item 5). Downstream stages
+        # touch only `base` + `verified`.
+        _release(scratch)
         # Work counters: one cheap scan of the flat pair table (the smallest
         # frame in the pipeline). A wall-clock efficiency reading alone can't
         # distinguish "the engine scaled badly" from "the workload grew
@@ -591,32 +552,21 @@ def run_documents(
                 for ch in r["chs"]:
                     _by_ch[ch] = _by_ch.get(ch, 0) + r["n"]
         stats["dup_pairs_by_channel"] = _by_ch
-        if use_ckpt:
-            clusters = stage(
-                "clusters",
-                lambda: assign_clusters(
-                    base, V.edges(verified), id_col="id",
-                    checkpoint_dir=cfg.cc_checkpoint_dir,
-                ),
-            )
-        else:
-            # Same single-materialization truncation as `verified` above,
-            # same reason: the clusters plan references `base`, whose
-            # unpersist at return would clear dependent cache buffers and
-            # make every post-return action (the representatives stage's
-            # consumers, catalog writes, API callers) recompute through the
-            # join. One flat copy of the (id, cluster_id) table — the
-            # smallest frame in the pipeline — in one job (r5 cached+counted
-            # then localCheckpointed: two).
-            _t0 = time.time()
-            sc = spark.sparkContext
-            sc.setJobDescription("hsip:clusters")
-            clusters = assign_clusters(
+        # The clusters stage materializes (id, cluster_id) — the smallest
+        # frame in the pipeline — so post-return actions (the
+        # representatives stage's consumers, catalog writes, API callers)
+        # scan it instead of recomputing through the join with `base`,
+        # whose blocks are released at return. CC's own last-round blocks
+        # are released as soon as the labels exist.
+        cc_blocks: list[DataFrame] = []
+        clusters = stage(
+            "clusters",
+            lambda: assign_clusters(
                 base, V.edges(verified), id_col="id",
-                checkpoint_dir=cfg.cc_checkpoint_dir,
-            ).localCheckpoint(eager=True)
-            sc.setJobDescription(None)
-            stage_walls["clusters"] = round(time.time() - _t0, 3)
+                checkpoint_dir=cfg.cc_checkpoint_dir, release=cc_blocks,
+            ),
+        )
+        _release(cc_blocks)
         if cfg.rep_score_col is not None:
             # keep-best policy: score is a SQL expression over the INPUT
             # frame (base only carries id/text); ids align because base
@@ -683,7 +633,7 @@ def run_documents(
             stats["computed_stages"] = list(ckpt.computed)
 
         # result frames (verified/clusters/reps) are materialized; base has no
-        # remaining consumer
+        # remaining consumer. Result frames drop their blocks on unpersist().
     finally:
         # restore the session's ambient shuffle/AQE posture whether or
         # not the run succeeded (the session is shared: tests and
@@ -693,12 +643,18 @@ def run_documents(
                 spark.conf.unset(_k)
             else:
                 spark.conf.set(_k, _v)
-    base_cached.unpersist()
+    base_flat.unpersist()
     return PipelineResult(
         clusters=clusters, verified=verified, representatives=reps,
         run_id=run_id, stats=stats, duplicate_spans=spans,
         docs_cleaned=cleaned,
     )
+
+
+def _release(frames: list[DataFrame]) -> None:
+    for df in frames:
+        df.unpersist()
+    frames.clear()
 
 
 def run_transcripts(

@@ -123,19 +123,24 @@ def get_spark(
         .config("spark.scheduler.mode", "FAIR")
         # spark.sql.optimizer.canChangeCachedPlanOutputPartitioning stays
         # at the Spark DEFAULT (false), deliberately: the engine's
-        # repartition(col).cache() sites (bucket/fingerprint tables,
-        # pair-pruned features) exist to make ONE exchange feed every
-        # consumer leg, and the true setting erases the cached
-        # HashPartitioning guarantee, so each pairs_from_buckets leg
-        # re-exchanges the full cached table (r6 event log at the
-        # 554k-turn rung: 4.7 GB shuffle-written vs 1.8 GB, 75 jobs vs
-        # 48, wall 63-77 s vs 41.7 s, alternating A/B in bench/ab_rung
-        # .py; bit-identical labels). The small-corpus task-count
-        # problem it once solved (64-task scans of kB caches) is owned
-        # by the pipeline's latency mode now (AQE off + derived width
-        # below eager_barrier_min_docs), where this flag is never
-        # consulted — bench-scale A/B confirms neutrality
-        # (bench/ab_conf.py cachedpart_off).
+        # repartition(col) tables (bucket/fingerprint tables, pair-pruned
+        # features) exist to make ONE exchange feed every consumer leg,
+        # and the true setting erases a cached plan's HashPartitioning
+        # guarantee, so each pairs_from_buckets leg re-exchanged the full
+        # cached table (r6 event log at the 554k-turn rung: 4.7 GB
+        # shuffle-written vs 1.8 GB, 75 jobs vs 48, wall 63-77 s vs
+        # 41.7 s, alternating A/B in bench/ab_rung.py; bit-identical
+        # labels). The eager barriers (barrier.materialize) now keep the
+        # layout on their own, planning in a session clone with the same
+        # final-stage posture the false setting gives the CacheManager;
+        # the flag still governs the remaining caches (per-channel
+        # builders, latency-mode lazy caches). The small-corpus
+        # task-count problem it once solved is owned by the pipeline's
+        # latency mode (AQE off + derived width below
+        # eager_barrier_min_docs), where this flag is never consulted.
+        # The bench-scale neutrality A/B (bench/ab_conf.py
+        # cachedpart_off) was measured on the tree before the revert;
+        # that overlay sets the default today and measures nothing.
     )
     pool_file = _fair_pool_file()
     if pool_file:

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from .barrier import fits_broadcast, materialize
 from .config import DedupConfig
 from .normalize import norm_text_col
 
@@ -209,16 +210,18 @@ def substr_candidates(
     # query-stage futures CONCURRENTLY, so each branch recomputes it —
     # event-log r4 at 2.76M turns: EIGHT copies of the 41.7M-row
     # fingerprint exchange (4.1 GB written, 333M records re-read, 820 s
-    # of the hi rung's executor time). cache + eager count is the same
+    # of the hi rung's executor time). The eager barrier is the same
     # contract pairs_from_buckets documents for its bucket table.
     # ``eager=False`` (small corpora, cfg.eager_barrier_min_docs) keeps
-    # the cache lazy: the rebuilt exchange is cheaper there than the
-    # extra materialization action (VERDICT r4 item 1 A/B).
-    fp = fp_df.repartition("fp_hash").cache()
+    # a lazy cache instead: the rebuilt exchange is cheaper there than
+    # the extra materialization action (VERDICT r4 item 1 A/B).
+    fp = fp_df.repartition("fp_hash")
     if eager:
-        fp.count()
-    if scratch is not None:
-        scratch.append(fp)
+        fp = materialize(fp, checkpoint_dir=cfg.cc_checkpoint_dir, release=scratch)
+    else:
+        fp = fp.cache()
+        if scratch is not None:
+            scratch.append(fp)
     # (id, fp_hash) is unique (per-doc hash dedupe in fingerprint_table),
     # so the row count per fp_hash equals the distinct-doc bucket size.
     # groupBy (map-side combine) + join-back, not a window — see lsh.py.
@@ -230,17 +233,16 @@ def substr_candidates(
     sizes = fp.groupBy("fp_hash").agg(F.count(F.lit(1)).alias("bsz")) \
         .filter(F.col("bsz") >= 2)
     tagged = fp.join(sizes, "fp_hash")
-    # Cache the join-back ONCE for its four consumer legs (x/y self-join,
-    # hot, hot_min) — same contract and rationale as pairs_from_buckets:
-    # eager-only (a lazy cache races AQE's concurrent leg futures), the
-    # caller unpersists via ``scratch``. r6 rung iso (bench/iso_substr
-    # .py): 10.5 s -> 8.4 s for the expansion, identical pairs — the
-    # pairable join-back is 1.9M rows vs the 8.4M-row fingerprint table
-    # each leg previously re-joined.
+    # Materialize the join-back ONCE for its four consumer legs (x/y
+    # self-join, hot, hot_min) — same contract and rationale as
+    # pairs_from_buckets: eager-only, the caller releases it via
+    # ``scratch``. r6 rung iso (bench/iso_substr.py): 10.5 s -> 8.4 s for
+    # the expansion, identical pairs — the pairable join-back is 1.9M
+    # rows vs the 8.4M-row fingerprint table each leg previously
+    # re-joined.
     if eager and scratch is not None:
-        tagged = tagged.cache()
-        tagged.count()
-        scratch.append(tagged)
+        tagged = materialize(tagged, checkpoint_dir=cfg.cc_checkpoint_dir,
+                             release=scratch)
 
     small = tagged.filter(F.col("bsz") <= cap).drop("bsz")
     x, y = small.alias("x"), small.alias("y")
@@ -427,7 +429,7 @@ def verify_substr(pairs: DataFrame, docs: DataFrame, id_col: str, text_col: str,
     materialized (VERDICT.md r3 item 5).
     ``eager=False`` (small corpora, cfg.eager_barrier_min_docs): the
     pruned text table stays a lazily-cached semi-join — no repartition
-    exchange, no count barrier. At that scale both hydration joins
+    exchange, no materialization barrier. At that scale both hydration joins
     broadcast the (tiny) pruned table and the two broadcast subtrees
     canonicalize identically, so one build serves both; the eager
     barrier + explicit hash layout only pay off once the pruned table is
@@ -444,13 +446,19 @@ def verify_substr(pairs: DataFrame, docs: DataFrame, id_col: str, text_col: str,
     #      a semi-join prunes the table to the candidate-touched subset
     #      (bounds cache/shuffle by candidates, not corpus; a 6g 1-core
     #      executor OOM'd at 2.76M turns caching the full corpus);
-    #   2. hash-partition by id once and cache the post-shuffle layout so
-    #      both joins consume the cached partitioning — one pruned
-    #      exchange total. Eager count: lazy cache + AQE recomputes the
-    #      subtree per concurrent consumer (memory note).
-    pairs = pairs.cache()
-    if scratch is not None:
-        scratch.append(pairs)
+    #   2. hash-partition by id once and materialize the post-shuffle
+    #      layout so both joins consume its partitioning — one pruned
+    #      exchange total, and when the pruned table measures under the
+    #      broadcast threshold, no exchange of the pair rows either.
+    # the pair table feeds the id prune and both hydration joins: eager
+    # runs materialize it (one leaf to plan over, as in
+    # verify_jaccard_hamming), latency runs keep a lazy cache
+    if eager:
+        pairs = materialize(pairs, checkpoint_dir=cfg.cc_checkpoint_dir, release=scratch)
+    else:
+        pairs = pairs.cache()
+        if scratch is not None:
+            scratch.append(pairs)
     # one explode scan, not a two-branch union: under AQE the union legs
     # materialize as separate query-stage futures, each re-executing the
     # uncached candidate chain (r6 event-log job swarm)
@@ -467,12 +475,14 @@ def verify_substr(pairs: DataFrame, docs: DataFrame, id_col: str, text_col: str,
         norm_text_col(text_col, cfg).alias("t"),
     ).join(pair_ids, "id", "left_semi")
     if eager:
-        normed = normed.repartition("id")
-    normed = normed.cache()
-    if eager:
-        normed.count()
-    if scratch is not None:
-        scratch.append(normed)
+        normed = materialize(normed.repartition("id"),
+                             checkpoint_dir=cfg.cc_checkpoint_dir, release=scratch)
+        n_side = F.broadcast(normed) if fits_broadcast(normed) else normed
+    else:
+        normed = normed.cache()
+        if scratch is not None:
+            scratch.append(normed)
+        n_side = normed
     h_pairs = pairs
     if not eager:
         # latency mode runs a narrow corpus-derived shuffle width (~8);
@@ -483,7 +493,6 @@ def verify_substr(pairs: DataFrame, docs: DataFrame, id_col: str, text_col: str,
         # slot (r6; the eager path already runs at the ambient width).
         sc = pairs.sparkSession.sparkContext
         h_pairs = pairs.repartition(max(sc.defaultParallelism, 8))
-    n_side = normed
     h = (
         h_pairs.join(n_side, h_pairs["a"] == n_side["id"]).drop("id")
         .withColumnRenamed("t", "t_a")
@@ -930,8 +939,7 @@ def substr_decontaminate(
     )
     if scratch is None:
         # materialize before releasing the caches verify_substr holds
-        out = out.cache()
-        out.count()
+        out = materialize(out, checkpoint_dir=cfg.cc_checkpoint_dir)
         for c in own_scratch:
             c.unpersist()
     return out

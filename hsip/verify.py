@@ -13,27 +13,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .barrier import fits_broadcast, materialize
 from .config import DedupConfig
 
 # Build-side budget for the latency-mode broadcast hydrations below.
 # 256 MB is comfortably inside the pipeline's driver budget (session.py
 # HSIP_DRIVER_MEM 24g default) and far under Spark's 8 GB broadcast
-# hard limit; the gate reads MEASURED bytes, so an oversized corpus
-# simply keeps the shuffle-join shape.
+# hard limit; the gate reads MEASURED bytes (barrier.fits_broadcast), so
+# an oversized corpus simply keeps the shuffle-join shape.
 _BCAST_HYDRATE_MAX_BYTES = 256 * 1024 * 1024
-
-
-def measured_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's sizeInBytes for ``df`` — ACCURATE when df is a
-    materialized cache (InMemoryRelation carries real batch stats), a
-    coarse logical estimate otherwise. Callers gate optimizations on
-    "known small": a huge or garbage estimate just declines the
-    optimization, so the estimate-vs-measured distinction is fail-safe.
-    """
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover - py4j edge
-        return None
 
 
 def hydrate(pairs: DataFrame, features: DataFrame, cols: list[str],
@@ -56,7 +44,7 @@ def hydrate(pairs: DataFrame, features: DataFrame, cols: list[str],
     reuse one build, the pair rows stream with their existing (re-spread)
     partitioning, and the 4-exchange sort-merge chain — which re-ships
     the fat feature arrays twice through the latency mode's narrow
-    shuffle width — disappears. Callers gate on measured_size_bytes."""
+    shuffle width — disappears. Callers gate on barrier.fits_broadcast."""
     f = features.select("id", *cols)
     if prune:
         # one explode scan, not a two-branch union: under AQE the two
@@ -166,8 +154,8 @@ def verify_jaccard_hamming(pairs: DataFrame, features: DataFrame,
                       verdict is a projection — zero joins for the
                       channel whose candidate count can go quadratic;
       minhash rows -> (shingles) hydration, pruned to pair-touched ids
-                      and cached once (AQE materializes both join sides
-                      concurrently, so an uncached pruned subtree would
+                      and materialized once (AQE materializes both join
+                      sides concurrently, so a lazy pruned subtree would
                       build twice): exact-Jaccard bytes scale with
                       MINHASH pairs only, never with the corpus.
 
@@ -189,36 +177,36 @@ def verify_jaccard_hamming(pairs: DataFrame, features: DataFrame,
     if not eager:
         return _verify_jh_fused_small(pairs, features, cfg)
     # the pair table feeds four subplans (two channel filters + two
-    # pair-id scans for pruning); callers pass it UNCACHED in ephemeral
-    # runs, so materialize it once here — without this every scan re-runs
-    # the whole candidate expansion chain (the lazy-cache/AQE trap; same
-    # pattern as verify_substr)
-    pairs = pairs.cache()
-    if scratch is not None:
-        scratch.append(pairs)
+    # pair-id scans for pruning); callers pass it lazy in ephemeral runs,
+    # so materialize it once here — without this every scan re-runs the
+    # whole candidate expansion chain (the lazy-cache/AQE trap; same
+    # pattern as verify_substr). A barrier rather than a lazy cache: the
+    # pruning and hydration queries then plan over one leaf instead of
+    # the expansion chain's tree.
+    pairs = materialize(pairs, checkpoint_dir=cfg.cc_checkpoint_dir, release=scratch)
     is_mh = F.col("channel") == "minhash_lsh"
     mh_pairs = pairs.filter(is_mh).drop("simhash_a", "simhash_b")
     # single explode scan (vs a two-leg union) — same AQE duplicated-
     # subtree rationale as hydrate()
     pair_ids = mh_pairs.select(F.explode(F.array("a", "b")).alias("id"))
-    f = (
+    # hash-partition ONCE and materialize the post-shuffle layout: both
+    # hydration joins consume the barrier's HashPartitioning(id) directly
+    # (the pair side adopts its width), so the pruned shingle arrays cross
+    # the network one time, not once per join — the same one-exchange
+    # contract verify_substr's eager path documents for its text table.
+    # The barrier also stops AQE's concurrent join-side futures from
+    # building the pruned subtree twice (eager=False took the fused
+    # early-return above, so this split path always materializes).
+    f = materialize(
         features.select("id", "shingles")
         .join(pair_ids, "id", "left_semi")
-        # hash-partition ONCE and cache the post-shuffle layout: both
-        # hydration sort-merge joins consume the cached
-        # HashPartitioning(id) directly (the pair side adopts its
-        # width), so the pruned shingle arrays cross the network one
-        # time, not once per join — the same one-exchange contract
-        # verify_substr's eager path documents for its text table.
-        .repartition("id")
-        .cache()
+        .repartition("id"),
+        checkpoint_dir=cfg.cc_checkpoint_dir, release=scratch,
     )
-    # without the count, AQE's concurrent join-side futures build the
-    # pruned subtree twice (eager=False took the fused early-return
-    # above, so this split path always materializes)
-    f.count()
-    if scratch is not None:
-        scratch.append(f)
+    if fits_broadcast(f):
+        # known small: broadcast it into both joins, as Catalyst did when
+        # this was a cache with measured stats — the pair rows never shuffle
+        f = F.broadcast(f)
     mh = mh_pairs.join(f, mh_pairs["a"] == f["id"]).drop("id") \
         .withColumnRenamed("shingles", "shingles_a")
     fb = f.alias("fb")
@@ -262,17 +250,15 @@ def _verify_jh_fused_small(pairs: DataFrame, features: DataFrame,
     pairs = pairs.repartition(max(sc.defaultParallelism, 8))
     has_payload = "simhash_a" in pairs.columns
     cols = ["shingles"] if has_payload else ["shingles", "simhash"]
-    # ``features`` is cached + counted before any channel verifies
-    # (pipeline._ensure_features), so this is the MEASURED cache size.
+    # ``features`` passes the pipeline's barrier before any channel
+    # verifies (pipeline._ensure_features), which measured its blocks.
     # Known-small -> broadcast hydration: one reused build replaces the
     # two sort-merge joins whose narrow-width exchanges ship the shingle
     # arrays twice and pin the Jaccard projection at the latency shuffle
     # width instead of the re-spread core count (r6: live transcript-
     # scale plan had 4 SMJ / 8 Exchange to verify 1,841 pairs).
-    fsize = measured_size_bytes(features)
     h = hydrate(pairs, features, cols,
-                broadcast=fsize is not None
-                and fsize <= _BCAST_HYDRATE_MAX_BYTES)
+                broadcast=fits_broadcast(features, _BCAST_HYDRATE_MAX_BYTES))
     is_mh = F.col("channel") == "minhash_lsh"
     jac = F.when(is_mh, jaccard_col())
     ham = F.when(~is_mh, hamming_col(h))

@@ -191,24 +191,49 @@ def test_input_fingerprint_full_row_sensitivity(spark):
 
 
 def test_pipeline_releases_intermediate_caches(spark):
-    """Long-session hygiene (VERDICT.md r3 item 5): an ephemeral pipeline
-    run must leave ONLY its three result frames in the SQL cache — every
-    feature/band/bucket/base intermediate is unpersisted once `verified`
-    materializes, so sessions running many pipelines don't accrete
-    executor storage. (CC's localCheckpoint blocks live outside the
-    CacheManager and are reclaimed by the ContextCleaner.)"""
+    """Long-session hygiene (VERDICT.md r3 item 5, ADVICE r6): an ephemeral
+    pipeline run must leave ONLY its three result frames holding blocks —
+    every feature/band/bucket/base barrier and cache, the channel verify
+    outputs and CC's checkpoint blocks are released during the run, so
+    sessions running many pipelines don't accrete executor storage. Checked
+    on the SparkContext's persisted RDDs, which cover CacheManager caches
+    and checkpoint blocks alike; unpersisting the result frames drops the
+    rest."""
+    sc = spark.sparkContext
+
+    def persisted():
+        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
+
     docs = spark.createDataFrame(
         [(f"d{i}", f"alpha beta gamma delta {i % 7} " * 30) for i in range(40)],
         "id string, text string",
     )
     spark.catalog.clearCache()
+    before = persisted()
     res = run_documents(spark, docs, "id", "text", DedupConfig())
-    assert not spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert len(persisted() - before) == 3, "the three result frames hold blocks"
     for df in (res.verified, res.clusters, res.representatives):
         df.unpersist()
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
-        "pipeline leaked non-result caches into the session"
+    assert persisted() - before == set(), (
+        "pipeline leaked non-result blocks into the session"
     )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_same_clusters_either_side_of_eager_barrier_min_docs(spark, corpus, result):
+    """The barrier threshold is NON-SEMANTIC (config.py): the same corpus
+    run just below it (eager regime: AQE on, split verify, materialized
+    bucket join-backs) and just above it (latency regime: AQE off, derived
+    width, fused verify) gives identical (id, cluster_id) rows."""
+    turns, _ = corpus
+    n = result.stats["n_docs"]
+    eager = run_transcripts(spark, turns, DedupConfig(eager_barrier_min_docs=n))
+    latency = run_transcripts(spark, turns, DedupConfig(eager_barrier_min_docs=n + 1))
+    assert eager.stats["eager_barriers"] and not latency.stats["eager_barriers"]
+    a = {(r.id, r.cluster_id) for r in eager.clusters.collect()}
+    b = {(r.id, r.cluster_id) for r in latency.clusters.collect()}
+    assert a == b
+    assert len(a) == n
 
 
 def test_resume_false_forces_recompute(spark, corpus, tmp_path_factory):

@@ -113,19 +113,21 @@ def test_char_entropy_is_pure_projection(spark):
 
 def test_latency_verify_hydration_broadcasts_known_small_features(spark):
     """r6: the small-corpus fused verify broadcasts the feature side when
-    the features frame's MEASURED cache size fits the gate — both
-    hydration joins become BroadcastHashJoin (no SortMergeJoin, so the
-    pair rows keep their re-spread partitioning into the Jaccard
-    projection). An unmaterialized/unknown-size frame keeps the shuffle
-    shape — the gate is fail-safe."""
-    from hsip.verify import verify_jaccard_hamming
+    the features frame's MEASURED size fits the gate — both hydration
+    joins become BroadcastHashJoin (no SortMergeJoin, so the pair rows
+    keep their re-spread partitioning into the Jaccard projection). The
+    features reach verify the way the pipeline hands them over: through
+    the barrier (hsip/barrier.py), whose block-manager measurement is
+    what the gate reads. An unmeasured frame declines — fail-safe."""
+    from hsip.barrier import fits_broadcast, materialize
+    from hsip.verify import _BCAST_HYDRATE_MAX_BYTES, verify_jaccard_hamming
 
     cfg = DedupConfig(jaccard_threshold=0.5, hamming_d=3)
-    feats = spark.createDataFrame(
+    raw = spark.createDataFrame(
         [("a", [1, 2, 3, 4], 0), ("b", [1, 2, 3, 9], 1), ("c", [7, 8], 63)],
         "id string, shingles array<long>, simhash long",
-    ).cache()
-    feats.count()  # materialize -> accurate (tiny) stats
+    )
+    feats = materialize(raw)
     pairs = spark.createDataFrame(
         [("a", "b", "minhash_lsh"), ("a", "c", "simhash")],
         "a string, b string, channel string",
@@ -134,8 +136,60 @@ def test_latency_verify_hydration_broadcasts_known_small_features(spark):
         p = plan(verify_jaccard_hamming(pairs, feats, cfg, eager=False))
         assert "BroadcastHashJoin" in p, p
         assert "SortMergeJoin" not in p, p
+        assert not fits_broadcast(raw, _BCAST_HYDRATE_MAX_BYTES)
     finally:
         feats.unpersist()
+
+
+def test_pipeline_latency_features_broadcast_through_barrier(spark):
+    """The pipeline's own latency path: featurize, then the barrier the
+    features stage uses, then the fused verify — still BroadcastHashJoin
+    only, with the gate reading the barrier's measured bytes."""
+    from hsip.barrier import materialize
+    from hsip.verify import verify_jaccard_hamming
+
+    cfg = DedupConfig()
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    feats = materialize(featurize(docs, "doc_id", "text", cfg))
+    ids = [r.id for r in feats.select("id").limit(3).collect()]
+    pairs = spark.createDataFrame(
+        [(ids[0], ids[1], "minhash_lsh"), (ids[0], ids[2], "simhash")],
+        "a string, b string, channel string",
+    )
+    try:
+        p = plan(verify_jaccard_hamming(pairs, feats, cfg, eager=False))
+        assert "BroadcastHashJoin" in p, p
+        assert "SortMergeJoin" not in p, p
+    finally:
+        feats.unpersist()
+
+
+def test_eager_substr_hydration_broadcasts_known_small_text(spark):
+    """Eager-regime verify_substr: the pruned text table goes through the
+    barrier, which keeps its hash layout and measures it; known small, it
+    is broadcast into both hydration joins, so neither the pair rows nor
+    the corpus text is re-shuffled (no SortMergeJoin over the text)."""
+    from hsip.suffixes import verify_substr
+
+    cfg = DedupConfig()
+    docs = spark.createDataFrame(
+        [("a", "x" * 300), ("b", "x" * 300), ("c", "y" * 300)],
+        "id string, text string",
+    )
+    pairs = spark.createDataFrame(
+        [("a", "b", [0], [0])],
+        "a string, b string, pos_as array<int>, pos_bs array<int>",
+    )
+    scratch: list = []
+    out = verify_substr(pairs, docs, "id", "text", cfg, scratch=scratch, eager=True)
+    try:
+        p = plan(out)
+        assert p.count("BroadcastHashJoin") >= 2, p
+        assert "SortMergeJoin" not in p, p
+        assert [(r.a, r.b, r.verdict) for r in out.collect()] == [("a", "b", True)]
+    finally:
+        for df in scratch:
+            df.unpersist()
 
 
 def test_latency_substr_prune_broadcasts_pair_ids(spark):
