@@ -1,6 +1,6 @@
 """One eager materialization barrier for every frame the engine reuses.
 
-``materialize`` runs a frame's plan once (one Spark job) and returns a
+A ``Barrier`` runs a frame's plan once (one Spark job) and returns a
 frame whose logical plan is a single leaf over the materialized blocks.
 Downstream queries plan over that leaf instead of re-analyzing,
 re-optimizing and re-printing the whole upstream tree on every action:
@@ -8,7 +8,7 @@ a cache hides *recomputation*, not *plan size* (PLANS.md). The barrier
 also stops AQE's concurrent query-stage futures from rebuilding a shared
 subtree once per consumer, which is what the eager counts were for.
 
-What the primitive keeps from the cache+count barrier it replaces:
+What the flat barrier keeps from the cache+count barrier it replaces:
 
 - the physical layout. A ``repartition(cols)`` frame keeps its
   HashPartitioning, so the bucket self-joins and hydration joins read it
@@ -24,11 +24,20 @@ What the primitive keeps from the cache+count barrier it replaces:
   sweep, and ``unpersist()`` on the returned frame drops its blocks
   (``DataFrame.unpersist`` alone does nothing on a checkpointed frame).
 
-Blocks are executor-local: an executor lost mid-run takes them along and
-the run fails, because lineage is truncated by design. With
-``checkpoint_dir`` set (``DedupConfig.cc_checkpoint_dir``) every barrier
-also writes a reliable checkpoint there, read back from the frame's
-blocks rather than recomputed, and the blocks are dropped.
+How a run's barriers materialize is decided once, by ``Barrier.for_run``:
+
+- ephemeral runs: executor-local blocks (``localCheckpoint``). Lineage is
+  truncated by design, so an executor lost mid-run takes its blocks along
+  and the run fails. With ``DedupConfig.cc_checkpoint_dir`` set, every
+  barrier also writes a reliable checkpoint there, read back from the
+  frame's blocks rather than recomputed; release deletes its files.
+- warehouse runs: ``cache()`` + ``count()``, which keeps lineage, so a
+  lost executor's partitions are recomputed. Their stages are parquet
+  tables already; the barriers between them stay fault tolerant, which
+  is what those runs are for.
+
+Connected components always truncates (``Barrier(checkpoint_dir)``): its
+plan grows each round otherwise.
 """
 
 from __future__ import annotations
@@ -58,38 +67,69 @@ def job_label(sc, name: str | None):
         sc.setJobDescription(prev)
 
 
-def materialize(df: DataFrame, name: str | None = None,
-                checkpoint_dir: str | None = None,
-                release: list | None = None) -> DataFrame:
-    """Eagerly materialize ``df`` into a flat frame (module docstring).
+class Barrier:
+    """How eager barriers materialize (module docstring). Calling it
+    materializes a frame.
 
-    ``name`` labels the job (``job_label``); ``checkpoint_dir`` makes the
-    barrier reliable; ``release`` is the caller's sweep list, which the
-    returned frame is appended to."""
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    with job_label(sc, name):
+    ``checkpoint_dir`` adds a reliable checkpoint to the flat barrier;
+    ``keep_lineage`` uses cache+count instead (no flat plan)."""
+
+    def __init__(self, checkpoint_dir: str | None = None,
+                 keep_lineage: bool = False):
+        self.checkpoint_dir = checkpoint_dir
+        self.keep_lineage = keep_lineage
+
+    @classmethod
+    def for_run(cls, cfg, warehouse: str | None = None) -> Barrier:
+        """The policy for a pipeline run with config ``cfg``: cache+count
+        when it checkpoints its stages to ``warehouse``, the flat barrier
+        otherwise (reliable when ``cfg.cc_checkpoint_dir`` is set)."""
+        if warehouse is not None:
+            return cls(keep_lineage=True)
+        return cls(cfg.cc_checkpoint_dir)
+
+    def __call__(self, df: DataFrame, name: str | None = None,
+                 release: list | None = None) -> DataFrame:
+        """Eagerly materialize ``df``. ``name`` labels the job
+        (``job_label``); ``release`` is the caller's sweep list, which the
+        returned frame is appended to."""
+        sc = df.sparkSession.sparkContext
+        with job_label(sc, name):
+            if self.keep_lineage:
+                out = df.cache()
+                out.count()
+                out._hsip_measured_bytes = _catalyst_bytes(out)
+            else:
+                out = self._flat(df, sc)
+        if release is not None:
+            release.append(out)
+        return out
+
+    def _flat(self, df: DataFrame, sc) -> DataFrame:
         out, rdd = _local_flat(df)
         nbytes = _stored_bytes(sc, rdd.id())
-        if checkpoint_dir:
-            sc.setCheckpointDir(checkpoint_dir)
+        if self.checkpoint_dir:
+            sc.setCheckpointDir(self.checkpoint_dir)
             reliable = out.checkpoint(eager=True)
             _drop_blocks(sc, rdd)
             out, rdd = reliable, reliable._jdf.logicalPlan().rdd()
-    out._hsip_measured_bytes = nbytes
-    out._hsip_rdd = rdd
-    out.unpersist = types.MethodType(_unpersist, out)
-    if release is not None:
-        release.append(out)
-    return out
+        out._hsip_measured_bytes = nbytes
+        out._hsip_rdd = rdd
+        out.unpersist = types.MethodType(_unpersist, out)
+        return out
 
 
 def measured_size_bytes(df: DataFrame) -> int | None:
-    """Bytes the barrier measured for ``df``'s blocks; None for any frame
-    that did not come out of ``materialize`` (a derived or lazy frame,
+    """Bytes ``df`` is known to hold: what the barrier measured for a
+    frame that came out of a ``Barrier``, or the files' size for a plain
+    scan of a file source (a warehouse stage read back as parquet, as
+    Catalyst sizes it). None for anything else (a derived or lazy frame,
     or a failed measurement). Gates treat None as "not known small" and
     decline, so the reading is fail-safe."""
-    return getattr(df, "_hsip_measured_bytes", None)
+    n = getattr(df, "_hsip_measured_bytes", None)
+    if n is None and _is_file_scan(df):
+        n = _catalyst_bytes(df)
+    return n
 
 
 def fits_broadcast(df: DataFrame, limit: int | None = None) -> bool:
@@ -107,12 +147,25 @@ def fits_broadcast(df: DataFrame, limit: int | None = None) -> bool:
 def _unpersist(self: DataFrame, blocking: bool = False) -> DataFrame:
     # the SparkContext call RDD.unpersist makes, minus its warning that a
     # locally checkpointed RDD cannot be recomputed: no consumer is left
-    _drop_blocks(self.sparkSession.sparkContext, self._hsip_rdd, blocking)
+    sc = self.sparkSession.sparkContext
+    _drop_blocks(sc, self._hsip_rdd, blocking)
+    _delete_checkpoint_files(sc, self._hsip_rdd)
     return self
 
 
 def _drop_blocks(sc, rdd, blocking: bool = False) -> None:
     sc._jsc.sc().unpersistRDD(rdd.id(), blocking)
+
+
+def _delete_checkpoint_files(sc, rdd) -> None:
+    """Delete a reliable checkpoint's files (no-op for local blocks):
+    Spark keeps them unless ``cleanCheckpoints`` is on, so runs would
+    pile corpus-sized copies up in the checkpoint directory."""
+    f = rdd.getCheckpointFile()
+    if f.isEmpty():
+        return
+    path = sc._jvm.org.apache.hadoop.fs.Path(f.get())
+    path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
 
 
 def _local_flat(df: DataFrame):
@@ -154,3 +207,25 @@ def _stored_bytes(sc, rdd_id: int) -> int | None:
     except Exception:  # pragma: no cover - py4j edge: decline, don't fail
         return None
     return None
+
+
+def _catalyst_bytes(df: DataFrame) -> int | None:
+    """Catalyst's sizeInBytes: real batch bytes for a materialized cache,
+    the files' size for a file scan."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # pragma: no cover - py4j edge: decline, don't fail
+        return None
+
+
+def _is_file_scan(df: DataFrame) -> bool:
+    """True when ``df``'s optimized plan is projections/filters over one
+    file-source relation (what ``Catalog.read`` returns for parquet)."""
+    try:
+        node = df._jdf.queryExecution().optimizedPlan()
+        while node.getClass().getSimpleName() in ("Project", "Filter"):
+            node = node.child()
+        return (node.getClass().getSimpleName() == "LogicalRelation"
+                and node.relation().getClass().getSimpleName() == "HadoopFsRelation")
+    except Exception:  # pragma: no cover - py4j edge: decline, don't fail
+        return False

@@ -3,9 +3,9 @@
 
 Converges in O(log^2 n) rounds (O(log n) observed); every round is two
 groupBy+join passes over the edge set. Lineage is truncated each round
-through the engine's one barrier, barrier.materialize (plan growth is
-exponential otherwise — SURVEY.md §4.2.3); convergence is detected with a cheap (count, hash-sum) checksum
-action instead of a full set comparison.
+through the engine's one barrier, hsip/barrier.py (plan growth is
+exponential otherwise — SURVEY.md §4.2.3); convergence is detected with a
+cheap (count, hash-sum) checksum action instead of a full set comparison.
 
 Output convention (X2): cluster_id = min id in the component; singletons
 keep their own id. Pair-recall is label-invariant so the convention only
@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from .barrier import job_label, materialize
+from .barrier import Barrier, job_label
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -142,14 +142,15 @@ def connected_components(
     (measured ~3.2 s per action on the 57k-turn bench corpus, turning
     the fast path into a net loss before this ordering).
 
-    Lineage truncation per round: ``barrier.materialize`` — executor-
+    Lineage truncation per round: ``Barrier(checkpoint_dir)`` — executor-
     local blocks (fast — right for benchmarks and ephemeral jobs) unless
     ``checkpoint_dir`` is set, in which case each round is also written
     to fault-tolerant storage — on a real cluster an executor loss then
     recovers from the checkpoint instead of recomputing a truncated
     lineage that no longer exists (SURVEY §4.2.3; VERDICT.md r1 finding
-    7). Each round's blocks are dropped once the next round has
-    materialized; the returned frame reads the last round's, which go to
+    7). Each round's blocks (and checkpoint files) are dropped once the
+    next round has materialized; the returned frame reads the last
+    round's, which go to
     ``release`` (when given) for the caller to drop after it has
     materialized the labels.
     """
@@ -164,7 +165,8 @@ def connected_components(
     # ambient AQE still on for this one genuinely-large shuffle (skew
     # handling matters for the initial distinct at 10^12-turn scale; the
     # AQE-off tuning below targets the loop's tiny per-round exchanges).
-    e = materialize(sel.distinct(), "cc_edges", checkpoint_dir)
+    trunc = Barrier(checkpoint_dir)
+    e = trunc(sel.distinct(), "cc_edges")
     if local_max_edges > 0:
         with job_label(sc, "cc_size_probe"):
             n_edges = e.count()  # flat scan of the truncated RDD — no shuffle
@@ -194,8 +196,7 @@ def connected_components(
         prev = _checksum(e)
         for rnd in range(max_iter):
             with job_label(sc, f"cc_round_{rnd}"):
-                nxt = materialize(_small_star(_large_star(e)),
-                                  checkpoint_dir=checkpoint_dir)
+                nxt = trunc(_small_star(_large_star(e)))
                 cur = _checksum(nxt)
             e.unpersist()  # nxt's lineage no longer reaches e's blocks
             e = nxt

@@ -126,7 +126,7 @@ class DedupConfig:
     # scale-proportional physical regime (VERDICT r4 item 1): at/above
     # this doc count the pipeline runs the eager regime — AQE on at the
     # ambient shuffle width, the channel-aware split verify, and the extra
-    # eager barriers (barrier.materialize) on the bucket join-backs and
+    # eager barriers (hsip/barrier.py) on the bucket join-backs and
     # pruned hydration tables that stop AQE's concurrent query-stage
     # futures from rebuilding a shared subtree N times, a 2x win at 2.76M
     # turns (BENCH/BASELINE.md r4). Below it the latency regime runs: AQE
@@ -141,12 +141,15 @@ class DedupConfig:
     # NON-SEMANTIC — identical output either way (pinned by
     # tests/test_pipeline_e2e.py just below and just above the threshold)
     eager_barrier_min_docs: int = 25_000
-    # reliable barriers: when set, EVERY eager barrier (barrier.materialize:
-    # base, features, bucket tables, channel outputs, results, and each
-    # connected-components round) also writes a reliable checkpoint to
-    # this fault-tolerant dir, so an executor loss recovers from it;
-    # unset, barriers hold executor-local blocks only (fast, but an
-    # executor lost mid-run fails the run — lineage is truncated).
+    # reliable barriers: when set, every eager barrier of an EPHEMERAL run
+    # (hsip/barrier.py: base, features, bucket tables, channel outputs,
+    # results) and every connected-components round (both modes) also
+    # writes a reliable checkpoint to this fault-tolerant dir, so an
+    # executor loss recovers from it; releasing a barrier deletes its
+    # files. Unset, ephemeral barriers and CC rounds hold executor-local
+    # blocks only (fast, but an executor lost mid-run fails the run —
+    # lineage is truncated). Warehouse runs keep cache+count barriers
+    # between their parquet stages whether or not this is set.
     # SURVEY §4.2.3, DEPLOYMENT.md §3.
     # NON-SEMANTIC — excluded from the fingerprint (same clusters either way)
     cc_checkpoint_dir: str | None = None

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .barrier import materialize
+from .barrier import Barrier
 from .config import DedupConfig
 
 
@@ -44,7 +44,7 @@ def pairs_from_buckets(
     payload_cols: tuple[str, ...] = (),
     scratch: list | None = None,
     eager: bool = False,
-    checkpoint_dir: str | None = None,
+    barrier: Barrier | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Generic bucket -> candidate-pair expansion with hot-bucket control.
 
@@ -91,7 +91,7 @@ def pairs_from_buckets(
     # in one task, while partitionBy windows sort the whole bucket in a
     # single task (the skew the cap exists to prevent). The join-back is
     # skew-safe too (AQE skew-join splits it). Callers must pass a
-    # materialized `bucketed` (barrier.materialize) — both branches scan it.
+    # materialized `bucketed` (a Barrier) — both branches scan it.
     #
     # bsz >= 2 (r6, guide §2.3): singleton buckets can never pair — the
     # self-join's id < id condition and the hot path (bsz > cap >= 1)
@@ -110,15 +110,14 @@ def pairs_from_buckets(
     # bucket table — r6 rung iso (bench/iso_substr.py): the tagged table
     # is 1.9M rows where the bucket table is 8.4M, and materializing it
     # cut the substr expansion 10.5 s -> 8.4 s with identical pairs. The
-    # barrier (barrier.materialize) keeps the bucket table's hash layout,
-    # so the legs join it with no exchange; caller releases it via
-    # ``scratch``; ``checkpoint_dir`` (DedupConfig.cc_checkpoint_dir) makes
-    # it a reliable checkpoint. Latency-mode callers pass eager=False — at
+    # flat barrier keeps the bucket table's hash layout, so the legs join
+    # it with no exchange; caller releases it via ``scratch``; ``barrier``
+    # is the run's policy (Barrier.for_run; the flat local barrier when
+    # None). Latency-mode callers pass eager=False — at
     # kB scale the extra materialization job costs more than the
     # duplicated tiny joins it saves.
     if eager and scratch is not None:
-        tagged = materialize(tagged, checkpoint_dir=checkpoint_dir,
-                             release=scratch)
+        tagged = (barrier or Barrier())(tagged, release=scratch)
 
     small = tagged.filter(F.col("bsz") <= cap).drop("bsz")
     x = small.alias("x")
@@ -191,7 +190,8 @@ def pairs_from_buckets(
 def lsh_candidates(sig_df: DataFrame, cfg: DedupConfig,
                    scratch: list | None = None,
                    channel: str = "minhash_lsh",
-                   eager: bool = False) -> tuple[DataFrame, DataFrame]:
+                   eager: bool = False,
+                   barrier: Barrier | None = None) -> tuple[DataFrame, DataFrame]:
     """(id, sig) -> (candidate pairs, hot-bucket stats).
 
     ``scratch``: optional list the internal band cache is appended to so
@@ -213,7 +213,7 @@ def lsh_candidates(sig_df: DataFrame, cfg: DedupConfig,
     return pairs_from_buckets(
         bands, cfg.bucket_cap, channel=channel,
         hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
-        scratch=scratch, eager=eager, checkpoint_dir=cfg.cc_checkpoint_dir,
+        scratch=scratch, eager=eager, barrier=barrier or Barrier.for_run(cfg),
     )
 
 

@@ -9,7 +9,7 @@ Two frontends:
                          (conv_id, turn_idx) order, then the same engine.
 
 Every stage builds a logical plan; materialization happens only at the
-stage checkpoint write (or the flat barrier, barrier.materialize, for
+stage checkpoint write (or the flat barrier, hsip/barrier.py, for
 ephemeral runs). Candidate channels:
   minhash_lsh — Jaccard near-dups      (shingle -> MinHash -> LSH bands)
   simhash     — near-identical text    (bit-vote fingerprint -> Hamming blocks)
@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import verify as V
-from .barrier import job_label, materialize, measured_size_bytes
+from .barrier import Barrier, job_label
 from .catalog import Catalog
 from .cc import assign_clusters, canonical_representatives, quality_representatives
 from .checkpoint import Checkpointer, input_fingerprint
@@ -72,7 +72,7 @@ def _run_channels(spark: SparkSession, builders) -> list[DataFrame]:
     from separate threads (one FAIR scheduler pool each — see session.py)
     lets one channel's tasks backfill another's straggler waves. Shared
     upstream frames (base, features) pass an eager barrier
-    (barrier.materialize) before any consumer reads them, so no subtree
+    (hsip/barrier.py) before any consumer reads them, so no subtree
     is recomputed concurrently (the lazy-cache trap the barriers exist
     to prevent).
 
@@ -120,7 +120,7 @@ def run_documents(
     With ``warehouse`` set, every stage is checkpointed through the
     Catalog and the run is resumable under the same run_id + config
     fingerprint; without it, reused stages pass the flat in-memory
-    barrier (barrier.materialize; reliable when cfg.cc_checkpoint_dir is
+    barrier (hsip/barrier.py; reliable when cfg.cc_checkpoint_dir is
     set).
     ``resume=False`` forces recomputation of every stage (checkpoints
     are overwritten) even when matching ones exist for the run_id.
@@ -128,6 +128,9 @@ def run_documents(
     run_id = run_id or uuid.uuid4().hex[:12]
     use_ckpt = warehouse is not None
     catalog = Catalog(spark, warehouse) if use_ckpt else None
+    # how every barrier of this run materializes: flat blocks in ephemeral
+    # runs, cache+count (lineage kept) in warehouse runs (hsip/barrier.py)
+    barrier = Barrier.for_run(cfg, warehouse)
 
     # Always materialize base: >1 channel consumes it, and in checkpointed
     # mode the input fingerprint below is an extra consumer. Eager
@@ -137,11 +140,11 @@ def run_documents(
     # CPU-s of task time vs ~300 intrinsic on the 554k-turn corpus (each
     # channel re-running reassembly+normalization). One barrier job per
     # reused frame serializes the dependency order and caps total work.
-    base = materialize(
+    base = barrier(
         docs.select(
             F.col(id_col).cast("string").alias("id"), F.col(text_col).alias("text")
         ),
-        "materialize", checkpoint_dir=cfg.cc_checkpoint_dir,
+        "materialize",
     )
 
     # stage fingerprint = config + INPUT content: resuming the same run_id
@@ -159,7 +162,6 @@ def run_documents(
     rec = Recorder(spark, catalog, run_id) if use_ckpt else None
 
     stage_walls: dict[str, float] = {}
-    barrier_bytes: dict[str, int | None] = {"materialize": measured_size_bytes(base)}
 
     def stage(name: str, build, reuse: bool = True):
         # per-stage wall (driver-observed, includes materialization for
@@ -180,17 +182,16 @@ def run_documents(
             with job_label(spark.sparkContext, name):
                 out = build()
                 if reuse:
-                    out = materialize(out, checkpoint_dir=cfg.cc_checkpoint_dir)
-                    barrier_bytes[name] = measured_size_bytes(out)
+                    out = barrier(out)
         stage_walls[name] = round(time.time() - t0, 3)
         return out
 
-    stats: dict = {"stage_walls": stage_walls, "barrier_bytes": barrier_bytes}
+    stats: dict = {"stage_walls": stage_walls}
     need_mh = "minhash_lsh" in channels
     need_sh = "simhash" in channels
 
     # scale-proportional barriers (config.py eager_barrier_min_docs):
-    # base is materialized above, so this count is one flat scan
+    # base is materialized above, so this count scans its blocks
     n_docs = base.count()
     eager_barriers = n_docs >= cfg.eager_barrier_min_docs
     stats["eager_barriers"] = eager_barriers
@@ -209,7 +210,7 @@ def run_documents(
     # session defaults — AQE coalescing, skew splits and the wide
     # shuffle width are exactly right for data that size.
     _tuned_conf: dict[str, str] = {}
-    base_flat = base
+    base_held = base
     if not eager_barriers:
         ambient = spark.conf.get("spark.sql.shuffle.partitions", "200")
         width = max(8, min(int(ambient), -(-n_docs // 500)))
@@ -221,7 +222,7 @@ def run_documents(
         # downstream VIEW of it to the derived width so channel scans
         # don't schedule dozens of near-empty tasks per pass. coalesce
         # is a narrow op over the materialized blocks — no shuffle, no
-        # recompute; base_flat keeps the handle unpersist() needs.
+        # recompute; base_held keeps the handle unpersist() needs.
         if base.rdd.getNumPartitions() > 2 * width:
             base = base.coalesce(width)
     _saved_conf = {k: spark.conf.get(k, None) for k in _tuned_conf}
@@ -353,7 +354,8 @@ def run_documents(
 
             def build_lsh():
                 pairs, hot = lsh_candidates(sigs, cfg, scratch=scratch,
-                                            eager=eager_barriers)
+                                            eager=eager_barriers,
+                                            barrier=barrier)
                 if rec:
                     n_hot = hot.count()
                     rec.metric("lsh_candidates", "hot_buckets_star_paired", n_hot)
@@ -372,7 +374,8 @@ def run_documents(
 
             def build_sim():
                 pairs, hot = simhash_candidates(simhashes, cfg, scratch=scratch,
-                                                eager=eager_barriers)
+                                                eager=eager_barriers,
+                                                barrier=barrier)
                 if rec:
                     rec.metric("simhash_candidates", "hot_buckets_star_paired", hot.count())
                 return pairs
@@ -418,17 +421,16 @@ def run_documents(
                 # eager barrier: pairs_from_buckets contract (sizes groupBy
                 # and join-back both scan the bucket table, which keeps its
                 # hash layout through the barrier)
-                both = materialize(
+                both = barrier(
                     mh.unionByName(sh).repartition("channel", "bkt_id", "bkt_hash"),
-                    checkpoint_dir=cfg.cc_checkpoint_dir, release=scratch,
+                    release=scratch,
                 )
                 pairs, hot = pairs_from_buckets(
                     both, cfg.bucket_cap,
                     bucket_cols=("channel", "bkt_id", "bkt_hash"), channel=None,
                     hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
                     payload_cols=("simhash",),
-                    scratch=scratch, eager=eager_barriers,
-                    checkpoint_dir=cfg.cc_checkpoint_dir,
+                    scratch=scratch, eager=eager_barriers, barrier=barrier,
                 )
                 if rec:
                     for r in hot.groupBy("channel").count().collect():
@@ -449,7 +451,8 @@ def run_documents(
             # full tree (r6 rung event log: 2.5 s + 1.4 s of driver gap
             # planning `verified` over two cached channel outputs).
             out = stage("verify_mh_sh", lambda: V.verify_jaccard_hamming(
-                cands, feats, cfg, scratch=scratch, eager=eager_barriers))
+                cands, feats, cfg, scratch=scratch, eager=eager_barriers,
+                barrier=barrier))
             scratch.append(out)
             return out
 
@@ -461,13 +464,13 @@ def run_documents(
 
             def build_substr():
                 pairs, hot = substr_candidates(fps, cfg, scratch=scratch,
-                                               eager=eager_barriers)
+                                               eager=eager_barriers,
+                                               barrier=barrier)
                 if rec:
                     # materialize BEFORE the metric scans: without it the
                     # hot.count() + truncation filter re-execute the whole
                     # candidate chain in warehouse runs (VERDICT.md r3 item 3)
-                    pairs = materialize(pairs, checkpoint_dir=cfg.cc_checkpoint_dir,
-                                        release=scratch)
+                    pairs = barrier(pairs, release=scratch)
                     rec.metric("substr_candidates", "hot_fingerprints_star_paired", hot.count())
                     rec.metric(
                         "substr_candidates", "anchor_truncated_pairs",
@@ -483,7 +486,7 @@ def run_documents(
             # inside the serial `verified` job
             out = stage("verify_substr", lambda: verify_substr(
                 sub_pairs, chan_base, "id", "text", cfg,
-                scratch=scratch, eager=eager_barriers))
+                scratch=scratch, eager=eager_barriers, barrier=barrier))
             scratch.append(out)
             return out
 
@@ -643,7 +646,7 @@ def run_documents(
                 spark.conf.unset(_k)
             else:
                 spark.conf.set(_k, _v)
-    base_flat.unpersist()
+    base_held.unpersist()
     return PipelineResult(
         clusters=clusters, verified=verified, representatives=reps,
         run_id=run_id, stats=stats, duplicate_spans=spans,

@@ -130,7 +130,7 @@ def get_spark(
         # cached table (r6 event log at the 554k-turn rung: 4.7 GB
         # shuffle-written vs 1.8 GB, 75 jobs vs 48, wall 63-77 s vs
         # 41.7 s, alternating A/B in bench/ab_rung.py; bit-identical
-        # labels). The eager barriers (barrier.materialize) now keep the
+        # labels). The eager barriers (hsip/barrier.py) now keep the
         # layout on their own, planning in a session clone with the same
         # final-stage posture the false setting gives the CacheManager;
         # the flag still governs the remaining caches (per-channel

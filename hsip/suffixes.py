@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from .barrier import fits_broadcast, materialize
+from .barrier import Barrier, fits_broadcast
 from .config import DedupConfig
 from .normalize import norm_text_col
 
@@ -192,7 +192,7 @@ def fingerprint_table(df: DataFrame, id_col: str, text_col: str, cfg: DedupConfi
 
 def substr_candidates(
     fp_df: DataFrame, cfg: DedupConfig, scratch: list | None = None,
-    eager: bool = True,
+    eager: bool = True, barrier: Barrier | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Fingerprint table -> candidate pairs with match-anchor positions.
 
@@ -202,8 +202,10 @@ def substr_candidates(
 
     ``scratch``: list the internal repartitioned-fingerprint cache is
     appended to so the caller can unpersist it after pair materialization.
+    ``barrier``: the run's barrier policy (default ``Barrier.for_run(cfg)``).
     """
     cap = cfg.substr_bucket_cap
+    barrier = barrier or Barrier.for_run(cfg)
     # The repartitioned fingerprint table feeds ~6 plan branches (sizes,
     # join-back, small x/y self-join, hot, hot_min). A bare Exchange here
     # canonicalizes identically for all of them, but AQE materializes
@@ -217,7 +219,7 @@ def substr_candidates(
     # the extra materialization action (VERDICT r4 item 1 A/B).
     fp = fp_df.repartition("fp_hash")
     if eager:
-        fp = materialize(fp, checkpoint_dir=cfg.cc_checkpoint_dir, release=scratch)
+        fp = barrier(fp, release=scratch)
     else:
         fp = fp.cache()
         if scratch is not None:
@@ -241,8 +243,7 @@ def substr_candidates(
     # rows vs the 8.4M-row fingerprint table each leg previously
     # re-joined.
     if eager and scratch is not None:
-        tagged = materialize(tagged, checkpoint_dir=cfg.cc_checkpoint_dir,
-                             release=scratch)
+        tagged = barrier(tagged, release=scratch)
 
     small = tagged.filter(F.col("bsz") <= cap).drop("bsz")
     x, y = small.alias("x"), small.alias("y")
@@ -419,7 +420,7 @@ def _span_lens_batch(enc_a: list[bytes], enc_b: list[bytes],
 
 def verify_substr(pairs: DataFrame, docs: DataFrame, id_col: str, text_col: str,
                   cfg: DedupConfig, scratch: list | None = None,
-                  eager: bool = True) -> DataFrame:
+                  eager: bool = True, barrier: Barrier | None = None) -> DataFrame:
     """V4: exact span measurement for substring candidates.
 
     pairs must carry (a, b, pos_as, pos_bs). Output adds substr_len and
@@ -435,8 +436,10 @@ def verify_substr(pairs: DataFrame, docs: DataFrame, id_col: str, text_col: str,
     barrier + explicit hash layout only pay off once the pruned table is
     big enough to sort-merge (same scale-adaptive split as
     verify_jaccard_hamming). Output rows identical either way.
+    ``barrier``: the run's barrier policy (default ``Barrier.for_run(cfg)``).
     """
     k, min_len = cfg.substr_gram, cfg.min_substr_len
+    barrier = barrier or Barrier.for_run(cfg)
     # The normalized-text table is the fattest thing this stage touches
     # (~= corpus bytes), and a computed Alias (norm_text_col) breaks
     # canonical exchange reuse between the two join branches — naively
@@ -454,7 +457,7 @@ def verify_substr(pairs: DataFrame, docs: DataFrame, id_col: str, text_col: str,
     # runs materialize it (one leaf to plan over, as in
     # verify_jaccard_hamming), latency runs keep a lazy cache
     if eager:
-        pairs = materialize(pairs, checkpoint_dir=cfg.cc_checkpoint_dir, release=scratch)
+        pairs = barrier(pairs, release=scratch)
     else:
         pairs = pairs.cache()
         if scratch is not None:
@@ -475,8 +478,7 @@ def verify_substr(pairs: DataFrame, docs: DataFrame, id_col: str, text_col: str,
         norm_text_col(text_col, cfg).alias("t"),
     ).join(pair_ids, "id", "left_semi")
     if eager:
-        normed = materialize(normed.repartition("id"),
-                             checkpoint_dir=cfg.cc_checkpoint_dir, release=scratch)
+        normed = barrier(normed.repartition("id"), release=scratch)
         n_side = F.broadcast(normed) if fits_broadcast(normed) else normed
     else:
         normed = normed.cache()
@@ -939,7 +941,7 @@ def substr_decontaminate(
     )
     if scratch is None:
         # materialize before releasing the caches verify_substr holds
-        out = materialize(out, checkpoint_dir=cfg.cc_checkpoint_dir)
+        out = Barrier.for_run(cfg)(out)
         for c in own_scratch:
             c.unpersist()
     return out

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .barrier import fits_broadcast, materialize
+from .barrier import Barrier, fits_broadcast
 from .config import DedupConfig
 
 # Build-side budget for the latency-mode broadcast hydrations below.
@@ -135,7 +135,8 @@ def verify_hamming(pairs: DataFrame, simhash_df: DataFrame, cfg: DedupConfig) ->
 def verify_jaccard_hamming(pairs: DataFrame, features: DataFrame,
                            cfg: DedupConfig,
                            scratch: list | None = None,
-                           eager: bool = True) -> DataFrame:
+                           eager: bool = True,
+                           barrier: Barrier | None = None) -> DataFrame:
     """V2+V3, channel-aware verification: each channel's pairs touch ONLY
     the feature bytes its check reads.
 
@@ -173,6 +174,7 @@ def verify_jaccard_hamming(pairs: DataFrame, features: DataFrame,
     2.76M turns the split path is 2x (r4). Scale-adaptive physical
     planning — output equality between the two shapes is pinned by
     tests/test_e2e_oracle.py.
+    ``barrier``: the run's barrier policy (default ``Barrier.for_run(cfg)``).
     """
     if not eager:
         return _verify_jh_fused_small(pairs, features, cfg)
@@ -183,7 +185,8 @@ def verify_jaccard_hamming(pairs: DataFrame, features: DataFrame,
     # pattern as verify_substr). A barrier rather than a lazy cache: the
     # pruning and hydration queries then plan over one leaf instead of
     # the expansion chain's tree.
-    pairs = materialize(pairs, checkpoint_dir=cfg.cc_checkpoint_dir, release=scratch)
+    barrier = barrier or Barrier.for_run(cfg)
+    pairs = barrier(pairs, release=scratch)
     is_mh = F.col("channel") == "minhash_lsh"
     mh_pairs = pairs.filter(is_mh).drop("simhash_a", "simhash_b")
     # single explode scan (vs a two-leg union) — same AQE duplicated-
@@ -197,11 +200,11 @@ def verify_jaccard_hamming(pairs: DataFrame, features: DataFrame,
     # The barrier also stops AQE's concurrent join-side futures from
     # building the pruned subtree twice (eager=False took the fused
     # early-return above, so this split path always materializes).
-    f = materialize(
+    f = barrier(
         features.select("id", "shingles")
         .join(pair_ids, "id", "left_semi")
         .repartition("id"),
-        checkpoint_dir=cfg.cc_checkpoint_dir, release=scratch,
+        release=scratch,
     )
     if fits_broadcast(f):
         # known small: broadcast it into both joins, as Catalyst did when

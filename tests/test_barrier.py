@@ -1,6 +1,7 @@
 """The eager barrier (hsip/barrier.py): one job, a flat leaf that keeps the
-hash layout, measured bytes for the broadcast gates, and a release that
-actually drops the blocks."""
+hash layout, measured bytes for the broadcast gates, a release that
+actually drops the blocks, and the per-run policy (flat, reliable, or
+cache+count for warehouse runs)."""
 
 from __future__ import annotations
 
@@ -8,7 +9,10 @@ import re
 
 from pyspark.sql import functions as F
 
-from hsip.barrier import fits_broadcast, materialize, measured_size_bytes
+from hsip.barrier import Barrier, fits_broadcast, measured_size_bytes
+from hsip.config import DedupConfig
+
+materialize = Barrier()  # the ephemeral default: executor-local blocks
 
 
 def _plan(df) -> str:
@@ -103,16 +107,68 @@ def test_unpersist_drops_the_blocks_and_release_list(spark):
 
 def test_reliable_checkpoint_dir(spark, tmp_path):
     """checkpoint_dir: rows come back from the reliable checkpoint, the
-    executor-local blocks are dropped, layout and measured bytes kept."""
+    executor-local blocks are dropped, layout and measured bytes kept;
+    release deletes the checkpoint's files."""
     before = _persisted(spark)
     src = _keyed(spark, 300).repartition("k")
-    out = materialize(src, checkpoint_dir=str(tmp_path / "ckpt"))
+    out = Barrier(str(tmp_path / "ckpt"))(src)
     assert _persisted(spark) - before == set()
     assert measured_size_bytes(out) > 0
     assert sorted(out.collect()) == sorted(src.collect())
     assert not re.search(r"Exchange hashpartitioning",
                          _plan(out.groupBy("k").count()))
     assert any((tmp_path / "ckpt").rglob("part-*"))
+    out.unpersist()
+    assert not any((tmp_path / "ckpt").rglob("part-*"))
+
+
+def test_keep_lineage_is_cache_and_count(spark):
+    """The warehouse-run barrier: a materialized cache (lineage kept, so a
+    lost executor's partitions recompute), measured from Catalyst's stats
+    of the populated cache, released by the ordinary unpersist()."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    src = _keyed(spark, 500).repartition("k")
+    sweep: list = []
+    out = Barrier(keep_lineage=True)(src, release=sweep)
+    try:
+        assert sweep == [out]
+        assert out.storageLevel.useMemory
+        assert cm.lookupCachedData(out._jdf).isDefined()
+        n = measured_size_bytes(out)
+        assert isinstance(n, int) and 0 < n < 1024 * 1024
+        assert fits_broadcast(out)
+    finally:
+        out.unpersist()
+    assert cm.lookupCachedData(src._jdf).isEmpty()
+
+
+def test_barrier_policy_for_run():
+    """One decision per run: warehouse runs keep lineage whatever
+    cc_checkpoint_dir says; ephemeral runs are flat, reliable when
+    cc_checkpoint_dir is set."""
+    cfg, rel = DedupConfig(), DedupConfig(cc_checkpoint_dir="/x")
+    for c in (cfg, rel):
+        b = Barrier.for_run(c, warehouse="/wh")
+        assert b.keep_lineage and b.checkpoint_dir is None
+    b = Barrier.for_run(cfg)
+    assert not b.keep_lineage and b.checkpoint_dir is None
+    b = Barrier.for_run(rel)
+    assert not b.keep_lineage and b.checkpoint_dir == "/x"
+
+
+def test_measured_size_bytes_reads_parquet_scans(spark, tmp_path):
+    """A plain scan of parquet files (a warehouse stage read back) is
+    sized from its files, as Catalyst sizes it; a derived frame over the
+    same scan is not known small."""
+    path = str(tmp_path / "t")
+    _keyed(spark, 500).write.parquet(path)
+    t = spark.read.parquet(path)
+    n = measured_size_bytes(t)
+    files = sum(p.stat().st_size for p in (tmp_path / "t").glob("part-*"))
+    assert n == files
+    assert measured_size_bytes(t.filter(F.col("k") > 3).select("v")) is not None
+    assert measured_size_bytes(t.groupBy("k").count()) is None
+    assert measured_size_bytes(t.join(t, "k")) is None
 
 
 def test_job_label_restores_the_outer_label(spark):

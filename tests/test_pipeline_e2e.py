@@ -236,6 +236,59 @@ def test_same_clusters_either_side_of_eager_barrier_min_docs(spark, corpus, resu
     assert len(a) == n
 
 
+def test_warehouse_run_keeps_lineage_barriers(spark, corpus, tmp_path_factory,
+                                             monkeypatch):
+    """Warehouse runs are the fault-tolerant mode: in the eager regime,
+    where the nested bucket/join-back/hydration barriers engage, every
+    barrier outside connected components is cache+count (lineage kept, so
+    a lost executor recomputes instead of failing the run). CC still
+    truncates its lineage, executor-local without cc_checkpoint_dir."""
+    from hsip.barrier import Barrier
+
+    seen = []
+    call = Barrier.__call__
+    sc = spark.sparkContext
+
+    def spy(self, df, name=None, release=None):
+        label = name or sc.getLocalProperty("spark.job.description") or ""
+        seen.append((self.keep_lineage, self.checkpoint_dir, label))
+        return call(self, df, name, release)
+
+    monkeypatch.setattr(Barrier, "__call__", spy)
+    turns, _ = corpus
+    wh = str(tmp_path_factory.mktemp("wh_kinds"))
+    res = run_transcripts(spark, turns, DedupConfig(eager_barrier_min_docs=0),
+                          warehouse=wh, run_id="kinds")
+    assert res.stats["eager_barriers"]
+    is_cc = [lbl.removeprefix("hsip:").startswith("cc_") for _, _, lbl in seen]
+    outside = [s for s, cc in zip(seen, is_cc) if not cc]
+    inside = [s for s, cc in zip(seen, is_cc) if cc]
+    # base, the bucket table, both join-backs, the fingerprint table, the
+    # substr pairs, the eager verify pair and hydration tables
+    assert len(outside) >= 8, seen
+    assert all(keep for keep, _, _ in outside), seen
+    assert inside and not any(keep or d for keep, d, _ in inside), seen
+
+
+def test_reliable_barriers_delete_their_files(spark, corpus, result, tmp_path):
+    """cc_checkpoint_dir makes an ephemeral run's barriers reliable: same
+    clusters, and the run leaves only the three result frames' checkpoint
+    files behind, which go when the caller unpersists them."""
+    turns, _ = corpus
+    ckpt = tmp_path / "ckpt"
+    res = run_transcripts(spark, turns, DedupConfig(cc_checkpoint_dir=str(ckpt)))
+
+    def rdd_dirs():
+        return {p.parent for p in ckpt.rglob("part-*")}
+
+    assert len(rdd_dirs()) == 3
+    a = {(r.id, r.cluster_id) for r in res.clusters.collect()}
+    assert a == {(r.id, r.cluster_id) for r in result.clusters.collect()}
+    for df in (res.verified, res.clusters, res.representatives):
+        df.unpersist()
+    assert rdd_dirs() == set()
+
+
 def test_resume_false_forces_recompute(spark, corpus, tmp_path_factory):
     """--resume off: matching checkpoints exist but every stage recomputes."""
     turns, _ = corpus

@@ -11,6 +11,7 @@ instead of surfacing as a 10x slowdown at scale.
 
 from __future__ import annotations
 
+import contextlib
 import pathlib
 import re
 
@@ -119,7 +120,7 @@ def test_latency_verify_hydration_broadcasts_known_small_features(spark):
     features reach verify the way the pipeline hands them over: through
     the barrier (hsip/barrier.py), whose block-manager measurement is
     what the gate reads. An unmeasured frame declines — fail-safe."""
-    from hsip.barrier import fits_broadcast, materialize
+    from hsip.barrier import Barrier, fits_broadcast
     from hsip.verify import _BCAST_HYDRATE_MAX_BYTES, verify_jaccard_hamming
 
     cfg = DedupConfig(jaccard_threshold=0.5, hamming_d=3)
@@ -127,13 +128,14 @@ def test_latency_verify_hydration_broadcasts_known_small_features(spark):
         [("a", [1, 2, 3, 4], 0), ("b", [1, 2, 3, 9], 1), ("c", [7, 8], 63)],
         "id string, shingles array<long>, simhash long",
     )
-    feats = materialize(raw)
+    feats = Barrier()(raw)
     pairs = spark.createDataFrame(
         [("a", "b", "minhash_lsh"), ("a", "c", "simhash")],
         "a string, b string, channel string",
     )
     try:
-        p = plan(verify_jaccard_hamming(pairs, feats, cfg, eager=False))
+        with _no_auto_broadcast(spark):
+            p = plan(verify_jaccard_hamming(pairs, feats, cfg, eager=False))
         assert "BroadcastHashJoin" in p, p
         assert "SortMergeJoin" not in p, p
         assert not fits_broadcast(raw, _BCAST_HYDRATE_MAX_BYTES)
@@ -145,23 +147,62 @@ def test_pipeline_latency_features_broadcast_through_barrier(spark):
     """The pipeline's own latency path: featurize, then the barrier the
     features stage uses, then the fused verify — still BroadcastHashJoin
     only, with the gate reading the barrier's measured bytes."""
-    from hsip.barrier import materialize
+    from hsip.barrier import Barrier
     from hsip.verify import verify_jaccard_hamming
 
     cfg = DedupConfig()
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    feats = materialize(featurize(docs, "doc_id", "text", cfg))
-    ids = [r.id for r in feats.select("id").limit(3).collect()]
-    pairs = spark.createDataFrame(
-        [(ids[0], ids[1], "minhash_lsh"), (ids[0], ids[2], "simhash")],
-        "a string, b string, channel string",
-    )
+    feats = Barrier()(featurize(docs, "doc_id", "text", cfg))
     try:
-        p = plan(verify_jaccard_hamming(pairs, feats, cfg, eager=False))
+        with _no_auto_broadcast(spark):
+            p = plan(verify_jaccard_hamming(_pairs_over(spark, feats), feats,
+                                            cfg, eager=False))
         assert "BroadcastHashJoin" in p, p
         assert "SortMergeJoin" not in p, p
     finally:
         feats.unpersist()
+
+
+def test_pipeline_latency_features_broadcast_from_warehouse(spark, tmp_path):
+    """Warehouse runs hand verify the features stage read back from its
+    parquet checkpoint (Catalog.read), not a barrier frame: the gate sizes
+    it from the files, so the fused verify still broadcasts it."""
+    from hsip.barrier import measured_size_bytes
+    from hsip.catalog import Catalog
+    from hsip.verify import verify_jaccard_hamming
+
+    cfg = DedupConfig()
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    catalog.write(featurize(docs, "doc_id", "text", cfg), "ckpt.plan.features")
+    feats = catalog.read("ckpt.plan.features")
+    assert 0 < measured_size_bytes(feats) < 256 * 1024 * 1024
+    with _no_auto_broadcast(spark):
+        p = plan(verify_jaccard_hamming(_pairs_over(spark, feats), feats,
+                                        cfg, eager=False))
+    assert "BroadcastHashJoin" in p, p
+    assert "SortMergeJoin" not in p, p
+
+
+def _pairs_over(spark, feats):
+    ids = [r.id for r in feats.select("id").limit(3).collect()]
+    return spark.createDataFrame(
+        [(ids[0], ids[1], "minhash_lsh"), (ids[0], ids[2], "simhash")],
+        "a string, b string, channel string",
+    )
+
+
+@contextlib.contextmanager
+def _no_auto_broadcast(spark):
+    """Catalyst's own size-based broadcast off, so a BroadcastHashJoin in
+    the plan can only come from the gate's explicit hint."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_eager_substr_hydration_broadcasts_known_small_text(spark):
