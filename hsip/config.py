@@ -24,9 +24,6 @@ class DedupConfig:
     # "oph" = one-permutation hashing + rotation densification, O(S+P)
     # (NIPS'12/ICML'14); "classic" = per-permutation affine MinHash, O(S*P)
     minhash_variant: str = "oph"
-    # fused numpy featurization (textkernel.py) vs per-stage SQL+UDF paths;
-    # the SQL paths are interpreted per array element (~30x the CPU)
-    fused_kernel: bool = True
     # LSH banding (G3/G4); threshold ~ (1/b)^(1/r) = (1/32)^(1/4) ~ 0.42
     lsh_bands: int = 32
     lsh_rows: int = 4

@@ -14,6 +14,8 @@ the CC graph); every truncation is logged to metrics — no silent caps.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -187,11 +189,49 @@ def pairs_from_buckets(
     return pairs, hot_stats
 
 
+def channel_bucket_table(features: DataFrame, cfg: DedupConfig,
+                         channels: tuple[str, ...]) -> DataFrame:
+    """(id, sig, simhash) features -> the unified MinHash+SimHash bucket
+    table (channel, id, bkt_id, bkt_hash, simhash), hash-partitioned on
+    its bucket key, for ``pairs_from_buckets(channel=None,
+    payload_cols=("simhash",))``.
+
+    One leg per requested channel: LSH bands for ``minhash_lsh``, Hamming
+    probe-table keys for ``simhash``. Both channels' buckets then expand
+    through ONE shuffle chain. The simhash payload column is always
+    present — null on band rows, typed to the fingerprint layout
+    (config.py simhash_bits: long at 64, array<bigint> lanes at 128) so
+    the union stays type-compatible — and rides through the pair
+    expansion, making Hamming verification a projection of the pair
+    table: no join for the channel whose candidate count can go
+    quadratic (verify.py r4 note).
+    """
+    # simhash.py imports this module
+    from .simhash import hamming_block_table
+
+    legs = []
+    if "minhash_lsh" in channels:
+        legs.append(band_table(features, cfg).select(
+            F.lit("minhash_lsh").alias("channel"), "id",
+            F.col("band_id").alias("bkt_id"),
+            F.col("band_hash").alias("bkt_hash"),
+            F.lit(None)
+            .cast("long" if cfg.simhash_bits == 64 else "array<bigint>")
+            .alias("simhash"),
+        ))
+    if "simhash" in channels:
+        legs.append(hamming_block_table(features, cfg).select(
+            F.lit("simhash").alias("channel"), "id",
+            F.col("table_id").alias("bkt_id"),
+            F.col("key_hash").alias("bkt_hash"), "simhash",
+        ))
+    return reduce(DataFrame.unionByName, legs).repartition(
+        "channel", "bkt_id", "bkt_hash")
+
+
 def lsh_candidates(sig_df: DataFrame, cfg: DedupConfig,
                    scratch: list | None = None,
-                   channel: str = "minhash_lsh",
-                   eager: bool = False,
-                   barrier: Barrier | None = None) -> tuple[DataFrame, DataFrame]:
+                   channel: str = "minhash_lsh") -> tuple[DataFrame, DataFrame]:
     """(id, sig) -> (candidate pairs, hot-bucket stats).
 
     ``scratch``: optional list the internal band cache is appended to so
@@ -212,8 +252,7 @@ def lsh_candidates(sig_df: DataFrame, cfg: DedupConfig,
         scratch.append(bands)
     return pairs_from_buckets(
         bands, cfg.bucket_cap, channel=channel,
-        hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
-        scratch=scratch, eager=eager, barrier=barrier or Barrier.for_run(cfg),
+        hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed, scratch=scratch,
     )
 
 

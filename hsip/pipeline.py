@@ -14,12 +14,13 @@ ephemeral runs). Candidate channels:
   minhash_lsh — Jaccard near-dups      (shingle -> MinHash -> LSH bands)
   simhash     — near-identical text    (bit-vote fingerprint -> Hamming blocks)
   substr      — long exact substrings  (winnowed rolling-hash fingerprints)
+Any requested subset of {minhash_lsh, simhash} runs as ONE chain: one
+fused featurization pass (textkernel.py), one unified bucket table, one
+pair expansion and one verify; substr runs beside it on its own thread.
 """
 
 from __future__ import annotations
 
-import os
-import threading
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -33,12 +34,9 @@ from .catalog import Catalog
 from .cc import assign_clusters, canonical_representatives, quality_representatives
 from .checkpoint import Checkpointer, input_fingerprint
 from .config import DedupConfig
-from .lsh import band_table, lsh_candidates, pairs_from_buckets
+from .lsh import channel_bucket_table, pairs_from_buckets
 from .metrics import Recorder, StageTimer
-from .minhash import attach_minhash
 from .reassemble import dedupe_turn_versions, reassemble
-from .shingle import shingle_docs
-from .simhash import attach_simhash, hamming_block_table, simhash_candidates
 from .suffixes import (
     exact_substr_within_groups,
     fingerprint_table,
@@ -84,10 +82,9 @@ def _run_channels(spark: SparkSession, builders) -> list[DataFrame]:
     concurrent beats sequential at BOTH 1-core (286.8 s vs 303.3 s —
     planning of one chain overlaps execution of another even with a
     single task slot) and 4-core executors (150.3 s vs 172.8 s).
-    HSIP_CHANNEL_CONCURRENCY=0 forces the sequential path.
     """
     sc = spark.sparkContext
-    if len(builders) <= 1 or os.environ.get("HSIP_CHANNEL_CONCURRENCY", "1") == "0":
+    if len(builders) <= 1:
         return [build() for _, build in builders]
     from concurrent.futures import ThreadPoolExecutor
 
@@ -102,6 +99,20 @@ def _run_channels(spark: SparkSession, builders) -> list[DataFrame]:
 
     with ThreadPoolExecutor(max_workers=len(builders)) as ex:
         return list(ex.map(run, builders))
+
+
+CHANNELS = ("minhash_lsh", "simhash", "substr")
+
+
+def _check_channels(channels: tuple[str, ...]) -> None:
+    """Reject an empty or misspelled channel list up front: an unknown
+    name would silently drop that channel's recall, and no channel at
+    all leaves nothing to verify."""
+    if not channels or not set(channels) <= set(CHANNELS):
+        raise ValueError(
+            f"channels must be a non-empty subset of {CHANNELS}, "
+            f"got {tuple(channels)!r}"
+        )
 
 
 def run_documents(
@@ -125,6 +136,7 @@ def run_documents(
     ``resume=False`` forces recomputation of every stage (checkpoints
     are overwritten) even when matching ones exist for the run_id.
     """
+    _check_channels(channels)
     run_id = run_id or uuid.uuid4().hex[:12]
     use_ckpt = warehouse is not None
     catalog = Catalog(spark, warehouse) if use_ckpt else None
@@ -187,8 +199,7 @@ def run_documents(
         return out
 
     stats: dict = {"stage_walls": stage_walls}
-    need_mh = "minhash_lsh" in channels
-    need_sh = "simhash" in channels
+    mh_sh = tuple(c for c in ("minhash_lsh", "simhash") if c in channels)
 
     # scale-proportional barriers (config.py eager_barrier_min_docs):
     # base is materialized above, so this count scans its blocks
@@ -230,7 +241,7 @@ def run_documents(
         spark.conf.set(_k, _v)
     try:
 
-        if need_sh:
+        if "simhash" in channels:
             # key-entropy advisory (config.py simhash_bits sizing rule): fail
             # LOUDLY when the corpus outgrows the probe keys' collision budget
             # instead of silently flooding verify with random candidates
@@ -298,133 +309,30 @@ def run_documents(
                 "id", "text"
             )
 
-        # Featurization is built LAZILY, inside whichever channel builder
-        # consumes it (exactly one does in every configuration), so the
-        # substring channel — which reads only `base` — starts at t=0 and
-        # overlaps the featurization pass instead of waiting behind it.
-        # On a 1-slot rung this changes nothing (work serializes anyway);
-        # on multi-executor rungs it removes the featurize stage from the
-        # pipeline's critical path (BENCH/BASELINE.md round 5: ~107 s of
-        # 4-slot wall at 2.76M turns ran before the channels forked). The
-        # lock makes the once-init safe if a future config ever shares the
-        # feature frames across two builder threads.
-        shingles = sigs = simhashes = feats = None
-        _feat_lock = threading.Lock()
-        _sh_lock = threading.Lock()
-
-        def _ensure_features(mh: bool = True, sh: bool = True):
-            nonlocal shingles, sigs, simhashes, feats
-            if cfg.fused_kernel and (need_mh or need_sh):
-                # one Arrow pass computes shingles+sig+simhash (textkernel.py)
-                # — indivisible, so one lock and one builder
-                with _feat_lock:
-                    if shingles is None and simhashes is None:
-                        feats = stage(
-                            "features",
-                            lambda: featurize(chan_base, "id", "text", cfg))
-                        scratch.append(feats)
-                        shingles = feats.select("id", "shingles")
-                        sigs = feats.select("id", "sig")
-                        simhashes = feats.select("id", "simhash")
-                return
-            # non-fused: separate guards per feature family, and each caller
-            # asks only for what its channel needs — the minhash and simhash
-            # builds run CONCURRENTLY on the two channel threads instead of
-            # the first arrival serializing both under one lock
-            if mh and need_mh:
-                with _feat_lock:
-                    if shingles is None:
-                        shingles = stage(
-                            "shingles",
-                            lambda: shingle_docs(chan_base, "id", "text", cfg))
-                        sigs = stage(
-                            "minhash", lambda: attach_minhash(shingles, cfg),
-                            reuse=False)
-                        scratch.append(shingles)
-            if sh and need_sh:
-                with _sh_lock:
-                    if simhashes is None:
-                        simhashes = stage(
-                            "simhash",
-                            lambda: attach_simhash(chan_base, "id", "text", cfg))
-                        scratch.append(simhashes)
-
-        def _mh_channel() -> DataFrame:
-            _ensure_features(sh=False)
-
-            def build_lsh():
-                pairs, hot = lsh_candidates(sigs, cfg, scratch=scratch,
-                                            eager=eager_barriers,
-                                            barrier=barrier)
-                if rec:
-                    n_hot = hot.count()
-                    rec.metric("lsh_candidates", "hot_buckets_star_paired", n_hot)
-                return pairs
-
-            lsh_pairs = stage("lsh_candidates", build_lsh, reuse=False)
-            return stage(
-                "verify_jaccard",
-                lambda: V.verify_jaccard(lsh_pairs, shingles, cfg,
-                                         scratch=scratch),
-                reuse=False,
-            )
-
-        def _sh_channel() -> DataFrame:
-            _ensure_features(mh=False)
-
-            def build_sim():
-                pairs, hot = simhash_candidates(simhashes, cfg, scratch=scratch,
-                                                eager=eager_barriers,
-                                                barrier=barrier)
-                if rec:
-                    rec.metric("simhash_candidates", "hot_buckets_star_paired", hot.count())
-                return pairs
-
-            sim_pairs = stage("simhash_candidates", build_sim, reuse=False)
-            return stage(
-                "verify_hamming",
-                lambda: V.verify_hamming(sim_pairs, simhashes, cfg),
-                reuse=False,
-            )
-
         def _mh_sh_channel() -> DataFrame:
-            """Fused MinHash+SimHash chain (VERDICT.md r2 item 1): both
-            channels' buckets union into ONE materialized table, expand
-            through ONE shuffle chain, and verify through ONE hydration
-            against the materialized features table — roughly half the
-            shuffle stages of the two separate chains, with identical pairs
-            and verdicts (pinned by tests/test_e2e_oracle.py's 3-channel
-            brute-force oracle)."""
-            _ensure_features()
+            """MinHash+SimHash chain for any requested subset of the two
+            (VERDICT.md r2 item 1): the channels' buckets union into ONE
+            materialized table, expand through ONE shuffle chain, and
+            verify through ONE hydration against the features table —
+            roughly half the shuffle stages of two separate chains, with
+            identical pairs and verdicts (pinned by tests/test_e2e_oracle.py's
+            3-channel brute-force oracle).
+
+            Featurization is built HERE, not before the channels fork, so
+            the substring channel — which reads only `base` — starts at t=0
+            and overlaps the featurization pass instead of waiting behind
+            it (BENCH/BASELINE.md round 5: ~107 s of 4-slot wall at 2.76M
+            turns ran before the channels forked)."""
+            feats = stage("features",
+                          lambda: featurize(chan_base, "id", "text", cfg))
+            scratch.append(feats)
 
             def build_cands():
-                mh = band_table(sigs, cfg).select(
-                    F.lit("minhash_lsh").alias("channel"), "id",
-                    F.col("band_id").alias("bkt_id"),
-                    F.col("band_hash").alias("bkt_hash"),
-                    # null payload typed to the fingerprint layout (config.py
-                    # simhash_bits: long at 64, array<bigint> lanes at 128)
-                    # so the channel union stays type-compatible
-                    F.lit(None)
-                    .cast("long" if cfg.simhash_bits == 64 else "array<bigint>")
-                    .alias("simhash"),
-                )
-                # simhash payload (8 B/row on the sh rows, null on mh rows)
-                # rides through the pair expansion so Hamming verification is
-                # a projection of the pair table — no join for the channel
-                # whose candidate count can go quadratic (verify.py r4 note)
-                sh = hamming_block_table(simhashes, cfg).select(
-                    F.lit("simhash").alias("channel"), "id",
-                    F.col("table_id").alias("bkt_id"),
-                    F.col("key_hash").alias("bkt_hash"), "simhash",
-                )
                 # eager barrier: pairs_from_buckets contract (sizes groupBy
                 # and join-back both scan the bucket table, which keeps its
                 # hash layout through the barrier)
-                both = barrier(
-                    mh.unionByName(sh).repartition("channel", "bkt_id", "bkt_hash"),
-                    release=scratch,
-                )
+                both = barrier(channel_bucket_table(feats, cfg, mh_sh),
+                               release=scratch)
                 pairs, hot = pairs_from_buckets(
                     both, cfg.bucket_cap,
                     bucket_cols=("channel", "bkt_id", "bkt_hash"), channel=None,
@@ -433,11 +341,13 @@ def run_documents(
                     scratch=scratch, eager=eager_barriers, barrier=barrier,
                 )
                 if rec:
-                    for r in hot.groupBy("channel").count().collect():
-                        rec.metric(
-                            f"{r['channel']}_candidates",
-                            "hot_buckets_star_paired", r["count"],
-                        )
+                    n_hot = {r["channel"]: r["count"]
+                             for r in hot.groupBy("channel").count().collect()}
+                    # a row per requested channel, so a 0 reads as "measured,
+                    # none hot" rather than "not measured"
+                    for ch in mh_sh:
+                        rec.metric(f"{ch}_candidates", "hot_buckets_star_paired",
+                                   n_hot.get(ch, 0))
                 return pairs
 
             cands = stage("candidates_mh_sh", build_cands, reuse=False)
@@ -491,15 +401,8 @@ def run_documents(
             return out
 
         builders = []
-        if need_mh and need_sh and cfg.fused_kernel:
-            # fused-kernel runs hold (shingles, sig, simhash) in one
-            # materialized frame -> the unified single-hydration chain applies
+        if mh_sh:
             builders.append(("mh_sh", _mh_sh_channel))
-        else:
-            if need_mh:
-                builders.append(("minhash_lsh", _mh_channel))
-            if need_sh:
-                builders.append(("simhash", _sh_channel))
         if "substr" in channels:
             builders.append(("substr", _sub_channel))
 
@@ -676,6 +579,7 @@ def run_transcripts(
     the groupBy(conv_id) in reassembly is the single shuffle that
     co-locates turns; everything downstream keys on conv_id.
     """
+    _check_channels(channels)
     deduped = dedupe_turn_versions(turns)
     convs = reassemble(deduped).select("conv_id", "doc_text")
     return run_documents(

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from .barrier import Barrier
 from .config import DedupConfig
 from .lsh import pairs_from_buckets
 from .normalize import norm_text_col, tokens_col
@@ -221,9 +220,7 @@ def probe_key_entropy(cfg: DedupConfig, n_docs: int, margin_bits: float = 8.0) -
 
 
 def simhash_candidates(simhash_df: DataFrame, cfg: DedupConfig,
-                       scratch: list | None = None,
-                       eager: bool = False,
-                       barrier: Barrier | None = None) -> tuple[DataFrame, DataFrame]:
+                       scratch: list | None = None) -> tuple[DataFrame, DataFrame]:
     # scratch: optional list the block cache is appended to so the caller
     # can unpersist it after pair materialization (VERDICT.md r3 item 5).
     # cache + eager count honors the pairs_from_buckets contract (the
@@ -245,7 +242,7 @@ def simhash_candidates(simhash_df: DataFrame, cfg: DedupConfig,
         bucket_cols=("table_id", "key_hash"),
         channel="simhash",
         payload_cols=("simhash",),
-        scratch=scratch, eager=eager, barrier=barrier or Barrier.for_run(cfg),
+        scratch=scratch,
     )
 
 

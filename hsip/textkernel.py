@@ -16,14 +16,20 @@ the same features at memory bandwidth:
   - SimHash: segmented bit-vote (simhash._simhash_batch)
 
 ~100-200 CPU-s for the same corpus — a ~30x reduction, and the
-difference between feasible and not at 10^12 turns. Hash values differ
-from the SQL path (poly-hash vs xxhash64) by design; both are
-config-seeded and internally consistent, and every channel test runs
-against both paths.
+difference between feasible and not at 10^12 turns, so this is the
+pipeline's only featurization; the SQL paths stay as library functions
+for direct callers. Hash values differ from the SQL path (poly-hash vs
+xxhash64) by design; both are config-seeded and internally consistent,
+and tests/test_properties.py pins what the two must share: per-doc
+distinct-shingle counts and pairwise exact Jaccard.
 """
 
 from __future__ import annotations
 
+import functools
+import re
+import sys
+import unicodedata
 from collections.abc import Iterator
 
 import numpy as np
@@ -40,6 +46,21 @@ _B = np.uint64(1000003)
 _BINV = np.uint64(pow(1000003, -1, 1 << 64))
 _MIX1 = np.uint64(0xFF51AFD7ED558CCD)
 _MIX2 = np.uint64(0xC4CEB9FE1A85EC53)
+
+
+@functools.cache
+def _punct_pattern() -> str:
+    r"""strip_punct's regex: non-word, non-space characters, where word
+    characters are Python's Unicode \w PLUS the combining marks
+    (Mn/Mc/Me) that Java's (?U)\w — the SQL path, normalize.py — also
+    counts. Python's \w alone drops them, splitting NFD-accented words
+    and Indic words at every vowel sign."""
+    marks = "".join(
+        chr(c) for c in range(sys.maxunicode + 1)
+        if unicodedata.category(chr(c)).startswith("M")
+    )
+    return f"[^\\w\\s{re.escape(marks)}]"
+
 
 def _features_schema(simhash_bits: int) -> T.StructType:
     """simhash is one long at 64 bits, array<bigint> lanes at 128
@@ -147,9 +168,8 @@ def featurize(df: DataFrame, id_col: str, text_col: str, cfg: DedupConfig) -> Da
             if lowercase:
                 texts = texts.str.lower()
             if strip_punct:
-                # Python \w is Unicode-aware (matches the (?U) SQL path in
-                # normalize.py); replace with space, collapse handles runs
-                texts = texts.str.replace(r"[^\w\s]", " ", regex=True)
+                # replace with space, collapse handles runs
+                texts = texts.str.replace(_punct_pattern(), " ", regex=True)
             if collapse:
                 texts = texts.str.replace(r"\s+", " ", regex=True).str.strip()
             sh_list, tok_list = [], []

@@ -151,7 +151,8 @@ def verify_jaccard_hamming(pairs: DataFrame, features: DataFrame,
     8-byte integers. Split paths:
 
       simhash rows -> (simhash_a, simhash_b) arrive IN the pair rows
-                      (payload_cols through pairs_from_buckets), so the
+                      (lsh.channel_bucket_table's payload through
+                      pairs_from_buckets — required), so the
                       verdict is a projection — zero joins for the
                       channel whose candidate count can go quadratic;
       minhash rows -> (shingles) hydration, pruned to pair-touched ids
@@ -222,9 +223,6 @@ def verify_jaccard_hamming(pairs: DataFrame, features: DataFrame,
         .withColumn("verdict", F.col("jaccard") >= cfg.jaccard_threshold)
     )
     sh_src = pairs.filter(~is_mh)
-    if "simhash_a" not in pairs.columns:
-        # caller without payload pairs: fall back to the slim hydration
-        sh_src = hydrate(sh_src, features, ["simhash"])
     sh = (
         sh_src
         .withColumn("jaccard", F.lit(None).cast("double"))
@@ -238,8 +236,8 @@ def verify_jaccard_hamming(pairs: DataFrame, features: DataFrame,
 def _verify_jh_fused_small(pairs: DataFrame, features: DataFrame,
                            cfg: DedupConfig) -> DataFrame:
     """Small-corpus shape of verify_jaccard_hamming: one fused CASE
-    hydration (the round-3 design). Payload (simhash_a/_b) pairs skip the
-    simhash hydration column; rows/verdicts identical to the split path.
+    hydration (the round-3 design); rows/verdicts identical to the split
+    path.
 
     The pair rows are re-spread to the session's core count first (r6):
     this path runs under the pipeline's small-corpus latency mode, whose
@@ -251,16 +249,14 @@ def _verify_jh_fused_small(pairs: DataFrame, features: DataFrame,
     """
     sc = pairs.sparkSession.sparkContext
     pairs = pairs.repartition(max(sc.defaultParallelism, 8))
-    has_payload = "simhash_a" in pairs.columns
-    cols = ["shingles"] if has_payload else ["shingles", "simhash"]
-    # ``features`` passes the pipeline's barrier before any channel
-    # verifies (pipeline._ensure_features), which measured its blocks.
+    # ``features`` is the pipeline's `features` stage barrier, which
+    # measured its blocks.
     # Known-small -> broadcast hydration: one reused build replaces the
     # two sort-merge joins whose narrow-width exchanges ship the shingle
     # arrays twice and pin the Jaccard projection at the latency shuffle
     # width instead of the re-spread core count (r6: live transcript-
     # scale plan had 4 SMJ / 8 Exchange to verify 1,841 pairs).
-    h = hydrate(pairs, features, cols,
+    h = hydrate(pairs, features, ["shingles"],
                 broadcast=fits_broadcast(features, _BCAST_HYDRATE_MAX_BYTES))
     is_mh = F.col("channel") == "minhash_lsh"
     jac = F.when(is_mh, jaccard_col())

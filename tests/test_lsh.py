@@ -1,11 +1,10 @@
 """G3/G4: band arithmetic, bucket pairing, hot-bucket star mode, S-curve."""
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from hsip import schemas
 from hsip.config import DedupConfig
-from hsip.lsh import band_table, lsh_candidates, pairs_from_buckets
+from hsip.lsh import band_table, channel_bucket_table, lsh_candidates, pairs_from_buckets
 from hsip.minhash import minhash_signatures_local
 
 
@@ -122,15 +121,7 @@ def test_unified_channel_pairs_equal_separate(spark):
     sep_sh, _ = simhash_candidates(sims, cfg)
     sep = {(r.a, r.b, r.channel) for df in (sep_mh, sep_sh) for r in df.collect()}
 
-    from hsip.simhash import hamming_block_table
-
-    mh = band_table(sigs, cfg).select(
-        F.lit("minhash_lsh").alias("channel"), "id",
-        F.col("band_id").alias("bkt_id"), F.col("band_hash").alias("bkt_hash"))
-    sh = hamming_block_table(sims, cfg).select(
-        F.lit("simhash").alias("channel"), "id",
-        F.col("table_id").alias("bkt_id"), F.col("key_hash").alias("bkt_hash"))
-    both = mh.unionByName(sh).repartition("channel", "bkt_id", "bkt_hash").cache()
+    both = channel_bucket_table(feats, cfg, ("minhash_lsh", "simhash")).cache()
     both.count()
     uni_pairs, _ = pairs_from_buckets(
         both, cfg.bucket_cap, bucket_cols=("channel", "bkt_id", "bkt_hash"),
@@ -138,6 +129,14 @@ def test_unified_channel_pairs_equal_separate(spark):
     )
     uni = {(r.a, r.b, r.channel) for r in uni_pairs.collect()}
     assert uni == sep and uni, uni ^ sep
+    # one leg per requested channel
+    for ch, want in (("minhash_lsh", sep_mh), ("simhash", sep_sh)):
+        one, _ = pairs_from_buckets(
+            channel_bucket_table(feats, cfg, (ch,)), cfg.bucket_cap,
+            bucket_cols=("channel", "bkt_id", "bkt_hash"), channel=None,
+        )
+        assert {(r.a, r.b, r.channel) for r in one.collect()} == {
+            (r.a, r.b, r.channel) for r in want.collect()}
 
 
 def test_payload_passthrough_small_star_salt(spark):
@@ -169,9 +168,8 @@ def test_payload_passthrough_small_star_salt(spark):
 
 
 def test_verify_jaccard_hamming_payload_and_fallback(spark):
-    """Channel-aware verify: pairs WITH (simhash_a, simhash_b) payload
-    take the projection path; pairs without fall back to slim hydration.
-    Both must produce identical rows."""
+    """Channel-aware verify: simhash pairs read their (simhash_a,
+    simhash_b) payload as a projection, minhash pairs hydrate shingles."""
     from hsip.config import DedupConfig
     from hsip.verify import verify_jaccard_hamming
 
@@ -184,7 +182,6 @@ def test_verify_jaccard_hamming_payload_and_fallback(spark):
     sims = {"a": 0b0000, "b": 0b0001, "c": 0b111111}
     base = [("a", "b", "minhash_lsh"), ("a", "b", "simhash"),
             ("a", "c", "simhash")]
-    plain = spark.createDataFrame(base, "a string, b string, channel string")
     payload = spark.createDataFrame(
         [(a, b, ch,
           sims[a] if ch == "simhash" else None,
@@ -194,9 +191,6 @@ def test_verify_jaccard_hamming_payload_and_fallback(spark):
     cols = ["a", "b", "channel", "jaccard", "hamming", "verdict"]
     got_p = {tuple(r) for r in
              verify_jaccard_hamming(payload, feats, cfg).select(*cols).collect()}
-    got_f = {tuple(r) for r in
-             verify_jaccard_hamming(plain, feats, cfg).select(*cols).collect()}
-    assert got_p == got_f
     by_key = {(a, b, ch): (j, h, v) for a, b, ch, j, h, v in got_p}
     assert by_key[("a", "b", "minhash_lsh")] == (0.6, None, True)
     assert by_key[("a", "b", "simhash")] == (None, 1, True)
@@ -206,7 +200,7 @@ def test_verify_jaccard_hamming_payload_and_fallback(spark):
 def test_verify_shapes_fused_small_equals_split(spark):
     """Scale-adaptive verify (round 5): the small-corpus fused CASE shape
     (eager=False) and the large-corpus channel-aware split (eager=True)
-    must emit identical rows on every payload combination."""
+    must emit identical rows."""
     from hsip.config import DedupConfig
     from hsip.verify import verify_jaccard_hamming
 
@@ -219,7 +213,6 @@ def test_verify_shapes_fused_small_equals_split(spark):
     sims = {"a": 0b0000, "b": 0b0001, "c": 0b111111}
     base = [("a", "b", "minhash_lsh"), ("a", "b", "simhash"),
             ("a", "c", "simhash"), ("b", "c", "minhash_lsh")]
-    plain = spark.createDataFrame(base, "a string, b string, channel string")
     payload = spark.createDataFrame(
         [(a, b, ch,
           sims[a] if ch == "simhash" else None,
@@ -227,12 +220,10 @@ def test_verify_shapes_fused_small_equals_split(spark):
         "a string, b string, channel string, simhash_a long, simhash_b long",
     )
     cols = ["a", "b", "channel", "jaccard", "hamming", "verdict"]
-    outs = []
-    for pairs in (plain, payload):
-        for eager in (True, False):
-            outs.append({
-                tuple(r)
-                for r in verify_jaccard_hamming(pairs, feats, cfg, eager=eager)
-                .select(*cols).collect()
-            })
-    assert all(o == outs[0] for o in outs[1:]), outs
+    split, fused = (
+        {tuple(r) for r in
+         verify_jaccard_hamming(payload, feats, cfg, eager=eager)
+         .select(*cols).collect()}
+        for eager in (True, False)
+    )
+    assert split == fused and len(split) == len(base), (split, fused)

@@ -123,7 +123,7 @@ def test_resume_from_checkpoint(spark, corpus, tmp_path_factory):
         spark, docs, "conv_id", "doc_text", cfg,
         channels=("minhash_lsh",), warehouse=wh, run_id="runA",
     )
-    assert {"features", "shingles"} & set(r2.stats["skipped_stages"])
+    assert "features" in r2.stats["skipped_stages"]
     assert "clusters" in r2.stats["computed_stages"]
     second = {(r.id, r.cluster_id) for r in r2.clusters.collect()}
     assert first == second
@@ -224,16 +224,80 @@ def test_same_clusters_either_side_of_eager_barrier_min_docs(spark, corpus, resu
     """The barrier threshold is NON-SEMANTIC (config.py): the same corpus
     run just below it (eager regime: AQE on, split verify, materialized
     bucket join-backs) and just above it (latency regime: AQE off, derived
-    width, fused verify) gives identical (id, cluster_id) rows."""
+    width, fused verify) gives identical (id, cluster_id) rows — for every
+    channel subset the mh/sh chain serves, and for all three channels."""
     turns, _ = corpus
     n = result.stats["n_docs"]
-    eager = run_transcripts(spark, turns, DedupConfig(eager_barrier_min_docs=n))
-    latency = run_transcripts(spark, turns, DedupConfig(eager_barrier_min_docs=n + 1))
-    assert eager.stats["eager_barriers"] and not latency.stats["eager_barriers"]
-    a = {(r.id, r.cluster_id) for r in eager.clusters.collect()}
-    b = {(r.id, r.cluster_id) for r in latency.clusters.collect()}
-    assert a == b
-    assert len(a) == n
+    for channels in (("minhash_lsh",), ("simhash",), ("minhash_lsh", "simhash"),
+                     ("minhash_lsh", "simhash", "substr")):
+        eager = run_transcripts(spark, turns, DedupConfig(eager_barrier_min_docs=n),
+                                channels=channels)
+        latency = run_transcripts(spark, turns,
+                                  DedupConfig(eager_barrier_min_docs=n + 1),
+                                  channels=channels)
+        assert eager.stats["eager_barriers"] and not latency.stats["eager_barriers"]
+        a = {(r.id, r.cluster_id) for r in eager.clusters.collect()}
+        b = {(r.id, r.cluster_id) for r in latency.clusters.collect()}
+        assert a == b, channels
+        assert len(a) == n
+
+
+def test_simhash_only_edges_equal_brute_force_hamming(spark, corpus):
+    """A simhash-only run verifies exactly the pairs within Hamming
+    distance hamming_d of each other: the probe tables are exhaustive by
+    pigeonhole (hsip/simhash.py hamming_block_table). bucket_cap is
+    raised so no bucket is star-paired, the one documented cap on that
+    exhaustiveness."""
+    from hsip.textkernel import featurize
+
+    turns, _ = corpus
+    cfg = DedupConfig(bucket_cap=10_000)
+    docs = reassemble(dedupe_turn_versions(turns)).select("conv_id", "doc_text")
+    res = run_documents(spark, docs, "conv_id", "doc_text", cfg,
+                        channels=("simhash",))
+    got = {(r.a, r.b) for r in res.verified.filter("verdict").collect()}
+    sims = sorted((r.id, r.simhash) for r in
+                  featurize(docs, "conv_id", "doc_text", cfg).collect())
+    want = {
+        (a, b)
+        for i, (a, x) in enumerate(sims) for b, y in sims[i + 1:]
+        if bin((x ^ y) & (2**64 - 1)).count("1") <= cfg.hamming_d
+    }
+    assert want and got == want, (len(got), len(want))
+
+
+def test_channels_validated_at_entry(spark):
+    """An empty or misspelled channel list fails fast, naming the valid
+    channels, instead of crashing in combine_verified (empty) or silently
+    dropping a channel's recall (typo)."""
+    docs = spark.createDataFrame([("a", "x y z")], "id string, text string")
+    turns = spark.createDataFrame([], "conv_id string, turn_idx int")
+    for channels in ((), ("bogus",), ("minhash_lsh", "simhsh")):
+        with pytest.raises(ValueError, match="minhash_lsh.*simhash.*substr"):
+            run_documents(spark, docs, "id", "text", DedupConfig(),
+                          channels=channels)
+        with pytest.raises(ValueError, match="minhash_lsh.*simhash.*substr"):
+            run_transcripts(spark, turns, DedupConfig(), channels=channels)
+
+
+def test_hot_bucket_metric_recorded_for_every_requested_channel(spark, tmp_path):
+    """"No silent caps": a warehouse run records hot_buckets_star_paired
+    for each requested mh/sh channel, 0 included, so "none were hot" and
+    "not measured" read differently; unrequested channels get no row."""
+    from hsip.catalog import Catalog
+
+    docs = spark.createDataFrame(
+        [(f"d{i}", f"document {i} talks about topic {i * 7} at length " * 5)
+         for i in range(12)],
+        "id string, text string",
+    )
+    wh = str(tmp_path / "wh")
+    run_documents(spark, docs, "id", "text", DedupConfig(),
+                  channels=("minhash_lsh",), warehouse=wh, run_id="hot")
+    rows = {(r.stage, r.key): r.value
+            for r in Catalog(spark, wh).read("metrics").collect()}
+    assert rows[("minhash_lsh_candidates", "hot_buckets_star_paired")] == 0
+    assert ("simhash_candidates", "hot_buckets_star_paired") not in rows
 
 
 def test_warehouse_run_keeps_lineage_barriers(spark, corpus, tmp_path_factory,

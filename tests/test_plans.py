@@ -129,9 +129,10 @@ def test_latency_verify_hydration_broadcasts_known_small_features(spark):
         "id string, shingles array<long>, simhash long",
     )
     feats = Barrier()(raw)
+    # simhash pairs carry their payload, as pairs_from_buckets emits them
     pairs = spark.createDataFrame(
-        [("a", "b", "minhash_lsh"), ("a", "c", "simhash")],
-        "a string, b string, channel string",
+        [("a", "b", "minhash_lsh", None, None), ("a", "c", "simhash", 0, 63)],
+        "a string, b string, channel string, simhash_a long, simhash_b long",
     )
     try:
         with _no_auto_broadcast(spark):
@@ -185,10 +186,13 @@ def test_pipeline_latency_features_broadcast_from_warehouse(spark, tmp_path):
 
 
 def _pairs_over(spark, feats):
-    ids = [r.id for r in feats.select("id").limit(3).collect()]
+    """One minhash and one simhash pair over ``feats``, the simhash pair
+    carrying its payload as pairs_from_buckets emits it."""
+    r = feats.select("id", "simhash").limit(3).collect()
     return spark.createDataFrame(
-        [(ids[0], ids[1], "minhash_lsh"), (ids[0], ids[2], "simhash")],
-        "a string, b string, channel string",
+        [(r[0].id, r[1].id, "minhash_lsh", None, None),
+         (r[0].id, r[2].id, "simhash", r[0].simhash, r[2].simhash)],
+        "a string, b string, channel string, simhash_a long, simhash_b long",
     )
 
 

@@ -15,6 +15,7 @@ from hsip.suffixes import _rolling_hashes, _sliding_min, _winnow, duplicate_span
 from hsip.textkernel import _doc_features
 
 import pandas as pd
+import pytest
 
 _text = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=0x24F),
@@ -163,34 +164,94 @@ def test_icws_signature_is_multiset_function(pairs, seed):
     assert (sigs[0] == sigs[1]).all()
 
 
+# Reference corpus for the featurize-vs-shingle_docs invariants: empty,
+# whitespace-only, short (< k tokens), punctuated, cased, accented (NFC and
+# NFD spellings), non-Latin and overlapping docs.
+_REF_TEXTS = [
+    "", "   ", "\t\n ", "a", "hello", "hello world", "Hello,  World!",
+    "hello world again", "hello, world; again!",
+    "The quick brown fox jumps over the lazy dog",
+    "the quick brown fox jumps over the lazy dog.",
+    "THE QUICK BROWN FOX JUMPS OVER THE LAZY CAT",
+    "café crème brûlée au naïve résumé",
+    "cafe\u0301 cre\u0300me bru\u0302le\u0301e au nai\u0308ve re\u0301sume\u0301",
+    "Ünïcödé wörds — with “quotes” and… ellipses",
+    "हिन्दी में कुछ पाठ, और कुछ हिन्दी में",
+    "中文 文本 测试 中文", "don't stop-me now", "don t stop me now",
+    "one two three four five six seven", "one two three four five six eight",
+]
+
+
+def _shingle_sets(df):
+    return {r.id: set(r.shingles) for r in df.collect()}
+
+
+def _jaccard(x, y):
+    return len(x & y) / len(x | y)
+
+
+@pytest.mark.parametrize("overrides", [
+    {},
+    {"shingle_k": 2, "nfc": True},
+    {"strip_punct": True, "lowercase": False},
+])
+def test_featurize_matches_shingle_docs_set_sizes_and_jaccard(spark, overrides):
+    """The fused kernel (featurize, the pipeline's only featurization) and
+    the SQL library path (shingle_docs) hash differently by design
+    (polynomial vs xxhash64), but must agree on what the hashes encode:
+    each doc's distinct-shingle count and every pair's exact Jaccard.
+    NULL text is the one deliberate difference: featurize treats it as ""
+    (as collapse_exact's coalesce does), so it is pinned separately."""
+    import itertools
+
+    from hsip.shingle import shingle_docs
+    from hsip.textkernel import featurize
+
+    cfg = DedupConfig(**overrides)
+    rows = [(f"d{i:02d}", t) for i, t in enumerate(_REF_TEXTS)]
+    docs = spark.createDataFrame(rows + [("null", None)], "id string, text string")
+    fused = featurize(docs, "id", "text", cfg).collect()
+    by_id = {r.id: r for r in fused}
+    assert (by_id["null"].shingles, by_id["null"].sig, by_id["null"].simhash) == (
+        by_id["d00"].shingles, by_id["d00"].sig, by_id["d00"].simhash)
+
+    ids = [i for i, _ in rows]
+    f = {r.id: set(r.shingles) for r in fused}
+    s = _shingle_sets(shingle_docs(docs, "id", "text", cfg))
+    assert {i: len(f[i]) for i in ids} == {i: len(s[i]) for i in ids}
+    mismatched = [
+        (a, b) for a, b in itertools.combinations(ids, 2)
+        if _jaccard(f[a], f[b]) != _jaccard(s[a], s[b])
+    ]
+    assert not mismatched, mismatched
+
+
 def test_empty_docs_cluster_identically_on_both_featurizations(spark):
     """Two docs whose text normalizes to empty must verify as exact
-    duplicates (jaccard 1.0) under BOTH the fused kernel and the SQL
-    shingle path: the fused kernel previously emitted an empty shingle
-    array for 0-token docs (jaccard 0, not clustered) while the SQL
-    path's whole-doc-hash fallback clustered them — same corpus and
-    config, different clusters on the fused_kernel toggle."""
-    from hsip.config import DedupConfig
+    duplicates (jaccard 1.0) under BOTH featurize and the SQL shingle
+    path: the fused kernel previously emitted an empty shingle array for
+    0-token docs (jaccard 0, not clustered) while the SQL path's whole-
+    doc-hash fallback clustered them."""
     from hsip.pipeline import run_documents
+    from hsip.shingle import shingle_docs
+    from hsip.textkernel import featurize
 
     docs = spark.createDataFrame(
         [("e1", ""), ("e2", "   "), ("x", "some real text here " * 10),
          ("y", "some real text here " * 10)],
         ["doc_id", "text"],
     )
-    got = {}
-    for fused in (True, False):
-        cfg = DedupConfig(num_perm=32, lsh_bands=32, lsh_rows=1,
-                          jaccard_threshold=0.5, fused_kernel=fused)
-        res = run_documents(spark, docs, "doc_id", "text", cfg,
-                            channels=("minhash_lsh",))
-        labels = {r["id"]: r["cluster_id"]
-                  for r in res.clusters.collect()}
-        got[fused] = labels
-        assert labels["e1"] == labels["e2"], f"fused={fused}"
-        assert labels["x"] == labels["y"], f"fused={fused}"
-        assert labels["e1"] != labels["x"], f"fused={fused}"
-    assert got[True] == got[False]
+    cfg = DedupConfig(num_perm=32, lsh_bands=32, lsh_rows=1,
+                      jaccard_threshold=0.5)
+    for feats in (featurize, shingle_docs):
+        sets = _shingle_sets(feats(docs, "doc_id", "text", cfg))
+        assert _jaccard(sets["e1"], sets["e2"]) == 1.0, feats.__name__
+    res = run_documents(spark, docs, "doc_id", "text", cfg,
+                        channels=("minhash_lsh",))
+    labels = {r["id"]: r["cluster_id"] for r in res.clusters.collect()}
+    assert labels["e1"] == labels["e2"]
+    assert labels["x"] == labels["y"]
+    assert labels["e1"] != labels["x"]
 
 
 def test_config_rejects_degenerate_banding_and_winnowing():

@@ -6,8 +6,8 @@ Usage:  python tools/capture_plans_r06.py <outdir> <suffix>
 
 Driver-only — builds the logical chains the pipeline wires up and prints
 their physical plans without executing them, plus the headline relational
-queries. Adapts to the r5 function signatures via inspection so the same
-script runs in both trees.
+queries. Adapts to the r5 `eager=` signatures via inspection; the fused
+mh+sh bucket table comes from `hsip.lsh.channel_bucket_table`.
 """
 
 from __future__ import annotations
@@ -42,9 +42,8 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from hsip.config import DedupConfig
-    from hsip.lsh import band_table, pairs_from_buckets
+    from hsip.lsh import channel_bucket_table, pairs_from_buckets
     from hsip.session import get_spark
-    from hsip.simhash import hamming_block_table
     from hsip.suffixes import fingerprint_table, substr_candidates, verify_substr
     from hsip.textkernel import featurize
     from hsip import verify as V
@@ -70,19 +69,7 @@ def main() -> None:
 
     # --- fused mh+sh channel: union buckets -> pairs -> verify ---
     feats = featurize(base, "id", "text", cfg)
-    sigs = feats.select("id", "sig")
-    simhashes = feats.select("id", "simhash")
-    mh = band_table(sigs, cfg).select(
-        F.lit("minhash_lsh").alias("channel"), "id",
-        F.col("band_id").alias("bkt_id"), F.col("band_hash").alias("bkt_hash"),
-        F.lit(None).cast("long").alias("simhash"),
-    )
-    sh = hamming_block_table(simhashes, cfg).select(
-        F.lit("simhash").alias("channel"), "id",
-        F.col("table_id").alias("bkt_id"), F.col("key_hash").alias("bkt_hash"),
-        "simhash",
-    )
-    both = mh.unionByName(sh).repartition("channel", "bkt_id", "bkt_hash")
+    both = channel_bucket_table(feats, cfg, ("minhash_lsh", "simhash"))
     mhsh_pairs, _hot2 = pairs_from_buckets(
         both, cfg.bucket_cap, bucket_cols=("channel", "bkt_id", "bkt_hash"),
         channel=None, hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
