@@ -25,6 +25,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     import hsip.suffixes as S
+    from hsip.barrier import Barrier, Regime
     from hsip.config import DedupConfig
     from hsip.session import get_spark
     from hsip.suffixes import fingerprint_table, substr_candidates
@@ -87,10 +88,9 @@ def main() -> None:
 
     t0 = time.time()
     if variant == "v0":
-        # scratch=[] as the pipeline passes it: the shipped path then
-        # materializes the join-back too (substr_candidates tags only
-        # when a release list is given)
-        pairs, hot = substr_candidates(fps, cfg, scratch=[], eager=True)
+        # an eager regime, as the pipeline passes it at scale: the shipped
+        # path then materializes the join-back too
+        pairs, hot = substr_candidates(fps, cfg, Regime(Barrier()))
     elif variant == "v0copy":
         pairs = variant_candidates(fps)
     elif variant == "tag_cache":

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import verify as V
+from .barrier import Barrier, Regime
 from .config import DedupConfig
 from .lsh import lsh_candidates
 from .simhash import simhash_candidates
@@ -42,25 +43,24 @@ def channel_outputs(docs: DataFrame, id_col: str, text_col: str,
                     cfg: DedupConfig) -> dict[str, set]:
     """Verified (a, b) pair sets per channel, as the pipeline computes
     them (featurize -> candidates -> exact verification)."""
-    feats = featurize(docs, id_col, text_col, cfg).cache()
-    feats.count()
-    scratch: list[DataFrame] = []
+    regime = Regime(Barrier.for_run(cfg))  # eager; released at the end
+    feats = regime.reused(featurize(docs, id_col, text_col, cfg))
 
-    lsh_pairs, _ = lsh_candidates(feats.select("id", "sig"), cfg, scratch=scratch)
-    vj = V.verify_jaccard(lsh_pairs, feats.select("id", "shingles"), cfg)
+    lsh_pairs, _ = lsh_candidates(feats.select("id", "sig"), cfg, scratch=regime.sweep)
+    vj = V.verify_jaccard(lsh_pairs, feats.select("id", "shingles"), cfg,
+                          scratch=regime.sweep)
     got_j = {(r.a, r.b) for r in vj.filter("verdict").collect()}
 
-    sp, _ = simhash_candidates(feats.select("id", "simhash"), cfg, scratch=scratch)
+    sp, _ = simhash_candidates(feats.select("id", "simhash"), cfg, scratch=regime.sweep)
     vh = V.verify_hamming(sp, feats.select("id", "simhash"), cfg)
     got_h = {(r.a, r.b) for r in vh.filter("verdict").collect()}
 
-    fps = fingerprint_table(docs, id_col, text_col, cfg).cache()
-    sub_pairs, _ = substr_candidates(fps, cfg)
-    vs = verify_substr(sub_pairs, docs, id_col, text_col, cfg, scratch=scratch)
+    fps = regime.reused(fingerprint_table(docs, id_col, text_col, cfg))
+    sub_pairs, _ = substr_candidates(fps, cfg, regime)
+    vs = verify_substr(sub_pairs, docs, id_col, text_col, cfg, regime)
     got_s = {(r.a, r.b) for r in vs.filter("verdict").collect()}
 
-    for c in [feats, fps, *scratch]:
-        c.unpersist()
+    regime.release()
     return {"minhash_lsh": got_j, "simhash": got_h, "substr": got_s}
 
 

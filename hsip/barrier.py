@@ -38,6 +38,9 @@ How a run's barriers materialize is decided once, by ``Barrier.for_run``:
 
 Connected components always truncates (``Barrier(checkpoint_dir)``): its
 plan grows each round otherwise.
+
+Whether a run places its nested barriers at all (eager) or keeps lazy
+caches under a latency conf is decided once too, by ``Regime.for_run``.
 """
 
 from __future__ import annotations
@@ -117,6 +120,98 @@ class Barrier:
         out._hsip_rdd = rdd
         out.unpersist = types.MethodType(_unpersist, out)
         return out
+
+
+@contextlib.contextmanager
+def session_conf(spark, overrides: dict[str, str]):
+    """Set ``overrides`` for the block; the previous values (or unset)
+    come back on exit, failed or not: sessions run many pipelines."""
+    saved = {k: spark.conf.get(k, None) for k in overrides}
+    for k, v in overrides.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+class Regime:
+    """One pipeline run's physical regime, decided once from its document
+    count (``for_run``); the builders branch on it, not on flags of their own.
+
+    - eager (``n_docs >= cfg.eager_barrier_min_docs``): reused frames and
+      bucket join-backs pass the run's barrier; the session conf is kept.
+    - latency (``width`` set): the chains are dozens of tiny exchanges,
+      and under AQE each becomes its own query-stage job — a serial floor
+      of driver round-trips no executor count amortizes. Reused frames
+      are lazy caches, join-backs stay lazy, and the run executes with
+      AQE off at ``width`` shuffle partitions (~500 docs each, floor 8,
+      capped at the session's own width).
+
+    ``sweep`` collects what the builders materialize, for ``release``."""
+
+    def __init__(self, barrier: Barrier, width: int | None = None):
+        self.barrier = barrier
+        self.width = width
+        self.eager = width is None
+        self.sweep: list[DataFrame] = []
+
+    @classmethod
+    def for_run(cls, spark, cfg, n_docs: int, barrier: Barrier) -> Regime:
+        if n_docs >= cfg.eager_barrier_min_docs:
+            return cls(barrier)
+        ambient = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        return cls(barrier, width=max(8, min(ambient, -(-n_docs // 500))))
+
+    def reused(self, df: DataFrame) -> DataFrame:
+        """A frame several plan branches scan: a barrier when eager (AQE
+        rebuilds a lazy subtree once per concurrent consumer), a lazy cache
+        in latency mode (cheaper than the extra job at that size)."""
+        if self.eager:
+            return self.barrier(df, release=self.sweep)
+        out = df.cache()
+        self.sweep.append(out)
+        return out
+
+    def join_back(self, df: DataFrame) -> DataFrame:
+        """A bucket-size join-back: materialized for its pair legs when eager."""
+        return self.barrier(df, release=self.sweep) if self.eager else df
+
+    def spread(self, df: DataFrame) -> DataFrame:
+        """Latency mode: re-spread narrow pair rows to the core count before a
+        CPU-bound verify projection, which would otherwise run ``width`` wide."""
+        if self.eager:
+            return df
+        return df.repartition(max(df.sparkSession.sparkContext.defaultParallelism, 8))
+
+    def release(self) -> None:
+        for df in self.sweep:
+            df.unpersist()
+        self.sweep.clear()
+
+    @contextlib.contextmanager
+    def applied(self, spark, base: DataFrame):
+        """Run the block under this regime, yielding the view of ``base`` the
+        channels scan: in latency mode coalesced to ``width`` (narrow, no
+        shuffle), so scans don't schedule dozens of near-empty tasks. On
+        exit, failed or not, the conf is restored and the sweep and
+        ``base`` release their blocks."""
+        view, conf = base, {}
+        if not self.eager:
+            conf = {"spark.sql.adaptive.enabled": "false",
+                    "spark.sql.shuffle.partitions": str(self.width)}
+            if base.rdd.getNumPartitions() > 2 * self.width:
+                view = base.coalesce(self.width)
+        try:
+            with session_conf(spark, conf):
+                yield view
+        finally:
+            self.release()
+            base.unpersist()
 
 
 def measured_size_bytes(df: DataFrame) -> int | None:

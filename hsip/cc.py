@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from .barrier import Barrier, job_label
+from .barrier import Barrier, job_label, session_conf
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -183,16 +183,10 @@ def connected_components(
     # ~16 s per run regardless of executor count. AQE's runtime re-plan
     # buys nothing here (sizes are known-small after round 0), so run
     # the loop with AQE off and a small fixed shuffle width instead.
-    _tuned = {
+    with session_conf(spark, {
         "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(
-            max(8, 2 * sc.defaultParallelism)
-        ),
-    }
-    _saved = {k: spark.conf.get(k, None) for k in _tuned}
-    for k, v in _tuned.items():
-        spark.conf.set(k, v)
-    try:
+        "spark.sql.shuffle.partitions": str(max(8, 2 * sc.defaultParallelism)),
+    }):
         prev = _checksum(e)
         for rnd in range(max_iter):
             with job_label(sc, f"cc_round_{rnd}"):
@@ -214,12 +208,6 @@ def connected_components(
                 f"connected_components did not converge in {max_iter} "
                 "star rounds; raise max_iter or inspect the edge set"
             )
-    finally:
-        for k, v in _saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     # converged: star graphs, every edge points (member -> component min)
     if release is not None:
         release.append(e)

@@ -19,7 +19,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .barrier import Barrier
+from .barrier import Regime
 from .config import DedupConfig
 
 
@@ -44,9 +44,7 @@ def pairs_from_buckets(
     hot_policy: str = "star",
     salt_seed: int = 42,
     payload_cols: tuple[str, ...] = (),
-    scratch: list | None = None,
-    eager: bool = False,
-    barrier: Barrier | None = None,
+    regime: Regime | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Generic bucket -> candidate-pair expansion with hot-bucket control.
 
@@ -106,20 +104,18 @@ def pairs_from_buckets(
     sizes = bucketed.groupBy(*cols).agg(F.count(F.lit(1)).alias("bsz")) \
         .filter(F.col("bsz") >= 2)
     tagged = bucketed.join(sizes, cols)
-    # ``scratch`` + ``eager``: materialize the join-back ONCE for its four
+    # ``regime``: an eager run materializes the join-back ONCE for its four
     # consumer legs (small x/y self-join, hot, hot_min; hot_stats is a
     # fifth). Without it each leg re-runs the size join over the full
     # bucket table — r6 rung iso (bench/iso_substr.py): the tagged table
     # is 1.9M rows where the bucket table is 8.4M, and materializing it
     # cut the substr expansion 10.5 s -> 8.4 s with identical pairs. The
     # flat barrier keeps the bucket table's hash layout, so the legs join
-    # it with no exchange; caller releases it via ``scratch``; ``barrier``
-    # is the run's policy (Barrier.for_run; the flat local barrier when
-    # None). Latency-mode callers pass eager=False — at
-    # kB scale the extra materialization job costs more than the
-    # duplicated tiny joins it saves.
-    if eager and scratch is not None:
-        tagged = (barrier or Barrier())(tagged, release=scratch)
+    # it with no exchange; it joins the regime's sweep. A latency regime
+    # (or None) leaves it lazy — at kB scale the extra materialization
+    # job costs more than the duplicated tiny joins it saves.
+    if regime is not None:
+        tagged = regime.join_back(tagged)
 
     small = tagged.filter(F.col("bsz") <= cap).drop("bsz")
     x = small.alias("x")
@@ -252,7 +248,7 @@ def lsh_candidates(sig_df: DataFrame, cfg: DedupConfig,
         scratch.append(bands)
     return pairs_from_buckets(
         bands, cfg.bucket_cap, channel=channel,
-        hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed, scratch=scratch,
+        hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
     )
 
 

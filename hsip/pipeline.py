@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import verify as V
-from .barrier import Barrier, job_label
+from .barrier import Barrier, Regime, job_label
 from .catalog import Catalog
 from .cc import assign_clusters, canonical_representatives, quality_representatives
 from .checkpoint import Checkpointer, input_fingerprint
@@ -175,7 +175,7 @@ def run_documents(
 
     stage_walls: dict[str, float] = {}
 
-    def stage(name: str, build, reuse: bool = True):
+    def stage(name: str, build, reuse: bool = True, swept: bool = False):
         # per-stage wall (driver-observed, includes materialization for
         # eager stages; ~0 for lazy reuse=False stages whose execution
         # folds into the downstream consumer). Surfaces in
@@ -184,7 +184,8 @@ def run_documents(
         # Ephemeral mode labels the stage's jobs, the barriers nested in
         # its build included, and materializes reused stages through the
         # flat barrier: downstream consumers plan over one leaf instead
-        # of the stage's whole logical tree (PLANS.md).
+        # of the stage's whole logical tree (PLANS.md). ``swept`` stages
+        # release with the regime's sweep.
         t0 = time.time()
         if ckpt:
             with StageTimer(rec, name):
@@ -196,50 +197,22 @@ def run_documents(
                 if reuse:
                     out = barrier(out)
         stage_walls[name] = round(time.time() - t0, 3)
+        if swept:
+            regime.sweep.append(out)
         return out
 
     stats: dict = {"stage_walls": stage_walls}
     mh_sh = tuple(c for c in ("minhash_lsh", "simhash") if c in channels)
 
-    # scale-proportional barriers (config.py eager_barrier_min_docs):
-    # base is materialized above, so this count scans its blocks
+    # the run's physical regime, decided once (hsip/barrier.py Regime; r6
+    # A/B at 57k turns: latency 10.4 s -> 7.8 s, identical output). base
+    # is materialized above, so this count scans its blocks.
     n_docs = base.count()
-    eager_barriers = n_docs >= cfg.eager_barrier_min_docs
-    stats["eager_barriers"] = eager_barriers
-
-    # Latency-tune the small-corpus regime, the same way the CC loop
-    # tunes its rounds (hsip/cc.py): below the eager barrier the chains
-    # are dozens of tiny exchanges, and with AQE each exchange becomes
-    # its own query-stage materialization job — ~150 driver round-trips
-    # per run at bench scale (r6 event log), a serial floor no executor
-    # count amortizes. AQE's runtime re-planning buys nothing on
-    # kB-sized shuffles, so: AQE off + a shuffle width derived from the
-    # corpus (~500 docs/partition, floor 8, cap = the ambient 2x-cores
-    # width) for the duration of this run; restored in the finally
-    # below. r6 A/B at 57k turns: 10.4 s -> 7.8 s, identical output.
-    # At/above the barrier (the 100-TB direction) everything stays at
-    # session defaults — AQE coalescing, skew splits and the wide
-    # shuffle width are exactly right for data that size.
-    _tuned_conf: dict[str, str] = {}
-    base_held = base
-    if not eager_barriers:
-        ambient = spark.conf.get("spark.sql.shuffle.partitions", "200")
-        width = max(8, min(int(ambient), -(-n_docs // 500)))
-        _tuned_conf = {
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.shuffle.partitions": str(width),
-        }
-        # base materialized under the ambient (wide) conf; narrow the
-        # downstream VIEW of it to the derived width so channel scans
-        # don't schedule dozens of near-empty tasks per pass. coalesce
-        # is a narrow op over the materialized blocks — no shuffle, no
-        # recompute; base_held keeps the handle unpersist() needs.
-        if base.rdd.getNumPartitions() > 2 * width:
-            base = base.coalesce(width)
-    _saved_conf = {k: spark.conf.get(k, None) for k in _tuned_conf}
-    for _k, _v in _tuned_conf.items():
-        spark.conf.set(_k, _v)
-    try:
+    regime = Regime.for_run(spark, cfg, n_docs, barrier)
+    stats["eager_barriers"] = regime.eager
+    stats["shuffle_width"] = regime.width
+    # the sweep and base release on exit, whether or not the run succeeds
+    with regime.applied(spark, base) as base:
 
         if "simhash" in channels:
             # key-entropy advisory (config.py simhash_bits sizing rule): fail
@@ -268,11 +241,10 @@ def run_documents(
                 )
 
         # barriers and caches whose LAST consumer is the channel verify
-        # phase — released in one sweep after the `verified` stage
-        # materializes, so a long session running many pipelines doesn't
-        # accrete executor storage (VERDICT.md r3 item 5). Threads only
-        # append (GIL-atomic).
-        scratch: list[DataFrame] = []
+        # phase go to regime.sweep, released in one go after the `verified`
+        # stage materializes, so a long session running many pipelines
+        # doesn't accrete executor storage (VERDICT.md r3 item 5). Threads
+        # only append (GIL-atomic).
 
         # Exact-collapse pre-pass (config.py collapse_exact): byte-identical
         # texts are grouped on a 16-byte md5 key and every channel sees ONE
@@ -297,8 +269,7 @@ def run_documents(
                 reps = keyed.groupBy("_tkey").agg(F.min("id").alias("_rep"))
                 return keyed.join(reps, "_tkey").select("id", "text", "_rep")
 
-            collapsed = stage("exact_collapse", build_collapse)
-            scratch.append(collapsed)
+            collapsed = stage("exact_collapse", build_collapse, swept=True)
             exact_edges = (
                 collapsed.filter(F.col("id") != F.col("_rep"))
                 .select(F.col("_rep").alias("a"), F.col("id").alias("b"),
@@ -324,21 +295,18 @@ def run_documents(
             it (BENCH/BASELINE.md round 5: ~107 s of 4-slot wall at 2.76M
             turns ran before the channels forked)."""
             feats = stage("features",
-                          lambda: featurize(chan_base, "id", "text", cfg))
-            scratch.append(feats)
+                          lambda: featurize(chan_base, "id", "text", cfg), swept=True)
 
             def build_cands():
                 # eager barrier: pairs_from_buckets contract (sizes groupBy
                 # and join-back both scan the bucket table, which keeps its
                 # hash layout through the barrier)
-                both = barrier(channel_bucket_table(feats, cfg, mh_sh),
-                               release=scratch)
+                both = barrier(channel_bucket_table(feats, cfg, mh_sh), release=regime.sweep)
                 pairs, hot = pairs_from_buckets(
                     both, cfg.bucket_cap,
                     bucket_cols=("channel", "bkt_id", "bkt_hash"), channel=None,
                     hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
-                    payload_cols=("simhash",),
-                    scratch=scratch, eager=eager_barriers, barrier=barrier,
+                    payload_cols=("simhash",), regime=regime,
                 )
                 if rec:
                     n_hot = {r["channel"]: r["count"]
@@ -360,27 +328,22 @@ def run_documents(
             # actions the multi-second canonicalization of the channel's
             # full tree (r6 rung event log: 2.5 s + 1.4 s of driver gap
             # planning `verified` over two cached channel outputs).
-            out = stage("verify_mh_sh", lambda: V.verify_jaccard_hamming(
-                cands, feats, cfg, scratch=scratch, eager=eager_barriers,
-                barrier=barrier))
-            scratch.append(out)
-            return out
+            return stage("verify_mh_sh", lambda: V.verify_jaccard_hamming(
+                cands, feats, cfg, regime), swept=True)
 
         def _sub_channel() -> DataFrame:
             # materialized: the bucket expansion filters this table along two
             # branches
-            fps = stage("substr_fps", lambda: fingerprint_table(chan_base, "id", "text", cfg))
-            scratch.append(fps)
+            fps = stage("substr_fps", lambda: fingerprint_table(chan_base, "id", "text", cfg),
+                        swept=True)
 
             def build_substr():
-                pairs, hot = substr_candidates(fps, cfg, scratch=scratch,
-                                               eager=eager_barriers,
-                                               barrier=barrier)
+                pairs, hot = substr_candidates(fps, cfg, regime)
                 if rec:
                     # materialize BEFORE the metric scans: without it the
                     # hot.count() + truncation filter re-execute the whole
                     # candidate chain in warehouse runs (VERDICT.md r3 item 3)
-                    pairs = barrier(pairs, release=scratch)
+                    pairs = barrier(pairs, release=regime.sweep)
                     rec.metric("substr_candidates", "hot_fingerprints_star_paired", hot.count())
                     rec.metric(
                         "substr_candidates", "anchor_truncated_pairs",
@@ -394,11 +357,8 @@ def run_documents(
             # same in-thread materialization as verify_mh_sh (r6): the span
             # UDF runs here, overlapped with the mh_sh channel, instead of
             # inside the serial `verified` job
-            out = stage("verify_substr", lambda: verify_substr(
-                sub_pairs, chan_base, "id", "text", cfg,
-                scratch=scratch, eager=eager_barriers, barrier=barrier))
-            scratch.append(out)
-            return out
+            return stage("verify_substr", lambda: verify_substr(
+                sub_pairs, chan_base, "id", "text", cfg, regime), swept=True)
 
         builders = []
         if mh_sh:
@@ -420,7 +380,7 @@ def run_documents(
         # representatives) re-run Catalyst over that thousand-node plan —
         # the event-log decomposition measured a ~14 s pure-driver gap on
         # the 2.76M-turn corpus just planning the CC seed (BENCH/BASELINE.md
-        # round 5) — and a cached-only `verified` is fragile: the scratch
+        # round 5) — and a cached-only `verified` is fragile: the sweep
         # release below and the final base release clear dependent cache
         # buffers, so every later consumer re-executed the verify DAG.
         verified = stage("verified", lambda: V.combine_verified(*verified_parts))
@@ -428,7 +388,7 @@ def run_documents(
         # barrier and cache has served its last consumer — release executor
         # storage before CC runs (VERDICT.md r3 item 5). Downstream stages
         # touch only `base` + `verified`.
-        _release(scratch)
+        regime.release()
         # Work counters: one cheap scan of the flat pair table (the smallest
         # frame in the pipeline). A wall-clock efficiency reading alone can't
         # distinguish "the engine scaled badly" from "the workload grew
@@ -463,16 +423,16 @@ def run_documents(
         # representatives stage's consumers, catalog writes, API callers)
         # scan it instead of recomputing through the join with `base`,
         # whose blocks are released at return. CC's own last-round blocks
-        # are released as soon as the labels exist.
-        cc_blocks: list[DataFrame] = []
+        # go to the (by now empty) sweep and are released as soon as the
+        # labels exist.
         clusters = stage(
             "clusters",
             lambda: assign_clusters(
                 base, V.edges(verified), id_col="id",
-                checkpoint_dir=cfg.cc_checkpoint_dir, release=cc_blocks,
+                checkpoint_dir=cfg.cc_checkpoint_dir, release=regime.sweep,
             ),
         )
-        _release(cc_blocks)
+        regime.release()
         if cfg.rep_score_col is not None:
             # keep-best policy: score is a SQL expression over the INPUT
             # frame (base only carries id/text); ids align because base
@@ -539,28 +499,13 @@ def run_documents(
             stats["computed_stages"] = list(ckpt.computed)
 
         # result frames (verified/clusters/reps) are materialized; base has no
-        # remaining consumer. Result frames drop their blocks on unpersist().
-    finally:
-        # restore the session's ambient shuffle/AQE posture whether or
-        # not the run succeeded (the session is shared: tests and
-        # long-lived drivers run many pipelines per session)
-        for _k, _v in _saved_conf.items():
-            if _v is None:
-                spark.conf.unset(_k)
-            else:
-                spark.conf.set(_k, _v)
-    base_held.unpersist()
+        # remaining consumer and releases on exit. Result frames drop their
+        # blocks on unpersist().
     return PipelineResult(
         clusters=clusters, verified=verified, representatives=reps,
         run_id=run_id, stats=stats, duplicate_spans=spans,
         docs_cleaned=cleaned,
     )
-
-
-def _release(frames: list[DataFrame]) -> None:
-    for df in frames:
-        df.unpersist()
-    frames.clear()
 
 
 def run_transcripts(

@@ -242,7 +242,6 @@ def simhash_candidates(simhash_df: DataFrame, cfg: DedupConfig,
         bucket_cols=("table_id", "key_hash"),
         channel="simhash",
         payload_cols=("simhash",),
-        scratch=scratch,
     )
 
 

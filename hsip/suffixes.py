@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from .barrier import Barrier, fits_broadcast
+from .barrier import Barrier, Regime, fits_broadcast
 from .config import DedupConfig
 from .normalize import norm_text_col
 
@@ -191,8 +191,7 @@ def fingerprint_table(df: DataFrame, id_col: str, text_col: str, cfg: DedupConfi
 
 
 def substr_candidates(
-    fp_df: DataFrame, cfg: DedupConfig, scratch: list | None = None,
-    eager: bool = True, barrier: Barrier | None = None,
+    fp_df: DataFrame, cfg: DedupConfig, regime: Regime | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Fingerprint table -> candidate pairs with match-anchor positions.
 
@@ -200,12 +199,12 @@ def substr_candidates(
     fingerprints (> substr_bucket_cap docs — boilerplate) switch to star
     pairing against the min doc, logged to metrics.
 
-    ``scratch``: list the internal repartitioned-fingerprint cache is
-    appended to so the caller can unpersist it after pair materialization.
-    ``barrier``: the run's barrier policy (default ``Barrier.for_run(cfg)``).
+    ``regime`` (barrier.Regime): the fingerprint table and join-back
+    join its sweep. None (callers with no sweep to release) barriers the
+    fingerprint table unreleased and, as in pairs_from_buckets, leaves
+    the join-back lazy.
     """
     cap = cfg.substr_bucket_cap
-    barrier = barrier or Barrier.for_run(cfg)
     # The repartitioned fingerprint table feeds ~6 plan branches (sizes,
     # join-back, small x/y self-join, hot, hot_min). A bare Exchange here
     # canonicalizes identically for all of them, but AQE materializes
@@ -213,17 +212,11 @@ def substr_candidates(
     # event-log r4 at 2.76M turns: EIGHT copies of the 41.7M-row
     # fingerprint exchange (4.1 GB written, 333M records re-read, 820 s
     # of the hi rung's executor time). The eager barrier is the same
-    # contract pairs_from_buckets documents for its bucket table.
-    # ``eager=False`` (small corpora, cfg.eager_barrier_min_docs) keeps
-    # a lazy cache instead: the rebuilt exchange is cheaper there than
-    # the extra materialization action (VERDICT r4 item 1 A/B).
-    fp = fp_df.repartition("fp_hash")
-    if eager:
-        fp = barrier(fp, release=scratch)
-    else:
-        fp = fp.cache()
-        if scratch is not None:
-            scratch.append(fp)
+    # contract pairs_from_buckets documents for its bucket table. The
+    # latency regime keeps a lazy cache instead: the rebuilt exchange is
+    # cheaper there than the extra materialization action (VERDICT r4
+    # item 1 A/B).
+    fp = (regime or Regime(Barrier.for_run(cfg))).reused(fp_df.repartition("fp_hash"))
     # (id, fp_hash) is unique (per-doc hash dedupe in fingerprint_table),
     # so the row count per fp_hash equals the distinct-doc bucket size.
     # groupBy (map-side combine) + join-back, not a window — see lsh.py.
@@ -234,16 +227,15 @@ def substr_candidates(
     # optimization as pairs_from_buckets — identical output pairs).
     sizes = fp.groupBy("fp_hash").agg(F.count(F.lit(1)).alias("bsz")) \
         .filter(F.col("bsz") >= 2)
-    tagged = fp.join(sizes, "fp_hash")
     # Materialize the join-back ONCE for its four consumer legs (x/y
     # self-join, hot, hot_min) — same contract and rationale as
-    # pairs_from_buckets: eager-only, the caller releases it via
-    # ``scratch``. r6 rung iso (bench/iso_substr.py): 10.5 s -> 8.4 s for
-    # the expansion, identical pairs — the pairable join-back is 1.9M
-    # rows vs the 8.4M-row fingerprint table each leg previously
-    # re-joined.
-    if eager and scratch is not None:
-        tagged = barrier(tagged, release=scratch)
+    # pairs_from_buckets: eager-only, released with the regime's sweep.
+    # r6 rung iso (bench/iso_substr.py): 10.5 s -> 8.4 s for the
+    # expansion, identical pairs — the pairable join-back is 1.9M rows vs
+    # the 8.4M-row fingerprint table each leg previously re-joined.
+    tagged = fp.join(sizes, "fp_hash")
+    if regime is not None:
+        tagged = regime.join_back(tagged)
 
     small = tagged.filter(F.col("bsz") <= cap).drop("bsz")
     x, y = small.alias("x"), small.alias("y")
@@ -419,27 +411,24 @@ def _span_lens_batch(enc_a: list[bytes], enc_b: list[bytes],
 
 
 def verify_substr(pairs: DataFrame, docs: DataFrame, id_col: str, text_col: str,
-                  cfg: DedupConfig, scratch: list | None = None,
-                  eager: bool = True, barrier: Barrier | None = None) -> DataFrame:
+                  cfg: DedupConfig, regime: Regime | None = None) -> DataFrame:
     """V4: exact span measurement for substring candidates.
 
     pairs must carry (a, b, pos_as, pos_bs). Output adds substr_len and
     verdict = (max span over anchors) >= min_substr_len.
-    ``scratch``: optional list the internal pair/text caches are appended
-    to so the caller can unpersist them once the verified output has
-    materialized (VERDICT.md r3 item 5).
-    ``eager=False`` (small corpora, cfg.eager_barrier_min_docs): the
-    pruned text table stays a lazily-cached semi-join — no repartition
-    exchange, no materialization barrier. At that scale both hydration joins
-    broadcast the (tiny) pruned table and the two broadcast subtrees
-    canonicalize identically, so one build serves both; the eager
-    barrier + explicit hash layout only pay off once the pruned table is
-    big enough to sort-merge (same scale-adaptive split as
-    verify_jaccard_hamming). Output rows identical either way.
-    ``barrier``: the run's barrier policy (default ``Barrier.for_run(cfg)``).
+    ``regime`` (barrier.Regime): the pair and text tables join its sweep,
+    for the caller to release once the output has materialized (VERDICT.md
+    r3 item 5); None runs them through an eager regime nobody releases.
+    The latency regime keeps the pruned text table a lazily-cached
+    semi-join — no repartition exchange, no barrier. At that scale both
+    hydration joins broadcast the (tiny) pruned table and the two
+    broadcast subtrees canonicalize identically, so one build serves
+    both; the eager barrier + explicit hash layout only pay off once the
+    pruned table is big enough to sort-merge (same scale-adaptive split
+    as verify_jaccard_hamming). Output rows identical either way.
     """
     k, min_len = cfg.substr_gram, cfg.min_substr_len
-    barrier = barrier or Barrier.for_run(cfg)
+    regime = regime or Regime(Barrier.for_run(cfg))
     # The normalized-text table is the fattest thing this stage touches
     # (~= corpus bytes), and a computed Alias (norm_text_col) breaks
     # canonical exchange reuse between the two join branches — naively
@@ -456,17 +445,12 @@ def verify_substr(pairs: DataFrame, docs: DataFrame, id_col: str, text_col: str,
     # the pair table feeds the id prune and both hydration joins: eager
     # runs materialize it (one leaf to plan over, as in
     # verify_jaccard_hamming), latency runs keep a lazy cache
-    if eager:
-        pairs = barrier(pairs, release=scratch)
-    else:
-        pairs = pairs.cache()
-        if scratch is not None:
-            scratch.append(pairs)
+    pairs = regime.reused(pairs)
     # one explode scan, not a two-branch union: under AQE the union legs
     # materialize as separate query-stage futures, each re-executing the
     # uncached candidate chain (r6 event-log job swarm)
     pair_ids = pairs.select(F.explode(F.array("a", "b")).alias("id")).distinct()
-    if not eager:
+    if not regime.eager:
         # latency mode (n_docs < eager_barrier_min_docs): the distinct
         # pair-id set is bounded by the corpus (< 25k short strings) —
         # broadcast it so the prune is a map-side semi-join instead of a
@@ -477,24 +461,17 @@ def verify_substr(pairs: DataFrame, docs: DataFrame, id_col: str, text_col: str,
         F.col(id_col).cast("string").alias("id"),
         norm_text_col(text_col, cfg).alias("t"),
     ).join(pair_ids, "id", "left_semi")
-    if eager:
-        normed = barrier(normed.repartition("id"), release=scratch)
-        n_side = F.broadcast(normed) if fits_broadcast(normed) else normed
-    else:
-        normed = normed.cache()
-        if scratch is not None:
-            scratch.append(normed)
-        n_side = normed
-    h_pairs = pairs
-    if not eager:
-        # latency mode runs a narrow corpus-derived shuffle width (~8);
-        # right for the tiny exchanges, but the span-extension UDF below
-        # is CPU-bound and would run 8-wide. Re-spread the NARROW pair
-        # rows (ids + anchor offset arrays, a few MB) to the core count
-        # before the text attaches — the compute stage then uses every
-        # slot (r6; the eager path already runs at the ambient width).
-        sc = pairs.sparkSession.sparkContext
-        h_pairs = pairs.repartition(max(sc.defaultParallelism, 8))
+    if regime.eager:
+        normed = normed.repartition("id")
+    normed = regime.reused(normed)
+    # the barrier measured it; a latency-mode cache is unmeasured and
+    # declines (Catalyst broadcasts it on its own at that size)
+    n_side = F.broadcast(normed) if fits_broadcast(normed) else normed
+    # the span-extension UDF below is CPU-bound: in latency mode the
+    # NARROW pair rows (ids + anchor offset arrays, a few MB) re-spread
+    # to the core count before the text attaches, so the compute stage
+    # uses every slot instead of the ~8-wide derived width (r6)
+    h_pairs = regime.spread(pairs)
     h = (
         h_pairs.join(n_side, h_pairs["a"] == n_side["id"]).drop("id")
         .withColumnRenamed("t", "t_a")
@@ -931,17 +908,17 @@ def substr_decontaminate(
             F.col(eval_text).alias("utext"),
         )
     )
-    own_scratch = scratch if scratch is not None else []
-    verified = verify_substr(prefixed, docs_all, "uid", "utext", cfg,
-                             scratch=own_scratch)
+    regime = Regime(Barrier.for_run(cfg))
+    verified = verify_substr(prefixed, docs_all, "uid", "utext", cfg, regime)
     out = verified.select(
         F.expr("substring(a, 3)").alias("train_id"),
         F.expr("substring(b, 3)").alias("eval_id"),
         "substr_len", "verdict",
     )
-    if scratch is None:
-        # materialize before releasing the caches verify_substr holds
-        out = Barrier.for_run(cfg)(out)
-        for c in own_scratch:
-            c.unpersist()
+    if scratch is not None:
+        scratch.extend(regime.sweep)
+        return out
+    # materialize before releasing the frames verify_substr holds
+    out = regime.barrier(out)
+    regime.release()
     return out

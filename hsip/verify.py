@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .barrier import Barrier, fits_broadcast
+from .barrier import Regime, fits_broadcast
 from .config import DedupConfig
 
 # Build-side budget for the latency-mode broadcast hydrations below.
@@ -133,10 +133,7 @@ def verify_hamming(pairs: DataFrame, simhash_df: DataFrame, cfg: DedupConfig) ->
 
 
 def verify_jaccard_hamming(pairs: DataFrame, features: DataFrame,
-                           cfg: DedupConfig,
-                           scratch: list | None = None,
-                           eager: bool = True,
-                           barrier: Barrier | None = None) -> DataFrame:
+                           cfg: DedupConfig, regime: Regime) -> DataFrame:
     """V2+V3, channel-aware verification: each channel's pairs touch ONLY
     the feature bytes its check reads.
 
@@ -167,18 +164,18 @@ def verify_jaccard_hamming(pairs: DataFrame, features: DataFrame,
     input rows (a, b, channel) and stays two output rows, exactly as the
     CASE dispatch produced.
 
-    ``eager=False`` (small corpora, cfg.eager_barrier_min_docs) switches
-    to the r3-style single fused CASE hydration: ONE unpruned feature
-    join chain, no pair/feature caches, no extra scans. At 57k turns the
-    fat exchange is ~tens of MB and the split path's extra stages cost
-    more than they save (same-session A/B, BENCH/BASELINE.md r5); at
-    2.76M turns the split path is 2x (r4). Scale-adaptive physical
-    planning — output equality between the two shapes is pinned by
+    ``regime`` (barrier.Regime) selects the shape: the split path above
+    is the eager regime's (its tables join the sweep); the latency regime
+    runs the r3-style single fused CASE hydration instead: ONE unpruned
+    feature join chain, no pair/feature caches, no extra scans. At 57k turns the fat
+    exchange is ~tens of MB and the split path's extra stages cost more
+    than they save (same-session A/B, BENCH/BASELINE.md r5); at 2.76M
+    turns the split path is 2x (r4). Scale-adaptive physical planning —
+    output equality between the two shapes is pinned by
     tests/test_e2e_oracle.py.
-    ``barrier``: the run's barrier policy (default ``Barrier.for_run(cfg)``).
     """
-    if not eager:
-        return _verify_jh_fused_small(pairs, features, cfg)
+    if not regime.eager:
+        return _verify_jh_fused_small(pairs, features, cfg, regime)
     # the pair table feeds four subplans (two channel filters + two
     # pair-id scans for pruning); callers pass it lazy in ephemeral runs,
     # so materialize it once here — without this every scan re-runs the
@@ -186,8 +183,7 @@ def verify_jaccard_hamming(pairs: DataFrame, features: DataFrame,
     # pattern as verify_substr). A barrier rather than a lazy cache: the
     # pruning and hydration queries then plan over one leaf instead of
     # the expansion chain's tree.
-    barrier = barrier or Barrier.for_run(cfg)
-    pairs = barrier(pairs, release=scratch)
+    pairs = regime.reused(pairs)
     is_mh = F.col("channel") == "minhash_lsh"
     mh_pairs = pairs.filter(is_mh).drop("simhash_a", "simhash_b")
     # single explode scan (vs a two-leg union) — same AQE duplicated-
@@ -199,13 +195,12 @@ def verify_jaccard_hamming(pairs: DataFrame, features: DataFrame,
     # the network one time, not once per join — the same one-exchange
     # contract verify_substr's eager path documents for its text table.
     # The barrier also stops AQE's concurrent join-side futures from
-    # building the pruned subtree twice (eager=False took the fused
-    # early-return above, so this split path always materializes).
-    f = barrier(
+    # building the pruned subtree twice (the latency regime took the
+    # fused early-return above, so this split path always materializes).
+    f = regime.reused(
         features.select("id", "shingles")
         .join(pair_ids, "id", "left_semi")
-        .repartition("id"),
-        release=scratch,
+        .repartition("id")
     )
     if fits_broadcast(f):
         # known small: broadcast it into both joins, as Catalyst did when
@@ -234,7 +229,7 @@ def verify_jaccard_hamming(pairs: DataFrame, features: DataFrame,
 
 
 def _verify_jh_fused_small(pairs: DataFrame, features: DataFrame,
-                           cfg: DedupConfig) -> DataFrame:
+                           cfg: DedupConfig, regime: Regime) -> DataFrame:
     """Small-corpus shape of verify_jaccard_hamming: one fused CASE
     hydration (the round-3 design); rows/verdicts identical to the split
     path.
@@ -247,8 +242,7 @@ def _verify_jh_fused_small(pairs: DataFrame, features: DataFrame,
     narrow (ids + an 8-byte payload per side), so the extra exchange is
     a few MB; the array bytes attach after, via the hydration joins.
     """
-    sc = pairs.sparkSession.sparkContext
-    pairs = pairs.repartition(max(sc.defaultParallelism, 8))
+    pairs = regime.spread(pairs)
     # ``features`` is the pipeline's `features` stage barrier, which
     # measured its blocks.
     # Known-small -> broadcast hydration: one reused build replaces the

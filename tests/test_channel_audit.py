@@ -57,7 +57,12 @@ def test_channel_audit_exact_on_seeded_corpus(spark):
     # on this corpus), default bands/rows, exhaustive hamming probing
     cfg = DedupConfig(jaccard_threshold=0.7, min_substr_len=150,
                       winnow_window=30)
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
     results = audit_channels(docs, "doc_id", "text", cfg)
+    # every barrier and cache the audit's channel builders placed is released
+    assert set(sc._jsc.getPersistentRDDs().keySet()) - before == set()
+    docs.unpersist()
     for ch, r in results.items():
         assert r["n_truth"] > 0, f"{ch}: vacuous audit (no planted truth found)"
         assert r["recall"] == 1.0, (ch, r)

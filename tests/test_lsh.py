@@ -170,6 +170,7 @@ def test_payload_passthrough_small_star_salt(spark):
 def test_verify_jaccard_hamming_payload_and_fallback(spark):
     """Channel-aware verify: simhash pairs read their (simhash_a,
     simhash_b) payload as a projection, minhash pairs hydrate shingles."""
+    from hsip.barrier import Barrier, Regime
     from hsip.config import DedupConfig
     from hsip.verify import verify_jaccard_hamming
 
@@ -189,8 +190,10 @@ def test_verify_jaccard_hamming_payload_and_fallback(spark):
         "a string, b string, channel string, simhash_a long, simhash_b long",
     )
     cols = ["a", "b", "channel", "jaccard", "hamming", "verdict"]
+    regime = Regime(Barrier())
     got_p = {tuple(r) for r in
-             verify_jaccard_hamming(payload, feats, cfg).select(*cols).collect()}
+             verify_jaccard_hamming(payload, feats, cfg, regime).select(*cols).collect()}
+    regime.release()
     by_key = {(a, b, ch): (j, h, v) for a, b, ch, j, h, v in got_p}
     assert by_key[("a", "b", "minhash_lsh")] == (0.6, None, True)
     assert by_key[("a", "b", "simhash")] == (None, 1, True)
@@ -199,8 +202,9 @@ def test_verify_jaccard_hamming_payload_and_fallback(spark):
 
 def test_verify_shapes_fused_small_equals_split(spark):
     """Scale-adaptive verify (round 5): the small-corpus fused CASE shape
-    (eager=False) and the large-corpus channel-aware split (eager=True)
-    must emit identical rows."""
+    (latency regime) and the large-corpus channel-aware split (eager
+    regime) must emit identical rows."""
+    from hsip.barrier import Barrier, Regime
     from hsip.config import DedupConfig
     from hsip.verify import verify_jaccard_hamming
 
@@ -220,10 +224,12 @@ def test_verify_shapes_fused_small_equals_split(spark):
         "a string, b string, channel string, simhash_a long, simhash_b long",
     )
     cols = ["a", "b", "channel", "jaccard", "hamming", "verdict"]
+    eager, latency = Regime(Barrier()), Regime(Barrier(), width=8)
     split, fused = (
         {tuple(r) for r in
-         verify_jaccard_hamming(payload, feats, cfg, eager=eager)
+         verify_jaccard_hamming(payload, feats, cfg, regime)
          .select(*cols).collect()}
-        for eager in (True, False)
+        for regime in (eager, latency)
     )
+    eager.release()
     assert split == fused and len(split) == len(base), (split, fused)

@@ -220,6 +220,48 @@ def test_pipeline_releases_intermediate_caches(spark):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+@pytest.mark.parametrize("min_docs", [25_000, 0], ids=["latency", "eager"])
+def test_failed_run_releases_blocks_and_restores_conf(spark, monkeypatch, min_docs):
+    """A run that fails part-way (a planted failure where the channel
+    verdicts combine) leaves no blocks behind and the session's AQE and
+    shuffle width as it found them, in either regime; a successful run
+    restores them too. The ambient width is set apart from the latency
+    regime's derived 8, so a missed restore shows."""
+    from hsip import pipeline
+    from hsip.barrier import session_conf
+
+    sc = spark.sparkContext
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+
+    def persisted():
+        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
+
+    docs = spark.createDataFrame(
+        [(f"d{i}", f"alpha beta gamma delta {i % 7} " * 30) for i in range(40)],
+        "id string, text string",
+    )
+    cfg = DedupConfig(eager_barrier_min_docs=min_docs)
+    with session_conf(spark, {"spark.sql.shuffle.partitions": "13"}):
+        conf = {k: spark.conf.get(k) for k in keys}
+        spark.catalog.clearCache()
+        before = persisted()
+        res = run_documents(spark, docs, "id", "text", cfg)
+        assert res.stats["eager_barriers"] == (min_docs == 0)
+        assert {k: spark.conf.get(k) for k in keys} == conf
+        for df in (res.verified, res.clusters, res.representatives):
+            df.unpersist()
+        assert persisted() - before == set()
+
+        def planted(*parts):
+            raise RuntimeError("planted failure")
+
+        monkeypatch.setattr(pipeline.V, "combine_verified", planted)
+        with pytest.raises(RuntimeError, match="planted failure"):
+            run_documents(spark, docs, "id", "text", cfg)
+        assert persisted() - before == set(), "a failed run leaked blocks"
+        assert {k: spark.conf.get(k) for k in keys} == conf
+
+
 def test_same_clusters_either_side_of_eager_barrier_min_docs(spark, corpus, result):
     """The barrier threshold is NON-SEMANTIC (config.py): the same corpus
     run just below it (eager regime: AQE on, split verify, materialized
@@ -236,6 +278,9 @@ def test_same_clusters_either_side_of_eager_barrier_min_docs(spark, corpus, resu
                                   DedupConfig(eager_barrier_min_docs=n + 1),
                                   channels=channels)
         assert eager.stats["eager_barriers"] and not latency.stats["eager_barriers"]
+        # the regime's derived width: none when eager, the floor of 8 here
+        assert eager.stats["shuffle_width"] is None
+        assert latency.stats["shuffle_width"] == 8
         a = {(r.id, r.cluster_id) for r in eager.clusters.collect()}
         b = {(r.id, r.cluster_id) for r in latency.clusters.collect()}
         assert a == b, channels

@@ -11,7 +11,6 @@ instead of surfacing as a 10x slowdown at scale.
 
 from __future__ import annotations
 
-import contextlib
 import pathlib
 import re
 
@@ -136,7 +135,7 @@ def test_latency_verify_hydration_broadcasts_known_small_features(spark):
     )
     try:
         with _no_auto_broadcast(spark):
-            p = plan(verify_jaccard_hamming(pairs, feats, cfg, eager=False))
+            p = plan(verify_jaccard_hamming(pairs, feats, cfg, _latency()))
         assert "BroadcastHashJoin" in p, p
         assert "SortMergeJoin" not in p, p
         assert not fits_broadcast(raw, _BCAST_HYDRATE_MAX_BYTES)
@@ -157,7 +156,7 @@ def test_pipeline_latency_features_broadcast_through_barrier(spark):
     try:
         with _no_auto_broadcast(spark):
             p = plan(verify_jaccard_hamming(_pairs_over(spark, feats), feats,
-                                            cfg, eager=False))
+                                            cfg, _latency()))
         assert "BroadcastHashJoin" in p, p
         assert "SortMergeJoin" not in p, p
     finally:
@@ -180,7 +179,7 @@ def test_pipeline_latency_features_broadcast_from_warehouse(spark, tmp_path):
     assert 0 < measured_size_bytes(feats) < 256 * 1024 * 1024
     with _no_auto_broadcast(spark):
         p = plan(verify_jaccard_hamming(_pairs_over(spark, feats), feats,
-                                        cfg, eager=False))
+                                        cfg, _latency()))
     assert "BroadcastHashJoin" in p, p
     assert "SortMergeJoin" not in p, p
 
@@ -196,17 +195,20 @@ def _pairs_over(spark, feats):
     )
 
 
-@contextlib.contextmanager
 def _no_auto_broadcast(spark):
     """Catalyst's own size-based broadcast off, so a BroadcastHashJoin in
     the plan can only come from the gate's explicit hint."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
+    from hsip.barrier import session_conf
+
+    return session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"})
+
+
+def _latency():
+    """A latency regime, as run_documents builds below
+    eager_barrier_min_docs."""
+    from hsip.barrier import Barrier, Regime
+
+    return Regime(Barrier(), width=8)
 
 
 def test_eager_substr_hydration_broadcasts_known_small_text(spark):
@@ -214,6 +216,7 @@ def test_eager_substr_hydration_broadcasts_known_small_text(spark):
     barrier, which keeps its hash layout and measures it; known small, it
     is broadcast into both hydration joins, so neither the pair rows nor
     the corpus text is re-shuffled (no SortMergeJoin over the text)."""
+    from hsip.barrier import Barrier, Regime
     from hsip.suffixes import verify_substr
 
     cfg = DedupConfig()
@@ -225,16 +228,15 @@ def test_eager_substr_hydration_broadcasts_known_small_text(spark):
         [("a", "b", [0], [0])],
         "a string, b string, pos_as array<int>, pos_bs array<int>",
     )
-    scratch: list = []
-    out = verify_substr(pairs, docs, "id", "text", cfg, scratch=scratch, eager=True)
+    regime = Regime(Barrier())
+    out = verify_substr(pairs, docs, "id", "text", cfg, regime)
     try:
         p = plan(out)
         assert p.count("BroadcastHashJoin") >= 2, p
         assert "SortMergeJoin" not in p, p
         assert [(r.a, r.b, r.verdict) for r in out.collect()] == [("a", "b", True)]
     finally:
-        for df in scratch:
-            df.unpersist()
+        regime.release()
 
 
 def test_latency_substr_prune_broadcasts_pair_ids(spark):
@@ -251,7 +253,9 @@ def test_latency_substr_prune_broadcasts_pair_ids(spark):
         [("a", "b", [0], [0])],
         "a string, b string, pos_as array<int>, pos_bs array<int>",
     )
-    p = plan(verify_substr(pairs, docs, "id", "text", cfg, eager=False))
+    regime = _latency()
+    p = plan(verify_substr(pairs, docs, "id", "text", cfg, regime))
+    regime.release()
     # the LeftSemi prune must be broadcast (build side = pair ids)
     assert re.search(r"BroadcastHashJoin LeftSemi", p), p
 

@@ -4,16 +4,16 @@ Usage:  python tools/capture_plans_r06.py <outdir> <suffix>
         (run once against the round-5 tree with suffix "before" and once
         against the round-6 tree with suffix "after")
 
-Driver-only — builds the logical chains the pipeline wires up and prints
-their physical plans without executing them, plus the headline relational
-queries. Adapts to the r5 `eager=` signatures via inspection; the fused
-mh+sh bucket table comes from `hsip.lsh.channel_bucket_table`.
+Driver-only — builds the logical chains the pipeline wires up, in the
+latency regime the sf0.1 corpus runs in (`hsip.barrier.Regime`), and
+prints their physical plans without executing them, plus the headline
+relational queries; the fused mh+sh bucket table comes from
+`hsip.lsh.channel_bucket_table`.
 """
 
 from __future__ import annotations
 
 import contextlib
-import inspect
 import io
 import os
 import sys
@@ -41,6 +41,7 @@ def main() -> None:
     import __spark_entry__ as E
     from pyspark.sql import functions as F
 
+    from hsip.barrier import Barrier, Regime
     from hsip.config import DedupConfig
     from hsip.lsh import channel_bucket_table, pairs_from_buckets
     from hsip.session import get_spark
@@ -56,15 +57,10 @@ def main() -> None:
     )
 
     # --- substr channel: candidates -> span verify (the V4 chain) ---
+    regime = Regime(Barrier(), width=8)
     fps = fingerprint_table(base, "id", "text", cfg)
-    kw = {}
-    if "eager" in inspect.signature(substr_candidates).parameters:
-        kw["eager"] = False
-    pairs, _hot = substr_candidates(fps, cfg, **kw)
-    kw = {}
-    if "eager" in inspect.signature(verify_substr).parameters:
-        kw["eager"] = False
-    sub_verified = verify_substr(pairs, base, "id", "text", cfg, **kw)
+    pairs, _hot = substr_candidates(fps, cfg, regime)
+    sub_verified = verify_substr(pairs, base, "id", "text", cfg, regime)
     explain_to(sub_verified, "verify_substr")
 
     # --- fused mh+sh channel: union buckets -> pairs -> verify ---
@@ -73,12 +69,9 @@ def main() -> None:
     mhsh_pairs, _hot2 = pairs_from_buckets(
         both, cfg.bucket_cap, bucket_cols=("channel", "bkt_id", "bkt_hash"),
         channel=None, hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
-        payload_cols=("simhash",),
+        payload_cols=("simhash",), regime=regime,
     )
-    kw = {}
-    if "eager" in inspect.signature(V.verify_jaccard_hamming).parameters:
-        kw["eager"] = False
-    mhsh_verified = V.verify_jaccard_hamming(mhsh_pairs, feats, cfg, **kw)
+    mhsh_verified = V.verify_jaccard_hamming(mhsh_pairs, feats, cfg, regime)
     explain_to(mhsh_verified, "verify_mh_sh")
 
     # --- combined verdict table (pre-checkpoint logical shape) ---
