@@ -492,8 +492,8 @@ def run_documents(
             )
 
         if rec:
-            rec.metric("pipeline", "n_docs", base.count())
-            rec.metric("pipeline", "n_verified_edges", verified.filter("verdict").count())
+            rec.metric("pipeline", "n_docs", n_docs)
+            rec.metric("pipeline", "n_verified_edges", stats["duplicate_pairs"])
             rec.flush()
             stats["skipped_stages"] = list(ckpt.skipped)
             stats["computed_stages"] = list(ckpt.computed)

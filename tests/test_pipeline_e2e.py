@@ -328,7 +328,8 @@ def test_channels_validated_at_entry(spark):
 def test_hot_bucket_metric_recorded_for_every_requested_channel(spark, tmp_path):
     """"No silent caps": a warehouse run records hot_buckets_star_paired
     for each requested mh/sh channel, 0 included, so "none were hot" and
-    "not measured" read differently; unrequested channels get no row."""
+    "not measured" read differently; unrequested channels get no row. The
+    run-level rows carry the counts the run's stats already hold."""
     from hsip.catalog import Catalog
 
     docs = spark.createDataFrame(
@@ -337,12 +338,14 @@ def test_hot_bucket_metric_recorded_for_every_requested_channel(spark, tmp_path)
         "id string, text string",
     )
     wh = str(tmp_path / "wh")
-    run_documents(spark, docs, "id", "text", DedupConfig(),
-                  channels=("minhash_lsh",), warehouse=wh, run_id="hot")
+    res = run_documents(spark, docs, "id", "text", DedupConfig(),
+                        channels=("minhash_lsh",), warehouse=wh, run_id="hot")
     rows = {(r.stage, r.key): r.value
             for r in Catalog(spark, wh).read("metrics").collect()}
     assert rows[("minhash_lsh_candidates", "hot_buckets_star_paired")] == 0
     assert ("simhash_candidates", "hot_buckets_star_paired") not in rows
+    assert rows[("pipeline", "n_docs")] == res.stats["n_docs"] == 12
+    assert rows[("pipeline", "n_verified_edges")] == res.stats["duplicate_pairs"]
 
 
 def test_warehouse_run_keeps_lineage_barriers(spark, corpus, tmp_path_factory,
