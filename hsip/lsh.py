@@ -49,7 +49,8 @@ def pairs_from_buckets(
     """Generic bucket -> candidate-pair expansion with hot-bucket control.
 
     Returns (pairs(a,b,channel), hot_bucket_stats) — the latter feeds the
-    metrics table (SURVEY.md S6; "no silent caps").
+    metrics table (SURVEY.md S6; "no silent caps"). The pairs are
+    ``_bucket_legs``' rows deduped per (a, b, channel).
     Reused by every candidate channel (LSH bands, Hamming blocks,
     substring fingerprints): they all reduce to "same bucket key => pair".
 
@@ -83,6 +84,29 @@ def pairs_from_buckets(
           hot_bucket_stats. Best when hot buckets are boilerplate noise
           that should NOT merge into one component.
     """
+    rows, hot_stats = _bucket_legs(
+        bucketed, cap, id_col, bucket_cols, channel, hot_policy, salt_seed,
+        payload_cols, regime,
+    )
+    return rows.dropDuplicates(["a", "b", "channel"]), hot_stats
+
+
+def _bucket_legs(
+    bucketed: DataFrame,
+    cap: int,
+    id_col: str = "id",
+    bucket_cols: tuple[str, ...] = ("band_id", "band_hash"),
+    channel: str | None = "minhash_lsh",
+    hot_policy: str = "star",
+    salt_seed: int = 42,
+    payload_cols: tuple[str, ...] = (),
+    regime: Regime | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The bucket expansion behind ``pairs_from_buckets``: one
+    (a, b, channel, <payload>_a, <payload>_b) row per shared bucket, NOT
+    deduped — a pair sharing several buckets appears once per bucket
+    (the substring channel aggregates those rows into its match anchors,
+    suffixes._anchor_pairs) — plus the hot-bucket stats."""
     if channel is None:
         assert "channel" in bucket_cols, "dynamic channel needs a channel bucket col"
     cols = list(bucket_cols)
@@ -107,9 +131,9 @@ def pairs_from_buckets(
     # ``regime``: an eager run materializes the join-back ONCE for its four
     # consumer legs (small x/y self-join, hot, hot_min; hot_stats is a
     # fifth). Without it each leg re-runs the size join over the full
-    # bucket table — r6 rung iso (bench/iso_substr.py): the tagged table
-    # is 1.9M rows where the bucket table is 8.4M, and materializing it
-    # cut the substr expansion 10.5 s -> 8.4 s with identical pairs. The
+    # bucket table — r6 rung (VERDICT.md item 4): the tagged table is
+    # 1.9M rows where the bucket table is 8.4M, and materializing it cut
+    # the substr expansion 10.5 s -> 8.4 s with identical pairs. The
     # flat barrier keeps the bucket table's hash layout, so the legs join
     # it with no exchange; it joins the regime's sweep. A latency regime
     # (or None) leaves it lazy — at kB scale the extra materialization
@@ -177,12 +201,8 @@ def pairs_from_buckets(
     # every path emits a < b by construction (x.id < y.id join condition;
     # star hub = bucket min), so no least/greatest normalization — it
     # would have to swap payload suffixes too
-    pairs = (
-        small_pairs.unionByName(hot_pairs)
-        .dropDuplicates(["a", "b", "channel"])
-    )
     hot_stats = hot.groupBy(*cols).agg(F.max("bsz").alias("bucket_size"))
-    return pairs, hot_stats
+    return small_pairs.unionByName(hot_pairs), hot_stats
 
 
 def channel_bucket_table(features: DataFrame, cfg: DedupConfig,

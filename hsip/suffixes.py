@@ -14,8 +14,8 @@ SIGMOD 2003):
     Winnowing's guarantee theorem: any common substring of length
     >= k_sa + w - 1 = L shares at least one *selected* fingerprint, so
     the channel has no false negatives at threshold L.
- 2. Shuffle on fingerprint hash; same-bucket docs pair up (the same
-    bucket->pairs primitive as LSH, with hot-fingerprint capping for
+ 2. Shuffle on fingerprint hash; same-bucket docs pair up (LSH's own
+    bucket expansion, lsh._bucket_legs, with hot-fingerprint capping for
     boilerplate — capped buckets are logged, never silently dropped).
  3. Verify (V4): re-check candidate pairs against the real texts —
     extend the anchor match left/right to measure the true maximal
@@ -42,6 +42,7 @@ from pyspark.sql.functions import pandas_udf
 
 from .barrier import Barrier, Regime, fits_broadcast
 from .config import DedupConfig
+from .lsh import _bucket_legs
 from .normalize import norm_text_col
 
 _B = np.uint64(1000003)           # odd multiplier -> invertible mod 2^64
@@ -74,30 +75,21 @@ def _rolling_hashes(data: np.ndarray, k: int) -> np.ndarray:
     return w
 
 
-def _sliding_min(h: np.ndarray, w: int) -> np.ndarray:
-    """O(n) sliding-window minimum (van Herk / Gil-Werman): block prefix
-    and suffix minima combine into any window min — independent of w.
-    (sliding_window_view(...).min() is O(n*w): ~3,000 CPU-s at w=100 on
-    a 427MB corpus; this is ~3 passes over the data.)"""
+def _sliding(h: np.ndarray, w: int, op: np.ufunc) -> np.ndarray:
+    """O(n) sliding-window extremum, ``op`` = np.minimum or np.maximum (van
+    Herk / Gil-Werman): block prefix and suffix extrema combine into any
+    window's — independent of w. (sliding_window_view(...).min() is
+    O(n*w): ~3,000 CPU-s at w=100 on a 427MB corpus; this is ~3 passes
+    over the data.) The last block is padded with h[-1]: ``op`` is
+    idempotent and every window reaching the pad already holds h[-1]."""
     n = len(h)
     nb = -(-n // w)
     pad = nb * w - n
-    hp = np.concatenate([h, np.full(pad, np.uint64(0xFFFFFFFFFFFFFFFF))]) if pad else h
+    hp = np.concatenate([h, np.full(pad, h[-1], dtype=h.dtype)]) if pad else h
     blocks = hp.reshape(nb, w)
-    fwd = np.minimum.accumulate(blocks, axis=1).ravel()
-    bwd = np.minimum.accumulate(blocks[:, ::-1], axis=1)[:, ::-1].ravel()
-    return np.minimum(bwd[: n - w + 1], fwd[w - 1 : n])
-
-
-def _sliding_max(h: np.ndarray, w: int) -> np.ndarray:
-    n = len(h)
-    nb = -(-n // w)
-    pad = nb * w - n
-    hp = np.concatenate([h, np.zeros(pad, dtype=h.dtype)]) if pad else h
-    blocks = hp.reshape(nb, w)
-    fwd = np.maximum.accumulate(blocks, axis=1).ravel()
-    bwd = np.maximum.accumulate(blocks[:, ::-1], axis=1)[:, ::-1].ravel()
-    return np.maximum(bwd[: n - w + 1], fwd[w - 1 : n])
+    fwd = op.accumulate(blocks, axis=1).ravel()
+    bwd = op.accumulate(blocks[:, ::-1], axis=1)[:, ::-1].ravel()
+    return op(bwd[: n - w + 1], fwd[w - 1 : n])
 
 
 def _winnow(hashes: np.ndarray, w: int) -> np.ndarray:
@@ -115,7 +107,7 @@ def _winnow(hashes: np.ndarray, w: int) -> np.ndarray:
         return np.empty(0, dtype=np.int64)
     if n <= w:
         return np.array([int(np.argmin(hashes))], dtype=np.int64)
-    m = _sliding_min(hashes, w)          # m[j] = min h[j..j+w-1], len n-w+1
+    m = _sliding(hashes, w, np.minimum)  # m[j] = min h[j..j+w-1], len n-w+1
     nm = len(m)
     cover_max = np.empty(n, dtype=hashes.dtype)
     pre = np.maximum.accumulate(m)                 # pre[t] = max m[0..t]
@@ -128,7 +120,7 @@ def _winnow(hashes: np.ndarray, w: int) -> np.ndarray:
     cover_max[n - w + 1 :] = suf[ri]
     # interior i in [w-1, n-w] (nonempty iff nm >= w): j-range [i-w+1, i]
     if nm >= w:
-        cover_max[w - 1 : n - w + 1] = _sliding_max(m, w)
+        cover_max[w - 1 : n - w + 1] = _sliding(m, w, np.maximum)
     return np.nonzero(cover_max == hashes)[0].astype(np.int64)
 
 
@@ -195,16 +187,18 @@ def substr_candidates(
 ) -> tuple[DataFrame, DataFrame]:
     """Fingerprint table -> candidate pairs with match-anchor positions.
 
-    Returns (pairs(a, b, pos_as, pos_bs, channel), hot_fp_stats). Hot
-    fingerprints (> substr_bucket_cap docs — boilerplate) switch to star
-    pairing against the min doc, logged to metrics.
+    Returns (pairs(a, b, n_anchors, pos_as, pos_bs, channel),
+    hot_fp_stats). The expansion is pairs_from_buckets' own
+    (lsh._bucket_legs) without its dedupe: hot fingerprints
+    (> substr_bucket_cap docs — boilerplate) switch to star pairing
+    against the min doc, logged to metrics, and every (pair, fingerprint)
+    row is a match anchor for _anchor_pairs.
 
     ``regime`` (barrier.Regime): the fingerprint table and join-back
     join its sweep. None (callers with no sweep to release) barriers the
     fingerprint table unreleased and, as in pairs_from_buckets, leaves
     the join-back lazy.
     """
-    cap = cfg.substr_bucket_cap
     # The repartitioned fingerprint table feeds ~6 plan branches (sizes,
     # join-back, small x/y self-join, hot, hot_min). A bare Exchange here
     # canonicalizes identically for all of them, but AQE materializes
@@ -218,61 +212,25 @@ def substr_candidates(
     # item 1 A/B).
     fp = (regime or Regime(Barrier.for_run(cfg))).reused(fp_df.repartition("fp_hash"))
     # (id, fp_hash) is unique (per-doc hash dedupe in fingerprint_table),
-    # so the row count per fp_hash equals the distinct-doc bucket size.
-    # groupBy (map-side combine) + join-back, not a window — see lsh.py.
-    # bsz >= 2: singleton fingerprints (the overwhelming majority on
-    # real corpora — 7.26M of 7.37M at the 554k-turn rung) can never
-    # pair; dropping them from the size table before the join-back
-    # shrinks both join inputs to the pairable rows (same r6
-    # optimization as pairs_from_buckets — identical output pairs).
-    sizes = fp.groupBy("fp_hash").agg(F.count(F.lit(1)).alias("bsz")) \
-        .filter(F.col("bsz") >= 2)
-    # Materialize the join-back ONCE for its four consumer legs (x/y
-    # self-join, hot, hot_min) — same contract and rationale as
-    # pairs_from_buckets: eager-only, released with the regime's sweep.
-    # r6 rung iso (bench/iso_substr.py): 10.5 s -> 8.4 s for the
-    # expansion, identical pairs — the pairable join-back is 1.9M rows vs
-    # the 8.4M-row fingerprint table each leg previously re-joined.
-    tagged = fp.join(sizes, "fp_hash")
-    if regime is not None:
-        tagged = regime.join_back(tagged)
-
-    small = tagged.filter(F.col("bsz") <= cap).drop("bsz")
-    x, y = small.alias("x"), small.alias("y")
-    small_pairs = x.join(
-        y,
-        (F.col("x.fp_hash") == F.col("y.fp_hash"))
-        & (F.col("x.id") < F.col("y.id")),
-    ).select(
-        F.col("x.id").alias("a"),
-        F.col("y.id").alias("b"),
-        F.col("x.pos").alias("pos_a"),
-        F.col("y.pos").alias("pos_b"),
+    # so a bucket's row count is its distinct-doc size, and each row of
+    # the shared expansion is one (pair, fingerprint) match anchor.
+    anchors, hot_stats = _bucket_legs(
+        fp, cfg.substr_bucket_cap, bucket_cols=("fp_hash",), channel="substr",
+        payload_cols=("pos",), regime=regime,
     )
+    return _anchor_pairs(anchors, cfg.max_anchors_per_pair, "substr"), hot_stats
 
-    hot = tagged.filter(F.col("bsz") > cap)
-    hot_min = hot.groupBy("fp_hash").agg(
-        F.min_by(F.struct("id", "pos"), "id").alias("m")
-    )
-    hot_pairs = (
-        hot.join(hot_min, "fp_hash")
-        .filter(F.col("id") != F.col("m.id"))
-        .select(
-            F.col("m.id").alias("a"),
-            F.col("id").alias("b"),
-            F.col("m.pos").alias("pos_a"),
-            F.col("pos").alias("pos_b"),
-        )
-    )
 
-    anchors = small_pairs.unionByName(hot_pairs)
-    # anchors kept in DETERMINISTIC order: collect_list order varies run to
-    # run, so sort the (pos_a, pos_b) structs before slicing — a replayed
-    # task or re-run keeps the same anchors and the same verdicts
-    # (ADVICE.md r1). Pairs whose anchor count exceeds the cap carry
-    # n_anchors so the pipeline can log the truncation — no silent caps.
-    acap = cfg.max_anchors_per_pair
-    pairs = (
+def _anchor_pairs(anchors: DataFrame, acap: int, channel: str) -> DataFrame:
+    """(a, b, pos_a, pos_b) anchor rows -> one (a, b, n_anchors, pos_as,
+    pos_bs, channel) row per pair, keeping the ``acap`` smallest anchors.
+
+    Anchors are kept in DETERMINISTIC order: collect_list order varies run
+    to run, so sort the (pos_a, pos_b) structs before slicing — a replayed
+    task or re-run keeps the same anchors and the same verdicts (ADVICE.md
+    r1). Pairs whose anchor count exceeds the cap carry n_anchors so the
+    pipeline can log the truncation — no silent caps."""
+    return (
         anchors.groupBy("a", "b")
         .agg(F.sort_array(F.collect_list(F.struct("pos_a", "pos_b"))).alias("anc"))
         .select(
@@ -282,10 +240,8 @@ def substr_candidates(
             F.transform(F.slice("anc", 1, acap), lambda x: x["pos_a"]).alias("pos_as"),
             F.transform(F.slice("anc", 1, acap), lambda x: x["pos_b"]).alias("pos_bs"),
         )
-        .withColumn("channel", F.lit("substr"))
+        .withColumn("channel", F.lit(channel))
     )
-    hot_stats = hot.groupBy("fp_hash").agg(F.max("bsz").alias("bucket_size"))
-    return pairs, hot_stats
 
 
 def _extend_span(ta: np.ndarray, tb: np.ndarray, pa: int, pb: int, k: int) -> int:
@@ -519,7 +475,6 @@ def exact_substr_within_groups(
     table) as a truncation event: no silent caps.
     """
     min_len = cfg.min_substr_len
-    budget = cfg.substr_group_byte_budget
     out_schema = T.StructType(
         [
             T.StructField("a", T.StringType(), False),
@@ -538,21 +493,8 @@ def exact_substr_within_groups(
         F.col(id_col).cast("string").alias("_id"),
         norm_text_col(text_col, cfg).alias("_norm"),
     )
-    # per-group byte sizes via groupBy (map-side combine) + join-back —
-    # same skew-safe shape as pairs_from_buckets, never a window
-    sizes = normed.groupBy("_grp").agg(
-        F.sum(F.octet_length("_norm")).alias("_bytes")
-    )
-    n_split = F.greatest(F.ceil(F.col("_bytes") / budget), F.lit(1))
-    tagged = normed.join(sizes, "_grp").withColumn(
-        "_sub",
-        F.when(
-            F.col("_bytes") > budget,
-            F.pmod(F.xxhash64("_id", F.lit(cfg.seed)), n_split),
-        ).otherwise(F.lit(0)),
-    )
+    tagged, over = _sub_bucketed(normed, "_norm", cfg)
     if recorder is not None:
-        over = sizes.filter(F.col("_bytes") > budget)
         recorder.metric(
             "exact_substr_within_groups", "groups_sub_bucketed", over.count()
         )
@@ -561,11 +503,30 @@ def exact_substr_within_groups(
             "max_group_bytes",
             (over.agg(F.max("_bytes")).first()[0] or 0),
         )
-    return (
-        tagged.drop("_bytes")
-        .groupBy("_grp", "_sub")
-        .applyInPandas(run, schema=out_schema)
-    )
+    return tagged.groupBy("_grp", "_sub").applyInPandas(run, schema=out_schema)
+
+
+def _sub_bucketed(grouped: DataFrame, text: str, cfg: DedupConfig
+                  ) -> tuple[DataFrame, DataFrame]:
+    """The giant-group guard: (_grp, _id, ``text``) rows gain a ``_sub``
+    key — 0, or pmod(xxhash64(_id), ceil(bytes/budget)) for a group whose
+    summed ``text`` bytes exceed ``cfg.substr_group_byte_budget`` — so
+    (_grp, _sub) groups stay under the budget. Also returns the oversized
+    groups' (_grp, _bytes) rows for the caller's truncation metrics.
+
+    Per-group byte sizes via groupBy (map-side combine) + join-back — the
+    same skew-safe shape as pairs_from_buckets, never a window."""
+    budget = cfg.substr_group_byte_budget
+    sizes = grouped.groupBy("_grp").agg(F.sum(F.octet_length(text)).alias("_bytes"))
+    n_split = F.greatest(F.ceil(F.col("_bytes") / budget), F.lit(1))
+    tagged = grouped.join(sizes, "_grp").withColumn(
+        "_sub",
+        F.when(
+            F.col("_bytes") > budget,
+            F.pmod(F.xxhash64("_id", F.lit(cfg.seed)), n_split),
+        ).otherwise(F.lit(0)),
+    ).drop("_bytes")
+    return tagged, sizes.filter(F.col("_bytes") > budget)
 
 
 # ----------------------------------------------------------------------
@@ -756,13 +717,12 @@ def removal_spans_within_groups(
     GIVEN (no normalization here: the removal rewrite must target the
     column whose offsets these are; normalize upstream if desired).
 
-    Same giant-group guard as exact_substr_within_groups: groups over
-    ``cfg.substr_group_byte_budget`` normalized bytes sub-bucket by doc
+    Same giant-group guard as exact_substr_within_groups (_sub_bucketed):
+    groups over ``cfg.substr_group_byte_budget`` bytes sub-bucket by doc
     hash (exact within sub-buckets, truncation recorded — no silent
     caps).
     """
     min_len = cfg.min_substr_len
-    budget = cfg.substr_group_byte_budget
     out_schema = T.StructType(
         [
             T.StructField("id", T.StringType(), False),
@@ -776,32 +736,17 @@ def removal_spans_within_groups(
         spans = duplicate_span_positions_local(texts, min_len)
         return pd.DataFrame(spans, columns=["id", "start", "end"])
 
-    tagged = docs.select(
+    raw = docs.select(
         F.col(group_col).alias("_grp"),
         F.col(id_col).cast("string").alias("_id"),
         F.col(text_col).alias("_raw"),
     )
-    sizes = tagged.groupBy("_grp").agg(
-        F.sum(F.octet_length("_raw")).alias("_bytes")
-    )
-    n_split = F.greatest(F.ceil(F.col("_bytes") / budget), F.lit(1))
-    tagged = tagged.join(sizes, "_grp").withColumn(
-        "_sub",
-        F.when(
-            F.col("_bytes") > budget,
-            F.pmod(F.xxhash64("_id", F.lit(cfg.seed)), n_split),
-        ).otherwise(F.lit(0)),
-    )
+    tagged, over = _sub_bucketed(raw, "_raw", cfg)
     if recorder is not None:
-        over = sizes.filter(F.col("_bytes") > budget)
         recorder.metric(
             "removal_spans_within_groups", "groups_sub_bucketed", over.count()
         )
-    return (
-        tagged.drop("_bytes")
-        .groupBy("_grp", "_sub")
-        .applyInPandas(run, schema=out_schema)
-    )
+    return tagged.groupBy("_grp", "_sub").applyInPandas(run, schema=out_schema)
 
 
 def substr_cross_candidates(
@@ -831,7 +776,6 @@ def substr_cross_candidates(
     scanned once and NEVER shuffled, the decontamination pass costs one
     corpus scan plus verify on flagged pairs.
     """
-    acap = cfg.max_anchors_per_pair
     grouped = (
         fp_eval.groupBy("fp_hash")
         .agg(F.sort_array(F.collect_list(F.struct("id", "pos"))).alias("es"))
@@ -854,18 +798,7 @@ def substr_cross_candidates(
         F.col("id").alias("a"), "b",
         F.col("pos").alias("pos_a"), "pos_b",
     )
-    pairs = (
-        anchors.groupBy("a", "b")
-        .agg(F.sort_array(F.collect_list(F.struct("pos_a", "pos_b"))).alias("anc"))
-        .select(
-            "a", "b",
-            F.size("anc").alias("n_anchors"),
-            F.transform(F.slice("anc", 1, acap), lambda x: x["pos_a"]).alias("pos_as"),
-            F.transform(F.slice("anc", 1, acap), lambda x: x["pos_b"]).alias("pos_bs"),
-        )
-        .withColumn("channel", F.lit("substr_cross"))
-    )
-    return pairs, capped_stats
+    return _anchor_pairs(anchors, cfg.max_anchors_per_pair, "substr_cross"), capped_stats
 
 
 def substr_decontaminate(

@@ -11,7 +11,7 @@ from hypothesis import strategies as st
 from hsip.config import DedupConfig
 from hsip.minhash import _coeffs, _oph_batch
 from hsip.simhash import _simhash_batch
-from hsip.suffixes import _rolling_hashes, _sliding_min, _winnow, duplicate_spans_local
+from hsip.suffixes import _rolling_hashes, _sliding, _winnow, duplicate_spans_local
 from hsip.textkernel import _doc_features
 
 import pandas as pd
@@ -78,8 +78,9 @@ def test_simhash_batch_matches_rowwise(rows):
 def test_sliding_min_matches_naive(data, k, w):
     h = _rolling_hashes(np.frombuffer(data, np.uint8), k)
     if len(h) > w:
-        naive = np.lib.stride_tricks.sliding_window_view(h, w).min(axis=1)
-        assert (_sliding_min(h, w) == naive).all()
+        view = np.lib.stride_tricks.sliding_window_view(h, w)
+        assert (_sliding(h, w, np.minimum) == view.min(axis=1)).all()
+        assert (_sliding(h, w, np.maximum) == view.max(axis=1)).all()
 
 
 @settings(max_examples=25, deadline=None)

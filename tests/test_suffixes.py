@@ -214,6 +214,69 @@ def test_anchor_positions_deterministic(spark):
     assert a and a == b
 
 
+def test_shared_expansion_anchors_and_layout(spark):
+    """substr_candidates rides lsh's shared bucket expansion: its anchors
+    and hot stats equal a driver-side brute force over the fingerprint
+    rows (every pair in a small bucket, a star to the min id in a hot
+    one) in both regimes, and the eager plan exchanges nothing on fp_hash
+    after the fingerprint barrier — the layout contract
+    test_materialize_keeps_hash_layout_under_aqe pins for bucket tables."""
+    import re
+    from itertools import combinations
+
+    from hsip.barrier import Barrier, Regime
+
+    cfg = DedupConfig(min_substr_len=40, winnow_window=10,
+                      substr_bucket_cap=3, max_anchors_per_pair=4)
+    boiler = "exactly the same boilerplate text repeated in every document here"
+    shared = "a second passage that only three of the documents have in common"
+    docs = [(f"x{i}", boiler + f" unique tail number {i}") for i in range(6)]
+    docs += [(f"y{i}", f"lead {i} " + shared + f" end {i}") for i in range(3)]
+    docs += [("z0", "nothing in this one is shared with any other document at all")]
+    df = spark.createDataFrame(docs, "id string, text string")
+    fps = fingerprint_table(df, "id", "text", cfg)
+
+    buckets: dict[int, list] = {}
+    for r in fps.collect():
+        buckets.setdefault(r.fp_hash, []).append((r.id, r.pos))
+    anchors: dict[tuple, list] = {}
+    want_hot = {}
+    for h, rows in buckets.items():
+        rows.sort()
+        if len(rows) > cfg.substr_bucket_cap:
+            want_hot[h] = len(rows)
+            legs = [(rows[0], r) for r in rows[1:]]
+        else:
+            legs = combinations(rows, 2)
+        for (a, pa), (b, pb) in legs:
+            anchors.setdefault((a, b), []).append((pa, pb))
+    acap = cfg.max_anchors_per_pair
+    want = {}
+    for k, v in anchors.items():
+        kept = sorted(v)[:acap]
+        want[k] = (len(v), [p for p, _ in kept], [q for _, q in kept])
+    # both expansion legs and the anchor slice are exercised
+    assert want_hot and any(2 <= len(r) <= cfg.substr_bucket_cap for r in buckets.values())
+    assert any(n > acap for n, _, _ in want.values())
+
+    for regime in (Regime(Barrier()), Regime(Barrier(), width=8)):
+        try:
+            pairs, hot = substr_candidates(fps, cfg, regime)
+            rows = pairs.collect()
+            assert {r.channel for r in rows} == {"substr"}
+            got = {(r.a, r.b): (r.n_anchors, list(r.pos_as), list(r.pos_bs)) for r in rows}
+            assert got == want
+            assert {r.fp_hash: r.bucket_size for r in hot.collect()} == want_hot
+            if regime.eager:
+                for q in (pairs, hot):
+                    plan = q._jdf.queryExecution().executedPlan().toString()
+                    assert not re.search(r"Exchange hashpartitioning\(fp_hash", plan), plan
+                plan = pairs._jdf.queryExecution().executedPlan().toString()
+                assert re.search(r"Exchange hashpartitioning\(a#", plan), plan
+        finally:
+            regime.release()
+
+
 def test_span_batch_kernel_equals_scalar_loop():
     """The vectorized cross-pair span kernel (_span_lens_batch) must
     reproduce the scalar per-anchor loop (_extend_span + early break at

@@ -18,7 +18,8 @@ import io
 import os
 import sys
 
-sys.path.insert(0, os.getcwd())
+# import hsip from this checkout, whatever the working directory
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = sys.argv[1] if len(sys.argv) > 1 else "plans/r06"
