@@ -152,13 +152,16 @@ class Regime:
       AQE off at ``width`` shuffle partitions (~500 docs each, floor 8,
       capped at the session's own width).
 
-    ``sweep`` collects what the builders materialize, for ``release``."""
+    ``sweep`` collects what the builders materialize, for ``release``;
+    ``hydration`` records each broadcast-hydration decision taken under it
+    (``broadcastable``)."""
 
     def __init__(self, barrier: Barrier, width: int | None = None):
         self.barrier = barrier
         self.width = width
         self.eager = width is None
         self.sweep: list[DataFrame] = []
+        self.hydration: dict[str, dict] = {}
 
     @classmethod
     def for_run(cls, spark, cfg, n_docs: int, barrier: Barrier) -> Regime:
@@ -187,6 +190,15 @@ class Regime:
         if self.eager:
             return df
         return df.repartition(max(df.sparkSession.sparkContext.defaultParallelism, 8))
+
+    def broadcastable(self, name: str, df: DataFrame, limit: int | None = None) -> bool:
+        """``fits_broadcast(df, limit)``, with the decision and the measured
+        bytes behind it kept as ``hydration[name]``, so a run's stats show
+        which hydration joins broadcast and why."""
+        n = measured_size_bytes(df)
+        ok = _within_broadcast(df, n, limit)
+        self.hydration[name] = {"broadcast": ok, "measured_size_bytes": n}
+        return ok
 
     def release(self) -> None:
         for df in self.sweep:
@@ -232,7 +244,10 @@ def fits_broadcast(df: DataFrame, limit: int | None = None) -> bool:
     default limit is the session's ``spark.sql.autoBroadcastJoinThreshold``
     (off when negative): the budget Catalyst applied to a materialized
     cache's measured size before the barriers went flat."""
-    n = measured_size_bytes(df)
+    return _within_broadcast(df, measured_size_bytes(df), limit)
+
+
+def _within_broadcast(df: DataFrame, n: int | None, limit: int | None) -> bool:
     if limit is None:
         limit = df.sparkSession._jsparkSession.sessionState().conf() \
             .autoBroadcastJoinThreshold()

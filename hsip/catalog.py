@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import threading
 import time
@@ -96,6 +97,11 @@ def zorder_key(cols: list[Column], bits: int = 16) -> Column:
     return key
 
 
+# the writing task's partition number: Spark's ``part-00003-<uuid>-c000``
+# and Iceberg's ``00003-<task>-<uuid>-00001`` data file names
+_WRITE_PARTITION = re.compile(r"(?:part-)?(\d+)-")
+
+
 class ConcurrentWriteError(RuntimeError):
     """Another commit landed on this table between append start and
     commit (parquet-fallback optimistic check; see module docstring)."""
@@ -128,8 +134,8 @@ class Catalog:
         self.iceberg_catalog = iceberg_catalog
         if not iceberg_catalog:
             os.makedirs(warehouse, exist_ok=True)
-        # in-process writers (e.g. the FAIR channel threads appending
-        # lineage rows) serialize per table ident; the optimistic
+        # in-process writers (e.g. several threads appending to one
+        # table) serialize per table ident; the optimistic
         # snapshot check in write() covers writers this lock can't see
         # (other processes / other Catalog instances)
         self._ident_locks: dict[str, threading.Lock] = defaultdict(threading.Lock)
@@ -167,6 +173,13 @@ class Catalog:
             # evolved table (see write(evolve_schema=...)): union the
             # per-file schemas instead of adopting an arbitrary file's
             reader = reader.option("mergeSchema", "true")
+        elif "schema" in man:
+            # the schema recorded at commit: no footer-reading inference
+            # job per read (manifests written before it was recorded
+            # still infer)
+            from pyspark.sql.types import StructType
+
+            reader = reader.schema(StructType.fromJson(json.loads(man["schema"])))
         return reader.parquet(os.path.join(self._path(ident), "data"))
 
     def manifest(self, ident: str) -> dict:
@@ -185,6 +198,34 @@ class Catalog:
                 r[0][len("hsip."):]: r[1] for r in rows if r[0].startswith("hsip.")
             }
         return self.manifest(ident).get("meta", {})
+
+    def partition_rows(self, ident: str) -> list[tuple[int, int]]:
+        """(write partition, rows) of a committed table, from file metadata
+        alone: the parquet fallback sums its part files' footer row
+        counts by the ``part-NNNNN`` number the writing task stamps, and
+        Iceberg reads its ``files`` metadata table, whose data file names
+        lead with the same number. No job scans the data. Files named by
+        neither (parquet-fallback appends) count under partition -1."""
+        if self.iceberg_catalog:
+            files = [
+                (os.path.basename(r[0]), r[1]) for r in self.spark.read.table(
+                    f"{self.iceberg_catalog}.{ident}.files"
+                ).select("file_path", "record_count").collect()
+            ]
+        else:
+            import pyarrow.parquet as pq
+
+            files = [
+                (fn, pq.read_metadata(os.path.join(root, fn)).num_rows)
+                for root, _dirs, names in os.walk(os.path.join(self._path(ident), "data"))
+                for fn in names
+                if fn.endswith(".parquet") and not fn.startswith((".", "_"))
+            ]
+        rows: dict[int, int] = defaultdict(int)
+        for name, n in files:
+            m = _WRITE_PARTITION.match(name)
+            rows[int(m.group(1)) if m else -1] += n
+        return sorted(rows.items())
 
     # -- write (atomic) --------------------------------------------------
     def write(self, df: DataFrame, ident: str, mode: str = "overwrite",
@@ -369,12 +410,15 @@ class Catalog:
         base = self._path(ident)
         base_snapshot = None
         merge_schema = False
+        # the schema the committed manifest records for read(): the
+        # incoming frame's, unless an append inherits the table's below
+        schema = df.schema.json()
         if mode == "append" and self.exists(ident):
             # ONE in-lock manifest read serves the optimistic-concurrency
             # base snapshot AND the layout inheritance below: reading it
             # before the lock (as an r6 draft did) made sequential
-            # IN-PROCESS writers — e.g. the channel threads appending
-            # lineage rows — trip ConcurrentWriteError on each other,
+            # IN-PROCESS writers — e.g. threads appending to one table —
+            # trip ConcurrentWriteError on each other,
             # because the waiter's pre-lock snapshot was already stale by
             # the time it acquired the lock.
             start_man = self.manifest(ident)
@@ -413,7 +457,9 @@ class Catalog:
             # later plain appends keep reading with mergeSchema
             merge_schema = bool(start_man.get("merge_schema"))
             if "empty_schema" not in start_man:
-                live_cols = set(self.read(ident).columns)
+                schema = start_man.get("schema")
+                live_cols = ({f["name"] for f in json.loads(schema)["fields"]}
+                             if schema else set(self.read(ident).columns))
                 new_cols = set(df.columns)
                 if live_cols != new_cols:
                     if not evolve_schema:
@@ -443,16 +489,8 @@ class Catalog:
             # the empty frame; Iceberg keeps schema in metadata natively)
             tmp = f"{base}.tmp-{uuid.uuid4().hex[:8]}"
             os.makedirs(os.path.join(tmp, "data"))
-            man = {
-                "ident": ident,
-                "snapshot_id": uuid.uuid4().hex,
-                "committed_at": time.time(),
-                "meta": meta or {},
-                "partition_by": partition_by,
-                "empty_schema": df.schema.json(),
-            }
-            with open(os.path.join(tmp, "_MANIFEST.json"), "w") as f:
-                json.dump(man, f)
+            self._write_manifest(tmp, ident, meta, partition_by=partition_by,
+                                 empty_schema=df.schema.json())
             if os.path.exists(base):
                 shutil.rmtree(base)
             os.rename(tmp, base)
@@ -479,21 +517,14 @@ class Catalog:
         finally:
             if zsrc is not None:
                 zsrc.unpersist()
-        man = {
-            "ident": ident,
-            "snapshot_id": uuid.uuid4().hex,
-            "committed_at": time.time(),
-            "meta": meta or {},
+        layout = {
+            "partition_by": partition_by, "sort_by": sort_by,
+            "zorder_by": zorder_by,
+            "zorder_bits": zorder_bits if zorder_by else None,
+            # a merging table is read with mergeSchema, never a recorded one
+            "merge_schema": merge_schema,
+            "schema": None if merge_schema else schema,
         }
-        if partition_by:
-            man["partition_by"] = partition_by
-        if sort_by:
-            man["sort_by"] = sort_by
-        if zorder_by:
-            man["zorder_by"] = zorder_by
-            man["zorder_bits"] = zorder_bits
-        if merge_schema:
-            man["merge_schema"] = True
         if mode == "append" and os.path.exists(base):
             # append = move the new part files into the live data dir with
             # unique names, then swap the manifest — O(new data), never a
@@ -515,7 +546,6 @@ class Catalog:
                     f"{base_snapshot} to {live_snapshot} during this append "
                     "(single-writer contract; see hsip/catalog.py docstring)"
                 )
-            man["base_snapshot"] = base_snapshot
             data_dir = os.path.join(base, "data")
             tmp_data = os.path.join(tmp, "data")
             stamp = uuid.uuid4().hex[:8]
@@ -532,17 +562,30 @@ class Catalog:
                         os.path.join(dest, f"append-{stamp}-{i:05d}.parquet"),
                     )
                     i += 1
-            man_tmp = os.path.join(base, f"_MANIFEST.json.tmp-{stamp}")
-            with open(man_tmp, "w") as f:
-                json.dump(man, f)
-            os.rename(man_tmp, os.path.join(base, "_MANIFEST.json"))
+            self._write_manifest(base, ident, meta, base_snapshot=base_snapshot,
+                                 **layout)
             shutil.rmtree(tmp)
             return
-        with open(os.path.join(tmp, "_MANIFEST.json"), "w") as f:
-            json.dump(man, f)
+        self._write_manifest(tmp, ident, meta, **layout)
         if os.path.exists(base):
             shutil.rmtree(base)
         os.rename(tmp, base)
+
+    @staticmethod
+    def _write_manifest(table_dir: str, ident: str, meta: dict | None,
+                        **fields) -> None:
+        """Commit ``table_dir``'s manifest, the one place manifests are
+        written: a fresh snapshot id, the commit time, ``meta``, and every
+        layout/schema field that is set (``schema`` is the table's schema
+        as JSON, which read() applies instead of inferring it). Written
+        under a temp name and renamed, so no reader sees half of it."""
+        man = {"ident": ident, "snapshot_id": uuid.uuid4().hex,
+               "committed_at": time.time(), "meta": meta or {},
+               **{k: v for k, v in fields.items() if v}}
+        tmp = os.path.join(table_dir, f"_MANIFEST.json.tmp-{uuid.uuid4().hex[:8]}")
+        with open(tmp, "w") as f:
+            json.dump(man, f)
+        os.rename(tmp, os.path.join(table_dir, "_MANIFEST.json"))
 
     # -- merge (batch upsert) --------------------------------------------
     def merge_into(self, updates: DataFrame, ident: str,

@@ -82,3 +82,8 @@ class Checkpointer:
         self.catalog.write(df, self._ident(stage), meta={"fingerprint": self.fingerprint})
         self.computed.append(stage)
         return self.catalog.read(self._ident(stage))
+
+    def partition_rows(self, stage: str) -> list[tuple[int, int]]:
+        """(write partition, rows) of the stage's committed checkpoint,
+        read from file metadata (Catalog.partition_rows)."""
+        return self.catalog.partition_rows(self._ident(stage))

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .barrier import Regime
@@ -45,6 +45,7 @@ def pairs_from_buckets(
     salt_seed: int = 42,
     payload_cols: tuple[str, ...] = (),
     regime: Regime | None = None,
+    hot_counts: dict[str, Observation] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Generic bucket -> candidate-pair expansion with hot-bucket control.
 
@@ -83,10 +84,16 @@ def pairs_from_buckets(
           the doc's other b-1 bands) and the truncation is LOGGED via
           hot_bucket_stats. Best when hot buckets are boilerplate noise
           that should NOT merge into one component.
+
+    ``hot_counts`` maps a channel to an Observation (metrics.Recorder)
+    that receives its number of buckets over ``cap`` — the count
+    hot_bucket_stats holds, taken without a job of its own: the
+    observation rides the size table, which every pair leg joins, so it
+    is filled in by whatever action first runs the pairs.
     """
     rows, hot_stats = _bucket_legs(
         bucketed, cap, id_col, bucket_cols, channel, hot_policy, salt_seed,
-        payload_cols, regime,
+        payload_cols, regime, hot_counts,
     )
     return rows.dropDuplicates(["a", "b", "channel"]), hot_stats
 
@@ -101,6 +108,7 @@ def _bucket_legs(
     salt_seed: int = 42,
     payload_cols: tuple[str, ...] = (),
     regime: Regime | None = None,
+    hot_counts: dict[str, Observation] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The bucket expansion behind ``pairs_from_buckets``: one
     (a, b, channel, <payload>_a, <payload>_b) row per shared bucket, NOT
@@ -127,6 +135,14 @@ def _bucket_legs(
     # their bucket rows too. Output pairs/hot-stats are identical.
     sizes = bucketed.groupBy(*cols).agg(F.count(F.lit(1)).alias("bsz")) \
         .filter(F.col("bsz") >= 2)
+    # one row per bucket that can pair, read in full by the join below
+    # (every size key is a bucket key), so the counts are exact whichever
+    # leg's action runs it first
+    for ch, obs in (hot_counts or {}).items():
+        hot_ch = F.col("bsz") > cap
+        if channel is None:
+            hot_ch &= F.col("channel") == ch
+        sizes = sizes.observe(obs, F.count_if(hot_ch).alias("hot_buckets"))
     tagged = bucketed.join(sizes, cols)
     # ``regime``: an eager run materializes the join-back ONCE for its four
     # consumer legs (small x/y self-join, hot, hot_min; hot_stats is a

@@ -2,9 +2,12 @@
 and metrics tables").
 
 Metrics are driver-side scalars (counts, timings, truncation events —
-"no silent caps"). Lineage is per-partition row accounting computed
-distributed via spark_partition_id() — no mapPartitions, no collect of
-row data. Both are append-only tables through the Catalog.
+"no silent caps"). Counts over data ride the actions the pipeline runs
+anyway: an ``observation`` attached to a frame is filled in by the first
+action that executes it, so recording costs no job. Lineage is the
+per-partition row accounting of each committed stage, read from its
+files' metadata (Catalog.partition_rows) — no job either. Both are
+buffered and appended once per run by ``flush``.
 """
 
 from __future__ import annotations
@@ -12,11 +15,15 @@ from __future__ import annotations
 import time
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.types import StructType
 
 from . import schemas
 from .catalog import Catalog
+
+# an observed plan reports its metrics through Spark's listener bus just
+# after its action returns; this bounds the wait should it never have run
+_OBSERVED_WAIT_S = 120.0
 
 
 class Recorder:
@@ -29,40 +36,96 @@ class Recorder:
         self.catalog = catalog
         self.run_id = run_id
         self._metric_rows: list[tuple] = []
+        self._lineage_rows: list[tuple] = []
+        self._observed: list[tuple[str, str, Observation]] = []
 
     def metric(self, stage: str, key: str, value: float) -> None:
         self._metric_rows.append(
             (self.run_id, stage, key, float(value), datetime.now(timezone.utc))
         )
 
+    def observation(self, stage: str, key: str) -> Observation:
+        """A one-metric ``Observation`` whose value becomes the (stage, key)
+        metric when ``collect_observed`` runs. Attach it with
+        ``df.observe(obs, <aggregate>)`` where the frame is built, i.e. in
+        code that runs only when its stage computes: reading waits for an
+        action to execute the observed plan, and a checkpointed stage that
+        is skipped executes nothing. The first action to execute the plan
+        fills it in, so that action must consume every row (a write, a
+        barrier, a join) — never ``isEmpty``/``first``/``limit``."""
+        obs = Observation()
+        self._observed.append((stage, key, obs))
+        return obs
+
+    def collect_observed(self) -> dict[str, dict[str, float]]:
+        """Record every pending observation as a metric; returns the values
+        as {stage: {key: value}}. Call after the actions that execute the
+        observed frames have run."""
+        out: dict[str, dict[str, float]] = {}
+        for stage, key, obs in self._observed:
+            value = _observed_value(obs, f"{stage}.{key}")
+            self.metric(stage, key, value)
+            out.setdefault(stage, {})[key] = value
+        self._observed = []
+        return out
+
     def recorded(self) -> dict[tuple[str, str], float]:
         """Unflushed metrics as {(stage, key): value} — in-memory view."""
         return {(s, k): v for (_rid, s, k, v, _ts) in self._metric_rows}
 
-    def lineage(self, stage: str, df: DataFrame, fingerprint: str) -> None:
-        """Per-partition output-row accounting for ``df`` (one action)."""
-        if self.catalog is None:
-            return
-        rows = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .select(
-                F.lit(self.run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                F.col("partition_id").cast("int"),
-                F.col("rows").cast("long"),
-                F.lit(fingerprint).alias("fingerprint"),
-                F.current_timestamp().alias("finished_at"),
-            )
+    def lineage(self, stage: str, partition_rows: list[tuple[int, int]],
+                fingerprint: str) -> None:
+        """Buffer one lineage row per (write partition, rows) of a committed
+        stage (Checkpointer.partition_rows); ``flush`` appends them."""
+        now = datetime.now(timezone.utc)
+        self._lineage_rows.extend(
+            (self.run_id, stage, pid, rows, fingerprint, now)
+            for pid, rows in partition_rows
         )
-        self.catalog.write(rows, "lineage", mode="append")
 
     def flush(self) -> None:
-        if not self._metric_rows or self.catalog is None:
+        """Append the buffered lineage and metric rows, one write per table.
+        The frames are built from Arrow batches on the driver: no Python
+        worker runs for them."""
+        if self.catalog is None:
             return
-        df = self.spark.createDataFrame(self._metric_rows, schema=schemas.METRICS)
-        self.catalog.write(df, "metrics", mode="append")
+        for ident, rows, schema in (
+            ("lineage", self._lineage_rows, schemas.LINEAGE),
+            ("metrics", self._metric_rows, schemas.METRICS),
+        ):
+            if rows:
+                self.catalog.write(_local_frame(self.spark, rows, schema), ident,
+                                   mode="append")
+        self._lineage_rows = []
         self._metric_rows = []
+
+
+def _observed_value(obs: Observation, what: str) -> float:
+    """The single metric of ``obs``, waiting for its action's report."""
+    deadline = time.monotonic() + _OBSERVED_WAIT_S
+    while not obs._jo.future().isCompleted():
+        if time.monotonic() > deadline:
+            raise RuntimeError(
+                f"observed metric {what} never reported: no action executed "
+                "the frame it was attached to")
+        time.sleep(0.01)
+    (value,) = obs.get.values()
+    return value or 0
+
+
+def _local_frame(spark: SparkSession, rows: list[tuple],
+                 schema: StructType) -> DataFrame:
+    """``rows`` as a DataFrame built from one Arrow table on the driver
+    (``createDataFrame(list)`` instead ships pickled rows through Python
+    workers, cold at a run's end: seconds of task time for a few rows)."""
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.fieldNames(), r)) for r in rows], schema=arrow_schema)
+    return spark.createDataFrame(table, schema=schema)
 
 
 class StageTimer:

@@ -48,6 +48,28 @@ from .textkernel import featurize
 
 @dataclass
 class PipelineResult:
+    """A run's result frames plus ``stats``, the same keys in ephemeral
+    and warehouse runs unless noted:
+
+    - ``stage_walls``: {stage: driver-observed seconds};
+    - ``eager_barriers``, ``shuffle_width``: the run's Regime (eager, or
+      latency at that shuffle width);
+    - ``probe_key_entropy``: the simhash probe-key sizing check (simhash
+      runs only);
+    - ``n_docs``, ``verified_candidates``, ``duplicate_pairs``,
+      ``dup_pairs_by_channel``: work counters over ``verified``;
+    - ``caps``: {metric stage: {key: count}} for every cap a computed
+      stage hit, 0 included: ``hot_buckets_star_paired`` per mh/sh
+      channel, ``hot_fingerprints_star_paired`` and
+      ``anchor_truncated_pairs`` for substr, and the span stages'
+      ``groups_sub_bucketed`` and ``max_group_bytes``. Stages a resume
+      skipped record none;
+    - ``broadcast_hydration``: {verify stage: {"broadcast": taken or
+      declined, "measured_size_bytes": the bytes behind it, None when
+      unmeasured}};
+    - ``skipped_stages``, ``computed_stages``: warehouse runs only.
+    """
+
     clusters: DataFrame
     verified: DataFrame
     representatives: DataFrame
@@ -171,7 +193,8 @@ def run_documents(
         if use_ckpt
         else None
     )
-    rec = Recorder(spark, catalog, run_id) if use_ckpt else None
+    # in memory without a warehouse: both modes record the same counts
+    rec = Recorder(spark, catalog, run_id)
 
     stage_walls: dict[str, float] = {}
 
@@ -190,7 +213,8 @@ def run_documents(
         if ckpt:
             with StageTimer(rec, name):
                 out = ckpt.materialize(name, build)
-            rec.lineage(name, out, fp)
+            # from the committed files' metadata, skipped stages included
+            rec.lineage(name, ckpt.partition_rows(name), fp)
         else:
             with job_label(spark.sparkContext, name):
                 out = build()
@@ -222,11 +246,10 @@ def run_documents(
 
             entropy = probe_key_entropy(cfg, n_docs)
             stats["probe_key_entropy"] = entropy
-            if rec:
-                rec.metric("simhash_candidates", "probe_key_bits", entropy["key_bits"])
-                rec.metric(
-                    "simhash_candidates", "probe_key_bits_needed", entropy["needed_bits"]
-                )
+            rec.metric("simhash_candidates", "probe_key_bits", entropy["key_bits"])
+            rec.metric(
+                "simhash_candidates", "probe_key_bits_needed", entropy["needed_bits"]
+            )
             if not entropy["ok"]:
                 import warnings
 
@@ -302,20 +325,18 @@ def run_documents(
                 # and join-back both scan the bucket table, which keeps its
                 # hash layout through the barrier)
                 both = barrier(channel_bucket_table(feats, cfg, mh_sh), release=regime.sweep)
-                pairs, hot = pairs_from_buckets(
+                # a count per requested channel, so a 0 reads as "measured,
+                # none hot" rather than "not measured"; observed by the
+                # action that runs the pairs (checkpoint write or verify)
+                hot_counts = {ch: rec.observation(f"{ch}_candidates",
+                                                  "hot_buckets_star_paired")
+                              for ch in mh_sh}
+                pairs, _ = pairs_from_buckets(
                     both, cfg.bucket_cap,
                     bucket_cols=("channel", "bkt_id", "bkt_hash"), channel=None,
                     hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
-                    payload_cols=("simhash",), regime=regime,
+                    payload_cols=("simhash",), regime=regime, hot_counts=hot_counts,
                 )
-                if rec:
-                    n_hot = {r["channel"]: r["count"]
-                             for r in hot.groupBy("channel").count().collect()}
-                    # a row per requested channel, so a 0 reads as "measured,
-                    # none hot" rather than "not measured"
-                    for ch in mh_sh:
-                        rec.metric(f"{ch}_candidates", "hot_buckets_star_paired",
-                                   n_hot.get(ch, 0))
                 return pairs
 
             cands = stage("candidates_mh_sh", build_cands, reuse=False)
@@ -338,19 +359,13 @@ def run_documents(
                         swept=True)
 
             def build_substr():
-                pairs, hot = substr_candidates(fps, cfg, regime)
-                if rec:
-                    # materialize BEFORE the metric scans: without it the
-                    # hot.count() + truncation filter re-execute the whole
-                    # candidate chain in warehouse runs (VERDICT.md r3 item 3)
-                    pairs = barrier(pairs, release=regime.sweep)
-                    rec.metric("substr_candidates", "hot_fingerprints_star_paired", hot.count())
-                    rec.metric(
-                        "substr_candidates", "anchor_truncated_pairs",
-                        pairs.filter(
-                            F.col("n_anchors") > cfg.max_anchors_per_pair
-                        ).count(),
-                    )
+                pairs, _ = substr_candidates(
+                    fps, cfg, regime,
+                    hot_counts=rec.observation("substr_candidates",
+                                               "hot_fingerprints_star_paired"),
+                    truncated=rec.observation("substr_candidates",
+                                              "anchor_truncated_pairs"),
+                )
                 return pairs
 
             sub_pairs = stage("substr_candidates", build_substr, reuse=False)
@@ -491,10 +506,14 @@ def run_documents(
                 ),
             )
 
-        if rec:
-            rec.metric("pipeline", "n_docs", n_docs)
-            rec.metric("pipeline", "n_verified_edges", stats["duplicate_pairs"])
-            rec.flush()
+        # every stage has run, so every observation attached by a computed
+        # stage has been filled in by its action
+        stats["caps"] = rec.collect_observed()
+        stats["broadcast_hydration"] = regime.hydration
+        rec.metric("pipeline", "n_docs", n_docs)
+        rec.metric("pipeline", "n_verified_edges", stats["duplicate_pairs"])
+        rec.flush()
+        if ckpt:
             stats["skipped_stages"] = list(ckpt.skipped)
             stats["computed_stages"] = list(ckpt.computed)
 

@@ -35,12 +35,12 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from .barrier import Barrier, Regime, fits_broadcast
+from .barrier import Barrier, Regime
 from .config import DedupConfig
 from .lsh import _bucket_legs
 from .normalize import norm_text_col
@@ -184,6 +184,8 @@ def fingerprint_table(df: DataFrame, id_col: str, text_col: str, cfg: DedupConfi
 
 def substr_candidates(
     fp_df: DataFrame, cfg: DedupConfig, regime: Regime | None = None,
+    hot_counts: Observation | None = None,
+    truncated: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Fingerprint table -> candidate pairs with match-anchor positions.
 
@@ -198,6 +200,10 @@ def substr_candidates(
     join its sweep. None (callers with no sweep to release) barriers the
     fingerprint table unreleased and, as in pairs_from_buckets, leaves
     the join-back lazy.
+
+    ``hot_counts`` / ``truncated`` (metrics.Recorder observations) receive
+    the number of hot fingerprints and of pairs whose anchors exceed
+    ``max_anchors_per_pair``, from whatever action first runs the pairs.
     """
     # The repartitioned fingerprint table feeds ~6 plan branches (sizes,
     # join-back, small x/y self-join, hot, hot_min). A bare Exchange here
@@ -217,8 +223,14 @@ def substr_candidates(
     anchors, hot_stats = _bucket_legs(
         fp, cfg.substr_bucket_cap, bucket_cols=("fp_hash",), channel="substr",
         payload_cols=("pos",), regime=regime,
+        hot_counts=None if hot_counts is None else {"substr": hot_counts},
     )
-    return _anchor_pairs(anchors, cfg.max_anchors_per_pair, "substr"), hot_stats
+    acap = cfg.max_anchors_per_pair
+    pairs = _anchor_pairs(anchors, acap, "substr")
+    if truncated is not None:
+        pairs = pairs.observe(
+            truncated, F.count_if(F.col("n_anchors") > acap).alias("truncated"))
+    return pairs, hot_stats
 
 
 def _anchor_pairs(anchors: DataFrame, acap: int, channel: str) -> DataFrame:
@@ -422,7 +434,8 @@ def verify_substr(pairs: DataFrame, docs: DataFrame, id_col: str, text_col: str,
     normed = regime.reused(normed)
     # the barrier measured it; a latency-mode cache is unmeasured and
     # declines (Catalyst broadcasts it on its own at that size)
-    n_side = F.broadcast(normed) if fits_broadcast(normed) else normed
+    n_side = F.broadcast(normed) if regime.broadcastable("verify_substr", normed) \
+        else normed
     # the span-extension UDF below is CPU-bound: in latency mode the
     # NARROW pair rows (ids + anchor offset arrays, a few MB) re-spread
     # to the core count before the text attaches, so the compute stage
@@ -471,8 +484,10 @@ def exact_substr_within_groups(
     (pmod(xxhash64(id), ceil(bytes/budget))); spans are then exact within
     each sub-bucket. Cross-sub-bucket spans of oversized groups are not
     extracted here — the fingerprint channel remains the recall path —
-    and every split group reaches ``recorder`` (and the pipeline metrics
-    table) as a truncation event: no silent caps.
+    and the split groups reach ``recorder`` (metrics.Recorder; the
+    pipeline metrics table) as truncation counts: no silent caps. They are
+    observed, so they land once an action has run the output and the
+    recorder's ``collect_observed`` reads them.
     """
     min_len = cfg.min_substr_len
     out_schema = T.StructType(
@@ -493,31 +508,30 @@ def exact_substr_within_groups(
         F.col(id_col).cast("string").alias("_id"),
         norm_text_col(text_col, cfg).alias("_norm"),
     )
-    tagged, over = _sub_bucketed(normed, "_norm", cfg)
-    if recorder is not None:
-        recorder.metric(
-            "exact_substr_within_groups", "groups_sub_bucketed", over.count()
-        )
-        recorder.metric(
-            "exact_substr_within_groups",
-            "max_group_bytes",
-            (over.agg(F.max("_bytes")).first()[0] or 0),
-        )
+    tagged = _sub_bucketed(normed, "_norm", cfg, recorder, "exact_substr_within_groups")
     return tagged.groupBy("_grp", "_sub").applyInPandas(run, schema=out_schema)
 
 
-def _sub_bucketed(grouped: DataFrame, text: str, cfg: DedupConfig
-                  ) -> tuple[DataFrame, DataFrame]:
+def _sub_bucketed(grouped: DataFrame, text: str, cfg: DedupConfig,
+                  recorder=None, stage: str = "") -> DataFrame:
     """The giant-group guard: (_grp, _id, ``text``) rows gain a ``_sub``
     key — 0, or pmod(xxhash64(_id), ceil(bytes/budget)) for a group whose
     summed ``text`` bytes exceed ``cfg.substr_group_byte_budget`` — so
-    (_grp, _sub) groups stay under the budget. Also returns the oversized
-    groups' (_grp, _bytes) rows for the caller's truncation metrics.
+    (_grp, _sub) groups stay under the budget. ``recorder`` observes the
+    number of oversized groups and the largest one's bytes as ``stage``
+    metrics.
 
     Per-group byte sizes via groupBy (map-side combine) + join-back — the
     same skew-safe shape as pairs_from_buckets, never a window."""
     budget = cfg.substr_group_byte_budget
     sizes = grouped.groupBy("_grp").agg(F.sum(F.octet_length(text)).alias("_bytes"))
+    if recorder is not None:
+        # one row per group, every one of them read by the join-back below
+        over = F.col("_bytes") > budget
+        sizes = sizes.observe(recorder.observation(stage, "groups_sub_bucketed"),
+                              F.count_if(over).alias("n")) \
+            .observe(recorder.observation(stage, "max_group_bytes"),
+                     F.max(F.when(over, F.col("_bytes"))).alias("n"))
     n_split = F.greatest(F.ceil(F.col("_bytes") / budget), F.lit(1))
     tagged = grouped.join(sizes, "_grp").withColumn(
         "_sub",
@@ -526,7 +540,7 @@ def _sub_bucketed(grouped: DataFrame, text: str, cfg: DedupConfig
             F.pmod(F.xxhash64("_id", F.lit(cfg.seed)), n_split),
         ).otherwise(F.lit(0)),
     ).drop("_bytes")
-    return tagged, sizes.filter(F.col("_bytes") > budget)
+    return tagged
 
 
 # ----------------------------------------------------------------------
@@ -741,11 +755,7 @@ def removal_spans_within_groups(
         F.col(id_col).cast("string").alias("_id"),
         F.col(text_col).alias("_raw"),
     )
-    tagged, over = _sub_bucketed(raw, "_raw", cfg)
-    if recorder is not None:
-        recorder.metric(
-            "removal_spans_within_groups", "groups_sub_bucketed", over.count()
-        )
+    tagged = _sub_bucketed(raw, "_raw", cfg, recorder, "removal_spans_within_groups")
     return tagged.groupBy("_grp", "_sub").applyInPandas(run, schema=out_schema)
 
 

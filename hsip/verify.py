@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .barrier import Regime, fits_broadcast
+from .barrier import Regime
 from .config import DedupConfig
 
 # Build-side budget for the latency-mode broadcast hydrations below.
@@ -202,7 +202,7 @@ def verify_jaccard_hamming(pairs: DataFrame, features: DataFrame,
         .join(pair_ids, "id", "left_semi")
         .repartition("id")
     )
-    if fits_broadcast(f):
+    if regime.broadcastable("verify_mh_sh", f):
         # known small: broadcast it into both joins, as Catalyst did when
         # this was a cache with measured stats — the pair rows never shuffle
         f = F.broadcast(f)
@@ -251,7 +251,8 @@ def _verify_jh_fused_small(pairs: DataFrame, features: DataFrame,
     # width instead of the re-spread core count (r6: live transcript-
     # scale plan had 4 SMJ / 8 Exchange to verify 1,841 pairs).
     h = hydrate(pairs, features, ["shingles"],
-                broadcast=fits_broadcast(features, _BCAST_HYDRATE_MAX_BYTES))
+                broadcast=regime.broadcastable("verify_mh_sh", features,
+                                               _BCAST_HYDRATE_MAX_BYTES))
     is_mh = F.col("channel") == "minhash_lsh"
     jac = F.when(is_mh, jaccard_col())
     ham = F.when(~is_mh, hamming_col(h))

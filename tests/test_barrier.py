@@ -182,3 +182,26 @@ def test_job_label_restores_the_outer_label(spark):
             assert sc.getLocalProperty("spark.job.description") == "hsip:outer"
         assert sc.getLocalProperty("spark.job.description") == "hsip:outer"
     assert sc.getLocalProperty("spark.job.description") is None
+
+
+def test_regime_records_broadcast_hydration_decisions(spark):
+    """Regime.broadcastable gates like fits_broadcast and keeps each
+    decision with the measured bytes behind it, for the run's stats: a
+    measured small frame is taken, an unmeasured (lazy) one declined with
+    None, and a limit under the measured size declines."""
+    from hsip.barrier import Regime
+
+    regime = Regime(materialize)
+    small = regime.reused(_keyed(spark, 500))
+    try:
+        n = measured_size_bytes(small)
+        assert regime.broadcastable("a", small)
+        assert not regime.broadcastable("b", _keyed(spark, 500))
+        assert not regime.broadcastable("c", small, limit=n - 1)
+        assert regime.hydration == {
+            "a": {"broadcast": True, "measured_size_bytes": n},
+            "b": {"broadcast": False, "measured_size_bytes": None},
+            "c": {"broadcast": False, "measured_size_bytes": n},
+        }
+    finally:
+        regime.release()

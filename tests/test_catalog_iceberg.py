@@ -242,3 +242,17 @@ def test_zorder_write_records_property_and_plain_compact_reads_it():
     spark2.sql.assert_called_with(
         "CALL ice.system.rewrite_data_files(table => 't.zp', "
         "strategy => 'sort', sort_order => 'zorder(a, b)')")
+
+
+def test_partition_rows_from_iceberg_files_metadata():
+    """Iceberg lineage comes from the table's ``files`` metadata table: its
+    data file names lead with the writing task's partition number."""
+    spark, cat = _cat()
+    spark.read.table.return_value.select.return_value.collect.return_value = [
+        ("s3://lake/t/data/00001-7-ab12-00001.parquet", 5),
+        ("s3://lake/t/data/00000-6-ab12-00001.parquet", 3),
+        ("s3://lake/t/data/00001-7-ab12-00002.parquet", 2),
+    ]
+    assert cat.partition_rows("ckpt.runA.features") == [(0, 3), (1, 7)]
+    spark.read.table.assert_called_with("ice.ckpt.runA.features.files")
+    spark.read.table.return_value.select.assert_called_with("file_path", "record_count")

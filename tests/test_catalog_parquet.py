@@ -549,3 +549,55 @@ def test_catalog_op_sequence_matches_model(spark, tmp_path):
         assert man.get("zorder_by") == ["x", "y"], f"layout lost after {op}"
         assert man.get("zorder_bits") == 6
         assert man.get("meta") == {"v": "1"}, f"meta lost after {op}"
+
+
+def test_read_back_uses_the_schema_recorded_at_commit(spark, tmp_path):
+    """The manifest records the table's schema at commit and read() applies
+    it: the read-back schema equals what footer inference gives, nullability
+    included, with no inference job. Tables whose manifest predates the
+    recorded schema, and schema-merging tables, still infer."""
+    import json
+    import os
+
+    from hsip.checkpoint import Checkpointer
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    df = spark.createDataFrame(
+        [("a", 1, [1.5], {"x": 2}, (3, "s"))],
+        "id string not null, n int, v array<double>, m map<string,int>, "
+        "st struct<p:bigint,q:string>",
+    ).withColumn("ts", F.current_timestamp())
+    ck = Checkpointer(cat, "r", fingerprint="fp")
+    got = ck.materialize("stage", lambda: df)
+    path = os.path.join(cat._path("ckpt.r.stage"), "data")
+    inferred = spark.read.parquet(path).schema
+    assert got.schema == inferred
+    assert [f.nullable for f in got.schema] == [f.nullable for f in inferred]
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "schema-read")
+    try:
+        cat.read("ckpt.r.stage")
+        # the append's column check reads the recorded schema too
+        cat.write(df, "ckpt.r.stage", mode="append")
+        jobs = sc.statusTracker().getJobIdsForGroup("schema-read")
+        # only the append's own write job ran
+        assert len(jobs) == 1, jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert cat.read("ckpt.r.stage").count() == 2
+
+    # a manifest written before schemas were recorded: inference
+    man_path = os.path.join(cat._path("ckpt.r.stage"), "_MANIFEST.json")
+    man = cat.manifest("ckpt.r.stage")
+    del man["schema"]
+    with open(man_path, "w") as f:
+        json.dump(man, f)
+    assert cat.read("ckpt.r.stage").schema == inferred
+
+    # an evolved (schema-merging) table records no schema
+    cat.write(df.withColumn("extra", F.lit(1)), "ckpt.r.stage", mode="append",
+              evolve_schema=True)
+    man = cat.manifest("ckpt.r.stage")
+    assert man.get("merge_schema") and "schema" not in man
+    assert "extra" in cat.read("ckpt.r.stage").columns

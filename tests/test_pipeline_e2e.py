@@ -558,3 +558,114 @@ def test_collapse_exact_checkpoint_resume(spark, corpus, tmp_path_factory):
     a = {(r.id, r.cluster_id) for r in r1.clusters.collect()}
     b = {(r.id, r.cluster_id) for r in r2.clusters.collect()}
     assert a == b
+
+
+def _planted_caps_docs(spark):
+    """Ten near-copies of one long boilerplate text (hot LSH, Hamming and
+    fingerprint buckets, and pairs sharing far more anchors than the cap)
+    among thirty unrelated documents."""
+    shared = " ".join(f"boiler{i} plate{i * 3} text{i * 7}" for i in range(60))
+    rows = [(f"h{i:02d}", f"{shared} tail unique {i} words {i * 13}") for i in range(10)]
+    rows += [(f"u{i:02d}", " ".join(f"w{i}_{j}" for j in range(80))) for i in range(30)]
+    return spark.createDataFrame(rows, "id string, text string")
+
+
+def _planted_caps_cfg(min_docs):
+    return DedupConfig(bucket_cap=4, substr_bucket_cap=4, max_anchors_per_pair=2,
+                       min_substr_len=60, winnow_window=20,
+                       eager_barrier_min_docs=min_docs)
+
+
+@pytest.mark.parametrize("min_docs", [0, 25_000])
+def test_cap_counts_identical_in_ephemeral_and_warehouse_runs(spark, tmp_path, min_docs):
+    """"No silent caps" in both modes: a planted hot bucket and anchor
+    overflow give the same counts in an ephemeral and a warehouse run, in
+    the eager and the latency regime, equal to the direct counts over the
+    hot-bucket stats (``hot.count()``) and the anchor-truncation filter.
+    The counts land in stats and, with a warehouse, in the metrics table;
+    the broadcast-hydration decisions land in stats in both modes."""
+    from hsip.catalog import Catalog
+    from hsip.lsh import channel_bucket_table, pairs_from_buckets
+    from hsip.suffixes import fingerprint_table, substr_candidates
+    from hsip.textkernel import featurize
+
+    docs = _planted_caps_docs(spark)
+    cfg = _planted_caps_cfg(min_docs)
+    both = channel_bucket_table(featurize(docs, "id", "text", cfg), cfg,
+                                ("minhash_lsh", "simhash")).cache()
+    _, hot = pairs_from_buckets(both, cfg.bucket_cap,
+                                bucket_cols=("channel", "bkt_id", "bkt_hash"),
+                                channel=None, payload_cols=("simhash",))
+    n_hot = {r["channel"]: r["count"] for r in hot.groupBy("channel").count().collect()}
+    sub_pairs, sub_hot = substr_candidates(fingerprint_table(docs, "id", "text", cfg), cfg)
+    want = {
+        "minhash_lsh_candidates": {"hot_buckets_star_paired": n_hot["minhash_lsh"]},
+        "simhash_candidates": {"hot_buckets_star_paired": n_hot["simhash"]},
+        "substr_candidates": {
+            "hot_fingerprints_star_paired": sub_hot.count(),
+            "anchor_truncated_pairs": sub_pairs.filter(
+                F.col("n_anchors") > cfg.max_anchors_per_pair).count(),
+        },
+    }
+    both.unpersist()
+    assert all(v > 0 for d in want.values() for v in d.values()), want
+
+    eph = run_documents(spark, docs, "id", "text", cfg)
+    wh = str(tmp_path / "wh")
+    ware = run_documents(spark, docs, "id", "text", cfg, warehouse=wh, run_id="caps")
+    assert eph.stats["caps"] == ware.stats["caps"] == want
+    rows = {(r.stage, r.key): r.value
+            for r in Catalog(spark, wh).read("metrics").collect()}
+    for stage, kv in want.items():
+        for key, v in kv.items():
+            assert rows[(stage, key)] == v
+    for res in (eph, ware):
+        hyd = res.stats["broadcast_hydration"]
+        assert set(hyd) == {"verify_mh_sh", "verify_substr"}
+        for d in hyd.values():
+            assert isinstance(d["broadcast"], bool)
+            # a broadcast is only taken on measured bytes
+            assert not d["broadcast"] or d["measured_size_bytes"] is not None
+
+
+def test_resumed_completed_run_skips_everything_and_keeps_lineage(spark, tmp_path):
+    """Resuming a completed warehouse run skips every stage, reads no
+    observation (none was attached: nothing computed), finishes promptly
+    and records lineage again from the committed files. Each stage's
+    lineage rows sum to the stage's row count."""
+    import threading
+
+    from hsip.catalog import Catalog
+
+    docs = _planted_caps_docs(spark)
+    cfg = _planted_caps_cfg(25_000)
+    wh = str(tmp_path / "wh")
+    first = run_documents(spark, docs, "id", "text", cfg, warehouse=wh, run_id="rs")
+    cat = Catalog(spark, wh)
+    lin = cat.read("lineage").collect()
+    stages = first.stats["computed_stages"]
+    assert {r.stage for r in lin} == set(stages)
+    for st in stages:
+        assert sum(r.rows for r in lin if r.stage == st) == \
+            cat.read(f"ckpt.rs.{st}").count(), st
+
+    out = {}
+
+    def resume():
+        out["res"] = run_documents(spark, docs, "id", "text", cfg, warehouse=wh,
+                                   run_id="rs")
+
+    t = threading.Thread(target=resume, daemon=True)
+    t.start()
+    t.join(timeout=180)
+    assert not t.is_alive(), "resume of a completed run did not finish"
+    res = out["res"]
+    # the channel threads finish in either order
+    assert sorted(res.stats["skipped_stages"]) == sorted(stages)
+    assert not res.stats["computed_stages"]
+    assert res.stats["caps"] == {}
+    again = cat.read("lineage").collect()
+    assert len(again) == 2 * len(lin)
+    for st in stages:
+        assert sum(r.rows for r in again if r.stage == st) == \
+            2 * sum(r.rows for r in lin if r.stage == st)

@@ -139,17 +139,14 @@ def test_exact_substr_group_byte_budget(spark):
             for i in range(12)]
     df = spark.createDataFrame(rows, "id string, grp string, text string")
 
-    class Rec:
-        def __init__(self):
-            self.rows = []
+    from hsip.metrics import Recorder
 
-        def metric(self, stage, key, value):
-            self.rows.append((stage, key, value))
-
-    rec = Rec()
+    # the split counts are observed: they land once the output has run
+    rec = Recorder(spark, None, run_id="budget")
     out = exact_substr_within_groups(df, "id", "text", "grp", cfg, recorder=rec)
     got = {(r.a, r.b) for r in out.collect()}
-    logged = {(s, k): v for s, k, v in rec.rows}
+    rec.collect_observed()
+    logged = rec.recorded()
     assert logged[("exact_substr_within_groups", "groups_sub_bucketed")] == 1
     assert logged[("exact_substr_within_groups", "max_group_bytes")] > 200
     # same-sub-bucket pairs are still extracted exactly; with 12 docs over
