@@ -560,22 +560,17 @@ def fuzzy_part_name_pairs(spark, sf_dir):
     expansion (lsh.pairs_from_buckets); compare is JVM-side
     F.levenshtein — compare cost scales with distinct names, never
     corpus rows."""
+    from hsip.barrier import Barrier, Regime
     from hsip.linkage import fuzzy_name_pairs
 
     part = _t(spark, sf_dir, "part")
-    scratch: list = []
-    out = (
-        fuzzy_name_pairs(part, "p_name", max_dist=3, scratch=scratch)
-        .select(
-            "name_a", "name_b", "n_a", "n_b",
-            F.col("dist").cast("long").alias("dist"),
+    with Regime(Barrier()) as regime:
+        return regime.barrier(
+            fuzzy_name_pairs(part, "p_name", max_dist=3, regime=regime).select(
+                "name_a", "name_b", "n_a", "n_b",
+                F.col("dist").cast("long").alias("dist"),
+            )
         )
-        .cache()
-    )
-    out.count()
-    for c in scratch:
-        c.unpersist()
-    return out
 
 
 def pii_redacted_docs(spark, sf_dir):
@@ -1100,10 +1095,12 @@ def semantic_dedup_clusters(spark, sf_dir):
     this fixture). The scale path (n_cells ~ N/target_cell_rows) is the
     same code with its measured-recall tradeoff pinned in
     tests/test_semantic_dedup.py."""
+    from hsip.barrier import Barrier, Regime
     from hsip.similarity import semantic_dedup
 
     emb = _t(spark, sf_dir, "embeddings")
-    return semantic_dedup(emb, threshold=0.42, n_cells=1)
+    with Regime(Barrier()) as regime:
+        return regime.barrier(semantic_dedup(emb, threshold=0.42, n_cells=1, regime=regime))
 
 
 def embedding_label_stats(spark, sf_dir):
@@ -1359,21 +1356,18 @@ def ann_rhp_lsh_topk(spark, sf_dir):
     An in-memory Recorder rides along so hot-bucket truncation counts are
     computed AND observable in the exercised path (no silent caps), not
     just when a warehouse catalog is attached."""
+    from hsip.barrier import Barrier, Regime
     from hsip.metrics import Recorder
     from hsip.similarity import rhp_lsh_topk
 
     emb = _t(spark, sf_dir, "embeddings")
     rec = Recorder(spark, catalog=None, run_id="contract-ann")
-    # scratch lifecycle (VERDICT r4 #3): materialize the small top-k
-    # result, then drop the internal signature/band caches — the session
-    # keeps only the result frame, not the corpus-sized intermediates
-    scratch: list = []
-    out = rhp_lsh_topk(
-        emb, k=3, dim=64, band_bits=4, seed=7, recorder=rec, scratch=scratch
-    ).cache()
-    out.count()
-    for c in scratch:
-        c.unpersist()
+    # the session keeps only the materialized top-k, not the corpus-sized
+    # signature/band blocks (VERDICT r4 #3)
+    with Regime(Barrier()) as regime:
+        out = regime.barrier(rhp_lsh_topk(
+            emb, k=3, dim=64, band_bits=4, seed=7, recorder=rec, regime=regime))
+    rec.collect_observed()
     return out
 
 
@@ -1419,6 +1413,7 @@ def image_phash_near_dups(spark, sf_dir):
     verify. Duplicate payloads are planted by re-ingesting every 8th
     image under a new media_id (rows-only: phash values come from the
     stub decoder's sha256-seeded pixels)."""
+    from hsip.barrier import Barrier, Regime
     from hsip.multimodal import (
         extract_image_features, phash_near_dup_pairs, synthetic_media,
     )
@@ -1432,7 +1427,9 @@ def image_phash_near_dups(spark, sf_dir):
         .withColumn("media_id", F.concat(F.lit("copy-"), "media_id"))
     )
     feats = extract_image_features(images.unionByName(dups))
-    return phash_near_dup_pairs(feats, max_hamming=3).orderBy("media_a", "media_b")
+    with Regime(Barrier()) as regime:
+        pairs = regime.barrier(phash_near_dup_pairs(feats, max_hamming=3, regime=regime))
+    return pairs.orderBy("media_a", "media_b")
 
 
 def video_frame_samples(spark, sf_dir):
@@ -1485,6 +1482,7 @@ def minhash_lsh_clusters(spark, sf_dir):
 
 
 def simhash_hamming_pairs(spark, sf_dir):
+    from hsip.barrier import Barrier, Regime
     from hsip.config import DedupConfig
     from hsip.simhash import attach_simhash, simhash_candidates
     from hsip.verify import verify_hamming
@@ -1492,8 +1490,10 @@ def simhash_hamming_pairs(spark, sf_dir):
     cfg = DedupConfig()
     docs = _t(spark, sf_dir, "documents")
     sims = attach_simhash(docs, "doc_id", "text", cfg)
-    pairs, _ = simhash_candidates(sims, cfg)
-    return verify_hamming(pairs, sims, cfg).filter("verdict").select("a", "b", "hamming")
+    with Regime(Barrier.for_run(cfg)) as regime:
+        pairs, _ = simhash_candidates(sims, cfg, regime)
+        return regime.barrier(
+            verify_hamming(pairs, sims, cfg).filter("verdict").select("a", "b", "hamming"))
 
 
 def substr_duplicate_spans(spark, sf_dir):
@@ -1507,6 +1507,7 @@ def substr_duplicate_spans(spark, sf_dir):
     of S-L+1 consecutive window starts on one diagonal, so
     max_span = max over diagonals of (island length + L - 1) — a
     gaps-and-islands rollup."""
+    from hsip.barrier import Barrier, Regime
     from hsip.config import DedupConfig
     from hsip.suffixes import fingerprint_table, substr_candidates, verify_substr
 
@@ -1516,12 +1517,13 @@ def substr_duplicate_spans(spark, sf_dir):
     )
     docs = _t(spark, sf_dir, "documents")
     fps = fingerprint_table(docs, "doc_id", "text", cfg)
-    pairs, _ = substr_candidates(fps, cfg)
-    return (
-        verify_substr(pairs, docs, "doc_id", "text", cfg)
-        .filter("verdict")
-        .select("a", "b", "substr_len")
-    )
+    with Regime(Barrier.for_run(cfg)) as regime:
+        pairs, _ = substr_candidates(fps, cfg, regime)
+        return regime.barrier(
+            verify_substr(pairs, docs, "doc_id", "text", cfg, regime)
+            .filter("verdict")
+            .select("a", "b", "substr_len")
+        )
 
 
 def substr_pairs(spark, sf_dir):
@@ -1533,6 +1535,7 @@ def substr_pairs(spark, sf_dir):
     output exactly "exists a common L-char window" — which DuckDB
     reproduces hash-free by enumerating every L-char window per doc and
     equi-joining on window equality."""
+    from hsip.barrier import Barrier, Regime
     from hsip.config import DedupConfig
     from hsip.suffixes import fingerprint_table, substr_candidates, verify_substr
 
@@ -1542,12 +1545,13 @@ def substr_pairs(spark, sf_dir):
     )
     docs = _t(spark, sf_dir, "documents")
     fps = fingerprint_table(docs, "doc_id", "text", cfg)
-    pairs, _ = substr_candidates(fps, cfg)
-    return (
-        verify_substr(pairs, docs, "doc_id", "text", cfg)
-        .filter("verdict")
-        .select("a", "b")
-    )
+    with Regime(Barrier.for_run(cfg)) as regime:
+        pairs, _ = substr_candidates(fps, cfg, regime)
+        return regime.barrier(
+            verify_substr(pairs, docs, "doc_id", "text", cfg, regime)
+            .filter("verdict")
+            .select("a", "b")
+        )
 
 
 def decontam_substr_pairs(spark, sf_dir):
@@ -1559,6 +1563,7 @@ def decontam_substr_pairs(spark, sf_dir):
     the channel exact at L, which DuckDB reproduces hash-free with the
     same window-enumeration join as substr_pairs, restricted to
     train x eval."""
+    from hsip.barrier import Barrier, Regime
     from hsip.config import DedupConfig
     from hsip.suffixes import substr_decontaminate
 
@@ -1569,14 +1574,15 @@ def decontam_substr_pairs(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     train = docs.filter(F.col("doc_id") % 10 != 0)
     evals = docs.filter(F.col("doc_id") % 10 == 0)
-    return (
-        substr_decontaminate(
-            train, "doc_id", "text", evals, "doc_id", "text", cfg,
-            eval_fp_cap=1_000_000,
+    with Regime(Barrier.for_run(cfg)) as regime:
+        return regime.barrier(
+            substr_decontaminate(
+                train, "doc_id", "text", evals, "doc_id", "text", cfg, regime,
+                eval_fp_cap=1_000_000,
+            )
+            .filter("verdict")
+            .select("train_id", "eval_id")
         )
-        .filter("verdict")
-        .select("train_id", "eval_id")
-    )
 
 
 def decontam_fuzzy_pairs(spark, sf_dir):
@@ -1588,6 +1594,7 @@ def decontam_fuzzy_pairs(spark, sf_dir):
     (1-J)^128 ~ 1e-39 at J >= 0.5) the channel is exhaustive and the
     exact-Jaccard verify makes the output value-identical to DuckDB's
     brute-force shingle-set Jaccard over the same split."""
+    from hsip.barrier import Barrier, Regime
     from hsip.config import DedupConfig
     from hsip.incremental import minhash_decontaminate
 
@@ -1596,15 +1603,16 @@ def decontam_fuzzy_pairs(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     train = docs.filter(F.col("doc_id") % 10 != 0)
     evals = docs.filter(F.col("doc_id") % 10 == 0)
-    return (
-        minhash_decontaminate(
-            train, "doc_id", "text", evals, "doc_id", "text", cfg,
-            eval_bucket_cap=1_000_000,
+    with Regime(Barrier.for_run(cfg)) as regime:
+        return regime.barrier(
+            minhash_decontaminate(
+                train, "doc_id", "text", evals, "doc_id", "text", cfg, regime,
+                eval_bucket_cap=1_000_000,
+            )
+            .filter("verdict")
+            .select("train_id", "eval_id",
+                    F.round("jaccard", 6).alias("jaccard"))
         )
-        .filter("verdict")
-        .select("train_id", "eval_id",
-                F.round("jaccard", 6).alias("jaccard"))
-    )
 
 
 def transcript_turn_equality_audit(spark, sf_dir):
@@ -1733,6 +1741,7 @@ def dedup_tiered_clusters(spark, sf_dir):
     scored-pair table. DuckDB reproduces each tier with brute-force
     Jaccard + a recursive-CTE closure — three independent closures, one
     per tier, joined on id."""
+    from hsip.barrier import Barrier, Regime
     from hsip.cc import tiered_clusters
     from hsip.config import DedupConfig
     from hsip.pipeline import run_documents
@@ -1746,10 +1755,11 @@ def dedup_tiered_clusters(spark, sf_dir):
         spark, docs, "doc_id", "text", cfg, channels=("minhash_lsh",)
     )
     scored = res.verified.filter("verdict")
-    out = tiered_clusters(
-        docs.select(F.col("doc_id").cast("string").alias("id")),
-        scored, thresholds=(0.5, 0.7, 0.9),
-    )
+    with Regime(Barrier.for_run(cfg)) as regime:
+        out = regime.barrier(tiered_clusters(
+            docs.select(F.col("doc_id").cast("string").alias("id")),
+            scored, thresholds=(0.5, 0.7, 0.9), regime=regime,
+        ))
     return out.select(
         F.col("id").alias("doc_id"), "cluster_t50", "cluster_t70", "cluster_t90"
     )
@@ -1764,6 +1774,7 @@ def tiered_dedup_impact(spark, sf_dir):
     columns) is unpivoted with stack() — narrow, no text — then two
     hash aggregations; at 100 TB the unpivot carries (doc_id, 3 labels)
     only and both aggs combine map-side."""
+    from hsip.barrier import Barrier, Regime
     from hsip.cc import tiered_clusters
     from hsip.config import DedupConfig
     from hsip.pipeline import run_documents
@@ -1777,10 +1788,11 @@ def tiered_dedup_impact(spark, sf_dir):
         spark, docs, "doc_id", "text", cfg, channels=("minhash_lsh",)
     )
     scored = res.verified.filter("verdict")
-    tiers = tiered_clusters(
-        docs.select(F.col("doc_id").cast("string").alias("id")),
-        scored, thresholds=(0.5, 0.7, 0.9),
-    )
+    with Regime(Barrier.for_run(cfg)) as regime:
+        tiers = regime.barrier(tiered_clusters(
+            docs.select(F.col("doc_id").cast("string").alias("id")),
+            scored, thresholds=(0.5, 0.7, 0.9), regime=regime,
+        ))
     lab = tiers.select(
         F.expr(
             "stack(3, 't50', cluster_t50, 't70', cluster_t70,"

@@ -1,6 +1,6 @@
 """hsip — PySpark-native near-duplicate detection & clustering engine.
 
-A from-scratch re-expression of the capabilities of the
+A ground-up re-expression of the capabilities of the
 ``caocscar/hsip-deduplication`` record-dedup pipeline (normalize → block →
 match → cluster → report) for web-scale multi-turn transcript corpora.
 The reference snapshot at /root/reference is empty (SURVEY.md §0); the

@@ -43,24 +43,21 @@ def channel_outputs(docs: DataFrame, id_col: str, text_col: str,
                     cfg: DedupConfig) -> dict[str, set]:
     """Verified (a, b) pair sets per channel, as the pipeline computes
     them (featurize -> candidates -> exact verification)."""
-    regime = Regime(Barrier.for_run(cfg))  # eager; released at the end
-    feats = regime.reused(featurize(docs, id_col, text_col, cfg))
+    with Regime(Barrier.for_run(cfg)) as regime:  # eager
+        feats = regime.reused(featurize(docs, id_col, text_col, cfg))
 
-    lsh_pairs, _ = lsh_candidates(feats.select("id", "sig"), cfg, scratch=regime.sweep)
-    vj = V.verify_jaccard(lsh_pairs, feats.select("id", "shingles"), cfg,
-                          scratch=regime.sweep)
-    got_j = {(r.a, r.b) for r in vj.filter("verdict").collect()}
+        lsh_pairs, _ = lsh_candidates(feats.select("id", "sig"), cfg, regime)
+        vj = V.verify_jaccard(lsh_pairs, feats.select("id", "shingles"), cfg, regime)
+        got_j = {(r.a, r.b) for r in vj.filter("verdict").collect()}
 
-    sp, _ = simhash_candidates(feats.select("id", "simhash"), cfg, scratch=regime.sweep)
-    vh = V.verify_hamming(sp, feats.select("id", "simhash"), cfg)
-    got_h = {(r.a, r.b) for r in vh.filter("verdict").collect()}
+        sp, _ = simhash_candidates(feats.select("id", "simhash"), cfg, regime)
+        vh = V.verify_hamming(sp, feats.select("id", "simhash"), cfg)
+        got_h = {(r.a, r.b) for r in vh.filter("verdict").collect()}
 
-    fps = regime.reused(fingerprint_table(docs, id_col, text_col, cfg))
-    sub_pairs, _ = substr_candidates(fps, cfg, regime)
-    vs = verify_substr(sub_pairs, docs, id_col, text_col, cfg, regime)
-    got_s = {(r.a, r.b) for r in vs.filter("verdict").collect()}
-
-    regime.release()
+        fps = regime.reused(fingerprint_table(docs, id_col, text_col, cfg))
+        sub_pairs, _ = substr_candidates(fps, cfg, regime)
+        vs = verify_substr(sub_pairs, docs, id_col, text_col, cfg, regime)
+        got_s = {(r.a, r.b) for r in vs.filter("verdict").collect()}
     return {"minhash_lsh": got_j, "simhash": got_h, "substr": got_s}
 
 

@@ -18,8 +18,10 @@ What the flat barrier keeps from the cache+count barrier it replaces:
   posture the CacheManager gives cached plans) and the leaf is rebuilt
   with the partitioning the final physical plan produced.
 - the measured size. The leaf's blocks are measured from the block
-  manager's storage info; ``measured_size_bytes`` returns that number
-  and the broadcast gates read it (``fits_broadcast``).
+  manager's storage info; ``measured_size_bytes`` returns that number,
+  the broadcast gates read it (``fits_broadcast``), and the leaf carries
+  it as its Catalyst ``sizeInBytes``, so join planning over the leaf does
+  not depend on what the materialized plan contained.
 - the release. ``release`` lists collect the frame for the caller's
   sweep, and ``unpersist()`` on the returned frame drops its blocks
   (``DataFrame.unpersist`` alone does nothing on a checkpointed frame).
@@ -41,6 +43,16 @@ plan grows each round otherwise.
 
 Whether a run places its nested barriers at all (eager) or keeps lazy
 caches under a latency conf is decided once too, by ``Regime.for_run``.
+
+A ``Regime`` is also the one block lifecycle of the library: every
+builder that materializes a frame does it through its caller's regime
+(``reused``, ``join_back``, or the barrier with ``release=regime.sweep``)
+and never releases anything itself. The caller keeps what it needs past
+the call by passing it through ``regime.barrier`` (not swept), and the
+regime releases the rest when its ``with`` block exits::
+
+    with Regime(Barrier.for_run(cfg)) as regime:
+        out = regime.barrier(simhash_candidates(sims, cfg, regime)[0])
 """
 
 from __future__ import annotations
@@ -109,9 +121,9 @@ class Barrier:
         return out
 
     def _flat(self, df: DataFrame, sc) -> DataFrame:
-        out, rdd = _local_flat(df)
-        nbytes = _stored_bytes(sc, rdd.id())
+        out, rdd, nbytes = _local_flat(df)
         if self.checkpoint_dir:
+            # the reliable leaf inherits the flat leaf's measured stats
             sc.setCheckpointDir(self.checkpoint_dir)
             reliable = out.checkpoint(eager=True)
             _drop_blocks(sc, rdd)
@@ -152,7 +164,8 @@ class Regime:
       AQE off at ``width`` shuffle partitions (~500 docs each, floor 8,
       capped at the session's own width).
 
-    ``sweep`` collects what the builders materialize, for ``release``;
+    ``sweep`` collects what the builders materialize, for ``release``,
+    which also runs when a ``with regime:`` block exits, failed or not;
     ``hydration`` records each broadcast-hydration decision taken under it
     (``broadcastable``)."""
 
@@ -205,6 +218,12 @@ class Regime:
             df.unpersist()
         self.sweep.clear()
 
+    def __enter__(self) -> Regime:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release()
+
     @contextlib.contextmanager
     def applied(self, spark, base: DataFrame):
         """Run the block under this regime, yielding the view of ``base`` the
@@ -219,10 +238,9 @@ class Regime:
             if base.rdd.getNumPartitions() > 2 * self.width:
                 view = base.coalesce(self.width)
         try:
-            with session_conf(spark, conf):
+            with self, session_conf(spark, conf):
                 yield view
         finally:
-            self.release()
             base.unpersist()
 
 
@@ -279,8 +297,9 @@ def _delete_checkpoint_files(sc, rdd) -> None:
 
 
 def _local_flat(df: DataFrame):
-    """localCheckpoint ``df`` and return (flat frame, its JVM RDD), with
-    the leaf carrying the partitioning the final physical plan produced."""
+    """localCheckpoint ``df`` and return (flat frame, its JVM RDD, stored
+    bytes), with the leaf carrying the partitioning the final physical
+    plan produced and the stored bytes as its size."""
     spark = df.sparkSession
     jvm = spark._jvm
     jspark = spark._jsparkSession
@@ -290,6 +309,7 @@ def _local_flat(df: DataFrame):
     jds = of_rows(clone, df._jdf.logicalPlan())
     leaf = jds.localCheckpoint(True).logicalPlan()
     rdd = leaf.rdd()
+    nbytes = _stored_bytes(spark.sparkContext, rdd.id())
     plan = jds.queryExecution().executedPlan()
     if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
         plan = plan.finalPhysicalPlan()
@@ -299,13 +319,43 @@ def _local_flat(df: DataFrame):
     if part.numPartitions() != rdd.getNumPartitions():
         part = jvm.org.apache.spark.sql.catalyst.plans.physical \
             .UnknownPartitioning(rdd.getNumPartitions())
-    # (session, originStats, originConstraints): keep Spark's own stats
+    # (session, originStats, originConstraints). Spark's size estimate of
+    # the checkpointed plan can be off by orders of magnitude (an observed
+    # aggregate under a join estimated 107 GB for 581 KB of blocks), and
+    # joins over the leaf would plan on it: size the leaf by its blocks
     copy_args = leaf.otherCopyArgs()
+    stats = copy_args.apply(1)
+    if nbytes is not None:
+        stats = jvm.scala.Some(_sized(spark, stats.get(), nbytes))
     flat = jvm.org.apache.spark.sql.execution.LogicalRDD(
         leaf.output(), rdd, part, leaf.outputOrdering(), leaf.isStreaming(),
-        leaf.stream(), jspark, copy_args.apply(1), copy_args.apply(2),
+        leaf.stream(), jspark, stats, copy_args.apply(2),
     )
-    return DataFrame(of_rows(jspark, flat), spark), rdd
+    return DataFrame(of_rows(jspark, flat), spark), rdd, nbytes
+
+
+def _sized(spark, stats, nbytes: int):
+    """Catalyst ``stats`` with ``sizeInBytes = nbytes`` and no row count.
+    py4j returns a Scala BigInt as a Python int, so the BigInt is built
+    on the JVM: a method handle turns a BigInteger into the BigInt that
+    ``Statistics.copy`` takes."""
+    jvm = spark._jvm
+    cls = jvm.java.lang.Class.forName
+    big, stats_cls = cls("scala.math.BigInt"), stats.getClass()
+    handles, lookup = jvm.java.lang.invoke.MethodHandles, \
+        jvm.java.lang.invoke.MethodHandles.publicLookup()
+    method_type = jvm.java.lang.invoke.MethodType.methodType
+    to_big = lookup.findStatic(big, "apply", method_type(big, [cls("java.math.BigInteger")]))
+    copy = lookup.findVirtual(stats_cls, "copy", method_type(stats_cls, [
+        big, cls("scala.Option"),
+        cls("org.apache.spark.sql.catalyst.expressions.AttributeMap"),
+        jvm.java.lang.Boolean.TYPE]))
+    filters = spark.sparkContext._gateway.new_array(
+        jvm.java.lang.invoke.MethodHandle, 1)
+    filters[0] = to_big
+    return handles.filterArguments(copy, 1, filters).invokeWithArguments([
+        stats, jvm.java.math.BigInteger.valueOf(nbytes), jvm.scala.Option.empty(),
+        stats.attributeStats(), stats.isRuntime()])
 
 
 def _stored_bytes(sc, rdd_id: int) -> int | None:

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from .barrier import Barrier, job_label, session_conf
+from .barrier import Barrier, Regime, job_label, session_conf
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -308,6 +308,8 @@ def tiered_clusters(
     score_col: str = "jaccard",
     checkpoint_dir: str | None = None,
     local_max_edges: int = 1_000_000,
+    *,
+    regime: Regime,
 ) -> DataFrame:
     """Multi-threshold ("tiered") duplicate clustering: ONE scored pair
     table -> a cluster label per aggressiveness tier, one row per id
@@ -323,23 +325,22 @@ def tiered_clusters(
     edge set (t_hi edges are a subset of t_lo edges). Per-tier labels
     join back on the id key — k tiers = k narrow (id, label) joins, no
     text movement anywhere. Labels keep the min-id convention, so a
-    tier's labels are independently stable under partitioning.
+    tier's labels are independently stable under partitioning. The
+    scored pairs (``regime.reused``) and every tier's CC blocks join
+    ``regime``'s sweep, for the caller to release once the labels have
+    materialized.
     """
     if not thresholds:
         raise ValueError("need at least one threshold")
     ids = all_ids.select(F.col(id_col).alias("id")).distinct()
-    pairs = scored_pairs.select("a", "b", score_col).cache()
+    pairs = regime.reused(scored_pairs.select("a", "b", score_col))
     out = ids
-    try:
-        for t in sorted(thresholds):
-            e = pairs.filter(F.col(score_col) >= float(t)).select("a", "b")
-            lab = assign_clusters(
-                ids, e, checkpoint_dir=checkpoint_dir,
-                local_max_edges=local_max_edges,
-            )
-            col = f"cluster_t{int(round(t * 100)):02d}"
-            out = out.join(lab.withColumnRenamed("cluster_id", col), "id")
-        out = out.localCheckpoint(eager=True)
-    finally:
-        pairs.unpersist()
+    for t in sorted(thresholds):
+        e = pairs.filter(F.col(score_col) >= float(t)).select("a", "b")
+        lab = assign_clusters(
+            ids, e, checkpoint_dir=checkpoint_dir,
+            local_max_edges=local_max_edges, release=regime.sweep,
+        )
+        col = f"cluster_t{int(round(t * 100)):02d}"
+        out = out.join(lab.withColumnRenamed("cluster_id", col), "id")
     return out

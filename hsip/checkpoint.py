@@ -12,35 +12,38 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .catalog import Catalog
 
 
-def input_fingerprint(df: DataFrame, id_col: str = "id",
-                      text_col: str = "text") -> str:
-    """Order-insensitive content fingerprint of the pipeline input.
+def fingerprint_aggs(id_col: str = "id", text_col: str = "text") -> list[Column]:
+    """The aggregates behind the input fingerprint, (n, hi, hs).
 
     Config fingerprints alone can't tell that a caller re-ran the same
     run_id over CHANGED data — resume would then serve stale checkpoints
-    (ADVICE.md r2). One aggregate over the (already-cached) base frame
-    captures: row count, an order-free sum of id hashes, and an
-    order-free sum of full (id, text) row hashes — every row's content
-    contributes, so any in-place edit flips the fingerprint (ADVICE.md
-    r3: a sampled sum missed ~99.8% of single-row edits; the full-row
-    hash was already evaluated per row, so summing all of them costs
-    nothing extra). ANSI mode: long sums overflow, so hashes accumulate
-    as decimal(38,0).
+    (ADVICE.md r2). One aggregate pass over the pipeline input captures:
+    row count, an order-free sum of id hashes, and an order-free sum of
+    full (id, text) row hashes — every row's content contributes, so any
+    in-place edit flips the fingerprint (ADVICE.md r3: a sampled sum
+    missed ~99.8% of single-row edits). ANSI mode: long sums overflow, so
+    hashes accumulate as decimal(38,0). The pipeline observes them on
+    the pass that materializes its input (``fingerprint_str`` of the
+    observed values), so the fingerprint costs no job of its own.
     """
     h_id = F.xxhash64(F.col(id_col), F.lit(7)).cast("decimal(38,0)")
     h_row = F.xxhash64(F.col(id_col), F.col(text_col), F.lit(11)).cast("decimal(38,0)")
-    row = df.select(
+    return [
         F.count(F.lit(1)).alias("n"),
         F.sum(h_id).alias("hi"),
         F.sum(h_row).alias("hs"),
-    ).first()
-    return f"{row['n']}-{row['hi']}-{row['hs']}"
+    ]
+
+
+def fingerprint_str(values) -> str:
+    """The input fingerprint of the (n, hi, hs) aggregate values."""
+    return f"{values['n']}-{values['hi']}-{values['hs']}"
 
 
 class Checkpointer:

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import verify as V
+from .barrier import Regime
 from .config import DedupConfig
 from .lsh import band_table, pairs_from_buckets
 from .textkernel import featurize
@@ -45,29 +46,32 @@ def incremental_candidates(
     new_feats: DataFrame,
     index_bands: DataFrame,
     cfg: DedupConfig,
+    regime: Regime,
     new_bands: DataFrame | None = None,
-    scratch: list | None = None,
+    recorder=None,
 ) -> tuple[DataFrame, DataFrame]:
     """Candidate pairs touching at least one NEW document.
 
     Returns (pairs(a, b, channel), hot_bucket_stats); pairs carry the
     new doc on at least one side, a < b canonical. Pass ``new_bands``
-    when the caller already built (and cached) the delta band table.
-    ``scratch``: optional list the internal caches (delta band table,
-    semi-joined index slice) are appended to so the caller can unpersist
-    after materializing results — same lifecycle contract as
-    lsh_candidates/verify_substr.
+    when the caller already built (and materialized) the delta band
+    table. The delta band table and the semi-joined index slice are
+    materialized through ``regime`` and join its sweep.
+    ``recorder`` (hsip.metrics.Recorder) observes the hot-bucket count
+    (the rows of hot_bucket_stats) on the new x new and index-side size
+    tables, filled in by the action that runs the pairs.
     """
-    own_scratch = scratch if scratch is not None else []
     if new_bands is None:
-        new_bands = band_table(new_feats.select("id", "sig"), cfg).cache()
-        new_bands.count()  # pairs_from_buckets contract: cached input
-        own_scratch.append(new_bands)
+        new_bands = regime.reused(band_table(new_feats.select("id", "sig"), cfg))
+
+    def hot_count():
+        return recorder.observation("incremental_candidates", "hot_buckets_star_paired")
 
     # new x new within the delta: same capped expansion as the batch path
     nn, nn_hot = pairs_from_buckets(
         new_bands, cfg.bucket_cap, channel="minhash_lsh",
         hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
+        hot_counts=None if recorder is None else {"minhash_lsh": hot_count()},
     )
 
     # new x indexed corpus: only index buckets whose key appears in the
@@ -75,11 +79,13 @@ def incremental_candidates(
     # cold buckets (partition/bucket pruning serves this on a real
     # cluster when the index is stored bucketed by key)
     delta_keys = new_bands.select(*_BKEYS).distinct()
-    idx_hit = index_bands.join(delta_keys, list(_BKEYS), "left_semi").cache()
-    idx_hit.count()
-    own_scratch.append(idx_hit)
+    idx_hit = regime.reused(index_bands.join(delta_keys, list(_BKEYS), "left_semi"))
 
     sizes = idx_hit.groupBy(*_BKEYS).agg(F.count(F.lit(1)).alias("bsz"))
+    if recorder is not None:
+        # every size key is an idx_hit key, so the join below reads it all
+        sizes = sizes.observe(
+            hot_count(), F.count_if(F.col("bsz") > cfg.bucket_cap).alias("hot_buckets"))
     tagged = idx_hit.join(sizes, list(_BKEYS))
     small = tagged.filter(F.col("bsz") <= cfg.bucket_cap).drop("bsz")
     hot = tagged.filter(F.col("bsz") > cfg.bucket_cap)
@@ -125,15 +131,6 @@ def incremental_candidates(
         .dropDuplicates(["a", "b"])
         .withColumn("channel", F.lit("minhash_lsh"))
     )
-    if scratch is None:
-        # no caller-managed lifecycle: materialize the outputs, then
-        # release the internal caches (the wminhash/linkage convention)
-        pairs = pairs.cache()
-        pairs.count()
-        hot_stats = hot_stats.cache()
-        hot_stats.count()
-        for c in own_scratch:
-            c.unpersist()
     return pairs, hot_stats
 
 
@@ -144,29 +141,23 @@ def incremental_verified_pairs(
     index_features: DataFrame,
     index_bands: DataFrame,
     cfg: DedupConfig,
+    regime: Regime,
     new_feats: DataFrame | None = None,
     new_bands: DataFrame | None = None,
     recorder=None,
-    scratch: list | None = None,
 ) -> DataFrame:
     """Full incremental slice: featurize the delta, generate delta-touching
     candidates, verify exact Jaccard against the union feature table.
     Pass ``new_feats``/``new_bands`` when the caller already built them;
-    ``recorder`` (hsip.metrics.Recorder) receives hot-bucket truncation
-    counts; ``scratch`` collects internal caches for caller unpersist —
-    with no ``scratch`` the result is materialized and every internal
-    cache released before returning."""
-    own_scratch = scratch if scratch is not None else []
+    what this builds joins ``regime``'s sweep. ``recorder``
+    (hsip.metrics.Recorder) observes the hot-bucket truncation count
+    (``incremental_candidates``); read it with ``collect_observed`` once
+    the output has materialized."""
     if new_feats is None:
-        new_feats = featurize(new_docs, id_col, text_col, cfg).cache()
-        own_scratch.append(new_feats)
-    pairs, hot_stats = incremental_candidates(
-        new_feats, index_bands, cfg, new_bands=new_bands, scratch=own_scratch
+        new_feats = regime.reused(featurize(new_docs, id_col, text_col, cfg))
+    pairs, _ = incremental_candidates(
+        new_feats, index_bands, cfg, regime, new_bands=new_bands, recorder=recorder
     )
-    if recorder is not None:
-        recorder.metric(
-            "incremental_candidates", "hot_buckets_star_paired", hot_stats.count()
-        )
     # delta features WIN on id overlap (an id in both sides is an updated
     # conversation): anti-join the index side instead of an arbitrary
     # dropDuplicates pick, so verification is deterministic (ADVICE.md r2)
@@ -175,13 +166,7 @@ def incremental_verified_pairs(
             new_feats.select("id"), "id", "left_anti"
         )
     )
-    out = V.verify_jaccard(pairs, all_shingles, cfg, scratch=own_scratch)
-    if scratch is None:
-        out = out.cache()
-        out.count()
-        for c in own_scratch:
-            c.unpersist()
-    return out
+    return V.verify_jaccard(pairs, all_shingles, cfg, regime)
 
 
 def minhash_decontaminate(
@@ -192,8 +177,8 @@ def minhash_decontaminate(
     eval_id: str,
     eval_text: str,
     cfg: DedupConfig,
+    regime: Regime,
     eval_bucket_cap: int = 8,
-    scratch: list | None = None,
 ) -> DataFrame:
     """FUZZY cross-corpus decontamination: flag training docs whose
     shingle Jaccard against some eval/benchmark doc clears
@@ -213,9 +198,9 @@ def minhash_decontaminate(
     exact Jaccard over the union feature table with "T|"/"E|"
     prefix-disambiguated ids, pair-pruned hydration.
 
-    Output: (train_id, eval_id, jaccard, verdict).
+    Output: (train_id, eval_id, jaccard, verdict); verify's pair table
+    joins ``regime``'s sweep.
     """
-    own_scratch = scratch if scratch is not None else []
     feats_t = featurize(train, train_id, train_text, cfg).select(
         F.concat(F.lit("T|"), F.col("id")).alias("id"), "shingles", "sig"
     )
@@ -239,15 +224,9 @@ def minhash_decontaminate(
     feats_all = feats_t.select("id", "shingles").unionByName(
         feats_e.select("id", "shingles")
     )
-    verified = V.verify_jaccard(pairs, feats_all, cfg, scratch=own_scratch)
-    out = verified.select(
+    verified = V.verify_jaccard(pairs, feats_all, cfg, regime)
+    return verified.select(
         F.expr("substring(a, 3)").alias("train_id"),
         F.expr("substring(b, 3)").alias("eval_id"),
         "jaccard", "verdict",
     )
-    if scratch is None:
-        out = out.cache()
-        out.count()
-        for c in own_scratch:
-            c.unpersist()
-    return out

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .barrier import Regime
 from .lsh import pairs_from_buckets
 from .metrics import Recorder
 
@@ -58,24 +59,19 @@ def fuzzy_name_pairs(
     block_expr: Column | None = None,
     block_cap: int = 10_000,
     recorder: Recorder | None = None,
-    scratch: list | None = None,
+    *,
+    regime: Regime,
 ) -> DataFrame:
     """Blocked fuzzy-duplicate name pairs:
     (name_a, name_b, n_a, n_b, dist) with dist <= max_dist, a < b.
 
     ``dist`` is exact Levenshtein (insert/delete/substitute, unit cost),
     evaluated ONLY within blocks — never all-pairs. The distinct-name
-    table is cached (pairs_from_buckets scans it twice for skew-safe
-    bucket sizing) and handed to ``scratch`` for caller unpersist; with
-    no ``scratch`` the result is materialized (cache + count) and the
-    internal cache released before returning, so repeated calls in a
-    long-lived session don't accumulate pinned storage.
+    table is materialized through ``regime`` (pairs_from_buckets scans it
+    twice for skew-safe bucket sizing) and joins its sweep, for the
+    caller to release once the output has materialized.
     """
-    names = distinct_names(df, name_col, block_expr)
-    names = names.repartition("blk").cache()
-    names.count()
-    if scratch is not None:
-        scratch.append(names)
+    names = regime.reused(distinct_names(df, name_col, block_expr).repartition("blk"))
     pairs, hot_stats = pairs_from_buckets(
         names, block_cap, id_col="name", bucket_cols=("blk",),
         channel="levenshtein", payload_cols=("n",),
@@ -84,7 +80,7 @@ def fuzzy_name_pairs(
         for row in hot_stats.collect():
             recorder.metric("linkage_block", str(row["blk"]),
                             float(row["bucket_size"]))
-    out = (
+    return (
         pairs.select(
             F.col("a").alias("name_a"), F.col("b").alias("name_b"),
             "n_a", "n_b",
@@ -92,8 +88,3 @@ def fuzzy_name_pairs(
         )
         .filter(F.col("dist") <= max_dist)
     )
-    if scratch is None:
-        out = out.cache()
-        out.count()
-        names.unpersist()
-    return out

@@ -123,7 +123,7 @@ def _bucket_legs(
     # in one task, while partitionBy windows sort the whole bucket in a
     # single task (the skew the cap exists to prevent). The join-back is
     # skew-safe too (AQE skew-join splits it). Callers must pass a
-    # materialized `bucketed` (a Barrier) — both branches scan it.
+    # materialized `bucketed` (Regime.reused) — both branches scan it.
     #
     # bsz >= 2 (r6, guide §2.3): singleton buckets can never pair — the
     # self-join's id < id condition and the hot path (bsz > cap >= 1)
@@ -261,27 +261,19 @@ def channel_bucket_table(features: DataFrame, cfg: DedupConfig,
         "channel", "bkt_id", "bkt_hash")
 
 
-def lsh_candidates(sig_df: DataFrame, cfg: DedupConfig,
-                   scratch: list | None = None,
+def lsh_candidates(sig_df: DataFrame, cfg: DedupConfig, regime: Regime,
                    channel: str = "minhash_lsh") -> tuple[DataFrame, DataFrame]:
     """(id, sig) -> (candidate pairs, hot-bucket stats).
 
-    ``scratch``: optional list the internal band cache is appended to so
-    the caller can ``unpersist()`` it once the pairs have materialized
-    (VERDICT.md r3 item 5 — without it the cache lives until session end).
+    The band table is materialized through ``regime`` (``reused``: both
+    the sizes groupBy and the join-back scan it) and joins its sweep, for
+    the caller to release once the pairs have materialized.
     ``channel`` labels the pair rows — any signature with MinHash's
     (id, sig array<long>) layout rides the same machinery (e.g. ICWS
     weighted MinHash, hsip/wminhash.py, channel="wminhash").
     """
-    bands = band_table(sig_df, cfg)
-    # co-locate bucket members before the self-join; AQE coalesces after.
-    # cache + eager count honors the pairs_from_buckets contract (the
-    # sizes-groupBy and the join-back both scan `bands`; lazy cache + AQE
-    # would recompute the posexplode once per consumer — see memory note)
-    bands = bands.repartition("band_id", "band_hash").cache()
-    bands.count()
-    if scratch is not None:
-        scratch.append(bands)
+    # co-locate bucket members before the self-join; AQE coalesces after
+    bands = regime.reused(band_table(sig_df, cfg).repartition("band_id", "band_hash"))
     return pairs_from_buckets(
         bands, cfg.bucket_cap, channel=channel,
         hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,

@@ -59,13 +59,18 @@ class Recorder:
 
     def collect_observed(self) -> dict[str, dict[str, float]]:
         """Record every pending observation as a metric; returns the values
-        as {stage: {key: value}}. Call after the actions that execute the
-        observed frames have run."""
+        as {stage: {key: value}}. Observations of one (stage, key) count
+        parts of one quantity (say, two size tables' hot buckets) and are
+        summed. Call after the actions that execute the observed frames
+        have run."""
         out: dict[str, dict[str, float]] = {}
         for stage, key, obs in self._observed:
-            value = _observed_value(obs, f"{stage}.{key}")
-            self.metric(stage, key, value)
-            out.setdefault(stage, {})[key] = value
+            (value,) = observed(obs, f"{stage}.{key}").values()
+            per = out.setdefault(stage, {})
+            per[key] = per.get(key, 0) + (value or 0)
+        for stage, per in out.items():
+            for key, value in per.items():
+                self.metric(stage, key, value)
         self._observed = []
         return out
 
@@ -100,8 +105,9 @@ class Recorder:
         self._metric_rows = []
 
 
-def _observed_value(obs: Observation, what: str) -> float:
-    """The single metric of ``obs``, waiting for its action's report."""
+def observed(obs: Observation, what: str) -> dict:
+    """The metrics of ``obs`` ({name: value}), waiting for its action's
+    report; ``what`` names it in the error raised if none ever comes."""
     deadline = time.monotonic() + _OBSERVED_WAIT_S
     while not obs._jo.future().isCompleted():
         if time.monotonic() > deadline:
@@ -109,8 +115,7 @@ def _observed_value(obs: Observation, what: str) -> float:
                 f"observed metric {what} never reported: no action executed "
                 "the frame it was attached to")
         time.sleep(0.01)
-    (value,) = obs.get.values()
-    return value or 0
+    return obs.get
 
 
 def _local_frame(spark: SparkSession, rows: list[tuple],

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .barrier import Regime
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.StringType(), False),
@@ -193,7 +195,7 @@ def extract_image_features(media: DataFrame) -> DataFrame:
 
 
 def phash_near_dup_pairs(feats: DataFrame, max_hamming: int = 3,
-                         bucket_cap: int = 64) -> DataFrame:
+                         bucket_cap: int = 64, *, regime: Regime) -> DataFrame:
     """Image near-duplicate pairs by perceptual-hash Hamming distance.
 
     Reuses the transcript pipeline's Hamming core end-to-end: the 64-bit
@@ -201,7 +203,8 @@ def phash_near_dup_pairs(feats: DataFrame, max_hamming: int = 3,
     (guaranteed recall within max_hamming by pigeonhole), bucket pairing
     inherits the hot-bucket cap, and verification is a projection over
     the payload the pair rows already carry — the same scale shape that
-    cleared the text channels' audits applies to images for free.
+    cleared the text channels' audits applies to images for free. The
+    block table joins ``regime``'s sweep.
     """
     from hsip.config import DedupConfig
     from hsip.simhash import simhash_candidates
@@ -211,21 +214,12 @@ def phash_near_dup_pairs(feats: DataFrame, max_hamming: int = 3,
     sim = feats.filter(F.col("ok") & F.col("phash").isNotNull()).select(
         F.col("media_id").alias("id"), F.col("phash").alias("simhash")
     )
-    scratch: list = []
-    pairs, _truncated = simhash_candidates(sim, cfg, scratch=scratch)
-    out = (
+    pairs, _truncated = simhash_candidates(sim, cfg, regime)
+    return (
         verify_hamming(pairs, sim, cfg)
         .filter("verdict")
         .select(F.col("a").alias("media_a"), F.col("b").alias("media_b"), "hamming")
     )
-    # materialize, then release the eagerly-cached C(B, B-d) block table
-    # simhash_candidates holds — without this each call pins it for the
-    # session (the scratch=None convention the text channels follow)
-    out = out.cache()
-    out.count()
-    for c in scratch:
-        c.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -25,17 +25,17 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import verify as V
 from .barrier import Barrier, Regime, job_label
 from .catalog import Catalog
 from .cc import assign_clusters, canonical_representatives, quality_representatives
-from .checkpoint import Checkpointer, input_fingerprint
+from .checkpoint import Checkpointer, fingerprint_aggs, fingerprint_str
 from .config import DedupConfig
 from .lsh import channel_bucket_table, pairs_from_buckets
-from .metrics import Recorder, StageTimer
+from .metrics import Recorder, StageTimer, observed
 from .reassemble import dedupe_turn_versions, reassemble
 from .suffixes import (
     exact_substr_within_groups,
@@ -166,28 +166,30 @@ def run_documents(
     # runs, cache+count (lineage kept) in warehouse runs (hsip/barrier.py)
     barrier = Barrier.for_run(cfg, warehouse)
 
-    # Always materialize base: >1 channel consumes it, and in checkpointed
-    # mode the input fingerprint below is an extra consumer. Eager
-    # barriers matter: AQE materializes independent query-stage futures
+    # Always materialize base: >1 channel consumes it. Eager barriers
+    # matter: AQE materializes independent query-stage futures
     # concurrently, so a lazily-cached subtree gets recomputed by every
     # concurrent consumer before the cache populates — measured 9,546
     # CPU-s of task time vs ~300 intrinsic on the 554k-turn corpus (each
     # channel re-running reassembly+normalization). One barrier job per
     # reused frame serializes the dependency order and caps total work.
+    # The barrier's pass also counts the docs and, for a checkpointed run,
+    # takes the input fingerprint: stage fingerprint = config + INPUT
+    # content, so resuming the same run_id over changed data recomputes
+    # instead of serving stale checkpoints (ADVICE.md r2).
+    aggs = fingerprint_aggs() if use_ckpt else fingerprint_aggs()[:1]
+    obs = Observation()
     base = barrier(
         docs.select(
             F.col(id_col).cast("string").alias("id"), F.col(text_col).alias("text")
-        ),
+        ).observe(obs, *aggs),
         "materialize",
     )
-
-    # stage fingerprint = config + INPUT content: resuming the same run_id
-    # over changed data must recompute, not serve stale checkpoints
-    # (ADVICE.md r2). The input hash is one aggregate over the materialized
-    # base.
+    seen = observed(obs, "materialize")
+    n_docs = seen["n"]
     fp = cfg.fingerprint()
     if use_ckpt:
-        fp = f"{fp}-{input_fingerprint(base)}"
+        fp = f"{fp}-{fingerprint_str(seen)}"
     ckpt = (
         Checkpointer(catalog, run_id, fp, enabled=use_ckpt, reuse=resume)
         if use_ckpt
@@ -229,9 +231,7 @@ def run_documents(
     mh_sh = tuple(c for c in ("minhash_lsh", "simhash") if c in channels)
 
     # the run's physical regime, decided once (hsip/barrier.py Regime; r6
-    # A/B at 57k turns: latency 10.4 s -> 7.8 s, identical output). base
-    # is materialized above, so this count scans its blocks.
-    n_docs = base.count()
+    # A/B at 57k turns: latency 10.4 s -> 7.8 s, identical output)
     regime = Regime.for_run(spark, cfg, n_docs, barrier)
     stats["eager_barriers"] = regime.eager
     stats["shuffle_width"] = regime.width

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from .barrier import Regime
 from .config import DedupConfig
 from .lsh import pairs_from_buckets
 from .normalize import norm_text_col, tokens_col
@@ -220,22 +221,14 @@ def probe_key_entropy(cfg: DedupConfig, n_docs: int, margin_bits: float = 8.0) -
 
 
 def simhash_candidates(simhash_df: DataFrame, cfg: DedupConfig,
-                       scratch: list | None = None) -> tuple[DataFrame, DataFrame]:
-    # scratch: optional list the block cache is appended to so the caller
-    # can unpersist it after pair materialization (VERDICT.md r3 item 5).
-    # cache + eager count honors the pairs_from_buckets contract (the
-    # sizes-groupBy and the join-back both scan the block table, which is
-    # C(B, B-d) rows per doc — 56x at B=8,d=3 — so recomputing the
-    # posexplode+repartition per consumer doubles the channel's dominant
-    # exchange; mirrors hsip/lsh.py lsh_candidates)
-    blocks = (
-        hamming_block_table(simhash_df, cfg)
-        .repartition("table_id", "key_hash")
-        .cache()
-    )
-    blocks.count()
-    if scratch is not None:
-        scratch.append(blocks)
+                       regime: Regime) -> tuple[DataFrame, DataFrame]:
+    # the block table goes through ``regime.reused`` (joining its sweep):
+    # the sizes-groupBy and the join-back both scan it, and it is C(B, B-d)
+    # rows per doc — 56x at B=8,d=3 — so recomputing the posexplode +
+    # repartition per consumer doubles the channel's dominant exchange
+    # (mirrors hsip/lsh.py lsh_candidates)
+    blocks = regime.reused(
+        hamming_block_table(simhash_df, cfg).repartition("table_id", "key_hash"))
     return pairs_from_buckets(
         blocks,
         cfg.bucket_cap,

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from .barrier import Regime
+
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
     " 0D, (acc, v) -> acc + v)"
@@ -87,8 +89,8 @@ def rhp_signatures(emb: DataFrame, dim: int, n_bits: int = 64, seed: int = 42,
 def rhp_lsh_topk(emb: DataFrame, k: int, dim: int, n_bits: int = 64,
                  band_bits: int = 8, seed: int = 42, bucket_cap: int = 512,
                  id_col: str = "vec_id", vec_col: str = "embedding",
-                 recorder=None, hot_policy: str = "star",
-                 scratch: list | None = None) -> DataFrame:
+                 recorder=None, hot_policy: str = "star", *,
+                 regime: Regime) -> DataFrame:
     """Approximate top-k: band the sign signature into n_bits/band_bits
     bucket keys, exact-cosine re-rank within buckets.
 
@@ -99,12 +101,18 @@ def rhp_lsh_topk(emb: DataFrame, k: int, dim: int, n_bits: int = 64,
       - bucket pairing routes through lsh.pairs_from_buckets, so hot
         buckets get the star/salt policy instead of being silently
         dropped (a query landing only in degenerate buckets still gets
-        neighbors), and truncations land in the metrics table when a
-        ``recorder`` (hsip.metrics.Recorder) is passed — no silent caps.
+        neighbors), and the hot-bucket count is observed for a
+        ``recorder`` (hsip.metrics.Recorder; read it with
+        ``collect_observed`` once the output has materialized) — no
+        silent caps.
+
+    The signature and band tables join ``regime``'s sweep: the caller
+    releases them once the top-k has materialized (VERDICT.md r3 item 5;
+    the signatures hold the full vector column).
     """
     from .lsh import pairs_from_buckets
 
-    sigs = rhp_signatures(emb, dim, n_bits, seed, id_col, vec_col).cache()
+    sigs = regime.reused(rhp_signatures(emb, dim, n_bits, seed, id_col, vec_col))
     n_bands = n_bits // band_bits
     mask = (1 << band_bits) - 1
     band_arr = F.array(
@@ -113,26 +121,19 @@ def rhp_lsh_topk(emb: DataFrame, k: int, dim: int, n_bits: int = 64,
             for i in range(n_bands)
         ]
     )
-    # keys only through the shuffle; cached per the pairs_from_buckets
-    # contract (sizes-groupBy and join-back both scan it)
-    bands = (
+    # keys only through the shuffle; materialized per the
+    # pairs_from_buckets contract (sizes-groupBy and join-back both scan it)
+    bands = regime.reused(
         sigs.select("id", F.posexplode(band_arr).alias("band_id", "band_key"))
         .repartition("band_id", "band_key")
-        .cache()
     )
-    bands.count()
-    own_scratch = scratch if scratch is not None else []
-    # caller (or the scratch=None fallback below) releases both once the
-    # top-k result has materialized (VERDICT.md r3 item 5) — sigs holds
-    # the full vector column, so leaving it cached pins corpus-sized
-    # storage for the session
-    own_scratch.extend([sigs, bands])
-    pairs, hot_stats = pairs_from_buckets(
+    hot_counts = None if recorder is None else {
+        "rhp_lsh": recorder.observation("rhp_lsh_topk", "hot_buckets")}
+    pairs, _ = pairs_from_buckets(
         bands, bucket_cap, bucket_cols=("band_id", "band_key"),
         channel="rhp_lsh", hot_policy=hot_policy, salt_seed=seed,
+        hot_counts=hot_counts,
     )
-    if recorder is not None:
-        recorder.metric("rhp_lsh_topk", "hot_buckets", hot_stats.count())
 
     # each undirected candidate serves both query directions
     directed = pairs.select(
@@ -144,17 +145,11 @@ def rhp_lsh_topk(emb: DataFrame, k: int, dim: int, n_bits: int = 64,
     ).join(vecs.select(F.col("id").alias("n_id"), F.col("v").alias("v")), "n_id")
     scored = hydrated.select("q_id", "n_id", _cosine_expr("q", "v").alias("cos"))
     w = W.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    out = (
+    return (
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select("q_id", F.col("n_id").alias("neighbor_id"), F.round("cos", 6).alias("cos"), "rk")
     )
-    if scratch is None:
-        out = out.cache()
-        out.count()
-        for c in own_scratch:
-            c.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -296,7 +291,8 @@ def semantic_dedup_pairs(emb: DataFrame, threshold: float,
                          vec_col: str = "embedding",
                          centroids: np.ndarray | None = None,
                          recorder=None,
-                         block_bytes: int = 64 << 20) -> DataFrame:
+                         block_bytes: int = 64 << 20, *,
+                         regime: Regime) -> DataFrame:
     """Within-cell cosine-threshold pairs, the candidate stage of
     semantic dedup (Abbas et al., "SemDeDup", arXiv:2303.09540):
     k-means-partition the embedding space with the same coarse quantizer
@@ -313,12 +309,16 @@ def semantic_dedup_pairs(emb: DataFrame, threshold: float,
     the pairs above threshold (never the dense matrix). Pick
     ``n_cells ~ N / target_cell_rows``: per-cell work is quadratic in
     cell size, so cells are the unit of parallelism AND the cost knob.
-    The matmul block height adapts to ``block_bytes`` so scratch memory
+    The matmul block height adapts to ``block_bytes`` so working memory
     stays flat regardless of cell size.
 
     ``n_cells=1`` degenerates to exact all-pairs semantics (every pair
     shares the one cell) — the oracle-verifiable configuration the
     driver contract checks against a DuckDB threshold-graph baseline.
+
+    With a ``recorder`` the cell assignment is scanned twice (cell-size
+    stats, pairs), so it goes through ``regime.reused`` and joins its
+    sweep.
     """
     id_type = dict(emb.dtypes)[id_col]
     src = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
@@ -359,46 +359,42 @@ def semantic_dedup_pairs(emb: DataFrame, threshold: float,
 
     if recorder is not None:
         # the stats job below and the pairs consumer would otherwise
-        # each run the full-corpus centroid-assignment UDF: cache the
-        # cell assignment, materialize the pairs off it, then release
-        cells = cells.cache()
-    pairs = cells.groupBy("cell").applyInPandas(
-        emit_pairs, schema=f"id_a {id_type}, id_b {id_type}"
-    )
-    if recorder is not None:
+        # each run the full-corpus centroid-assignment UDF
+        cells = regime.reused(cells)
         sizes = cells.groupBy("cell").count()
         stats = sizes.agg(
             F.count(F.lit(1)).alias("nc"), F.max("count").alias("mx")
         ).collect()[0]
         recorder.metric("semantic_dedup", "n_cells", int(stats["nc"]))
         recorder.metric("semantic_dedup", "max_cell_rows", int(stats["mx"]))
-        pairs = pairs.cache()
-        pairs.count()
-        cells.unpersist()
-    return pairs
+    return cells.groupBy("cell").applyInPandas(
+        emit_pairs, schema=f"id_a {id_type}, id_b {id_type}"
+    )
 
 
 def semantic_dedup(emb: DataFrame, threshold: float, dim: int | None = None,
                    n_cells: int = 16, seed: int = 42, id_col: str = "vec_id",
                    vec_col: str = "embedding",
                    centroids: np.ndarray | None = None, recorder=None,
-                   checkpoint_dir: str | None = None) -> DataFrame:
+                   checkpoint_dir: str | None = None, *,
+                   regime: Regime) -> DataFrame:
     """Full semantic dedup: threshold-graph pairs (within IVF cells) ->
     connected components -> one keeper per cluster. Returns
     (id_col, cluster_id, keep): cluster_id is the component-min id (the
     X2 convention), keep is true exactly for that representative — the
     rows a training pipeline retains. Singleton vectors keep themselves.
+    The connected-components blocks join ``regime``'s sweep.
     """
     from .cc import assign_clusters
 
     pairs = semantic_dedup_pairs(
         emb, threshold, dim=dim, n_cells=n_cells, seed=seed, id_col=id_col,
-        vec_col=vec_col, centroids=centroids, recorder=recorder,
+        vec_col=vec_col, centroids=centroids, recorder=recorder, regime=regime,
     )
     clusters = assign_clusters(
         emb.select(F.col(id_col).alias("id")),
         pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")),
-        checkpoint_dir=checkpoint_dir,
+        checkpoint_dir=checkpoint_dir, release=regime.sweep,
     )
     return clusters.select(
         F.col("id").alias(id_col),

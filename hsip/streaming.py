@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import schemas
+from .barrier import Barrier, Regime
 from .catalog import Catalog
 from .config import DedupConfig
 from .incremental import incremental_verified_pairs
@@ -249,52 +250,50 @@ def run_incremental_ingest(
         convs = reassemble(dedupe_turn_versions(batch_turns)).select(
             "conv_id", "doc_text"
         )
-        new_feats = featurize(convs, "conv_id", "doc_text", cfg).cache()
-        # built ONCE, reused for candidates and the index append
-        new_bands = band_table(new_feats.select("id", "sig"), cfg).cache()
-        new_bands.count()
-        if catalog.exists("index.features"):
-            # resolve re-arrived conv_ids to their latest feature/band
-            # version — deterministic, not an arbitrary dropDuplicates
-            idx_feats = latest_index_versions(catalog.read("index.features"), ["id"])
-            idx_bands = latest_index_versions(catalog.read("index.bands"), ["id"])
-        else:
-            idx_feats = spark.createDataFrame([], new_feats.schema)
-            idx_bands = spark.createDataFrame([], new_bands.schema)
-        inc_scratch: list = []
-        verified = incremental_verified_pairs(
-            convs, "conv_id", "doc_text", idx_feats, idx_bands, cfg,
-            new_feats=new_feats, new_bands=new_bands, scratch=inc_scratch,
-        ).withColumn("batch_id", F.lit(batch_id)).withColumn(
-            "stream_id", F.lit(stream_id)
-        )
-        bid = F.lit(batch_id).alias("batch_id")
-        sid = F.lit(stream_id).alias("stream_id")
-        # commit wall-clock: orders row versions ACROSS checkpoint
-        # lineages (latest_index_versions), where batch ids restart
-        ts = F.current_timestamp().alias("ingested_at")
-        _append_once(
-            verified.filter("verdict"), "stream.verified", ["a", "b"], batch_id,
-            scope="stream",  # a re-derived pair is a duplicate, not a version
-        )
-        _append_once(
-            new_feats.select("*", bid, sid, ts), "index.features", ["id"],
-            batch_id,
-        )
-        _append_once(
-            new_bands.select("*", bid, sid, ts), "index.bands",
-            ["id", "band_id", "band_hash"], batch_id,
-        )
-        catalog.write(
-            spark.createDataFrame(
-                [(stream_id, batch_id)], "stream_id string, batch_id long"
-            ),
-            "stream.batches", mode="append",
-        )
-        new_feats.unpersist()
-        new_bands.unpersist()
-        for c in inc_scratch:
-            c.unpersist()
+        # one regime per micro-batch: its blocks keep lineage (cache +
+        # count), so a lost executor's partitions are recomputed, and are
+        # released once the batch has committed
+        with Regime(Barrier(keep_lineage=True)) as regime:
+            new_feats = regime.reused(featurize(convs, "conv_id", "doc_text", cfg))
+            # built ONCE, reused for candidates and the index append
+            new_bands = regime.reused(band_table(new_feats.select("id", "sig"), cfg))
+            if catalog.exists("index.features"):
+                # resolve re-arrived conv_ids to their latest feature/band
+                # version — deterministic, not an arbitrary dropDuplicates
+                idx_feats = latest_index_versions(catalog.read("index.features"), ["id"])
+                idx_bands = latest_index_versions(catalog.read("index.bands"), ["id"])
+            else:
+                idx_feats = spark.createDataFrame([], new_feats.schema)
+                idx_bands = spark.createDataFrame([], new_bands.schema)
+            verified = incremental_verified_pairs(
+                convs, "conv_id", "doc_text", idx_feats, idx_bands, cfg, regime,
+                new_feats=new_feats, new_bands=new_bands,
+            ).withColumn("batch_id", F.lit(batch_id)).withColumn(
+                "stream_id", F.lit(stream_id)
+            )
+            bid = F.lit(batch_id).alias("batch_id")
+            sid = F.lit(stream_id).alias("stream_id")
+            # commit wall-clock: orders row versions ACROSS checkpoint
+            # lineages (latest_index_versions), where batch ids restart
+            ts = F.current_timestamp().alias("ingested_at")
+            _append_once(
+                verified.filter("verdict"), "stream.verified", ["a", "b"], batch_id,
+                scope="stream",  # a re-derived pair is a duplicate, not a version
+            )
+            _append_once(
+                new_feats.select("*", bid, sid, ts), "index.features", ["id"],
+                batch_id,
+            )
+            _append_once(
+                new_bands.select("*", bid, sid, ts), "index.bands",
+                ["id", "band_id", "band_hash"], batch_id,
+            )
+            catalog.write(
+                spark.createDataFrame(
+                    [(stream_id, batch_id)], "stream_id string, batch_id long"
+                ),
+                "stream.batches", mode="append",
+            )
 
     writer = (
         stream_turns(spark, input_dir)

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from .barrier import Barrier, Regime
+from .barrier import Regime
 from .config import DedupConfig
 from .lsh import _bucket_legs
 from .normalize import norm_text_col
@@ -183,7 +183,7 @@ def fingerprint_table(df: DataFrame, id_col: str, text_col: str, cfg: DedupConfi
 
 
 def substr_candidates(
-    fp_df: DataFrame, cfg: DedupConfig, regime: Regime | None = None,
+    fp_df: DataFrame, cfg: DedupConfig, regime: Regime,
     hot_counts: Observation | None = None,
     truncated: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -197,9 +197,7 @@ def substr_candidates(
     row is a match anchor for _anchor_pairs.
 
     ``regime`` (barrier.Regime): the fingerprint table and join-back
-    join its sweep. None (callers with no sweep to release) barriers the
-    fingerprint table unreleased and, as in pairs_from_buckets, leaves
-    the join-back lazy.
+    join its sweep.
 
     ``hot_counts`` / ``truncated`` (metrics.Recorder observations) receive
     the number of hot fingerprints and of pairs whose anchors exceed
@@ -216,7 +214,7 @@ def substr_candidates(
     # latency regime keeps a lazy cache instead: the rebuilt exchange is
     # cheaper there than the extra materialization action (VERDICT r4
     # item 1 A/B).
-    fp = (regime or Regime(Barrier.for_run(cfg))).reused(fp_df.repartition("fp_hash"))
+    fp = regime.reused(fp_df.repartition("fp_hash"))
     # (id, fp_hash) is unique (per-doc hash dedupe in fingerprint_table),
     # so a bucket's row count is its distinct-doc size, and each row of
     # the shared expansion is one (pair, fingerprint) match anchor.
@@ -379,15 +377,14 @@ def _span_lens_batch(enc_a: list[bytes], enc_b: list[bytes],
 
 
 def verify_substr(pairs: DataFrame, docs: DataFrame, id_col: str, text_col: str,
-                  cfg: DedupConfig, regime: Regime | None = None) -> DataFrame:
+                  cfg: DedupConfig, regime: Regime) -> DataFrame:
     """V4: exact span measurement for substring candidates.
 
     pairs must carry (a, b, pos_as, pos_bs). Output adds substr_len and
     verdict = (max span over anchors) >= min_substr_len.
     ``regime`` (barrier.Regime): the pair and text tables join its sweep,
     for the caller to release once the output has materialized (VERDICT.md
-    r3 item 5); None runs them through an eager regime nobody releases.
-    The latency regime keeps the pruned text table a lazily-cached
+    r3 item 5). The latency regime keeps the pruned text table a lazily-cached
     semi-join — no repartition exchange, no barrier. At that scale both
     hydration joins broadcast the (tiny) pruned table and the two
     broadcast subtrees canonicalize identically, so one build serves
@@ -396,7 +393,6 @@ def verify_substr(pairs: DataFrame, docs: DataFrame, id_col: str, text_col: str,
     as verify_jaccard_hamming). Output rows identical either way.
     """
     k, min_len = cfg.substr_gram, cfg.min_substr_len
-    regime = regime or Regime(Barrier.for_run(cfg))
     # The normalized-text table is the fattest thing this stage touches
     # (~= corpus bytes), and a computed Alias (norm_text_col) breaks
     # canonical exchange reuse between the two join branches — naively
@@ -819,9 +815,9 @@ def substr_decontaminate(
     eval_id: str,
     eval_text: str,
     cfg: DedupConfig,
+    regime: Regime,
     eval_fp_cap: int = 8,
     broadcast_eval: bool = True,
-    scratch: list | None = None,
 ) -> DataFrame:
     """Cross-corpus substring decontamination (the Lee et al. ACL'22 /
     GPT-3-appendix use-case): flag every training doc sharing an exact
@@ -834,6 +830,7 @@ def substr_decontaminate(
     (broadcast eval side), exact anchor-extension verification against
     a prefix-disambiguated union of both corpora's texts ("T|"/"E|" ids
     keep hydration single-table so verify_substr applies unchanged).
+    Verify's pair and text tables join ``regime``'s sweep.
     """
     fpt = fingerprint_table(train, train_id, train_text, cfg)
     fpe = fingerprint_table(evals, eval_id, eval_text, cfg)
@@ -851,17 +848,9 @@ def substr_decontaminate(
             F.col(eval_text).alias("utext"),
         )
     )
-    regime = Regime(Barrier.for_run(cfg))
     verified = verify_substr(prefixed, docs_all, "uid", "utext", cfg, regime)
-    out = verified.select(
+    return verified.select(
         F.expr("substring(a, 3)").alias("train_id"),
         F.expr("substring(b, 3)").alias("eval_id"),
         "substr_len", "verdict",
     )
-    if scratch is not None:
-        scratch.extend(regime.sweep)
-        return out
-    # materialize before releasing the frames verify_substr holds
-    out = regime.barrier(out)
-    regime.release()
-    return out

@@ -100,14 +100,12 @@ def containment_col() -> F.Column:
 
 
 def verify_jaccard(pairs: DataFrame, shingles_df: DataFrame, cfg: DedupConfig,
-                   scratch: list | None = None) -> DataFrame:
+                   regime: Regime) -> DataFrame:
     """V2: exact Jaccard over shingle sets; keeps score for reporting."""
     # pruning scans `pairs` three times (two id projections + the join) —
     # materialize once so an uncached candidate chain isn't recomputed
     # per scan (lazy-cache/AQE trap)
-    pairs = pairs.cache()
-    if scratch is not None:
-        scratch.append(pairs)
+    pairs = regime.reused(pairs)
     h = hydrate(pairs, shingles_df, ["shingles"], prune=True)
     return (
         h.withColumn("jaccard", jaccard_col())

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from .barrier import Regime
 from .config import DedupConfig
 from .normalize import norm_text_col, tokens_col
 
@@ -262,13 +263,14 @@ def weighted_near_dup_pairs(
     id_col: str,
     text_col: str,
     cfg: DedupConfig,
+    regime: Regime,
     threshold: float | None = None,
-    scratch: list | None = None,
 ) -> DataFrame:
     """End-to-end weighted near-dup channel: ICWS signatures -> the
     shared LSH banding/bucket machinery -> exact multiset-Jaccard
     verification of candidates only. Output (a, b, channel='wminhash',
-    wjaccard, verdict) matches the other channels' verified-pair shape.
+    wjaccard, verdict) matches the other channels' verified-pair shape;
+    the band table joins ``regime``'s sweep.
 
     ``threshold`` defaults to cfg.jaccard_threshold; pick (lsh_bands,
     lsh_rows) for it with lsh.tuned_config. Scale: sketch O(distinct
@@ -277,20 +279,10 @@ def weighted_near_dup_pairs(
     from .lsh import lsh_candidates
 
     t = cfg.jaccard_threshold if threshold is None else threshold
-    own_scratch = scratch if scratch is not None else []
     sigs = attach_weighted_minhash(df, id_col, text_col, cfg)
-    pairs, _hot = lsh_candidates(sigs, cfg, scratch=own_scratch,
-                                 channel="wminhash")
+    pairs, _hot = lsh_candidates(sigs, cfg, regime, channel="wminhash")
     tok = token_count_table(df, id_col, text_col, cfg)
-    out = verify_weighted_jaccard(pairs, tok, t)
-    if scratch is None:
-        # materialize before releasing the band cache the candidates
-        # still reference
-        out = out.cache()
-        out.count()
-        for c in own_scratch:
-            c.unpersist()
-    return out
+    return verify_weighted_jaccard(pairs, tok, t)
 
 
 def weighted_jaccard_local(a: dict, b: dict) -> float:

@@ -84,6 +84,7 @@ def main(argv=None):
 
     from pyspark.sql import functions as F
 
+    from hsip.barrier import Barrier, Regime
     from hsip.catalog import Catalog
     from hsip.config import DedupConfig
     from hsip.packing import pack_sequences
@@ -142,10 +143,11 @@ def main(argv=None):
     n_contaminated = 0
     if args.eval_input:
         evals = spark.read.parquet(args.eval_input)
-        evidence = substr_decontaminate(
-            passed, "conv_id", "doc_text",
-            evals, args.eval_id_col, args.eval_text_col, cfg,
-        ).filter("verdict")
+        with Regime(Barrier.for_run(cfg)) as regime:
+            evidence = regime.barrier(substr_decontaminate(
+                passed, "conv_id", "doc_text",
+                evals, args.eval_id_col, args.eval_text_col, cfg, regime,
+            ).filter("verdict"))
         cat.write(evidence, f"out.{res.run_id}.contaminated")
         dirty = evidence.select(F.col("train_id").alias("conv_id")).distinct()
         n_contaminated = dirty.count()

@@ -205,3 +205,40 @@ def test_regime_records_broadcast_hydration_decisions(spark):
         }
     finally:
         regime.release()
+
+
+def test_regime_block_releases_its_sweep_not_what_the_caller_kept(spark):
+    """``with Regime(...)`` releases what the builders put on the sweep;
+    a frame the caller passed through ``regime.barrier`` survives."""
+    from hsip.barrier import Regime
+
+    before = _persisted(spark)
+    with Regime(materialize) as regime:
+        kept = regime.barrier(_keyed(spark, 100))
+        regime.reused(_keyed(spark, 100))
+        assert len(_persisted(spark) - before) == 2
+    assert _persisted(spark) - before == {kept._hsip_rdd.id()}
+    assert kept.count() == 100
+    kept.unpersist()
+    assert _persisted(spark) == before
+
+
+def test_flat_leaf_carries_measured_size(spark, tmp_path):
+    """The leaf's Catalyst size is the barrier's measured bytes, for the
+    flat and the reliable barrier, so joins over it plan on what it
+    holds. Spark's estimate of the materialized plan can be far off: an
+    observed aggregate under a join (the bucket join-back's shape, its
+    hot-bucket counts observed on the size table) inflates it."""
+    from pyspark.sql import Observation
+
+    src = _keyed(spark, 2000)
+    sizes = src.groupBy("k").agg(F.count(F.lit(1)).alias("n")) \
+        .observe(Observation(), F.count_if(F.col("n") > 3).alias("hot"))
+    tagged = src.join(sizes, "k")
+    for barrier in (materialize, Barrier(str(tmp_path / "ckpt"))):
+        out = barrier(tagged)
+        try:
+            size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+            assert size == measured_size_bytes(out) > 0
+        finally:
+            out.unpersist()

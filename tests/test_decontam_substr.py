@@ -5,8 +5,18 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from hsip.barrier import Barrier, Regime
 from hsip.config import DedupConfig
 from hsip.suffixes import substr_cross_candidates, substr_decontaminate
+
+
+def _decontam(train, evals, cfg, **kw):
+    """substr_decontaminate's rows, collected under a regime that is then
+    released."""
+    with Regime(Barrier()) as regime:
+        return substr_decontaminate(
+            train, "doc_id", "text", evals, "doc_id", "text", cfg, regime, **kw
+        ).collect()
 
 
 def _cfg(**kw):
@@ -43,14 +53,10 @@ def corpora(spark):
 
 def test_planted_contamination_recovered(spark, corpora):
     train, evals, span = corpora
-    out = substr_decontaminate(
-        train, "doc_id", "text", evals, "doc_id", "text", _cfg()
-    )
-    flagged = {(r["train_id"], r["eval_id"])
-               for r in out.filter("verdict").collect()}
+    out = [r for r in _decontam(train, evals, _cfg()) if r["verdict"]]
+    flagged = {(r["train_id"], r["eval_id"]) for r in out}
     assert flagged == {("t0", "e0"), ("t1", "e0"), ("t4", "e0")}
-    lens = {r["train_id"]: r["substr_len"]
-            for r in out.filter("verdict").collect()}
+    lens = {r["train_id"]: r["substr_len"] for r in out}
     # spans are measured over NORMALIZED text (whitespace-collapsed), so
     # the planted 150 raw chars can shrink a little — but never below L
     assert all(v >= 120 for v in lens.values())
@@ -58,10 +64,7 @@ def test_planted_contamination_recovered(spark, corpora):
 
 def test_short_overlap_and_clean_docs_not_flagged(spark, corpora):
     train, evals, _ = corpora
-    out = substr_decontaminate(
-        train, "doc_id", "text", evals, "doc_id", "text", _cfg()
-    ).filter("verdict")
-    ids = {r["train_id"] for r in out.collect()}
+    ids = {r["train_id"] for r in _decontam(train, evals, _cfg()) if r["verdict"]}
     assert "t2" not in ids          # 119-char overlap < L=120
     assert "t3" not in ids          # clean
 
@@ -79,10 +82,7 @@ def test_never_pairs_within_a_corpus(spark):
     evals = spark.createDataFrame(
         [("e0", _rand_text(rng, 300))], ["doc_id", "text"]
     )
-    out = substr_decontaminate(
-        train, "doc_id", "text", evals, "doc_id", "text", _cfg()
-    )
-    assert out.filter("verdict").count() == 0
+    assert sum(r["verdict"] for r in _decontam(train, evals, _cfg())) == 0
 
 
 def test_eval_fp_cap_keeps_train_recall(spark):
@@ -101,10 +101,8 @@ def test_eval_fp_cap_keeps_train_recall(spark):
         ["doc_id", "text"],
     )
     cfg = _cfg()
-    out = substr_decontaminate(
-        train, "doc_id", "text", evals, "doc_id", "text", cfg, eval_fp_cap=2
-    )
-    flagged_train = {r["train_id"] for r in out.filter("verdict").collect()}
+    flagged_train = {r["train_id"] for r in _decontam(train, evals, cfg, eval_fp_cap=2)
+                     if r["verdict"]}
     assert flagged_train == {"t0", "t1", "t2", "t3"}
 
     from hsip.suffixes import fingerprint_table
@@ -118,17 +116,11 @@ def test_eval_fp_cap_keeps_train_recall(spark):
 
 def test_broadcast_toggle_same_answer(spark, corpora):
     train, evals, _ = corpora
-    a = substr_decontaminate(
-        train, "doc_id", "text", evals, "doc_id", "text", _cfg(),
-        broadcast_eval=True,
-    )
-    b = substr_decontaminate(
-        train, "doc_id", "text", evals, "doc_id", "text", _cfg(),
-        broadcast_eval=False,
-    )
-    key = lambda df: sorted(
+    a = _decontam(train, evals, _cfg(), broadcast_eval=True)
+    b = _decontam(train, evals, _cfg(), broadcast_eval=False)
+    key = lambda rows: sorted(
         (r["train_id"], r["eval_id"], r["substr_len"], r["verdict"])
-        for r in df.collect()
+        for r in rows
     )
     assert key(a) == key(b)
 
@@ -136,16 +128,10 @@ def test_broadcast_toggle_same_answer(spark, corpora):
 def test_empty_eval_set_flags_nothing(spark, corpora):
     train, evals, _ = corpora
     empty = evals.filter("doc_id = 'nope'")
-    out = substr_decontaminate(
-        train, "doc_id", "text", empty, "doc_id", "text", _cfg()
-    )
-    assert out.count() == 0
+    assert len(_decontam(train, empty, _cfg())) == 0
 
 
 def test_empty_train_set_flags_nothing(spark, corpora):
     train, evals, _ = corpora
     empty = train.filter("doc_id = 'nope'")
-    out = substr_decontaminate(
-        empty, "doc_id", "text", evals, "doc_id", "text", _cfg()
-    )
-    assert out.count() == 0
+    assert len(_decontam(empty, evals, _cfg())) == 0

@@ -3,6 +3,7 @@
 import numpy as np
 import pytest
 
+from hsip.barrier import Barrier, Regime
 from hsip.config import DedupConfig
 from hsip.incremental import (
     build_index,
@@ -48,10 +49,11 @@ def test_incremental_matches(spark, corpus):
     bands = idx["bands"].cache()
     feats.count(), bands.count()
 
-    verified = incremental_verified_pairs(
-        new_df, "doc_id", "text", feats, bands, cfg
-    )
-    kept = {(r.a, r.b) for r in verified.filter("verdict").collect()}
+    with Regime(Barrier()) as regime:
+        verified = incremental_verified_pairs(
+            new_df, "doc_id", "text", feats, bands, cfg, regime
+        )
+        kept = {(r.a, r.b) for r in verified.filter("verdict").collect()}
     assert ("new001", "old003") in kept       # exact vs index
     assert ("new002", "old007") in kept       # near vs index
     assert ("new004", "new005") in kept       # within-delta pair
@@ -81,41 +83,69 @@ def test_incremental_hot_index_bucket(spark):
     idx_bands.count()
     new_feats = featurize(new_df, "doc_id", "text", cfg).cache()
 
-    pairs, hot_stats = incremental_candidates(new_feats, idx_bands, cfg)
-    got = {(r.a, r.b) for r in pairs.collect()}
-    assert ("new001", "old00") in got, got    # bucket min always anchored
-    assert all(a == "new001" for a, _ in got)  # only delta-touching pairs
-    # bounded: min + ~k sampled anchors, never the whole 12-member bucket
-    assert 1 <= len(got) <= 1 + 2 * cfg.hot_anchor_sample_k, got
-    assert hot_stats.count() > 0              # truncation is logged
-    # deterministic: same seed -> same anchors on a rebuilt plan
-    pairs2, _ = incremental_candidates(new_feats, idx_bands, cfg)
-    assert {(r.a, r.b) for r in pairs2.collect()} == got
+    with Regime(Barrier()) as regime:
+        pairs, hot_stats = incremental_candidates(new_feats, idx_bands, cfg, regime)
+        got = {(r.a, r.b) for r in pairs.collect()}
+        assert ("new001", "old00") in got, got    # bucket min always anchored
+        assert all(a == "new001" for a, _ in got)  # only delta-touching pairs
+        # bounded: min + ~k sampled anchors, never the whole 12-member bucket
+        assert 1 <= len(got) <= 1 + 2 * cfg.hot_anchor_sample_k, got
+        assert hot_stats.count() > 0              # truncation is logged
+        # deterministic: same seed -> same anchors on a rebuilt plan
+        pairs2, _ = incremental_candidates(new_feats, idx_bands, cfg, regime)
+        assert {(r.a, r.b) for r in pairs2.collect()} == got
     # skew guard: no single-partition Window sort anywhere in the plan
     plan = pairs._jdf.queryExecution().optimizedPlan().toString()
     assert "Window" not in plan, "per-bucket window cap reintroduced"
 
 
-def test_incremental_releases_scratch_caches(spark, corpus):
-    """Long-session hygiene (VERDICT r4 #3): the scratch contract drains
-    every cache incremental_verified_pairs creates internally (delta
-    bands, semi-joined index slice, delta features)."""
+def test_incremental_regime_releases_caches(spark, corpus):
+    """Long-session hygiene (VERDICT r4 #3): releasing the caller's regime
+    drains every cache incremental_verified_pairs creates internally
+    (delta bands, semi-joined index slice, delta features). A latency
+    regime keeps them as lazy caches, which the CacheManager lists."""
     old, new = corpus
     cfg = DedupConfig(jaccard_threshold=0.55)
     old_df = spark.createDataFrame(old, "doc_id string, text string")
     new_df = spark.createDataFrame(new, "doc_id string, text string")
     idx = build_index(old_df, "doc_id", "text", cfg)
     spark.catalog.clearCache()
-    scratch = []
-    verified = incremental_verified_pairs(
-        new_df, "doc_id", "text", idx["features"], idx["bands"], cfg,
-        scratch=scratch,
-    )
-    n = verified.filter("verdict").count()
-    # feats + bands + idx_hit + verify_jaccard's pair materialization
-    assert n >= 3 and len(scratch) == 4
-    for c in scratch:
-        c.unpersist()
+    with Regime(Barrier(), width=8) as regime:
+        verified = incremental_verified_pairs(
+            new_df, "doc_id", "text", idx["features"], idx["bands"], cfg, regime,
+        )
+        n = verified.filter("verdict").count()
+        # feats + bands + idx_hit + verify_jaccard's pair materialization
+        assert n >= 3 and len(regime.sweep) == 4
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
-        "incremental path leaked caches beyond the scratch contract"
+        "incremental path leaked caches beyond the caller's regime"
     )
+
+
+def test_incremental_hot_count_is_observed(spark):
+    """The hot-bucket count is observed on the new x new and index-side
+    size tables by the action that runs the pairs (no count job of its
+    own), and equals the rows of the returned hot-bucket stats."""
+    from hsip.incremental import incremental_candidates
+    from hsip.lsh import band_table
+    from hsip.metrics import Recorder
+    from hsip.textkernel import featurize
+
+    cfg = DedupConfig(bucket_cap=4)
+    text = " ".join(f"tok{i}" for i in range(30))
+    old_df = spark.createDataFrame(
+        [(f"old{i:02d}", text) for i in range(12)], "doc_id string, text string")
+    new_df = spark.createDataFrame(
+        [(f"new{i:02d}", text) for i in range(6)], "doc_id string, text string")
+    idx_bands = band_table(
+        featurize(old_df, "doc_id", "text", cfg).select("id", "sig"), cfg)
+    rec = Recorder(spark, catalog=None, run_id="t-inc")
+    with Regime(Barrier()) as regime:
+        new_feats = regime.reused(featurize(new_df, "doc_id", "text", cfg))
+        pairs, hot_stats = incremental_candidates(
+            new_feats, idx_bands, cfg, regime, recorder=rec)
+        assert pairs.count() > 0
+        want = hot_stats.count()
+    got = rec.collect_observed()["incremental_candidates"]["hot_buckets_star_paired"]
+    # every band bucket is hot on both sides: 6 delta docs and 12 index docs
+    assert got == want == 2 * cfg.lsh_bands

@@ -3,7 +3,7 @@
 Pins: (1) blocked Levenshtein pairs against a brute-force Python oracle
 within blocks, (2) compare never crosses blocks, (3) occurrence counts
 ride the pair rows, (4) hot-block star degradation is logged, not
-silent, (5) scratch hands back the internal cache.
+silent, (5) the caller's regime releases the internal cache.
 """
 
 import itertools
@@ -11,6 +11,7 @@ import itertools
 import pytest
 from pyspark.sql import functions as F
 
+from hsip.barrier import Barrier, Regime
 from hsip.linkage import distinct_names, fuzzy_name_pairs
 from hsip.metrics import Recorder
 
@@ -24,6 +25,12 @@ def _lev(a: str, b: str) -> int:
                            prev[j - 1] + (ca != cb)))
         prev = cur
     return prev[-1]
+
+
+def _pairs(df, name_col, **kw):
+    """fuzzy_name_pairs' rows, collected under a regime that is then released."""
+    with Regime(Barrier()) as regime:
+        return fuzzy_name_pairs(df, name_col, regime=regime, **kw).collect()
 
 
 NAMES = [
@@ -55,7 +62,7 @@ def test_pairs_match_bruteforce_within_blocks(spark, rows):
     max_d = 2
     got = {
         (r["name_a"], r["name_b"], r["dist"])
-        for r in fuzzy_name_pairs(rows, "p_name", max_dist=max_d).collect()
+        for r in _pairs(rows, "p_name", max_dist=max_d)
     }
     names = sorted(set(NAMES))
     blk = lambda n: n.rsplit(" ", 1)[-1]  # noqa: E731
@@ -74,19 +81,15 @@ def test_pairs_match_bruteforce_within_blocks(spark, rows):
 def test_counts_ride_pairs(spark, rows):
     by_pair = {
         (r["name_a"], r["name_b"]): (r["n_a"], r["n_b"])
-        for r in fuzzy_name_pairs(rows, "p_name", max_dist=2).collect()
+        for r in _pairs(rows, "p_name", max_dist=2)
     }
     assert by_pair[("red bolt", "rod bolt")] == (2, 1)
 
 
 def test_hot_block_star_is_logged_not_silent(spark, rows):
     rec = Recorder(spark, catalog=None, run_id="t-linkage")
-    scratch: list = []
-    pairs = fuzzy_name_pairs(
-        rows, "p_name", max_dist=99, block_cap=2,
-        recorder=rec, scratch=scratch,
-    )
-    got = {(r["name_a"], r["name_b"]) for r in pairs.collect()}
+    got = {(r["name_a"], r["name_b"])
+           for r in _pairs(rows, "p_name", max_dist=99, block_cap=2, recorder=rec)}
     # "bolt" (4 distinct) and "ring" (3 distinct) exceed cap=2 -> star
     # pairing: every member pairs with the block minimum only
     bolt_names = sorted({n for n in NAMES if n.endswith("bolt")})
@@ -97,18 +100,14 @@ def test_hot_block_star_is_logged_not_silent(spark, rows):
     logged = rec.recorded()
     assert logged[("linkage_block", "bolt")] == 4.0
     assert logged[("linkage_block", "ring")] == 3.0
-    for c in scratch:
-        c.unpersist()
 
 
 def test_custom_block_expr(spark, rows):
     # block on first character instead: "red bolt"/"rod bolt" pair,
     # "blue bolt"/"big bolt" pair (within dist), nothing crosses
-    pairs = fuzzy_name_pairs(
-        rows, "p_name", max_dist=3,
-        block_expr=F.substring("name", 1, 1),
-    )
-    got = {(r["name_a"], r["name_b"]) for r in pairs.collect()}
+    got = {(r["name_a"], r["name_b"])
+           for r in _pairs(rows, "p_name", max_dist=3,
+                           block_expr=F.substring("name", 1, 1))}
     assert ("red bolt", "rod bolt") in got
     assert all(a[0] == b[0] for a, b in got)
 
@@ -128,17 +127,18 @@ def test_default_block_survives_case_digits_punct(spark):
     assert "" not in blocks.values()
 
     got = {(r["name_a"], r["name_b"], r["dist"])
-           for r in fuzzy_name_pairs(rows, "p_name", max_dist=2).collect()}
+           for r in _pairs(rows, "p_name", max_dist=2)}
     assert ("smith jr.", "smyth jr.", 1) in got
 
 
-def test_no_scratch_releases_internal_cache(spark):
-    """fuzzy_name_pairs without a scratch list must not leak its
-    distinct-names cache for the life of the session: only the returned
-    (materialized) result may stay cached, and every cache id the call
-    created is gone once that result is unpersisted (unpersist is async,
-    so the check polls briefly). Uses a test-local frame so the plan
-    can't alias cache entries other tests in this module created."""
+def test_regime_releases_internal_cache(spark):
+    """fuzzy_name_pairs under a released regime must not leak its
+    distinct-names blocks for the life of the session: only the result
+    the caller materialized (``regime.barrier``) may stay, and every block
+    id the call created is gone once that result is unpersisted
+    (unpersist is async, so the check polls briefly). Uses a test-local
+    frame so the plan can't alias cache entries other tests in this
+    module created."""
     import time
 
     def ids():
@@ -149,7 +149,8 @@ def test_no_scratch_releases_internal_cache(spark):
         [("green gear",), ("greon gear",), ("brass gear",), ("odd cog",)],
         "p_name string")
     before = ids()
-    out = fuzzy_name_pairs(local, "p_name", max_dist=2)
+    with Regime(Barrier()) as regime:
+        out = regime.barrier(fuzzy_name_pairs(local, "p_name", max_dist=2, regime=regime))
     new = ids() - before
     # the materialized result, plus possibly the internal names cache
     # whose non-blocking unpersist hasn't landed yet

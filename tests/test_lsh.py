@@ -3,6 +3,7 @@
 import numpy as np
 
 from hsip import schemas
+from hsip.barrier import Barrier, Regime
 from hsip.config import DedupConfig
 from hsip.lsh import band_table, channel_bucket_table, lsh_candidates, pairs_from_buckets
 from hsip.minhash import minhash_signatures_local
@@ -22,9 +23,10 @@ def test_identical_sigs_all_bands_collide(spark):
     df = spark.createDataFrame(
         [("a", sig), ("b", list(sig))], schema=schemas.MINHASH_SIGS
     )
-    pairs, hot = lsh_candidates(df, cfg)
-    assert [(r.a, r.b) for r in pairs.collect()] == [("a", "b")]
-    assert hot.count() == 0
+    with Regime(Barrier()) as regime:
+        pairs, hot = lsh_candidates(df, cfg, regime)
+        assert [(r.a, r.b) for r in pairs.collect()] == [("a", "b")]
+        assert hot.count() == 0
 
 
 def test_bucket_pairing_small(spark):
@@ -85,8 +87,9 @@ def test_s_curve_candidate_probability(spark):
         [(ids[i], [int(x) for x in sigs[i]]) for i in range(len(ids))],
         schema=schemas.MINHASH_SIGS,
     )
-    pairs, _ = lsh_candidates(df, cfg)
-    got = {(r.a, r.b) for r in pairs.collect()}
+    with Regime(Barrier()) as regime:
+        pairs, _ = lsh_candidates(df, cfg, regime)
+        got = {(r.a, r.b) for r in pairs.collect()}
     hits = sum(
         1 for i in range(n_pairs) if (f"p{i:03d}_a", f"p{i:03d}_b") in got
     )
@@ -117,9 +120,10 @@ def test_unified_channel_pairs_equal_separate(spark):
     sigs = feats.select("id", "sig")
     sims = feats.select("id", "simhash")
 
-    sep_mh, _ = lsh_candidates(sigs, cfg)
-    sep_sh, _ = simhash_candidates(sims, cfg)
-    sep = {(r.a, r.b, r.channel) for df in (sep_mh, sep_sh) for r in df.collect()}
+    with Regime(Barrier()) as regime:
+        sep_mh, _ = lsh_candidates(sigs, cfg, regime)
+        sep_sh, _ = simhash_candidates(sims, cfg, regime)
+        sep = {(r.a, r.b, r.channel) for df in (sep_mh, sep_sh) for r in df.collect()}
 
     both = channel_bucket_table(feats, cfg, ("minhash_lsh", "simhash")).cache()
     both.count()

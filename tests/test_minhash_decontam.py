@@ -6,8 +6,18 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from hsip.barrier import Barrier, Regime
 from hsip.config import DedupConfig
 from hsip.incremental import minhash_decontaminate
+
+
+def _decontam(train, evals, cfg, verdict_only=True, **kw):
+    """minhash_decontaminate's rows (verdict rows by default), collected
+    under a regime that is then released."""
+    with Regime(Barrier()) as regime:
+        out = minhash_decontaminate(
+            train, "doc_id", "text", evals, "doc_id", "text", cfg, regime, **kw)
+        return (out.filter("verdict") if verdict_only else out).collect()
 
 
 def _cfg(threshold=0.5):
@@ -58,9 +68,7 @@ def test_flags_match_brute_force(spark, corpora):
     cfg = _cfg(0.5)
     got = {
         (r["train_id"], r["eval_id"])
-        for r in minhash_decontaminate(
-            train, "doc_id", "text", evals, "doc_id", "text", cfg
-        ).filter("verdict").collect()
+        for r in _decontam(train, evals, cfg)
     }
     want = set()
     for tid, tt in tmap.items():
@@ -76,9 +84,7 @@ def test_flags_match_brute_force(spark, corpora):
 
 def test_jaccard_values_exact(spark, corpora):
     train, evals, tmap, emap = corpora
-    rows = minhash_decontaminate(
-        train, "doc_id", "text", evals, "doc_id", "text", _cfg(0.5)
-    ).filter("verdict").collect()
+    rows = _decontam(train, evals, _cfg(0.5))
     for r in rows:
         sa, sb = _shingles(tmap[r["train_id"]]), _shingles(emap[r["eval_id"]])
         assert abs(r["jaccard"] - len(sa & sb) / len(sa | sb)) < 1e-9
@@ -94,10 +100,7 @@ def test_never_pairs_within_a_corpus(spark):
         [("e0", _rand_words(rng, 50)), ("e1", _rand_words(rng, 50))],
         ["doc_id", "text"],
     )
-    out = minhash_decontaminate(
-        train, "doc_id", "text", evals, "doc_id", "text", _cfg(0.3)
-    )
-    assert out.filter("verdict").count() == 0
+    assert len(_decontam(train, evals, _cfg(0.3))) == 0
 
 
 def test_eval_bucket_cap_keeps_train_recall(spark):
@@ -110,20 +113,13 @@ def test_eval_bucket_cap_keeps_train_recall(spark):
         [(f"t{i}", bench) for i in range(3)] + [("clean", _rand_words(rng, 70))],
         ["doc_id", "text"],
     )
-    out = minhash_decontaminate(
-        train, "doc_id", "text", evals, "doc_id", "text", _cfg(0.8),
-        eval_bucket_cap=2,
-    ).filter("verdict")
-    assert {r["train_id"] for r in out.collect()} == {"t0", "t1", "t2"}
+    out = _decontam(train, evals, _cfg(0.8), eval_bucket_cap=2)
+    assert {r["train_id"] for r in out} == {"t0", "t1", "t2"}
 
 
 def test_empty_corpora_flag_nothing(spark, corpora):
     train, evals, _, _ = corpora
     none_e = evals.filter("doc_id = 'nope'")
     none_t = train.filter("doc_id = 'nope'")
-    assert minhash_decontaminate(
-        train, "doc_id", "text", none_e, "doc_id", "text", _cfg(0.5)
-    ).count() == 0
-    assert minhash_decontaminate(
-        none_t, "doc_id", "text", evals, "doc_id", "text", _cfg(0.5)
-    ).count() == 0
+    assert len(_decontam(train, none_e, _cfg(0.5), verdict_only=False)) == 0
+    assert len(_decontam(none_t, evals, _cfg(0.5), verdict_only=False)) == 0

@@ -26,6 +26,7 @@ from itertools import combinations
 import pytest
 from pyspark.sql import functions as F
 
+from hsip.barrier import Barrier, Regime
 from hsip.config import DedupConfig
 from hsip.lsh import lsh_candidates
 from hsip.textkernel import featurize
@@ -79,13 +80,11 @@ def test_minhash_channel_matches_mllib_minhashlsh(spark):
     # ---- our channel: featurize -> banded LSH -> exact-Jaccard verify
     feats = featurize(docs, "doc_id", "text", cfg).cache()
     feats.count()
-    scratch = []
-    cand, _stats = lsh_candidates(feats.select("id", "sig"), cfg, scratch=scratch)
-    ver = verify_jaccard(cand, feats.select("id", "shingles"), cfg, scratch=scratch)
-    ours = {(r["a"], r["b"])
-            for r in ver.filter("verdict").select("a", "b").collect()}
-    for c in scratch:
-        c.unpersist()
+    with Regime(Barrier()) as regime:
+        cand, _stats = lsh_candidates(feats.select("id", "sig"), cfg, regime)
+        ver = verify_jaccard(cand, feats.select("id", "shingles"), cfg, regime)
+        ours = {(r["a"], r["b"])
+                for r in ver.filter("verdict").select("a", "b").collect()}
 
     # ---- MLlib: string shingles -> binary CountVectorizer -> MinHashLSH
     toks = F.split(F.col("text"), " ")

@@ -5,6 +5,7 @@ import json
 
 import pyspark.sql.functions as F
 
+from hsip.barrier import Barrier, Regime
 from hsip.multimodal import (
     MEDIA_SCHEMA,
     extract_audio_features,
@@ -98,10 +99,11 @@ def test_phash_near_dup_pairs(spark):
         ],
         "media_id string, width int, height int, phash long, ok boolean",
     )
-    pairs = {
-        (r.media_a, r.media_b): r.hamming
-        for r in phash_near_dup_pairs(feats, max_hamming=3).collect()
-    }
+    with Regime(Barrier()) as regime:
+        pairs = {
+            (r.media_a, r.media_b): r.hamming
+            for r in phash_near_dup_pairs(feats, max_hamming=3, regime=regime).collect()
+        }
     assert pairs[("a", "b")] == 0
     assert pairs[("a", "c")] == 2 and pairs[("b", "c")] == 2
     assert all("d" not in p and "bad" not in p for p in pairs)

@@ -172,7 +172,17 @@ def test_input_fingerprint_full_row_sensitivity(spark):
     round-3 version summed only a ~1/997 sampled subset of row hashes, so
     ~99.8% of one-row edits resumed from stale checkpoints (ADVICE r3).
     Now every row's (id, text) hash contributes to the sum."""
-    from hsip.checkpoint import input_fingerprint
+    from pyspark.sql import Observation
+
+    from hsip.barrier import Barrier
+    from hsip.checkpoint import fingerprint_aggs, fingerprint_str
+    from hsip.metrics import observed
+
+    def input_fingerprint(df):
+        # as a warehouse run takes it: observed on the base barrier's pass
+        obs = Observation()
+        Barrier(keep_lineage=True)(df.observe(obs, *fingerprint_aggs())).unpersist()
+        return fingerprint_str(observed(obs, "fingerprint"))
 
     base = spark.range(300).selectExpr(
         "cast(id as string) as id", "concat('text-', id) as text"
@@ -584,6 +594,7 @@ def test_cap_counts_identical_in_ephemeral_and_warehouse_runs(spark, tmp_path, m
     hot-bucket stats (``hot.count()``) and the anchor-truncation filter.
     The counts land in stats and, with a warehouse, in the metrics table;
     the broadcast-hydration decisions land in stats in both modes."""
+    from hsip.barrier import Barrier, Regime
     from hsip.catalog import Catalog
     from hsip.lsh import channel_bucket_table, pairs_from_buckets
     from hsip.suffixes import fingerprint_table, substr_candidates
@@ -597,16 +608,18 @@ def test_cap_counts_identical_in_ephemeral_and_warehouse_runs(spark, tmp_path, m
                                 bucket_cols=("channel", "bkt_id", "bkt_hash"),
                                 channel=None, payload_cols=("simhash",))
     n_hot = {r["channel"]: r["count"] for r in hot.groupBy("channel").count().collect()}
-    sub_pairs, sub_hot = substr_candidates(fingerprint_table(docs, "id", "text", cfg), cfg)
-    want = {
-        "minhash_lsh_candidates": {"hot_buckets_star_paired": n_hot["minhash_lsh"]},
-        "simhash_candidates": {"hot_buckets_star_paired": n_hot["simhash"]},
-        "substr_candidates": {
-            "hot_fingerprints_star_paired": sub_hot.count(),
-            "anchor_truncated_pairs": sub_pairs.filter(
-                F.col("n_anchors") > cfg.max_anchors_per_pair).count(),
-        },
-    }
+    with Regime(Barrier()) as regime:
+        sub_pairs, sub_hot = substr_candidates(
+            fingerprint_table(docs, "id", "text", cfg), cfg, regime)
+        want = {
+            "minhash_lsh_candidates": {"hot_buckets_star_paired": n_hot["minhash_lsh"]},
+            "simhash_candidates": {"hot_buckets_star_paired": n_hot["simhash"]},
+            "substr_candidates": {
+                "hot_fingerprints_star_paired": sub_hot.count(),
+                "anchor_truncated_pairs": sub_pairs.filter(
+                    F.col("n_anchors") > cfg.max_anchors_per_pair).count(),
+            },
+        }
     both.unpersist()
     assert all(v > 0 for d in want.values() for v in d.values()), want
 

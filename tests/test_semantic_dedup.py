@@ -13,6 +13,7 @@ answer).
 import numpy as np
 import pytest
 
+from hsip.barrier import Barrier, Regime
 from hsip.similarity import semantic_dedup, semantic_dedup_pairs
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -55,28 +56,27 @@ def _emb(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
 
-def _pair_set(df):
-    return {(int(r.id_a), int(r.id_b)) for r in df.collect()}
+def _pair_set(spark, **kw):
+    """semantic_dedup_pairs' pairs, collected under a released regime."""
+    with Regime(Barrier()) as regime:
+        df = semantic_dedup_pairs(_emb(spark), THRESHOLD, regime=regime, **kw)
+        return {(int(r.id_a), int(r.id_b)) for r in df.collect()}
 
 
 def test_ncells1_pairs_equal_bruteforce(spark, truth):
-    got = _pair_set(semantic_dedup_pairs(_emb(spark), THRESHOLD, n_cells=1))
+    got = _pair_set(spark, n_cells=1)
     assert got == truth[0]
 
 
 def test_block_budget_cannot_change_pairs(spark, truth):
     # 4 KB budget -> block height max(1, 4096/(8*500)) = 1 row: fully
     # exercises the blocked path and its global-index triangle masking
-    got = _pair_set(
-        semantic_dedup_pairs(_emb(spark), THRESHOLD, n_cells=1, block_bytes=4096)
-    )
+    got = _pair_set(spark, n_cells=1, block_bytes=4096)
     assert got == truth[0]
 
 
 def test_ivf_cells_subset_with_measured_recall(spark, truth):
-    got = _pair_set(
-        semantic_dedup_pairs(_emb(spark), THRESHOLD, n_cells=4, dim=64)
-    )
+    got = _pair_set(spark, n_cells=4, dim=64)
     assert got <= truth[0]  # exact within-cell verify: no false positives
     recall = len(got) / max(len(truth[0]), 1)
     # boundary misses are the documented SemDeDup tradeoff; the label-
@@ -85,7 +85,8 @@ def test_ivf_cells_subset_with_measured_recall(spark, truth):
 
 
 def test_clusters_and_keep_flags(spark, truth):
-    out = semantic_dedup(_emb(spark), THRESHOLD, n_cells=1).collect()
+    with Regime(Barrier()) as regime:
+        out = semantic_dedup(_emb(spark), THRESHOLD, n_cells=1, regime=regime).collect()
     labels = {int(r.vec_id): int(r.cluster_id) for r in out}
     assert labels == truth[1]
     keepers = {int(r.vec_id) for r in out if r.keep}

@@ -3,6 +3,7 @@
 import numpy as np
 from pyspark.sql import functions as F
 
+from hsip.barrier import Barrier, Regime
 from hsip.config import DedupConfig
 from hsip.simhash import (
     attach_simhash,
@@ -74,8 +75,9 @@ def test_probing_guarantee_within_d(spark):
     df = spark.createDataFrame(rows, "id string, simhash long")
     from hsip.simhash import simhash_candidates
 
-    pairs, _ = simhash_candidates(df, cfg)
-    got = {(r.a, r.b) for r in pairs.collect()}
+    with Regime(Barrier()) as regime:
+        pairs, _ = simhash_candidates(df, cfg, regime)
+        got = {(r.a, r.b) for r in pairs.collect()}
     for i in range(30):
         assert (f"p{i:02d}_a", f"p{i:02d}_b") in got, f"pair {i} missed"
 
@@ -90,8 +92,9 @@ def test_near_identical_found_by_blocks(spark):
         [(1, text), (2, " ".join(toks))], "doc_id int, text string"
     )
     sims = attach_simhash(df, "doc_id", "text", cfg)
-    pairs, _ = simhash_candidates(sims, cfg)
-    assert {(r.a, r.b) for r in pairs.collect()} == {("1", "2")}
+    with Regime(Barrier()) as regime:
+        pairs, _ = simhash_candidates(sims, cfg, regime)
+        assert {(r.a, r.b) for r in pairs.collect()} == {("1", "2")}
 
 
 def test_empty_text_zero(spark):

@@ -3,6 +3,8 @@
 import numpy as np
 import pytest
 
+from hsip.barrier import Barrier, Regime
+from hsip.metrics import Recorder
 from hsip.similarity import brute_force_topk, rhp_lsh_topk, rhp_signatures
 
 
@@ -55,10 +57,12 @@ def test_rhp_lsh_recall_vs_brute_force(spark, emb):
         (r.q_id, r.neighbor_id)
         for r in brute_force_topk(emb, emb, k=3).collect()
     }
-    approx = {
-        (r.q_id, r.neighbor_id)
-        for r in rhp_lsh_topk(emb, k=3, dim=32, band_bits=4, seed=7).collect()
-    }
+    with Regime(Barrier()) as regime:
+        approx = {
+            (r.q_id, r.neighbor_id)
+            for r in rhp_lsh_topk(emb, k=3, dim=32, band_bits=4, seed=7,
+                                  regime=regime).collect()
+        }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.8, f"RHP-LSH recall {recall}"
 
@@ -70,33 +74,30 @@ def test_rhp_lsh_hot_bucket_not_dropped(spark):
     rows = [(i, [1.0] * 8) for i in range(40)]  # one degenerate bucket >> cap
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    class Rec:
-        def __init__(self):
-            self.rows = []
-
-        def metric(self, stage, key, value):
-            self.rows.append((stage, key, value))
-
-    rec = Rec()
-    out = rhp_lsh_topk(
-        emb, k=1, dim=8, band_bits=4, seed=7, bucket_cap=8, recorder=rec
-    ).collect()
+    rec = Recorder(spark, catalog=None, run_id="t")
+    with Regime(Barrier()) as regime:
+        out = rhp_lsh_topk(
+            emb, k=1, dim=8, band_bits=4, seed=7, bucket_cap=8, recorder=rec,
+            regime=regime,
+        ).collect()
     assert len(out) == 40, "hot-bucket queries were silently dropped"
-    assert rec.rows and rec.rows[0][0] == "rhp_lsh_topk" and rec.rows[0][2] > 0
+    got = rec.collect_observed()
+    assert list(got) == ["rhp_lsh_topk"] and got["rhp_lsh_topk"]["hot_buckets"] > 0
 
 
 def test_memory_recorder_captures_ann_hot_metric(spark):
     """The catalog-less Recorder the ANN contract query rides
     (__spark_entry__.ann_rhp_lsh_topk): hot-bucket truncations must be
     observable via recorded() even with no warehouse attached."""
-    from hsip.metrics import Recorder
-
     rows = [(i, [1.0] * 8) for i in range(40)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     rec = Recorder(spark, catalog=None, run_id="t")
-    rhp_lsh_topk(
-        emb, k=1, dim=8, band_bits=4, seed=7, bucket_cap=8, recorder=rec
-    ).count()
+    with Regime(Barrier()) as regime:
+        rhp_lsh_topk(
+            emb, k=1, dim=8, band_bits=4, seed=7, bucket_cap=8, recorder=rec,
+            regime=regime,
+        ).count()
+    rec.collect_observed()
     got = rec.recorded()
     assert got.get(("rhp_lsh_topk", "hot_buckets"), 0) > 0
     rec.flush()  # no catalog: must be a no-op, not a crash
@@ -105,20 +106,17 @@ def test_memory_recorder_captures_ann_hot_metric(spark):
 def test_ann_contract_query_cache_hygiene(spark):
     """The ANN contract query (__spark_entry__.ann_rhp_lsh_topk) must
     leave only its materialized RESULT cached — the corpus-sized
-    signature/band scratch caches are dropped before it returns
-    (VERDICT r4 #3)."""
-    import numpy as np
-
+    signature/band caches are released with the regime before it
+    returns (VERDICT r4 #3). A latency regime keeps them as lazy caches,
+    which the session's CacheManager lists."""
     rows = [(i, [float(x) for x in np.random.default_rng(i).standard_normal(8)])
             for i in range(30)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     spark.catalog.clearCache()
-    scratch = []
-    out = rhp_lsh_topk(emb, k=2, dim=8, band_bits=4, seed=7, scratch=scratch)
-    out = out.cache()
-    out.count()
-    for c in scratch:
-        c.unpersist()
+    with Regime(Barrier(), width=8) as regime:
+        out = rhp_lsh_topk(emb, k=2, dim=8, band_bits=4, seed=7, regime=regime)
+        out = out.cache()
+        out.count()
     # only ONE cached entry (the result) remains in the session
     jcm = spark._jsparkSession.sharedState().cacheManager()
     assert not jcm.isEmpty()

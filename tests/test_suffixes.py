@@ -3,6 +3,7 @@ suffix-array oracle (SURVEY.md §5.3, §7 hard-part 1)."""
 
 import numpy as np
 
+from hsip.barrier import Barrier, Regime
 from hsip.config import DedupConfig
 from hsip.suffixes import (
     _rolling_hashes,
@@ -92,9 +93,10 @@ def test_channel_end_to_end_matches_oracle(spark):
     }
     df = spark.createDataFrame(list(docs.items()), "id string, text string")
     fps = fingerprint_table(df, "id", "text", cfg)
-    pairs, _ = substr_candidates(fps, cfg)
-    verified = verify_substr(pairs, df, "id", "text", cfg)
-    got = {(r.a, r.b) for r in verified.filter("verdict").collect()}
+    with Regime(Barrier()) as regime:
+        pairs, _ = substr_candidates(fps, cfg, regime)
+        verified = verify_substr(pairs, df, "id", "text", cfg, regime)
+        got = {(r.a, r.b) for r in verified.filter("verdict").collect()}
     # The SA oracle reports *adjacent* cross-doc pairs only — with d3 == d0
     # identical, (d0, d1) is shadowed by d3 in suffix order. The channel
     # may legitimately find a superset; every found pair is exact-verified.
@@ -172,12 +174,13 @@ def test_hot_fingerprint_star_pairing(spark):
     docs = [(f"x{i}", boiler + f" unique tail {i}") for i in range(8)]
     df = spark.createDataFrame(docs, "id string, text string")
     fps = fingerprint_table(df, "id", "text", cfg)
-    pairs, hot = substr_candidates(fps, cfg)
-    assert hot.count() > 0
-    verified = verify_substr(pairs, df, "id", "text", cfg)
-    kept = verified.filter("verdict")
-    # star edges from x0 to everyone — one component despite the cap
-    assert kept.count() >= 7
+    with Regime(Barrier()) as regime:
+        pairs, hot = substr_candidates(fps, cfg, regime)
+        assert hot.count() > 0
+        verified = verify_substr(pairs, df, "id", "text", cfg, regime)
+        kept = verified.filter("verdict")
+        # star edges from x0 to everyone — one component despite the cap
+        assert kept.count() >= 7
 
 
 def test_anchor_positions_deterministic(spark):
@@ -201,11 +204,12 @@ def test_anchor_positions_deterministic(spark):
     fps.count()
 
     def anchors(nparts):
-        pairs, _ = substr_candidates(fps.repartition(nparts).cache(), cfg)
-        return {
-            (r.a, r.b): (list(r.pos_as), list(r.pos_bs), r.n_anchors)
-            for r in pairs.collect()
-        }
+        with Regime(Barrier()) as regime:
+            pairs, _ = substr_candidates(fps.repartition(nparts).cache(), cfg, regime)
+            return {
+                (r.a, r.b): (list(r.pos_as), list(r.pos_bs), r.n_anchors)
+                for r in pairs.collect()
+            }
 
     a, b = anchors(7), anchors(3)
     assert a and a == b

@@ -4,7 +4,14 @@ nested-refinement property, singleton coverage, determinism."""
 import pytest
 from pyspark.sql import functions as F
 
+from hsip.barrier import Barrier, Regime
 from hsip.cc import tiered_clusters
+
+
+def _tiers(ids, scored, thresholds):
+    """tiered_clusters' rows, collected under a regime that is then released."""
+    with Regime(Barrier()) as regime:
+        return tiered_clusters(ids, scored, thresholds, regime=regime).collect()
 
 
 @pytest.fixture(scope="module")
@@ -22,7 +29,7 @@ def ids(spark):
 def test_tier_labels(spark, ids, scored):
     out = {
         r.id: (r.cluster_t50, r.cluster_t70, r.cluster_t90)
-        for r in tiered_clusters(ids, scored, (0.5, 0.7, 0.9)).collect()
+        for r in _tiers(ids, scored, (0.5, 0.7, 0.9))
     }
     assert out["a"] == ("a", "a", "a")
     assert out["b"] == ("a", "a", "a")          # b joins a at every tier
@@ -34,7 +41,7 @@ def test_tier_labels(spark, ids, scored):
 def test_tiers_are_nested_refinements(spark, ids, scored):
     # same tier-50 label => connected at 0.5; a tier-90 cluster must sit
     # wholly inside one tier-50 cluster (higher tiers refine lower ones)
-    rows = tiered_clusters(ids, scored, (0.5, 0.9)).collect()
+    rows = _tiers(ids, scored, (0.5, 0.9))
     by_t90 = {}
     for r in rows:
         by_t90.setdefault(r.cluster_t90, set()).add(r.cluster_t50)
@@ -42,21 +49,14 @@ def test_tiers_are_nested_refinements(spark, ids, scored):
 
 
 def test_partition_invariance(spark, ids, scored):
-    a = sorted(map(tuple, tiered_clusters(ids, scored, (0.5, 0.7)).collect()))
-    b = sorted(
-        map(
-            tuple,
-            tiered_clusters(
-                ids.repartition(5), scored.repartition(3), (0.5, 0.7)
-            ).collect(),
-        )
-    )
+    a = sorted(map(tuple, _tiers(ids, scored, (0.5, 0.7))))
+    b = sorted(map(tuple, _tiers(ids.repartition(5), scored.repartition(3), (0.5, 0.7))))
     assert a == b
 
 
 def test_empty_thresholds_rejected(spark, ids, scored):
     with pytest.raises(ValueError):
-        tiered_clusters(ids, scored, ())
+        _tiers(ids, scored, ())
 
 
 def test_tier_score_counts_fixed_channels_at_every_tier(spark):

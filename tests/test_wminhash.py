@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from hsip.barrier import Barrier, Regime
 from hsip.config import DedupConfig
 from hsip.wminhash import (
     _icws_batch,
@@ -157,11 +158,12 @@ def test_weighted_near_dup_pairs_exact_vs_brute_force(spark):
     docs = spark.createDataFrame(list(texts.items()), ["doc_id", "text"])
     cfg = DedupConfig(num_perm=64, lsh_bands=64, lsh_rows=1,
                       jaccard_threshold=0.5)
-    got = {
-        (r["a"], r["b"])
-        for r in weighted_near_dup_pairs(docs, "doc_id", "text", cfg).collect()
-        if r["verdict"]
-    }
+    with Regime(Barrier()) as regime:
+        got = {
+            (r["a"], r["b"])
+            for r in weighted_near_dup_pairs(docs, "doc_id", "text", cfg, regime).collect()
+            if r["verdict"]
+        }
 
     def jw(x, y):
         ca, cb = Counter(texts[x].split()), Counter(texts[y].split())
@@ -188,8 +190,9 @@ def test_verify_wjaccard_values_exact(spark):
         [("x", "a a b c"), ("y", "a b b c")], ["doc_id", "text"]
     )
     cfg = DedupConfig(num_perm=32, lsh_bands=32, lsh_rows=1)
-    rows = weighted_near_dup_pairs(docs, "doc_id", "text", cfg,
-                                   threshold=0.5).collect()
+    with Regime(Barrier()) as regime:
+        rows = weighted_near_dup_pairs(docs, "doc_id", "text", cfg, regime,
+                                       threshold=0.5).collect()
     assert len(rows) == 1
     # min-sum = a:1 + b:1 + c:1 = 3; max-sum = a:2 + b:2 + c:1 = 5
     assert abs(rows[0]["wjaccard"] - 0.6) < 1e-12
@@ -213,10 +216,11 @@ def test_empty_doc_pairs_get_verdict_rows(spark):
                       jaccard_threshold=0.5)
 
     # end-to-end: the sentinel makes the two empty docs collide
-    got = {
-        (r["a"], r["b"]): (r["wjaccard"], r["verdict"])
-        for r in weighted_near_dup_pairs(docs, "doc_id", "text", cfg).collect()
-    }
+    with Regime(Barrier()) as regime:
+        got = {
+            (r["a"], r["b"]): (r["wjaccard"], r["verdict"])
+            for r in weighted_near_dup_pairs(docs, "doc_id", "text", cfg, regime).collect()
+        }
     assert got[("e1", "e2")] == (1.0, True)
 
     # forced empty-vs-nonempty pair: a verdict row exists and is false

@@ -4,11 +4,16 @@ Usage:  python tools/capture_plans_r06.py <outdir> <suffix>
         (run once against the round-5 tree with suffix "before" and once
         against the round-6 tree with suffix "after")
 
-Driver-only — builds the logical chains the pipeline wires up, in the
-latency regime the sf0.1 corpus runs in (`hsip.barrier.Regime`), and
-prints their physical plans without executing them, plus the headline
-relational queries; the fused mh+sh bucket table comes from
-`hsip.lsh.channel_bucket_table`.
+Builds the logical chains the pipeline wires up, in the latency regime
+the sf0.1 corpus runs in (`hsip.barrier.Regime`), and prints their
+physical plans without executing them, plus the headline relational
+queries; the fused mh+sh bucket table comes from
+`hsip.lsh.channel_bucket_table`. Then the same chains in the eager
+regime of the `transcripts-eager` benchmark workload
+(`gen_transcripts(42, 1000)`, reassembled): those barriers execute, as
+in a run, so the `eager_*` plans show the join strategies chosen over
+the materialized leaves. Each written plan's line reports its join
+operators.
 """
 
 from __future__ import annotations
@@ -16,6 +21,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 # import hsip from this checkout, whatever the working directory
@@ -33,8 +39,57 @@ def explain_to(df, name: str) -> None:
     path = os.path.join(OUT, f"{name}_{SUFFIX}.txt")
     with open(path, "w") as f:
         f.write(buf.getvalue())
-    n_ex = buf.getvalue().count("Exchange")
-    print(f"wrote {path} (Exchange mentions: {n_ex})")
+    text = buf.getvalue()
+    joins = {j: len(re.findall(rf"^\(\d+\) {j}\b", text, re.M)) for j in
+             ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin")}
+    print(f"wrote {path} (Exchange mentions: {text.count('Exchange')}; "
+          f"joins: {joins})")
+
+
+def explain_eager_transcripts(spark) -> None:
+    """The mh/sh and substr chains as an ephemeral eager run places them
+    (hsip/pipeline.py), hot-bucket and truncation counts observed."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from hsip import schemas
+    from hsip import verify as V
+    from hsip.barrier import Barrier, Regime
+    from hsip.config import DedupConfig
+    from hsip.fixtures.gen import gen_transcripts
+    from hsip.lsh import channel_bucket_table, pairs_from_buckets
+    from hsip.reassemble import dedupe_turn_versions, reassemble
+    from hsip.suffixes import fingerprint_table, substr_candidates, verify_substr
+    from hsip.textkernel import featurize
+
+    pdf = gen_transcripts(seed=42, n_base=1000).transcripts
+    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    turns = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
+    cfg = DedupConfig(eager_barrier_min_docs=0)
+    regime = Regime(Barrier())
+    try:
+        base = regime.reused(reassemble(dedupe_turn_versions(turns)).select(
+            F.col("conv_id").alias("id"), F.col("doc_text").alias("text")))
+        feats = regime.reused(featurize(base, "id", "text", cfg))
+        both = regime.reused(
+            channel_bucket_table(feats, cfg, ("minhash_lsh", "simhash")))
+        pairs, _ = pairs_from_buckets(
+            both, cfg.bucket_cap, bucket_cols=("channel", "bkt_id", "bkt_hash"),
+            channel=None, hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
+            payload_cols=("simhash",), regime=regime,
+            hot_counts={"minhash_lsh": Observation(), "simhash": Observation()},
+        )
+        explain_to(pairs, "eager_candidates_mh_sh")
+        explain_to(V.verify_jaccard_hamming(pairs, feats, cfg, regime),
+                   "eager_verify_mh_sh")
+        fps = regime.reused(fingerprint_table(base, "id", "text", cfg))
+        sub, _ = substr_candidates(fps, cfg, regime, hot_counts=Observation(),
+                                   truncated=Observation())
+        explain_to(sub, "eager_substr_candidates")
+        explain_to(verify_substr(sub, base, "id", "text", cfg, regime),
+                   "eager_verify_substr")
+    finally:
+        regime.release()
 
 
 def main() -> None:
@@ -77,6 +132,8 @@ def main() -> None:
 
     # --- combined verdict table (pre-checkpoint logical shape) ---
     explain_to(V.combine_verified(mhsh_verified, sub_verified), "verified")
+
+    explain_eager_transcripts(spark)
 
     # --- headline relational queries (declared contract queries) ---
     explain_to(E.q1_pricing_summary(spark, SF_DIR), "q1_pricing_summary")
