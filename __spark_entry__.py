@@ -560,11 +560,11 @@ def fuzzy_part_name_pairs(spark, sf_dir):
     expansion (lsh.pairs_from_buckets); compare is JVM-side
     F.levenshtein — compare cost scales with distinct names, never
     corpus rows."""
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.linkage import fuzzy_name_pairs
 
     part = _t(spark, sf_dir, "part")
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         return regime.barrier(
             fuzzy_name_pairs(part, "p_name", max_dist=3, regime=regime).select(
                 "name_a", "name_b", "n_a", "n_b",
@@ -1095,11 +1095,11 @@ def semantic_dedup_clusters(spark, sf_dir):
     this fixture). The scale path (n_cells ~ N/target_cell_rows) is the
     same code with its measured-recall tradeoff pinned in
     tests/test_semantic_dedup.py."""
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.similarity import semantic_dedup
 
     emb = _t(spark, sf_dir, "embeddings")
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         return regime.barrier(semantic_dedup(emb, threshold=0.42, n_cells=1, regime=regime))
 
 
@@ -1356,7 +1356,7 @@ def ann_rhp_lsh_topk(spark, sf_dir):
     An in-memory Recorder rides along so hot-bucket truncation counts are
     computed AND observable in the exercised path (no silent caps), not
     just when a warehouse catalog is attached."""
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.metrics import Recorder
     from hsip.similarity import rhp_lsh_topk
 
@@ -1364,7 +1364,7 @@ def ann_rhp_lsh_topk(spark, sf_dir):
     rec = Recorder(spark, catalog=None, run_id="contract-ann")
     # the session keeps only the materialized top-k, not the corpus-sized
     # signature/band blocks (VERDICT r4 #3)
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         out = regime.barrier(rhp_lsh_topk(
             emb, k=3, dim=64, band_bits=4, seed=7, recorder=rec, regime=regime))
     rec.collect_observed()
@@ -1413,7 +1413,7 @@ def image_phash_near_dups(spark, sf_dir):
     verify. Duplicate payloads are planted by re-ingesting every 8th
     image under a new media_id (rows-only: phash values come from the
     stub decoder's sha256-seeded pixels)."""
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.multimodal import (
         extract_image_features, phash_near_dup_pairs, synthetic_media,
     )
@@ -1427,7 +1427,7 @@ def image_phash_near_dups(spark, sf_dir):
         .withColumn("media_id", F.concat(F.lit("copy-"), "media_id"))
     )
     feats = extract_image_features(images.unionByName(dups))
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         pairs = regime.barrier(phash_near_dup_pairs(feats, max_hamming=3, regime=regime))
     return pairs.orderBy("media_a", "media_b")
 
@@ -1482,7 +1482,7 @@ def minhash_lsh_clusters(spark, sf_dir):
 
 
 def simhash_hamming_pairs(spark, sf_dir):
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.config import DedupConfig
     from hsip.simhash import attach_simhash, simhash_candidates
     from hsip.verify import verify_hamming
@@ -1490,7 +1490,7 @@ def simhash_hamming_pairs(spark, sf_dir):
     cfg = DedupConfig()
     docs = _t(spark, sf_dir, "documents")
     sims = attach_simhash(docs, "doc_id", "text", cfg)
-    with Regime(Barrier.for_run(cfg)) as regime:
+    with Regime.for_run(cfg) as regime:
         pairs, _ = simhash_candidates(sims, cfg, regime)
         return regime.barrier(
             verify_hamming(pairs, sims, cfg).filter("verdict").select("a", "b", "hamming"))
@@ -1507,7 +1507,7 @@ def substr_duplicate_spans(spark, sf_dir):
     of S-L+1 consecutive window starts on one diagonal, so
     max_span = max over diagonals of (island length + L - 1) — a
     gaps-and-islands rollup."""
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.config import DedupConfig
     from hsip.suffixes import fingerprint_table, substr_candidates, verify_substr
 
@@ -1517,7 +1517,7 @@ def substr_duplicate_spans(spark, sf_dir):
     )
     docs = _t(spark, sf_dir, "documents")
     fps = fingerprint_table(docs, "doc_id", "text", cfg)
-    with Regime(Barrier.for_run(cfg)) as regime:
+    with Regime.for_run(cfg) as regime:
         pairs, _ = substr_candidates(fps, cfg, regime)
         return regime.barrier(
             verify_substr(pairs, docs, "doc_id", "text", cfg, regime)
@@ -1535,7 +1535,7 @@ def substr_pairs(spark, sf_dir):
     output exactly "exists a common L-char window" — which DuckDB
     reproduces hash-free by enumerating every L-char window per doc and
     equi-joining on window equality."""
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.config import DedupConfig
     from hsip.suffixes import fingerprint_table, substr_candidates, verify_substr
 
@@ -1545,7 +1545,7 @@ def substr_pairs(spark, sf_dir):
     )
     docs = _t(spark, sf_dir, "documents")
     fps = fingerprint_table(docs, "doc_id", "text", cfg)
-    with Regime(Barrier.for_run(cfg)) as regime:
+    with Regime.for_run(cfg) as regime:
         pairs, _ = substr_candidates(fps, cfg, regime)
         return regime.barrier(
             verify_substr(pairs, docs, "doc_id", "text", cfg, regime)
@@ -1563,7 +1563,7 @@ def decontam_substr_pairs(spark, sf_dir):
     the channel exact at L, which DuckDB reproduces hash-free with the
     same window-enumeration join as substr_pairs, restricted to
     train x eval."""
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.config import DedupConfig
     from hsip.suffixes import substr_decontaminate
 
@@ -1574,7 +1574,7 @@ def decontam_substr_pairs(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     train = docs.filter(F.col("doc_id") % 10 != 0)
     evals = docs.filter(F.col("doc_id") % 10 == 0)
-    with Regime(Barrier.for_run(cfg)) as regime:
+    with Regime.for_run(cfg) as regime:
         return regime.barrier(
             substr_decontaminate(
                 train, "doc_id", "text", evals, "doc_id", "text", cfg, regime,
@@ -1594,7 +1594,7 @@ def decontam_fuzzy_pairs(spark, sf_dir):
     (1-J)^128 ~ 1e-39 at J >= 0.5) the channel is exhaustive and the
     exact-Jaccard verify makes the output value-identical to DuckDB's
     brute-force shingle-set Jaccard over the same split."""
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.config import DedupConfig
     from hsip.incremental import minhash_decontaminate
 
@@ -1603,7 +1603,7 @@ def decontam_fuzzy_pairs(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     train = docs.filter(F.col("doc_id") % 10 != 0)
     evals = docs.filter(F.col("doc_id") % 10 == 0)
-    with Regime(Barrier.for_run(cfg)) as regime:
+    with Regime.for_run(cfg) as regime:
         return regime.barrier(
             minhash_decontaminate(
                 train, "doc_id", "text", evals, "doc_id", "text", cfg, regime,
@@ -1741,7 +1741,7 @@ def dedup_tiered_clusters(spark, sf_dir):
     scored-pair table. DuckDB reproduces each tier with brute-force
     Jaccard + a recursive-CTE closure — three independent closures, one
     per tier, joined on id."""
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.cc import tiered_clusters
     from hsip.config import DedupConfig
     from hsip.pipeline import run_documents
@@ -1755,7 +1755,7 @@ def dedup_tiered_clusters(spark, sf_dir):
         spark, docs, "doc_id", "text", cfg, channels=("minhash_lsh",)
     )
     scored = res.verified.filter("verdict")
-    with Regime(Barrier.for_run(cfg)) as regime:
+    with Regime.for_run(cfg) as regime:
         out = regime.barrier(tiered_clusters(
             docs.select(F.col("doc_id").cast("string").alias("id")),
             scored, thresholds=(0.5, 0.7, 0.9), regime=regime,
@@ -1774,7 +1774,7 @@ def tiered_dedup_impact(spark, sf_dir):
     columns) is unpivoted with stack() — narrow, no text — then two
     hash aggregations; at 100 TB the unpivot carries (doc_id, 3 labels)
     only and both aggs combine map-side."""
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.cc import tiered_clusters
     from hsip.config import DedupConfig
     from hsip.pipeline import run_documents
@@ -1788,7 +1788,7 @@ def tiered_dedup_impact(spark, sf_dir):
         spark, docs, "doc_id", "text", cfg, channels=("minhash_lsh",)
     )
     scored = res.verified.filter("verdict")
-    with Regime(Barrier.for_run(cfg)) as regime:
+    with Regime.for_run(cfg) as regime:
         tiers = regime.barrier(tiered_clusters(
             docs.select(F.col("doc_id").cast("string").alias("id")),
             scored, thresholds=(0.5, 0.7, 0.9), regime=regime,

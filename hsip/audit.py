@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import verify as V
-from .barrier import Barrier, Regime
+from .barrier import Regime
 from .config import DedupConfig
 from .lsh import lsh_candidates
 from .simhash import simhash_candidates
@@ -43,7 +43,7 @@ def channel_outputs(docs: DataFrame, id_col: str, text_col: str,
                     cfg: DedupConfig) -> dict[str, set]:
     """Verified (a, b) pair sets per channel, as the pipeline computes
     them (featurize -> candidates -> exact verification)."""
-    with Regime(Barrier.for_run(cfg)) as regime:  # eager
+    with Regime.for_run(cfg) as regime:  # eager
         feats = regime.reused(featurize(docs, id_col, text_col, cfg))
 
         lsh_pairs, _ = lsh_candidates(feats.select("id", "sig"), cfg, regime)

@@ -1,7 +1,8 @@
-"""One eager materialization barrier for every frame the engine reuses.
+"""One run object: ``Regime`` decides how a run materializes the frames
+it reuses and owns the blocks they leave.
 
-A ``Barrier`` runs a frame's plan once (one Spark job) and returns a
-frame whose logical plan is a single leaf over the materialized blocks.
+A barrier runs a frame's plan once (one Spark job) and returns a frame
+whose logical plan is a single leaf over the materialized blocks.
 Downstream queries plan over that leaf instead of re-analyzing,
 re-optimizing and re-printing the whole upstream tree on every action:
 a cache hides *recomputation*, not *plan size* (PLANS.md). The barrier
@@ -22,36 +23,40 @@ What the flat barrier keeps from the cache+count barrier it replaces:
   the broadcast gates read it (``fits_broadcast``), and the leaf carries
   it as its Catalyst ``sizeInBytes``, so join planning over the leaf does
   not depend on what the materialized plan contained.
-- the release. ``release`` lists collect the frame for the caller's
-  sweep, and ``unpersist()`` on the returned frame drops its blocks
+- the release. ``unpersist()`` on the returned frame drops its blocks
   (``DataFrame.unpersist`` alone does nothing on a checkpointed frame).
 
-How a run's barriers materialize is decided once, by ``Barrier.for_run``:
+A regime holds three values, decided once per run (``for_run``, then
+``fit`` from the run's document count):
 
-- ephemeral runs: executor-local blocks (``localCheckpoint``). Lineage is
-  truncated by design, so an executor lost mid-run takes its blocks along
-  and the run fails. With ``DedupConfig.cc_checkpoint_dir`` set, every
+- ``keep_lineage``: ``barrier`` is ``cache()`` + ``count()``, which keeps
+  lineage, so a lost executor's partitions are recomputed. Warehouse
+  runs set it: their stages are parquet tables already, and the barriers
+  between them stay fault tolerant, which is what those runs are for.
+  Otherwise ``barrier`` is the flat barrier over executor-local blocks
+  (``localCheckpoint``): an executor lost mid-run takes its blocks along
+  and the run fails.
+- ``checkpoint_dir`` (``DedupConfig.cc_checkpoint_dir``): every flat
   barrier also writes a reliable checkpoint there, read back from the
   frame's blocks rather than recomputed; release deletes its files.
-- warehouse runs: ``cache()`` + ``count()``, which keeps lineage, so a
-  lost executor's partitions are recomputed. Their stages are parquet
-  tables already; the barriers between them stay fault tolerant, which
-  is what those runs are for.
+- ``width``: unset, the run is eager (nested barriers on reused frames
+  and join-backs, the session conf kept); set, it runs the latency
+  regime at that shuffle width (``Regime``).
 
-Connected components always truncates (``Barrier(checkpoint_dir)``): its
-plan grows each round otherwise.
+Iterative loops (connected components) cut their lineage with
+``truncate``: always the flat barrier, reliable when ``checkpoint_dir``
+is set, also when ``keep_lineage`` is: cache+count would let the plan
+grow every round.
 
-Whether a run places its nested barriers at all (eager) or keeps lazy
-caches under a latency conf is decided once too, by ``Regime.for_run``.
+A regime is also the one block lifecycle of the library: every builder
+that materializes a frame does it through its caller's regime
+(``reused``, ``join_back``, ``truncate``, or ``barrier`` with
+``release=regime.sweep``) and never releases anything itself. The
+caller keeps what it needs past the call by passing it through
+``regime.barrier`` (not swept), and the regime releases the rest when
+its ``with`` block exits::
 
-A ``Regime`` is also the one block lifecycle of the library: every
-builder that materializes a frame does it through its caller's regime
-(``reused``, ``join_back``, or the barrier with ``release=regime.sweep``)
-and never releases anything itself. The caller keeps what it needs past
-the call by passing it through ``regime.barrier`` (not swept), and the
-regime releases the rest when its ``with`` block exits::
-
-    with Regime(Barrier.for_run(cfg)) as regime:
+    with Regime.for_run(cfg) as regime:
         out = regime.barrier(simhash_candidates(sims, cfg, regime)[0])
 """
 
@@ -82,58 +87,6 @@ def job_label(sc, name: str | None):
         sc.setJobDescription(prev)
 
 
-class Barrier:
-    """How eager barriers materialize (module docstring). Calling it
-    materializes a frame.
-
-    ``checkpoint_dir`` adds a reliable checkpoint to the flat barrier;
-    ``keep_lineage`` uses cache+count instead (no flat plan)."""
-
-    def __init__(self, checkpoint_dir: str | None = None,
-                 keep_lineage: bool = False):
-        self.checkpoint_dir = checkpoint_dir
-        self.keep_lineage = keep_lineage
-
-    @classmethod
-    def for_run(cls, cfg, warehouse: str | None = None) -> Barrier:
-        """The policy for a pipeline run with config ``cfg``: cache+count
-        when it checkpoints its stages to ``warehouse``, the flat barrier
-        otherwise (reliable when ``cfg.cc_checkpoint_dir`` is set)."""
-        if warehouse is not None:
-            return cls(keep_lineage=True)
-        return cls(cfg.cc_checkpoint_dir)
-
-    def __call__(self, df: DataFrame, name: str | None = None,
-                 release: list | None = None) -> DataFrame:
-        """Eagerly materialize ``df``. ``name`` labels the job
-        (``job_label``); ``release`` is the caller's sweep list, which the
-        returned frame is appended to."""
-        sc = df.sparkSession.sparkContext
-        with job_label(sc, name):
-            if self.keep_lineage:
-                out = df.cache()
-                out.count()
-                out._hsip_measured_bytes = _catalyst_bytes(out)
-            else:
-                out = self._flat(df, sc)
-        if release is not None:
-            release.append(out)
-        return out
-
-    def _flat(self, df: DataFrame, sc) -> DataFrame:
-        out, rdd, nbytes = _local_flat(df)
-        if self.checkpoint_dir:
-            # the reliable leaf inherits the flat leaf's measured stats
-            sc.setCheckpointDir(self.checkpoint_dir)
-            reliable = out.checkpoint(eager=True)
-            _drop_blocks(sc, rdd)
-            out, rdd = reliable, reliable._jdf.logicalPlan().rdd()
-        out._hsip_measured_bytes = nbytes
-        out._hsip_rdd = rdd
-        out.unpersist = types.MethodType(_unpersist, out)
-        return out
-
-
 @contextlib.contextmanager
 def session_conf(spark, overrides: dict[str, str]):
     """Set ``overrides`` for the block; the previous values (or unset)
@@ -152,36 +105,72 @@ def session_conf(spark, overrides: dict[str, str]):
 
 
 class Regime:
-    """One pipeline run's physical regime, decided once from its document
-    count (``for_run``); the builders branch on it, not on flags of their own.
+    """One run's materialization policy (module docstring) and physical
+    regime; the builders branch on it, not on flags of their own.
 
-    - eager (``n_docs >= cfg.eager_barrier_min_docs``): reused frames and
-      bucket join-backs pass the run's barrier; the session conf is kept.
+    - eager (``width`` unset): reused frames and bucket join-backs pass
+      the barrier; the session conf is kept.
     - latency (``width`` set): the chains are dozens of tiny exchanges,
       and under AQE each becomes its own query-stage job — a serial floor
       of driver round-trips no executor count amortizes. Reused frames
       are lazy caches, join-backs stay lazy, and the run executes with
-      AQE off at ``width`` shuffle partitions (~500 docs each, floor 8,
-      capped at the session's own width).
+      AQE off at ``width`` shuffle partitions.
 
     ``sweep`` collects what the builders materialize, for ``release``,
     which also runs when a ``with regime:`` block exits, failed or not;
     ``hydration`` records each broadcast-hydration decision taken under it
     (``broadcastable``)."""
 
-    def __init__(self, barrier: Barrier, width: int | None = None):
-        self.barrier = barrier
+    def __init__(self, *, checkpoint_dir: str | None = None,
+                 keep_lineage: bool = False, width: int | None = None):
+        self.checkpoint_dir = checkpoint_dir
+        self.keep_lineage = keep_lineage
         self.width = width
-        self.eager = width is None
         self.sweep: list[DataFrame] = []
         self.hydration: dict[str, dict] = {}
 
     @classmethod
-    def for_run(cls, spark, cfg, n_docs: int, barrier: Barrier) -> Regime:
-        if n_docs >= cfg.eager_barrier_min_docs:
-            return cls(barrier)
-        ambient = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        return cls(barrier, width=max(8, min(ambient, -(-n_docs // 500))))
+    def for_run(cls, cfg, warehouse: str | None = None) -> Regime:
+        """The regime of a run with config ``cfg``: barriers keep lineage
+        when it checkpoints its stages to ``warehouse``; flat barriers and
+        ``truncate`` are reliable when ``cfg.cc_checkpoint_dir`` is set."""
+        return cls(checkpoint_dir=cfg.cc_checkpoint_dir,
+                   keep_lineage=warehouse is not None)
+
+    @property
+    def eager(self) -> bool:
+        return self.width is None
+
+    def fit(self, spark, cfg, n_docs: int) -> None:
+        """Pick the run's regime from its document count: eager at or above
+        ``cfg.eager_barrier_min_docs``, else latency at ~500 docs per
+        shuffle partition (floor 8, capped at the session's own width)."""
+        if n_docs < cfg.eager_barrier_min_docs:
+            ambient = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+            self.width = max(8, min(ambient, -(-n_docs // 500)))
+
+    def barrier(self, df: DataFrame, name: str | None = None,
+                release: list | None = None) -> DataFrame:
+        """Eagerly materialize ``df``: cache+count with ``keep_lineage``,
+        the flat barrier otherwise. ``name`` labels the job
+        (``job_label``); ``release`` is the caller's sweep list, which the
+        returned frame is appended to."""
+        with job_label(df.sparkSession.sparkContext, name):
+            if self.keep_lineage:
+                out = df.cache()
+                out.count()
+                out._hsip_measured_bytes = _catalyst_bytes(out)
+            else:
+                out = _flat(df, self.checkpoint_dir)
+        if release is not None:
+            release.append(out)
+        return out
+
+    def truncate(self, df: DataFrame, name: str | None = None) -> DataFrame:
+        """The flat barrier whatever ``keep_lineage`` says, for a loop whose
+        plan would otherwise grow every iteration."""
+        with job_label(df.sparkSession.sparkContext, name):
+            return _flat(df, self.checkpoint_dir)
 
     def reused(self, df: DataFrame) -> DataFrame:
         """A frame several plan branches scan: a barrier when eager (AQE
@@ -246,7 +235,7 @@ class Regime:
 
 def measured_size_bytes(df: DataFrame) -> int | None:
     """Bytes ``df`` is known to hold: what the barrier measured for a
-    frame that came out of a ``Barrier``, or the files' size for a plain
+    frame that came out of a barrier, or the files' size for a plain
     scan of a file source (a warehouse stage read back as parquet, as
     Catalyst sizes it). None for anything else (a derived or lazy frame,
     or a failed measurement). Gates treat None as "not known small" and
@@ -270,6 +259,23 @@ def _within_broadcast(df: DataFrame, n: int | None, limit: int | None) -> bool:
         limit = df.sparkSession._jsparkSession.sessionState().conf() \
             .autoBroadcastJoinThreshold()
     return n is not None and 0 <= n <= limit
+
+
+def _flat(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
+    """The flat barrier: ``df`` over executor-local blocks, or over a
+    reliable checkpoint in ``checkpoint_dir`` when one is given."""
+    out, rdd, nbytes = _local_flat(df)
+    if checkpoint_dir:
+        # the reliable leaf inherits the flat leaf's measured stats
+        sc = df.sparkSession.sparkContext
+        sc.setCheckpointDir(checkpoint_dir)
+        reliable = out.checkpoint(eager=True)
+        _drop_blocks(sc, rdd)
+        out, rdd = reliable, reliable._jdf.logicalPlan().rdd()
+    out._hsip_measured_bytes = nbytes
+    out._hsip_rdd = rdd
+    out.unpersist = types.MethodType(_unpersist, out)
+    return out
 
 
 def _unpersist(self: DataFrame, blocking: bool = False) -> DataFrame:

@@ -3,9 +3,10 @@
 
 Converges in O(log^2 n) rounds (O(log n) observed); every round is two
 groupBy+join passes over the edge set. Lineage is truncated each round
-through the engine's one barrier, hsip/barrier.py (plan growth is
-exponential otherwise — SURVEY.md §4.2.3); convergence is detected with a
-cheap (count, hash-sum) checksum action instead of a full set comparison.
+by the caller's regime (``Regime.truncate``, hsip/barrier.py; plan growth
+is exponential otherwise — SURVEY.md §4.2.3), and the blocks go on its
+sweep; convergence is detected with a cheap (count, hash-sum) checksum
+action instead of a full set comparison.
 
 Output convention (X2): cluster_id = min id in the component; singletons
 keep their own id. Pair-recall is label-invariant so the convention only
@@ -14,11 +15,12 @@ needs to be deterministic (BASELINE.json:2).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from .barrier import Barrier, Regime, job_label, session_conf
+from .barrier import Regime, job_label, session_conf
+from .metrics import observed
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -112,10 +114,9 @@ def _local_union_find(sel: DataFrame) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
+    regime: Regime,
     max_iter: int = 50,
-    checkpoint_dir: str | None = None,
     local_max_edges: int = 1_000_000,
-    release: list | None = None,
 ) -> DataFrame:
     """edges(a, b) -> (id, cluster_id); covers only ids present in edges.
 
@@ -133,26 +134,22 @@ def connected_components(
     produce identical rows and the same min-id labels. Set
     ``local_max_edges=0`` to force the distributed loop.
 
-    Order matters: the edge set is deduped and lineage-truncated ONCE,
-    before the size probe or either physical path consumes it. Probing
-    the raw plan instead would re-execute the whole upstream pair DAG
-    per action — below the pipeline's eager-barrier threshold that DAG
-    is cached-but-not-checkpointed and its feature caches are already
+    Order matters: the edge set is deduped and lineage-truncated ONCE
+    (``regime.truncate``, the ``cc_edges`` job, which also counts it)
+    before either physical path consumes it. Counting the raw plan
+    instead would re-execute the whole upstream pair DAG per action —
+    below the pipeline's eager-barrier threshold that DAG is
+    cached-but-not-checkpointed and its feature caches are already
     released, so every extra action re-ran the 3-channel verify
     (measured ~3.2 s per action on the 57k-turn bench corpus, turning
     the fast path into a net loss before this ordering).
 
-    Lineage truncation per round: ``Barrier(checkpoint_dir)`` — executor-
-    local blocks (fast — right for benchmarks and ephemeral jobs) unless
-    ``checkpoint_dir`` is set, in which case each round is also written
-    to fault-tolerant storage — on a real cluster an executor loss then
-    recovers from the checkpoint instead of recomputing a truncated
-    lineage that no longer exists (SURVEY §4.2.3; VERDICT.md r1 finding
-    7). Each round's blocks (and checkpoint files) are dropped once the
-    next round has materialized; the returned frame reads the last
-    round's, which go to
-    ``release`` (when given) for the caller to drop after it has
-    materialized the labels.
+    Every round is truncated the same way, reliably when the regime has
+    a ``checkpoint_dir`` (an executor loss then recovers from the
+    checkpoint instead of recomputing a truncated lineage that no longer
+    exists; SURVEY §4.2.3, VERDICT.md r1 finding 7). Each round's blocks
+    are dropped once the next round has materialized; the returned frame
+    reads the last round's, which ``regime`` releases with its sweep.
     """
     spark = edges.sparkSession
     sc = spark.sparkContext
@@ -165,15 +162,12 @@ def connected_components(
     # ambient AQE still on for this one genuinely-large shuffle (skew
     # handling matters for the initial distinct at 10^12-turn scale; the
     # AQE-off tuning below targets the loop's tiny per-round exchanges).
-    trunc = Barrier(checkpoint_dir)
-    e = trunc(sel.distinct(), "cc_edges")
-    if local_max_edges > 0:
-        with job_label(sc, "cc_size_probe"):
-            n_edges = e.count()  # flat scan of the truncated RDD — no shuffle
-        if n_edges <= local_max_edges:
-            if release is not None:
-                release.append(e)
-            return _local_union_find(e)
+    obs = Observation()
+    e = regime.truncate(sel.distinct().observe(obs, F.count(F.lit(1)).alias("n")),
+                        "cc_edges")
+    regime.sweep.append(e)
+    if local_max_edges > 0 and observed(obs, "cc_edges")["n"] <= local_max_edges:
+        return _local_union_find(e)
 
     # Latency-tune the iterative loop: each round is tiny (the edge set
     # shrinks toward one row per member) but drives 5-6 exchanges, and
@@ -190,7 +184,10 @@ def connected_components(
         prev = _checksum(e)
         for rnd in range(max_iter):
             with job_label(sc, f"cc_round_{rnd}"):
-                nxt = trunc(_small_star(_large_star(e)))
+                nxt = regime.truncate(_small_star(_large_star(e)))
+                # swept at once, so a failed loop is released too; a round
+                # dropped below is dropped again by the sweep as a no-op
+                regime.sweep.append(nxt)
                 cur = _checksum(nxt)
             e.unpersist()  # nxt's lineage no longer reaches e's blocks
             e = nxt
@@ -209,8 +206,6 @@ def connected_components(
                 "star rounds; raise max_iter or inspect the edge set"
             )
     # converged: star graphs, every edge points (member -> component min)
-    if release is not None:
-        release.append(e)
     members = e.select(F.col("src").alias("id"), F.col("dst").alias("cluster_id"))
     roots = e.select(F.col("dst").alias("id")).distinct().withColumn(
         "cluster_id", F.col("id")
@@ -221,16 +216,11 @@ def connected_components(
 
 
 def assign_clusters(
-    all_ids: DataFrame, edges: DataFrame, id_col: str = "id",
-    checkpoint_dir: str | None = None, local_max_edges: int = 1_000_000,
-    release: list | None = None,
+    all_ids: DataFrame, edges: DataFrame, regime: Regime, id_col: str = "id",
 ) -> DataFrame:
-    """X2: full cluster table over every id; singletons -> own id.
-    ``release``: see connected_components."""
-    comp = connected_components(
-        edges, checkpoint_dir=checkpoint_dir, local_max_edges=local_max_edges,
-        release=release,
-    )
+    """X2: full cluster table over every id; singletons -> own id. The
+    connected-components blocks join ``regime``'s sweep."""
+    comp = connected_components(edges, regime)
     ids = all_ids.select(F.col(id_col).alias("id")).distinct()
     return ids.join(comp, "id", "left").select(
         "id", F.coalesce("cluster_id", "id").alias("cluster_id")
@@ -306,8 +296,6 @@ def tiered_clusters(
     thresholds: tuple[float, ...] = (0.5, 0.7, 0.9),
     id_col: str = "id",
     score_col: str = "jaccard",
-    checkpoint_dir: str | None = None,
-    local_max_edges: int = 1_000_000,
     *,
     regime: Regime,
 ) -> DataFrame:
@@ -337,10 +325,7 @@ def tiered_clusters(
     out = ids
     for t in sorted(thresholds):
         e = pairs.filter(F.col(score_col) >= float(t)).select("a", "b")
-        lab = assign_clusters(
-            ids, e, checkpoint_dir=checkpoint_dir,
-            local_max_edges=local_max_edges, release=regime.sweep,
-        )
+        lab = assign_clusters(ids, e, regime)
         col = f"cluster_t{int(round(t * 100)):02d}"
         out = out.join(lab.withColumnRenamed("cluster_id", col), "id")
     return out

@@ -137,7 +137,7 @@ class DedupConfig:
     # conv and 2.76M-turn/136k-conv scaling ladders sit eager.
     # NON-SEMANTIC — identical output either way (pinned by
     # tests/test_pipeline_e2e.py just below and just above the threshold).
-    # Read once per run, by hsip/barrier.py Regime.for_run.
+    # Read once per run, by hsip/barrier.py Regime.fit.
     eager_barrier_min_docs: int = 25_000
     # reliable barriers: when set, every eager barrier of an EPHEMERAL run
     # (hsip/barrier.py: base, features, bucket tables, channel outputs,

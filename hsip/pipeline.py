@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import verify as V
-from .barrier import Barrier, Regime, job_label
+from .barrier import Regime, job_label
 from .catalog import Catalog
 from .cc import assign_clusters, canonical_representatives, quality_representatives
 from .checkpoint import Checkpointer, fingerprint_aggs, fingerprint_str
@@ -164,7 +164,7 @@ def run_documents(
     catalog = Catalog(spark, warehouse) if use_ckpt else None
     # how every barrier of this run materializes: flat blocks in ephemeral
     # runs, cache+count (lineage kept) in warehouse runs (hsip/barrier.py)
-    barrier = Barrier.for_run(cfg, warehouse)
+    regime = Regime.for_run(cfg, warehouse)
 
     # Always materialize base: >1 channel consumes it. Eager barriers
     # matter: AQE materializes independent query-stage futures
@@ -179,7 +179,7 @@ def run_documents(
     # instead of serving stale checkpoints (ADVICE.md r2).
     aggs = fingerprint_aggs() if use_ckpt else fingerprint_aggs()[:1]
     obs = Observation()
-    base = barrier(
+    base = regime.barrier(
         docs.select(
             F.col(id_col).cast("string").alias("id"), F.col(text_col).alias("text")
         ).observe(obs, *aggs),
@@ -221,7 +221,7 @@ def run_documents(
             with job_label(spark.sparkContext, name):
                 out = build()
                 if reuse:
-                    out = barrier(out)
+                    out = regime.barrier(out)
         stage_walls[name] = round(time.time() - t0, 3)
         if swept:
             regime.sweep.append(out)
@@ -230,9 +230,10 @@ def run_documents(
     stats: dict = {"stage_walls": stage_walls}
     mh_sh = tuple(c for c in ("minhash_lsh", "simhash") if c in channels)
 
-    # the run's physical regime, decided once (hsip/barrier.py Regime; r6
-    # A/B at 57k turns: latency 10.4 s -> 7.8 s, identical output)
-    regime = Regime.for_run(spark, cfg, n_docs, barrier)
+    # the run's physical regime, decided once from its size (hsip/barrier.py
+    # Regime.fit; r6 A/B at 57k turns: latency 10.4 s -> 7.8 s, identical
+    # output)
+    regime.fit(spark, cfg, n_docs)
     stats["eager_barriers"] = regime.eager
     stats["shuffle_width"] = regime.width
     # the sweep and base release on exit, whether or not the run succeeds
@@ -324,7 +325,8 @@ def run_documents(
                 # eager barrier: pairs_from_buckets contract (sizes groupBy
                 # and join-back both scan the bucket table, which keeps its
                 # hash layout through the barrier)
-                both = barrier(channel_bucket_table(feats, cfg, mh_sh), release=regime.sweep)
+                both = regime.barrier(channel_bucket_table(feats, cfg, mh_sh),
+                                      release=regime.sweep)
                 # a count per requested channel, so a 0 reads as "measured,
                 # none hot" rather than "not measured"; observed by the
                 # action that runs the pairs (checkpoint write or verify)
@@ -442,10 +444,7 @@ def run_documents(
         # labels exist.
         clusters = stage(
             "clusters",
-            lambda: assign_clusters(
-                base, V.edges(verified), id_col="id",
-                checkpoint_dir=cfg.cc_checkpoint_dir, release=regime.sweep,
-            ),
+            lambda: assign_clusters(base, V.edges(verified), regime),
         )
         regime.release()
         if cfg.rep_score_col is not None:

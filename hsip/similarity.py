@@ -375,8 +375,7 @@ def semantic_dedup_pairs(emb: DataFrame, threshold: float,
 def semantic_dedup(emb: DataFrame, threshold: float, dim: int | None = None,
                    n_cells: int = 16, seed: int = 42, id_col: str = "vec_id",
                    vec_col: str = "embedding",
-                   centroids: np.ndarray | None = None, recorder=None,
-                   checkpoint_dir: str | None = None, *,
+                   centroids: np.ndarray | None = None, recorder=None, *,
                    regime: Regime) -> DataFrame:
     """Full semantic dedup: threshold-graph pairs (within IVF cells) ->
     connected components -> one keeper per cluster. Returns
@@ -394,7 +393,7 @@ def semantic_dedup(emb: DataFrame, threshold: float, dim: int | None = None,
     clusters = assign_clusters(
         emb.select(F.col(id_col).alias("id")),
         pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")),
-        checkpoint_dir=checkpoint_dir, release=regime.sweep,
+        regime,
     )
     return clusters.select(
         F.col("id").alias(id_col),

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import schemas
-from .barrier import Barrier, Regime
+from .barrier import Regime
 from .catalog import Catalog
 from .config import DedupConfig
 from .incremental import incremental_verified_pairs
@@ -253,7 +253,7 @@ def run_incremental_ingest(
         # one regime per micro-batch: its blocks keep lineage (cache +
         # count), so a lost executor's partitions are recomputed, and are
         # released once the batch has committed
-        with Regime(Barrier(keep_lineage=True)) as regime:
+        with Regime(keep_lineage=True) as regime:
             new_feats = regime.reused(featurize(convs, "conv_id", "doc_text", cfg))
             # built ONCE, reused for candidates and the index append
             new_bands = regime.reused(band_table(new_feats.select("id", "sig"), cfg))

@@ -84,7 +84,7 @@ def main(argv=None):
 
     from pyspark.sql import functions as F
 
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.catalog import Catalog
     from hsip.config import DedupConfig
     from hsip.packing import pack_sequences
@@ -143,7 +143,7 @@ def main(argv=None):
     n_contaminated = 0
     if args.eval_input:
         evals = spark.read.parquet(args.eval_input)
-        with Regime(Barrier.for_run(cfg)) as regime:
+        with Regime.for_run(cfg) as regime:
             evidence = regime.barrier(substr_decontaminate(
                 passed, "conv_id", "doc_text",
                 evals, args.eval_id_col, args.eval_text_col, cfg, regime,

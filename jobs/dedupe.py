@@ -113,7 +113,7 @@ def main(argv=None):
     if args.tiers:
         from pyspark.sql import functions as F
 
-        from hsip.barrier import Barrier, Regime
+        from hsip.barrier import Regime
         from hsip.cc import tier_score_col, tiered_clusters
 
         thresholds = tuple(float(x) for x in args.tiers.split(","))
@@ -123,11 +123,10 @@ def main(argv=None):
         scored = res.verified.filter("verdict").select(
             "a", "b", tier_score_col().alias("score"),
         )
-        with Regime(Barrier.for_run(cfg)) as regime:
+        with Regime.for_run(cfg) as regime:
             tiered = regime.barrier(tiered_clusters(
                 res.clusters.select("id"), scored,
-                thresholds=thresholds, score_col="score",
-                checkpoint_dir=args.checkpoint_dir, regime=regime,
+                thresholds=thresholds, score_col="score", regime=regime,
             ))
         cat.write(tiered, f"out.{res.run_id}.tiered")
     n = res.clusters.count()

@@ -1,7 +1,8 @@
-"""The eager barrier (hsip/barrier.py): one job, a flat leaf that keeps the
-hash layout, measured bytes for the broadcast gates, a release that
-actually drops the blocks, and the per-run policy (flat, reliable, or
-cache+count for warehouse runs)."""
+"""The run object (hsip/barrier.py Regime): a barrier is one job, a flat
+leaf that keeps the hash layout, measured bytes for the broadcast gates
+and a release that actually drops the blocks; the per-run policy (flat,
+reliable, or cache+count for warehouse runs, and the truncating barrier
+of iterative loops) and the width taken from the run's size."""
 
 from __future__ import annotations
 
@@ -9,18 +10,29 @@ import re
 
 from pyspark.sql import functions as F
 
-from hsip.barrier import Barrier, fits_broadcast, measured_size_bytes
+from hsip.barrier import Regime, fits_broadcast, measured_size_bytes
 from hsip.config import DedupConfig
 
-materialize = Barrier()  # the ephemeral default: executor-local blocks
+materialize = Regime().barrier  # the ephemeral default: executor-local blocks
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def _persisted(spark) -> set[int]:
     return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def _posture(out) -> tuple[bool, bool]:
+    """(lineage kept, reliable checkpoint) of a barrier's output."""
+    rdd = getattr(out, "_hsip_rdd", None)
+    return (out.storageLevel.useMemory,
+            rdd is not None and rdd.getCheckpointFile().isDefined())
 
 
 def _keyed(spark, n=2000):
@@ -111,7 +123,7 @@ def test_reliable_checkpoint_dir(spark, tmp_path):
     release deletes the checkpoint's files."""
     before = _persisted(spark)
     src = _keyed(spark, 300).repartition("k")
-    out = Barrier(str(tmp_path / "ckpt"))(src)
+    out = Regime(checkpoint_dir=str(tmp_path / "ckpt")).barrier(src)
     assert _persisted(spark) - before == set()
     assert measured_size_bytes(out) > 0
     assert sorted(out.collect()) == sorted(src.collect())
@@ -129,7 +141,7 @@ def test_keep_lineage_is_cache_and_count(spark):
     cm = spark._jsparkSession.sharedState().cacheManager()
     src = _keyed(spark, 500).repartition("k")
     sweep: list = []
-    out = Barrier(keep_lineage=True)(src, release=sweep)
+    out = Regime(keep_lineage=True).barrier(src, release=sweep)
     try:
         assert sweep == [out]
         assert out.storageLevel.useMemory
@@ -142,18 +154,44 @@ def test_keep_lineage_is_cache_and_count(spark):
     assert cm.lookupCachedData(src._jdf).isEmpty()
 
 
-def test_barrier_policy_for_run():
-    """One decision per run: warehouse runs keep lineage whatever
-    cc_checkpoint_dir says; ephemeral runs are flat, reliable when
-    cc_checkpoint_dir is set."""
-    cfg, rel = DedupConfig(), DedupConfig(cc_checkpoint_dir="/x")
-    for c in (cfg, rel):
-        b = Barrier.for_run(c, warehouse="/wh")
-        assert b.keep_lineage and b.checkpoint_dir is None
-    b = Barrier.for_run(cfg)
-    assert not b.keep_lineage and b.checkpoint_dir is None
-    b = Barrier.for_run(rel)
-    assert not b.keep_lineage and b.checkpoint_dir == "/x"
+def test_barrier_policy_for_run(spark, tmp_path):
+    """One decision per run, for every combination of warehouse and
+    cc_checkpoint_dir: ``barrier`` keeps lineage in warehouse runs whatever
+    cc_checkpoint_dir says, and is flat in ephemeral runs, reliable when
+    cc_checkpoint_dir is set; ``truncate`` is flat in both, reliable when
+    cc_checkpoint_dir is set. Releasing either drops what it made."""
+    src = _keyed(spark, 200)
+    before = _persisted(spark)
+    for warehouse in (None, "/wh"):
+        for ckpt in (None, str(tmp_path / "ckpt")):
+            regime = Regime.for_run(DedupConfig(cc_checkpoint_dir=ckpt), warehouse)
+            with regime:
+                b = regime.barrier(src, release=regime.sweep)
+                t = regime.truncate(src)
+                regime.sweep.append(t)
+                combo = (warehouse, ckpt)
+                assert _posture(b) == (warehouse is not None,
+                                       warehouse is None and ckpt is not None), combo
+                assert _posture(t) == (False, ckpt is not None), combo
+                assert b.count() == t.count() == 200
+            assert _persisted(spark) == before, combo
+            assert _cache_empty(spark), combo
+    assert not any(tmp_path.rglob("part-*"))
+
+
+def test_regime_fit_sets_width_from_doc_count(spark):
+    """Eager (no width) at or above eager_barrier_min_docs; below it the
+    latency width, ~500 docs per partition with a floor of 8, capped at
+    the session's shuffle width."""
+    from hsip.barrier import session_conf
+
+    cfg = DedupConfig(eager_barrier_min_docs=50_000)
+    cases = ((50_000, None), (60_000, None), (100, 8), (9_000, 18), (40_000, 64))
+    with session_conf(spark, {"spark.sql.shuffle.partitions": "64"}):
+        for n_docs, width in cases:
+            regime = Regime()
+            regime.fit(spark, cfg, n_docs)
+            assert regime.width == width and regime.eager == (width is None), n_docs
 
 
 def test_measured_size_bytes_reads_parquet_scans(spark, tmp_path):
@@ -191,7 +229,7 @@ def test_regime_records_broadcast_hydration_decisions(spark):
     None, and a limit under the measured size declines."""
     from hsip.barrier import Regime
 
-    regime = Regime(materialize)
+    regime = Regime()
     small = regime.reused(_keyed(spark, 500))
     try:
         n = measured_size_bytes(small)
@@ -213,7 +251,7 @@ def test_regime_block_releases_its_sweep_not_what_the_caller_kept(spark):
     from hsip.barrier import Regime
 
     before = _persisted(spark)
-    with Regime(materialize) as regime:
+    with Regime() as regime:
         kept = regime.barrier(_keyed(spark, 100))
         regime.reused(_keyed(spark, 100))
         assert len(_persisted(spark) - before) == 2
@@ -235,7 +273,7 @@ def test_flat_leaf_carries_measured_size(spark, tmp_path):
     sizes = src.groupBy("k").agg(F.count(F.lit(1)).alias("n")) \
         .observe(Observation(), F.count_if(F.col("n") > 3).alias("hot"))
     tagged = src.join(sizes, "k")
-    for barrier in (materialize, Barrier(str(tmp_path / "ckpt"))):
+    for barrier in (materialize, Regime(checkpoint_dir=str(tmp_path / "ckpt")).barrier):
         out = barrier(tagged)
         try:
             size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()

@@ -2,13 +2,16 @@
 self-loop, duplicate edges, empty set; plus a random-graph oracle check."""
 
 import numpy as np
+import pytest
 
+from hsip.barrier import Regime
 from hsip.cc import assign_clusters, canonical_representatives, connected_components
 
 
 def _cc(spark, edges):
     df = spark.createDataFrame(edges, "a string, b string")
-    return {r.id: r.cluster_id for r in connected_components(df).collect()}
+    with Regime() as regime:
+        return {r.id: r.cluster_id for r in connected_components(df, regime).collect()}
 
 
 def test_chain(spark):
@@ -33,7 +36,8 @@ def test_self_loop_and_duplicates(spark):
 
 def test_empty(spark):
     df = spark.createDataFrame([], "a string, b string")
-    assert connected_components(df).count() == 0
+    with Regime() as regime:
+        assert connected_components(df, regime).count() == 0
 
 
 def test_random_graph_matches_union_find(spark):
@@ -67,51 +71,60 @@ def test_random_graph_matches_union_find(spark):
 def test_assign_clusters_singletons(spark):
     ids = spark.createDataFrame([("a",), ("b",), ("c",)], "id string")
     edges = spark.createDataFrame([("a", "b")], "a string, b string")
-    got = {r.id: r.cluster_id for r in assign_clusters(ids, edges).collect()}
+    with Regime() as regime:
+        got = {r.id: r.cluster_id for r in assign_clusters(ids, edges, regime).collect()}
     assert got == {"a": "a", "b": "a", "c": "c"}
 
 
 def test_representatives(spark):
     ids = spark.createDataFrame([("a",), ("b",), ("c",)], "id string")
     edges = spark.createDataFrame([("b", "c")], "a string, b string")
-    reps = {
-        r.cluster_id: (r.representative, r.cluster_size)
-        for r in canonical_representatives(assign_clusters(ids, edges)).collect()
-    }
+    with Regime() as regime:
+        reps = {
+            r.cluster_id: (r.representative, r.cluster_size)
+            for r in canonical_representatives(
+                assign_clusters(ids, edges, regime)).collect()
+        }
     assert reps == {"a": ("a", 1), "b": ("b", 2)}
 
 
-def test_reliable_checkpoint_same_clusters(spark, tmp_path):
+@pytest.mark.parametrize("local_max_edges", [1_000_000, 0], ids=["default", "0"])
+def test_reliable_checkpoint_same_clusters(spark, tmp_path, local_max_edges):
     """cfg-selected reliable checkpoint() (fault-tolerant lineage cut for
-    real clusters) must produce identical components to localCheckpoint."""
-    from hsip.cc import connected_components
-
+    real clusters) must produce identical components to localCheckpoint,
+    on the local union-find path and through the star rounds, and leave
+    no checkpoint file behind once the regime exits."""
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f"), ("g", "h"), ("h", "a")],
         "a string, b string",
     )
-    local = {(r.id, r.cluster_id) for r in connected_components(edges).collect()}
-    reliable = {
-        (r.id, r.cluster_id)
-        for r in connected_components(
-            edges, checkpoint_dir=str(tmp_path / "cc_ckpt")
-        ).collect()
-    }
+    with Regime() as regime:
+        local = {(r.id, r.cluster_id)
+                 for r in connected_components(edges, regime).collect()}
+    ckpt = tmp_path / "cc_ckpt"
+    with Regime(checkpoint_dir=str(ckpt)) as regime:
+        reliable = {
+            (r.id, r.cluster_id)
+            for r in connected_components(
+                edges, regime, local_max_edges=local_max_edges).collect()
+        }
+        assert any(ckpt.rglob("part-*"))
     assert local == reliable
+    assert not any(ckpt.rglob("part-*"))
 
 
 def test_cc_restores_session_confs(spark):
     """The latency-tuned loop (AQE off, fixed small shuffle width) must
     restore the session confs afterward — including on convergence at
     round 0 — so bulk stages after CC keep their AQE/runtime settings."""
-    from hsip.cc import connected_components
-
     before = {
         k: spark.conf.get(k)
         for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     }
     edges = spark.createDataFrame([("a", "b"), ("b", "c")], "a string, b string")
-    got = {(r.id, r.cluster_id) for r in connected_components(edges).collect()}
+    with Regime() as regime:
+        got = {(r.id, r.cluster_id)
+               for r in connected_components(edges, regime).collect()}
     assert got == {("a", "a"), ("b", "a"), ("c", "a")}
     after = {k: spark.conf.get(k) for k in before}
     assert after == before
@@ -167,17 +180,14 @@ def test_nonconvergence_raises_instead_of_mislabeling(spark):
     post-loop extraction assumes a converged star graph, and falling
     through would silently split one component across several
     cluster_ids."""
-    import pytest
-
-    from hsip.cc import connected_components
-
     chain = spark.createDataFrame(
         [(f"n{i}", f"n{i+1}") for i in range(12)], ["a", "b"])
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=1, local_max_edges=0)
-    # same edges converge fine with the default budget
-    out = connected_components(chain, local_max_edges=0)
-    assert out.select("cluster_id").distinct().count() == 1
+    with Regime() as regime:
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(chain, regime, max_iter=1, local_max_edges=0)
+        # same edges converge fine with the default budget
+        out = connected_components(chain, regime, local_max_edges=0)
+        assert out.select("cluster_id").distinct().count() == 1
 
 
 def test_bcubed_hand_example(spark):

@@ -12,6 +12,7 @@ and integer id types, across seeded random graphs and the micro goldens.
 import numpy as np
 import pytest
 
+from hsip.barrier import Regime
 from hsip.cc import connected_components
 
 
@@ -21,8 +22,9 @@ def _collect(df):
 
 def _both_paths(spark, edges, schema):
     df = spark.createDataFrame(edges, schema)
-    local = _collect(connected_components(df, local_max_edges=10**9))
-    dist = _collect(connected_components(df, local_max_edges=0))
+    with Regime() as regime:
+        local = _collect(connected_components(df, regime, local_max_edges=10**9))
+        dist = _collect(connected_components(df, regime, local_max_edges=0))
     return local, dist
 
 
@@ -85,15 +87,17 @@ def test_local_micro_goldens(spark):
     ]
     for edges, want in cases:
         df = spark.createDataFrame(edges, "a string, b string")
-        got = _collect(connected_components(df, local_max_edges=10**9))
+        with Regime() as regime:
+            got = _collect(connected_components(df, regime, local_max_edges=10**9))
         assert got == want
 
 
 def test_local_empty_edges(spark):
     df = spark.createDataFrame([], "a string, b string")
-    out = connected_components(df, local_max_edges=10**9)
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == ["id", "cluster_id"]
+    with Regime() as regime:
+        out = connected_components(df, regime, local_max_edges=10**9)
+        assert out.count() == 0
+        assert [f.name for f in out.schema.fields] == ["id", "cluster_id"]
 
 
 def test_local_lexicographic_min_matches_spark_string_order(spark):

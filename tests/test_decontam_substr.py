@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from hsip.barrier import Barrier, Regime
+from hsip.barrier import Regime
 from hsip.config import DedupConfig
 from hsip.suffixes import substr_cross_candidates, substr_decontaminate
 
@@ -13,7 +13,7 @@ from hsip.suffixes import substr_cross_candidates, substr_decontaminate
 def _decontam(train, evals, cfg, **kw):
     """substr_decontaminate's rows, collected under a regime that is then
     released."""
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         return substr_decontaminate(
             train, "doc_id", "text", evals, "doc_id", "text", cfg, regime, **kw
         ).collect()

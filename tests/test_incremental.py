@@ -3,7 +3,7 @@
 import numpy as np
 import pytest
 
-from hsip.barrier import Barrier, Regime
+from hsip.barrier import Regime
 from hsip.config import DedupConfig
 from hsip.incremental import (
     build_index,
@@ -49,7 +49,7 @@ def test_incremental_matches(spark, corpus):
     bands = idx["bands"].cache()
     feats.count(), bands.count()
 
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         verified = incremental_verified_pairs(
             new_df, "doc_id", "text", feats, bands, cfg, regime
         )
@@ -83,7 +83,7 @@ def test_incremental_hot_index_bucket(spark):
     idx_bands.count()
     new_feats = featurize(new_df, "doc_id", "text", cfg).cache()
 
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         pairs, hot_stats = incremental_candidates(new_feats, idx_bands, cfg, regime)
         got = {(r.a, r.b) for r in pairs.collect()}
         assert ("new001", "old00") in got, got    # bucket min always anchored
@@ -110,7 +110,7 @@ def test_incremental_regime_releases_caches(spark, corpus):
     new_df = spark.createDataFrame(new, "doc_id string, text string")
     idx = build_index(old_df, "doc_id", "text", cfg)
     spark.catalog.clearCache()
-    with Regime(Barrier(), width=8) as regime:
+    with Regime(width=8) as regime:
         verified = incremental_verified_pairs(
             new_df, "doc_id", "text", idx["features"], idx["bands"], cfg, regime,
         )
@@ -140,7 +140,7 @@ def test_incremental_hot_count_is_observed(spark):
     idx_bands = band_table(
         featurize(old_df, "doc_id", "text", cfg).select("id", "sig"), cfg)
     rec = Recorder(spark, catalog=None, run_id="t-inc")
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         new_feats = regime.reused(featurize(new_df, "doc_id", "text", cfg))
         pairs, hot_stats = incremental_candidates(
             new_feats, idx_bands, cfg, regime, recorder=rec)

@@ -15,7 +15,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from hsip.barrier import Barrier, Regime
+from hsip.barrier import Regime
 from hsip.config import DedupConfig
 from tests.test_semantic_dedup import SF_DIR
 
@@ -185,6 +185,30 @@ def _tiered(spark, regime):
     return tiered_clusters(ids, scored, (0.5, 0.9), regime=regime)
 
 
+def _edges(spark):
+    return spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y"), ("b", "a")], "a string, b string")
+
+
+def _cc_local(spark, regime):
+    from hsip.cc import connected_components
+
+    return connected_components(_edges(spark), regime)
+
+
+def _cc_rounds(spark, regime):
+    from hsip.cc import connected_components
+
+    return connected_components(_edges(spark), regime, local_max_edges=0)
+
+
+def _assign(spark, regime):
+    from hsip.cc import assign_clusters
+
+    ids = spark.createDataFrame([(x,) for x in "abcxyz"], "id string")
+    return assign_clusters(ids, _edges(spark), regime)
+
+
 BUILDERS = {
     "lsh_candidates": _lsh,
     "simhash_candidates": _simhash,
@@ -200,6 +224,9 @@ BUILDERS = {
     "weighted_near_dup_pairs": _weighted,
     "phash_near_dup_pairs": _phash,
     "tiered_clusters": _tiered,
+    "connected_components": _cc_local,
+    "connected_components-rounds": _cc_rounds,
+    "assign_clusters": _assign,
 }
 
 
@@ -208,7 +235,7 @@ BUILDERS = {
 def test_builder_leaves_nothing_after_release(spark, name, width):
     spark.catalog.clearCache()
     before = _persisted(spark)
-    with Regime(Barrier(), width=width) as regime:
+    with Regime(width=width) as regime:
         out = BUILDERS[name](spark, regime)
         assert out.count() > 0
         assert regime.sweep, f"{name} materialized nothing on the regime"
@@ -220,7 +247,7 @@ def test_regime_releases_on_failure(spark):
     """A failing block still releases what the builders materialized."""
     before = _persisted(spark)
     with pytest.raises(RuntimeError):
-        with Regime(Barrier()) as regime:
+        with Regime() as regime:
             regime.reused(spark.range(50).select(F.col("id") % 7))
             assert _persisted(spark) - before
             raise RuntimeError("boom")

@@ -11,7 +11,7 @@ import itertools
 import pytest
 from pyspark.sql import functions as F
 
-from hsip.barrier import Barrier, Regime
+from hsip.barrier import Regime
 from hsip.linkage import distinct_names, fuzzy_name_pairs
 from hsip.metrics import Recorder
 
@@ -29,7 +29,7 @@ def _lev(a: str, b: str) -> int:
 
 def _pairs(df, name_col, **kw):
     """fuzzy_name_pairs' rows, collected under a regime that is then released."""
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         return fuzzy_name_pairs(df, name_col, regime=regime, **kw).collect()
 
 
@@ -149,7 +149,7 @@ def test_regime_releases_internal_cache(spark):
         [("green gear",), ("greon gear",), ("brass gear",), ("odd cog",)],
         "p_name string")
     before = ids()
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         out = regime.barrier(fuzzy_name_pairs(local, "p_name", max_dist=2, regime=regime))
     new = ids() - before
     # the materialized result, plus possibly the internal names cache

@@ -3,7 +3,7 @@
 import numpy as np
 
 from hsip import schemas
-from hsip.barrier import Barrier, Regime
+from hsip.barrier import Regime
 from hsip.config import DedupConfig
 from hsip.lsh import band_table, channel_bucket_table, lsh_candidates, pairs_from_buckets
 from hsip.minhash import minhash_signatures_local
@@ -23,7 +23,7 @@ def test_identical_sigs_all_bands_collide(spark):
     df = spark.createDataFrame(
         [("a", sig), ("b", list(sig))], schema=schemas.MINHASH_SIGS
     )
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         pairs, hot = lsh_candidates(df, cfg, regime)
         assert [(r.a, r.b) for r in pairs.collect()] == [("a", "b")]
         assert hot.count() == 0
@@ -87,7 +87,7 @@ def test_s_curve_candidate_probability(spark):
         [(ids[i], [int(x) for x in sigs[i]]) for i in range(len(ids))],
         schema=schemas.MINHASH_SIGS,
     )
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         pairs, _ = lsh_candidates(df, cfg, regime)
         got = {(r.a, r.b) for r in pairs.collect()}
     hits = sum(
@@ -120,7 +120,7 @@ def test_unified_channel_pairs_equal_separate(spark):
     sigs = feats.select("id", "sig")
     sims = feats.select("id", "simhash")
 
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         sep_mh, _ = lsh_candidates(sigs, cfg, regime)
         sep_sh, _ = simhash_candidates(sims, cfg, regime)
         sep = {(r.a, r.b, r.channel) for df in (sep_mh, sep_sh) for r in df.collect()}
@@ -174,7 +174,7 @@ def test_payload_passthrough_small_star_salt(spark):
 def test_verify_jaccard_hamming_payload_and_fallback(spark):
     """Channel-aware verify: simhash pairs read their (simhash_a,
     simhash_b) payload as a projection, minhash pairs hydrate shingles."""
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.config import DedupConfig
     from hsip.verify import verify_jaccard_hamming
 
@@ -194,7 +194,7 @@ def test_verify_jaccard_hamming_payload_and_fallback(spark):
         "a string, b string, channel string, simhash_a long, simhash_b long",
     )
     cols = ["a", "b", "channel", "jaccard", "hamming", "verdict"]
-    regime = Regime(Barrier())
+    regime = Regime()
     got_p = {tuple(r) for r in
              verify_jaccard_hamming(payload, feats, cfg, regime).select(*cols).collect()}
     regime.release()
@@ -208,7 +208,7 @@ def test_verify_shapes_fused_small_equals_split(spark):
     """Scale-adaptive verify (round 5): the small-corpus fused CASE shape
     (latency regime) and the large-corpus channel-aware split (eager
     regime) must emit identical rows."""
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.config import DedupConfig
     from hsip.verify import verify_jaccard_hamming
 
@@ -228,7 +228,7 @@ def test_verify_shapes_fused_small_equals_split(spark):
         "a string, b string, channel string, simhash_a long, simhash_b long",
     )
     cols = ["a", "b", "channel", "jaccard", "hamming", "verdict"]
-    eager, latency = Regime(Barrier()), Regime(Barrier(), width=8)
+    eager, latency = Regime(), Regime(width=8)
     split, fused = (
         {tuple(r) for r in
          verify_jaccard_hamming(payload, feats, cfg, regime)

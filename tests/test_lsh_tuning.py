@@ -4,7 +4,7 @@ channel riding the standard banding machinery."""
 import pytest
 from pyspark.sql import functions as F
 
-from hsip.barrier import Barrier, Regime
+from hsip.barrier import Regime
 from hsip.config import DedupConfig
 from hsip.lsh import (
     lsh_candidate_prob,
@@ -81,7 +81,7 @@ def test_weighted_channel_rides_banding(spark):
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     cfg = DedupConfig(num_perm=32, lsh_bands=8, lsh_rows=4)
     sigs = attach_weighted_minhash(docs, "doc_id", "text", cfg)
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         pairs, _ = lsh_candidates(sigs, cfg, regime, channel="wminhash")
         got = {(r["a"], r["b"], r["channel"]) for r in pairs.collect()}
     assert ("a1", "a2", "wminhash") in got

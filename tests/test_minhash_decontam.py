@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from hsip.barrier import Barrier, Regime
+from hsip.barrier import Regime
 from hsip.config import DedupConfig
 from hsip.incremental import minhash_decontaminate
 
@@ -14,7 +14,7 @@ from hsip.incremental import minhash_decontaminate
 def _decontam(train, evals, cfg, verdict_only=True, **kw):
     """minhash_decontaminate's rows (verdict rows by default), collected
     under a regime that is then released."""
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         out = minhash_decontaminate(
             train, "doc_id", "text", evals, "doc_id", "text", cfg, regime, **kw)
         return (out.filter("verdict") if verdict_only else out).collect()

@@ -26,7 +26,7 @@ from itertools import combinations
 import pytest
 from pyspark.sql import functions as F
 
-from hsip.barrier import Barrier, Regime
+from hsip.barrier import Regime
 from hsip.config import DedupConfig
 from hsip.lsh import lsh_candidates
 from hsip.textkernel import featurize
@@ -80,7 +80,7 @@ def test_minhash_channel_matches_mllib_minhashlsh(spark):
     # ---- our channel: featurize -> banded LSH -> exact-Jaccard verify
     feats = featurize(docs, "doc_id", "text", cfg).cache()
     feats.count()
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         cand, _stats = lsh_candidates(feats.select("id", "sig"), cfg, regime)
         ver = verify_jaccard(cand, feats.select("id", "shingles"), cfg, regime)
         ours = {(r["a"], r["b"])

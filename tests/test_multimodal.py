@@ -5,7 +5,7 @@ import json
 
 import pyspark.sql.functions as F
 
-from hsip.barrier import Barrier, Regime
+from hsip.barrier import Regime
 from hsip.multimodal import (
     MEDIA_SCHEMA,
     extract_audio_features,
@@ -99,7 +99,7 @@ def test_phash_near_dup_pairs(spark):
         ],
         "media_id string, width int, height int, phash long, ok boolean",
     )
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         pairs = {
             (r.media_a, r.media_b): r.hamming
             for r in phash_near_dup_pairs(feats, max_hamming=3, regime=regime).collect()

@@ -174,14 +174,14 @@ def test_input_fingerprint_full_row_sensitivity(spark):
     Now every row's (id, text) hash contributes to the sum."""
     from pyspark.sql import Observation
 
-    from hsip.barrier import Barrier
+    from hsip.barrier import Regime
     from hsip.checkpoint import fingerprint_aggs, fingerprint_str
     from hsip.metrics import observed
 
     def input_fingerprint(df):
         # as a warehouse run takes it: observed on the base barrier's pass
         obs = Observation()
-        Barrier(keep_lineage=True)(df.observe(obs, *fingerprint_aggs())).unpersist()
+        Regime(keep_lineage=True).barrier(df.observe(obs, *fingerprint_aggs())).unpersist()
         return fingerprint_str(observed(obs, "fingerprint"))
 
     base = spark.range(300).selectExpr(
@@ -358,29 +358,40 @@ def test_hot_bucket_metric_recorded_for_every_requested_channel(spark, tmp_path)
     assert rows[("pipeline", "n_verified_edges")] == res.stats["duplicate_pairs"]
 
 
+@pytest.mark.parametrize("reliable_cc", [False, True], ids=["cc_local", "cc_reliable"])
 def test_warehouse_run_keeps_lineage_barriers(spark, corpus, tmp_path_factory,
-                                             monkeypatch):
+                                             monkeypatch, reliable_cc):
     """Warehouse runs are the fault-tolerant mode: in the eager regime,
     where the nested bucket/join-back/hydration barriers engage, every
     barrier outside connected components is cache+count (lineage kept, so
-    a lost executor recomputes instead of failing the run). CC still
-    truncates its lineage, executor-local without cc_checkpoint_dir."""
-    from hsip.barrier import Barrier
+    a lost executor recomputes instead of failing the run), with or
+    without cc_checkpoint_dir. CC still truncates its lineage:
+    executor-local without cc_checkpoint_dir, reliable with it
+    (DEPLOYMENT.md §3), and its checkpoint files are gone after the run."""
+    from hsip.barrier import Regime
+    from tests.test_barrier import _posture
 
     seen = []
-    call = Barrier.__call__
     sc = spark.sparkContext
 
-    def spy(self, df, name=None, release=None):
-        label = name or sc.getLocalProperty("spark.job.description") or ""
-        seen.append((self.keep_lineage, self.checkpoint_dir, label))
-        return call(self, df, name, release)
+    def spy(method):
+        def wrapped(self, df, *args, **kw):
+            name = args[0] if args else kw.get("name")
+            label = name or sc.getLocalProperty("spark.job.description") or ""
+            out = method(self, df, *args, **kw)
+            seen.append((*_posture(out), label))
+            return out
+        return wrapped
 
-    monkeypatch.setattr(Barrier, "__call__", spy)
+    for method in ("barrier", "truncate"):
+        monkeypatch.setattr(Regime, method, spy(getattr(Regime, method)))
     turns, _ = corpus
     wh = str(tmp_path_factory.mktemp("wh_kinds"))
-    res = run_transcripts(spark, turns, DedupConfig(eager_barrier_min_docs=0),
-                          warehouse=wh, run_id="kinds")
+    ckpt = tmp_path_factory.mktemp("cc_ckpt") if reliable_cc else None
+    cfg = DedupConfig(eager_barrier_min_docs=0,
+                      cc_checkpoint_dir=ckpt and str(ckpt))
+    res = run_transcripts(spark, turns, cfg, warehouse=wh,
+                          run_id=f"kinds_{reliable_cc}")
     assert res.stats["eager_barriers"]
     is_cc = [lbl.removeprefix("hsip:").startswith("cc_") for _, _, lbl in seen]
     outside = [s for s, cc in zip(seen, is_cc) if not cc]
@@ -388,8 +399,11 @@ def test_warehouse_run_keeps_lineage_barriers(spark, corpus, tmp_path_factory,
     # base, the bucket table, both join-backs, the fingerprint table, the
     # substr pairs, the eager verify pair and hydration tables
     assert len(outside) >= 8, seen
-    assert all(keep for keep, _, _ in outside), seen
-    assert inside and not any(keep or d for keep, d, _ in inside), seen
+    assert all(keep and not rel for keep, rel, _ in outside), seen
+    assert inside and all(not keep and rel == reliable_cc
+                          for keep, rel, _ in inside), seen
+    if reliable_cc:
+        assert not any(ckpt.rglob("part-*"))
 
 
 def test_reliable_barriers_delete_their_files(spark, corpus, result, tmp_path):
@@ -594,7 +608,7 @@ def test_cap_counts_identical_in_ephemeral_and_warehouse_runs(spark, tmp_path, m
     hot-bucket stats (``hot.count()``) and the anchor-truncation filter.
     The counts land in stats and, with a warehouse, in the metrics table;
     the broadcast-hydration decisions land in stats in both modes."""
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.catalog import Catalog
     from hsip.lsh import channel_bucket_table, pairs_from_buckets
     from hsip.suffixes import fingerprint_table, substr_candidates
@@ -608,7 +622,7 @@ def test_cap_counts_identical_in_ephemeral_and_warehouse_runs(spark, tmp_path, m
                                 bucket_cols=("channel", "bkt_id", "bkt_hash"),
                                 channel=None, payload_cols=("simhash",))
     n_hot = {r["channel"]: r["count"] for r in hot.groupBy("channel").count().collect()}
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         sub_pairs, sub_hot = substr_candidates(
             fingerprint_table(docs, "id", "text", cfg), cfg, regime)
         want = {

@@ -119,7 +119,7 @@ def test_latency_verify_hydration_broadcasts_known_small_features(spark):
     features reach verify the way the pipeline hands them over: through
     the barrier (hsip/barrier.py), whose block-manager measurement is
     what the gate reads. An unmeasured frame declines — fail-safe."""
-    from hsip.barrier import Barrier, fits_broadcast
+    from hsip.barrier import Regime, fits_broadcast
     from hsip.verify import _BCAST_HYDRATE_MAX_BYTES, verify_jaccard_hamming
 
     cfg = DedupConfig(jaccard_threshold=0.5, hamming_d=3)
@@ -127,7 +127,7 @@ def test_latency_verify_hydration_broadcasts_known_small_features(spark):
         [("a", [1, 2, 3, 4], 0), ("b", [1, 2, 3, 9], 1), ("c", [7, 8], 63)],
         "id string, shingles array<long>, simhash long",
     )
-    feats = Barrier()(raw)
+    feats = Regime().barrier(raw)
     # simhash pairs carry their payload, as pairs_from_buckets emits them
     pairs = spark.createDataFrame(
         [("a", "b", "minhash_lsh", None, None), ("a", "c", "simhash", 0, 63)],
@@ -147,12 +147,12 @@ def test_pipeline_latency_features_broadcast_through_barrier(spark):
     """The pipeline's own latency path: featurize, then the barrier the
     features stage uses, then the fused verify — still BroadcastHashJoin
     only, with the gate reading the barrier's measured bytes."""
-    from hsip.barrier import Barrier
+    from hsip.barrier import Regime
     from hsip.verify import verify_jaccard_hamming
 
     cfg = DedupConfig()
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    feats = Barrier()(featurize(docs, "doc_id", "text", cfg))
+    feats = Regime().barrier(featurize(docs, "doc_id", "text", cfg))
     try:
         with _no_auto_broadcast(spark):
             p = plan(verify_jaccard_hamming(_pairs_over(spark, feats), feats,
@@ -206,9 +206,9 @@ def _no_auto_broadcast(spark):
 def _latency():
     """A latency regime, as run_documents builds below
     eager_barrier_min_docs."""
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
 
-    return Regime(Barrier(), width=8)
+    return Regime(width=8)
 
 
 def test_eager_substr_hydration_broadcasts_known_small_text(spark):
@@ -216,7 +216,7 @@ def test_eager_substr_hydration_broadcasts_known_small_text(spark):
     barrier, which keeps its hash layout and measures it; known small, it
     is broadcast into both hydration joins, so neither the pair rows nor
     the corpus text is re-shuffled (no SortMergeJoin over the text)."""
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.suffixes import verify_substr
 
     cfg = DedupConfig()
@@ -228,7 +228,7 @@ def test_eager_substr_hydration_broadcasts_known_small_text(spark):
         [("a", "b", [0], [0])],
         "a string, b string, pos_as array<int>, pos_bs array<int>",
     )
-    regime = Regime(Barrier())
+    regime = Regime()
     out = verify_substr(pairs, docs, "id", "text", cfg, regime)
     try:
         p = plan(out)

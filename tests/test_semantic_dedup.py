@@ -13,7 +13,7 @@ answer).
 import numpy as np
 import pytest
 
-from hsip.barrier import Barrier, Regime
+from hsip.barrier import Regime
 from hsip.similarity import semantic_dedup, semantic_dedup_pairs
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -58,7 +58,7 @@ def _emb(spark):
 
 def _pair_set(spark, **kw):
     """semantic_dedup_pairs' pairs, collected under a released regime."""
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         df = semantic_dedup_pairs(_emb(spark), THRESHOLD, regime=regime, **kw)
         return {(int(r.id_a), int(r.id_b)) for r in df.collect()}
 
@@ -85,7 +85,7 @@ def test_ivf_cells_subset_with_measured_recall(spark, truth):
 
 
 def test_clusters_and_keep_flags(spark, truth):
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         out = semantic_dedup(_emb(spark), THRESHOLD, n_cells=1, regime=regime).collect()
     labels = {int(r.vec_id): int(r.cluster_id) for r in out}
     assert labels == truth[1]

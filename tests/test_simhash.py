@@ -3,7 +3,7 @@
 import numpy as np
 from pyspark.sql import functions as F
 
-from hsip.barrier import Barrier, Regime
+from hsip.barrier import Regime
 from hsip.config import DedupConfig
 from hsip.simhash import (
     attach_simhash,
@@ -75,7 +75,7 @@ def test_probing_guarantee_within_d(spark):
     df = spark.createDataFrame(rows, "id string, simhash long")
     from hsip.simhash import simhash_candidates
 
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         pairs, _ = simhash_candidates(df, cfg, regime)
         got = {(r.a, r.b) for r in pairs.collect()}
     for i in range(30):
@@ -92,7 +92,7 @@ def test_near_identical_found_by_blocks(spark):
         [(1, text), (2, " ".join(toks))], "doc_id int, text string"
     )
     sims = attach_simhash(df, "doc_id", "text", cfg)
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         pairs, _ = simhash_candidates(sims, cfg, regime)
         assert {(r.a, r.b) for r in pairs.collect()} == {("1", "2")}
 

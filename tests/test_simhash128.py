@@ -12,7 +12,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from hsip.barrier import Barrier, Regime
+from hsip.barrier import Regime
 from hsip.config import DedupConfig
 from hsip.simhash import (
     attach_simhash,
@@ -70,7 +70,7 @@ def test_probing_guarantee_within_d_128(spark):
     )
     if d > CFG128.hamming_d:
         pytest.skip(f"perturbation landed at distance {d} > d")
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         pairs, _ = simhash_candidates(sims, CFG128, regime)
         assert {(r.a, r.b) for r in pairs.collect()} == {("1", "2")}
 

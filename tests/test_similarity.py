@@ -3,7 +3,7 @@
 import numpy as np
 import pytest
 
-from hsip.barrier import Barrier, Regime
+from hsip.barrier import Regime
 from hsip.metrics import Recorder
 from hsip.similarity import brute_force_topk, rhp_lsh_topk, rhp_signatures
 
@@ -57,7 +57,7 @@ def test_rhp_lsh_recall_vs_brute_force(spark, emb):
         (r.q_id, r.neighbor_id)
         for r in brute_force_topk(emb, emb, k=3).collect()
     }
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         approx = {
             (r.q_id, r.neighbor_id)
             for r in rhp_lsh_topk(emb, k=3, dim=32, band_bits=4, seed=7,
@@ -75,7 +75,7 @@ def test_rhp_lsh_hot_bucket_not_dropped(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
     rec = Recorder(spark, catalog=None, run_id="t")
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         out = rhp_lsh_topk(
             emb, k=1, dim=8, band_bits=4, seed=7, bucket_cap=8, recorder=rec,
             regime=regime,
@@ -92,7 +92,7 @@ def test_memory_recorder_captures_ann_hot_metric(spark):
     rows = [(i, [1.0] * 8) for i in range(40)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     rec = Recorder(spark, catalog=None, run_id="t")
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         rhp_lsh_topk(
             emb, k=1, dim=8, band_bits=4, seed=7, bucket_cap=8, recorder=rec,
             regime=regime,
@@ -113,7 +113,7 @@ def test_ann_contract_query_cache_hygiene(spark):
             for i in range(30)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     spark.catalog.clearCache()
-    with Regime(Barrier(), width=8) as regime:
+    with Regime(width=8) as regime:
         out = rhp_lsh_topk(emb, k=2, dim=8, band_bits=4, seed=7, regime=regime)
         out = out.cache()
         out.count()

@@ -3,7 +3,7 @@ suffix-array oracle (SURVEY.md §5.3, §7 hard-part 1)."""
 
 import numpy as np
 
-from hsip.barrier import Barrier, Regime
+from hsip.barrier import Regime
 from hsip.config import DedupConfig
 from hsip.suffixes import (
     _rolling_hashes,
@@ -93,7 +93,7 @@ def test_channel_end_to_end_matches_oracle(spark):
     }
     df = spark.createDataFrame(list(docs.items()), "id string, text string")
     fps = fingerprint_table(df, "id", "text", cfg)
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         pairs, _ = substr_candidates(fps, cfg, regime)
         verified = verify_substr(pairs, df, "id", "text", cfg, regime)
         got = {(r.a, r.b) for r in verified.filter("verdict").collect()}
@@ -174,7 +174,7 @@ def test_hot_fingerprint_star_pairing(spark):
     docs = [(f"x{i}", boiler + f" unique tail {i}") for i in range(8)]
     df = spark.createDataFrame(docs, "id string, text string")
     fps = fingerprint_table(df, "id", "text", cfg)
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         pairs, hot = substr_candidates(fps, cfg, regime)
         assert hot.count() > 0
         verified = verify_substr(pairs, df, "id", "text", cfg, regime)
@@ -204,7 +204,7 @@ def test_anchor_positions_deterministic(spark):
     fps.count()
 
     def anchors(nparts):
-        with Regime(Barrier()) as regime:
+        with Regime() as regime:
             pairs, _ = substr_candidates(fps.repartition(nparts).cache(), cfg, regime)
             return {
                 (r.a, r.b): (list(r.pos_as), list(r.pos_bs), r.n_anchors)
@@ -225,7 +225,7 @@ def test_shared_expansion_anchors_and_layout(spark):
     import re
     from itertools import combinations
 
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
 
     cfg = DedupConfig(min_substr_len=40, winnow_window=10,
                       substr_bucket_cap=3, max_anchors_per_pair=4)
@@ -260,7 +260,7 @@ def test_shared_expansion_anchors_and_layout(spark):
     assert want_hot and any(2 <= len(r) <= cfg.substr_bucket_cap for r in buckets.values())
     assert any(n > acap for n, _, _ in want.values())
 
-    for regime in (Regime(Barrier()), Regime(Barrier(), width=8)):
+    for regime in (Regime(), Regime(width=8)):
         try:
             pairs, hot = substr_candidates(fps, cfg, regime)
             rows = pairs.collect()

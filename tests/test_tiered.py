@@ -4,13 +4,13 @@ nested-refinement property, singleton coverage, determinism."""
 import pytest
 from pyspark.sql import functions as F
 
-from hsip.barrier import Barrier, Regime
+from hsip.barrier import Regime
 from hsip.cc import tiered_clusters
 
 
 def _tiers(ids, scored, thresholds):
     """tiered_clusters' rows, collected under a regime that is then released."""
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         return tiered_clusters(ids, scored, thresholds, regime=regime).collect()
 
 

@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from hsip.barrier import Barrier, Regime
+from hsip.barrier import Regime
 from hsip.config import DedupConfig
 from hsip.wminhash import (
     _icws_batch,
@@ -158,7 +158,7 @@ def test_weighted_near_dup_pairs_exact_vs_brute_force(spark):
     docs = spark.createDataFrame(list(texts.items()), ["doc_id", "text"])
     cfg = DedupConfig(num_perm=64, lsh_bands=64, lsh_rows=1,
                       jaccard_threshold=0.5)
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         got = {
             (r["a"], r["b"])
             for r in weighted_near_dup_pairs(docs, "doc_id", "text", cfg, regime).collect()
@@ -190,7 +190,7 @@ def test_verify_wjaccard_values_exact(spark):
         [("x", "a a b c"), ("y", "a b b c")], ["doc_id", "text"]
     )
     cfg = DedupConfig(num_perm=32, lsh_bands=32, lsh_rows=1)
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         rows = weighted_near_dup_pairs(docs, "doc_id", "text", cfg, regime,
                                        threshold=0.5).collect()
     assert len(rows) == 1
@@ -216,7 +216,7 @@ def test_empty_doc_pairs_get_verdict_rows(spark):
                       jaccard_threshold=0.5)
 
     # end-to-end: the sentinel makes the two empty docs collide
-    with Regime(Barrier()) as regime:
+    with Regime() as regime:
         got = {
             (r["a"], r["b"]): (r["wjaccard"], r["verdict"])
             for r in weighted_near_dup_pairs(docs, "doc_id", "text", cfg, regime).collect()

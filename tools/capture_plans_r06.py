@@ -54,7 +54,7 @@ def explain_eager_transcripts(spark) -> None:
 
     from hsip import schemas
     from hsip import verify as V
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.config import DedupConfig
     from hsip.fixtures.gen import gen_transcripts
     from hsip.lsh import channel_bucket_table, pairs_from_buckets
@@ -66,7 +66,7 @@ def explain_eager_transcripts(spark) -> None:
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     turns = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
     cfg = DedupConfig(eager_barrier_min_docs=0)
-    regime = Regime(Barrier())
+    regime = Regime()
     try:
         base = regime.reused(reassemble(dedupe_turn_versions(turns)).select(
             F.col("conv_id").alias("id"), F.col("doc_text").alias("text")))
@@ -97,7 +97,7 @@ def main() -> None:
     import __spark_entry__ as E
     from pyspark.sql import functions as F
 
-    from hsip.barrier import Barrier, Regime
+    from hsip.barrier import Regime
     from hsip.config import DedupConfig
     from hsip.lsh import channel_bucket_table, pairs_from_buckets
     from hsip.session import get_spark
@@ -113,7 +113,7 @@ def main() -> None:
     )
 
     # --- substr channel: candidates -> span verify (the V4 chain) ---
-    regime = Regime(Barrier(), width=8)
+    regime = Regime(width=8)
     fps = fingerprint_table(base, "id", "text", cfg)
     pairs, _hot = substr_candidates(fps, cfg, regime)
     sub_verified = verify_substr(pairs, base, "id", "text", cfg, regime)
