@@ -28,8 +28,7 @@ from pyspark.sql import functions as F
 from . import verify as V
 from .barrier import Regime
 from .config import DedupConfig
-from .lsh import lsh_candidates
-from .simhash import simhash_candidates
+from .lsh import mh_sh_candidates
 from .suffixes import (
     duplicate_spans_local,
     fingerprint_table,
@@ -42,23 +41,22 @@ from .textkernel import featurize
 def channel_outputs(docs: DataFrame, id_col: str, text_col: str,
                     cfg: DedupConfig) -> dict[str, set]:
     """Verified (a, b) pair sets per channel, as the pipeline computes
-    them (featurize -> candidates -> exact verification)."""
+    them: featurize -> mh_sh_candidates -> verify_jaccard_hamming, split
+    by channel; fingerprint_table -> substr_candidates -> verify_substr."""
+    channels = ("minhash_lsh", "simhash")
     with Regime.for_run(cfg) as regime:  # eager
         feats = regime.reused(featurize(docs, id_col, text_col, cfg))
-
-        lsh_pairs, _ = lsh_candidates(feats.select("id", "sig"), cfg, regime)
-        vj = V.verify_jaccard(lsh_pairs, feats.select("id", "shingles"), cfg, regime)
-        got_j = {(r.a, r.b) for r in vj.filter("verdict").collect()}
-
-        sp, _ = simhash_candidates(feats.select("id", "simhash"), cfg, regime)
-        vh = V.verify_hamming(sp, feats.select("id", "simhash"), cfg)
-        got_h = {(r.a, r.b) for r in vh.filter("verdict").collect()}
+        pairs = mh_sh_candidates(feats, cfg, channels, regime)
+        v = V.verify_jaccard_hamming(pairs, feats, cfg, regime)
+        got = {ch: set() for ch in channels}
+        for r in v.filter("verdict").collect():
+            got[r.channel].add((r.a, r.b))
 
         fps = regime.reused(fingerprint_table(docs, id_col, text_col, cfg))
         sub_pairs, _ = substr_candidates(fps, cfg, regime)
         vs = verify_substr(sub_pairs, docs, id_col, text_col, cfg, regime)
-        got_s = {(r.a, r.b) for r in vs.filter("verdict").collect()}
-    return {"minhash_lsh": got_j, "simhash": got_h, "substr": got_s}
+        got["substr"] = {(r.a, r.b) for r in vs.filter("verdict").collect()}
+    return got
 
 
 def exact_truths(docs: DataFrame, id_col: str, text_col: str,

@@ -20,10 +20,9 @@ class DedupConfig:
     shingle_k: int = 5              # token k-grams
     # MinHash (G2) — num_perm = lsh_bands * lsh_rows
     num_perm: int = 128
+    # signatures are one-permutation hashing + rotation densification,
+    # O(S+P) per doc (NIPS'12/ICML'14; minhash.py), at any num_perm
     seed: int = 42
-    # "oph" = one-permutation hashing + rotation densification, O(S+P)
-    # (NIPS'12/ICML'14); "classic" = per-permutation affine MinHash, O(S*P)
-    minhash_variant: str = "oph"
     # LSH banding (G3/G4); threshold ~ (1/b)^(1/r) = (1/32)^(1/4) ~ 0.42
     lsh_bands: int = 32
     lsh_rows: int = 4
@@ -117,7 +116,9 @@ class DedupConfig:
     lowercase: bool = True
     collapse_ws: bool = True
     strip_punct: bool = False
-    nfc: bool = False               # Unicode NFC (pandas UDF; off for oracle parity)
+    # Unicode NFC (the one pandas UDF in normalize.norm_text_col, the
+    # normalizer every channel shares); off for oracle parity
+    nfc: bool = False
     # ops
     max_turns_per_conv: int = 10_000  # spill guard, logged when hit (§4.2.5)
     # scale-proportional physical regime (VERDICT r4 item 1): at/above

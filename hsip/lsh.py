@@ -276,8 +276,32 @@ def lsh_candidates(sig_df: DataFrame, cfg: DedupConfig, regime: Regime,
     bands = regime.reused(band_table(sig_df, cfg).repartition("band_id", "band_hash"))
     return pairs_from_buckets(
         bands, cfg.bucket_cap, channel=channel,
-        hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
+        hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed, regime=regime,
     )
+
+
+def mh_sh_candidates(features: DataFrame, cfg: DedupConfig,
+                     channels: tuple[str, ...], regime: Regime,
+                     hot_counts: dict[str, Observation] | None = None) -> DataFrame:
+    """(id, sig, simhash) features -> the MinHash+SimHash candidate pairs
+    (a, b, channel, simhash_a, simhash_b) of the requested ``channels``,
+    for ``verify.verify_jaccard_hamming``: the pipeline's chain, and the
+    one ``audit.channel_outputs`` scores.
+
+    The unified bucket table passes a barrier (pairs_from_buckets
+    contract: the sizes groupBy and the join-back both scan it, and it
+    keeps its hash layout through the barrier) that joins ``regime``'s
+    sweep. ``hot_counts`` as in pairs_from_buckets, one per channel.
+    """
+    both = regime.barrier(channel_bucket_table(features, cfg, channels),
+                          release=regime.sweep)
+    pairs, _ = pairs_from_buckets(
+        both, cfg.bucket_cap,
+        bucket_cols=("channel", "bkt_id", "bkt_hash"), channel=None,
+        hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
+        payload_cols=("simhash",), regime=regime, hot_counts=hot_counts,
+    )
+    return pairs
 
 
 def lsh_candidate_prob(s: float, bands: int, rows: int) -> float:

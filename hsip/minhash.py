@@ -1,23 +1,18 @@
-"""G2 — MinHash signatures as an Iterator pandas UDF (Arrow-batched).
+"""G2 — MinHash signatures by one-permutation hashing, over Arrow batches.
 
-Permutation j is the affine map h_j(x) = a_j*x + b_j (mod 2^64, a_j odd)
-— a bijection of Z_2^64, i.e. a genuine permutation family
-(multiply-shift hashing, Dietzfelbinger et al., J. Algorithms 1997).
-Classic mod-Mersenne-prime hashing (Broder 1997; MMDS ch.3) costs a
-uint64 division per cell — measured 140x the multiply cost in numpy —
-and is unnecessary here because shingle inputs are already
-xxhash64-uniform; the statistical unbiasedness test (tests/test_minhash
-.py::test_unbiasedness) validates collision probability == Jaccard.
-Coefficients are seeded from the config so signatures are deterministic
-across runs/partitions (resume + recall invariants, BASELINE.json:6).
+The permutation is the affine map h(x) = a*x + b (mod 2^64, a odd) — a
+bijection of Z_2^64, i.e. a genuine permutation (multiply-shift hashing,
+Dietzfelbinger et al., J. Algorithms 1997); no mod-Mersenne-prime
+division is needed because shingle inputs are already hash-uniform. The
+statistical unbiasedness test (tests/test_minhash.py::test_unbiasedness)
+validates collision probability == Jaccard. Coefficients are seeded from
+the config so signatures are deterministic across runs/partitions
+(resume + recall invariants, BASELINE.json:6).
 
-Vectorization: the Iterator form builds the (num_perm,) coefficient
-vectors once per Python worker; each Arrow batch is processed as ONE
-numpy broadcast over the concatenated ragged shingle arrays with a
-segmented min (np.minimum.reduceat) — no per-row Python in the hot loop
-(input_hint "no per-row Python", BASELINE.json:15). Row-chunking caps
-the intermediate matrix at ~64 MB per worker regardless of batch shape
-(SURVEY.md §4.2.4).
+Vectorization: each Arrow batch is ONE numpy pass over the list array's
+flat shingle buffer (arrowbuf.list_views) with a scatter-min into bins —
+no per-row Python in the hot loop (input_hint "no per-row Python",
+BASELINE.json:15).
 """
 
 from __future__ import annotations
@@ -25,16 +20,16 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
+from .arrowbuf import list_views, matrix_rows, ragged
 from .config import DedupConfig
 
 _EMPTY_SENTINEL = np.uint64(0xFFFFFFFFFFFFFFFF)
-_CHUNK_CELLS = 8_000_000  # num_perm * shingle-count cells per numpy chunk
 
 
 def _coeffs(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
@@ -44,99 +39,33 @@ def _coeffs(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def _sig_batch(arrs: pd.Series, a: np.ndarray, b: np.ndarray) -> pd.Series:
-    """Vectorized MinHash for one Arrow batch of shingle arrays."""
-    num_perm = len(a)
-    if len(arrs) == 0:
-        return pd.Series([], dtype=object)
-    lens = np.fromiter(
-        (0 if x is None else len(x) for x in arrs), dtype=np.int64, count=len(arrs)
-    )
-    flat = (
-        np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in arrs if x is not None and len(x)]
-        )
-        if lens.sum()
-        else np.array([], dtype=np.int64)
-    )
-    flat = flat.view(np.uint64)
-    out = np.empty((len(arrs), num_perm), dtype=np.uint64)
-    # segment boundaries within the flat array
-    starts = np.zeros(len(arrs), dtype=np.int64)
-    np.cumsum(lens[:-1], out=starts[1:])
-    # chunk rows so (num_perm x chunk_shingles) stays bounded
-    max_shingles = max(1, _CHUNK_CELLS // num_perm)
-    row = 0
-    while row < len(arrs):
-        end = row
-        cells = 0
-        while end < len(arrs) and (cells + lens[end] <= max_shingles or end == row):
-            cells += lens[end]
-            end += 1
-        lo = starts[row]
-        hi = lo + cells
-        seg = flat[lo:hi]
-        if len(seg):
-            # wrapping affine permutation of Z_2^64 — no division
-            h = a[:, None] * seg[None, :] + b[:, None]  # (P, S)
-            # reduceat ONLY over the non-empty rows' segments: an empty
-            # row contributes no flat cells, and clamping its start to
-            # len(seg)-1 would TRUNCATE the preceding row's segment
-            # (reduceat segment i ends at start i+1) — excluding its
-            # last shingle(s) from the min and corrupting that
-            # signature. Same trap simhash._bitvote documents; empty
-            # rows get the sentinel directly.
-            out[row:end] = _EMPTY_SENTINEL
-            nonempty = lens[row:end] > 0
-            if nonempty.any():
-                ne_starts = (starts[row:end][nonempty] - lo).astype(np.int64)
-                mins = np.minimum.reduceat(h, ne_starts, axis=1)  # (P, ne)
-                out[row:end][nonempty] = mins.T
-        else:
-            out[row:end] = _EMPTY_SENTINEL
-        row = end
-    sig64 = out.view(np.int64)
-    return pd.Series(list(sig64))
-
-
-def _oph_batch(arrs: pd.Series, num_perm: int, a0: np.uint64, b0: np.uint64) -> pd.Series:
+def _oph_batch(flat: np.ndarray, lens: np.ndarray, num_perm: int,
+               a0: np.uint64, b0: np.uint64) -> np.ndarray:
     """One-Permutation Hashing (Li/Owen/Zhang, NIPS 2012) with circular
-    rotation densification (Shrivastava & Li, ICML 2014): ONE affine
-    permutation pass over all shingles, scatter-min into num_perm bins by
-    the hash's top bits, then empty bins borrow the nearest non-empty bin
-    to the right (circular). Collision probability per bin == Jaccard;
-    cost O(S + P) per doc vs O(S*P) for the classic kernel — the
-    difference between 29s and <1s per 3k-conversation stage, and between
-    feasible and not at 10^12 turns."""
-    n = len(arrs)
-    if n == 0:
-        return pd.Series([], dtype=object)
-    log_p = int(num_perm).bit_length() - 1
-    assert (1 << log_p) == num_perm, "num_perm must be a power of two for OPH"
-    lens = np.fromiter(
-        (0 if x is None else len(x) for x in arrs), dtype=np.int64, count=n
-    )
-    total = int(lens.sum())
+    rotation densification (Shrivastava & Li, ICML 2014) of a batch in
+    list layout (``flat`` int64 shingles, per-row ``lens``): ONE affine
+    permutation pass over all shingles, scatter-min into num_perm bins,
+    then empty bins borrow the nearest non-empty bin to the right
+    (circular). Collision probability per bin == Jaccard; cost O(S + P)
+    per doc vs O(S*P) for per-permutation MinHash. Returns the (rows,
+    num_perm) int64 signatures; an empty row is all sentinel."""
+    n = len(lens)
     out = np.full((n, num_perm), _EMPTY_SENTINEL, dtype=np.uint64)
-    if total:
-        flat = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in arrs if x is not None and len(x)]
-        ).view(np.uint64)
-        v = a0 * flat + b0  # one wrapping affine permutation of Z_2^64
-        # top-bits bin index: < 2^log_p, so the uint64->int64 VIEW is
-        # value-preserving (an astype here memcpys ~8 bytes/shingle — r6
-        # profile: 3.9 s of the 25.6 s kernel on a 75M-shingle corpus)
-        bins = (v >> np.uint64(64 - log_p)).view(np.int64)
+    if len(flat):
+        v = a0 * flat.view(np.uint64) + b0  # one wrapping affine permutation of Z_2^64
+        # bin = floor(top 32 bits * P / 2^32): < P for any P, and equal to
+        # the top log2(P) bits when P is a power of two. < P, so the
+        # uint64->int64 VIEW is value-preserving (an astype memcpys ~8
+        # bytes/shingle — r6 profile: 3.9 s of a 25.6 s kernel)
+        bins = (((v >> np.uint64(32)) * np.uint64(num_perm)) >> np.uint64(32)).view(np.int64)
         row_ids = np.repeat(np.arange(n, dtype=np.int64), lens)
         np.minimum.at(out.reshape(-1), row_ids * num_perm + bins, v)
     # Rotation densification: empty bin <- nearest non-empty bin to the
-    # right, circularly. Computed in ONE suffix scan over a doubled bin
-    # axis (r6): the previous roll-until-fixpoint loop ran up to
-    # num_perm-1 whole-matrix passes — 19 s of the 25.6 s kernel on the
-    # 554k-turn corpus, because one nearly-empty row keeps every row
-    # rolling. Identical output: position j's fill source is the first
-    # non-empty position >= j in [out, out] (the circular wrap), exactly
-    # what k roll steps converge to.
+    # right, circularly, in ONE suffix scan over a doubled bin axis (r6:
+    # the roll-until-fixpoint loop it replaced ran up to num_perm-1
+    # whole-matrix passes, because one nearly-empty row keeps every row
+    # rolling). Position j's fill source is the first non-empty position
+    # >= j in [out, out] (the circular wrap).
     has_any = lens > 0
     empty = out == _EMPTY_SENTINEL
     if (empty & has_any[:, None]).any():
@@ -149,32 +78,25 @@ def _oph_batch(arrs: pd.Series, num_perm: int, a0: np.uint64, b0: np.uint64) -> 
         out[rows_any] = out[rows_any, :][
             np.arange(len(rows_any))[:, None], src
         ]
-    sig64 = out.view(np.int64)
-    return pd.Series(list(sig64))
+    return out.view(np.int64)
 
 
 def attach_minhash(shingles_df: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(id, shingles) -> (id, sig: array<long> length num_perm)."""
-    num_perm, seed, variant = cfg.num_perm, cfg.seed, cfg.minhash_variant
+    num_perm, seed = cfg.num_perm, cfg.seed
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_sig(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @arrow_udf(T.ArrayType(T.LongType()))
+    def minhash_sig(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         a, b = _coeffs(num_perm, seed)
-        for arrs in it:
-            if variant == "oph":
-                yield _oph_batch(arrs, num_perm, a[0], b[0])
-            else:
-                yield _sig_batch(arrs, a, b)
+        for arr in it:
+            yield matrix_rows(_oph_batch(*list_views(arr), num_perm, a[0], b[0]))
 
-    return shingles_df.select("id", minhash_sig(F.col("shingles")).alias("sig"))
+    shingles = F.coalesce(F.col("shingles"), F.array().cast("array<bigint>"))
+    return shingles_df.select("id", minhash_sig(shingles).alias("sig"))
 
 
 def minhash_signatures_local(shingle_sets: list[list[int]], cfg: DedupConfig) -> np.ndarray:
-    """Driver-local golden for tests — same batch kernels, no Spark."""
+    """Driver-local golden for tests — the same batch kernel, no Spark."""
     a, b = _coeffs(cfg.num_perm, cfg.seed)
-    s = pd.Series([np.asarray(x, dtype=np.int64) for x in shingle_sets])
-    if cfg.minhash_variant == "oph":
-        sigs = _oph_batch(s, cfg.num_perm, a[0], b[0])
-    else:
-        sigs = _sig_batch(s, a, b)
-    return np.vstack(list(sigs))
+    flat, lens = ragged([np.asarray(x, dtype=np.int64) for x in shingle_sets], np.int64)
+    return _oph_batch(flat, lens, cfg.num_perm, a[0], b[0])

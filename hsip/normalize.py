@@ -1,5 +1,10 @@
 """R3 — text normalization. Pure-SQL (codegen'd, JVM-side).
 
+``norm_text_col`` is the one normalizer: featurize (MinHash/SimHash),
+the substring fingerprints, span verify, the SQL shingle path and the
+audit truth all read text through it, so every channel sees the same
+normalized document.
+
 The original ``text`` column is never mutated: the per-turn/byte-exact
 text-equality invariant (/root/repo/BASELINE.json:15) requires the raw
 text to survive the pipeline untouched. Normalization produces a new

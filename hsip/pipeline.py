@@ -34,7 +34,7 @@ from .catalog import Catalog
 from .cc import assign_clusters, canonical_representatives, quality_representatives
 from .checkpoint import Checkpointer, fingerprint_aggs, fingerprint_str
 from .config import DedupConfig
-from .lsh import channel_bucket_table, pairs_from_buckets
+from .lsh import mh_sh_candidates
 from .metrics import Recorder, StageTimer, observed
 from .reassemble import dedupe_turn_versions, reassemble
 from .suffixes import (
@@ -322,24 +322,13 @@ def run_documents(
                           lambda: featurize(chan_base, "id", "text", cfg), swept=True)
 
             def build_cands():
-                # eager barrier: pairs_from_buckets contract (sizes groupBy
-                # and join-back both scan the bucket table, which keeps its
-                # hash layout through the barrier)
-                both = regime.barrier(channel_bucket_table(feats, cfg, mh_sh),
-                                      release=regime.sweep)
                 # a count per requested channel, so a 0 reads as "measured,
                 # none hot" rather than "not measured"; observed by the
                 # action that runs the pairs (checkpoint write or verify)
                 hot_counts = {ch: rec.observation(f"{ch}_candidates",
                                                   "hot_buckets_star_paired")
                               for ch in mh_sh}
-                pairs, _ = pairs_from_buckets(
-                    both, cfg.bucket_cap,
-                    bucket_cols=("channel", "bkt_id", "bkt_hash"), channel=None,
-                    hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
-                    payload_cols=("simhash",), regime=regime, hot_counts=hot_counts,
-                )
-                return pairs
+                return mh_sh_candidates(feats, cfg, mh_sh, regime, hot_counts)
 
             cands = stage("candidates_mh_sh", build_cands, reuse=False)
             # materialize the channel's verdicts ON THIS THREAD (r6): lazy

@@ -15,15 +15,14 @@ bucket generates candidates; bit_count(xor) <= d verifies (verify.py V3).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
+from .arrowbuf import list_views, matrix_rows, ragged
 from .barrier import Regime
 from .config import DedupConfig
 from .lsh import pairs_from_buckets
@@ -32,8 +31,10 @@ from .normalize import norm_text_col, tokens_col
 _BIT_SHIFTS = np.arange(64, dtype=np.uint64)
 
 
-def _simhash_batch(arrs: pd.Series) -> pd.Series:
-    """Segmented bit-vote, one 1-D add.reduceat per bit column.
+def _simhash_batch(flat: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Segmented bit-vote over a batch in list layout (``flat`` int64
+    token hashes, per-row ``lens``), one 1-D add.reduceat per bit column;
+    returns one int64 fingerprint per row.
 
     The obvious vectorization — materialize a (tokens, 64) vote matrix —
     costs 16 GB and ~560 s for a 64M-token batch; 64 passes of
@@ -42,19 +43,11 @@ def _simhash_batch(arrs: pd.Series) -> pd.Series:
     from the reduceat index list entirely (clamping them corrupts the
     preceding row's segment) and emit simhash 0.
     """
-    n = len(arrs)
-    if n == 0:
-        return pd.Series([], dtype=np.int64)
-    lens = np.fromiter(
-        (0 if x is None else len(x) for x in arrs), dtype=np.int64, count=n
-    )
-    total = int(lens.sum())
+    n = len(lens)
     out = np.zeros(n, dtype=np.uint64)
-    if total == 0:
-        return pd.Series(out.view(np.int64))
-    flat = np.concatenate(
-        [np.asarray(x, dtype=np.int64) for x in arrs if x is not None and len(x)]
-    ).view(np.uint64)
+    if len(flat) == 0:
+        return out.view(np.int64)
+    flat = flat.view(np.uint64)
     nz = lens > 0
     starts_all = np.zeros(n, dtype=np.int64)
     np.cumsum(lens[:-1], out=starts_all[1:])
@@ -79,7 +72,7 @@ def _simhash_batch(arrs: pd.Series) -> pd.Series:
         axis=1, dtype=np.uint64
     )
     out[nz] = packed
-    return pd.Series(out.view(np.int64))
+    return out.view(np.int64)
 
 
 def attach_simhash(df: DataFrame, id_col: str, text_col: str, cfg: DedupConfig) -> DataFrame:
@@ -91,24 +84,12 @@ def attach_simhash(df: DataFrame, id_col: str, text_col: str, cfg: DedupConfig) 
     64-bit bit-vote over independently-seeded token hashes
     ``xxhash64(token, seed + l)`` — lane 0 is bit-identical to the 64-bit
     fingerprint, so widening never changes the low lane's semantics.
+    NULL text votes like "" (fingerprint 0), as in featurize.
     """
     seed = cfg.seed
-    toks = tokens_col(norm_text_col(text_col, cfg))
+    toks = tokens_col(F.coalesce(norm_text_col(text_col, cfg), F.lit("")))
     lanes = cfg.simhash_bits // 64
-    if lanes == 1:
-        token_hashes = F.transform(toks, lambda t: F.xxhash64(t, F.lit(seed)))
-
-        @pandas_udf(T.LongType())
-        def simhash64(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            for arrs in it:
-                yield _simhash_batch(arrs)
-
-        return df.select(
-            F.col(id_col).cast("string").alias("id"),
-            simhash64(token_hashes).alias("simhash"),
-        )
-
-    assert lanes == 2  # config validates simhash_bits in (64, 128)
+    assert lanes in (1, 2)  # config validates simhash_bits in (64, 128)
 
     def _lane_hash(lane_seed: int):
         # single-param lambda: a 2-param one would receive F.transform's
@@ -116,18 +97,20 @@ def attach_simhash(df: DataFrame, id_col: str, text_col: str, cfg: DedupConfig) 
         return F.transform(toks, lambda t: F.xxhash64(t, F.lit(lane_seed)))
 
     lane_hashes = [_lane_hash(seed + l) for l in range(lanes)]
+    if lanes == 1:
+        @arrow_udf(T.LongType())
+        def simhash64(hashes: pa.Array) -> pa.Array:
+            return pa.array(_simhash_batch(*list_views(hashes)))
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def simhash_lanes(c0: pd.Series, c1: pd.Series) -> pd.Series:
-        stacked = np.stack(
-            [_simhash_batch(c).to_numpy() for c in (c0, c1)], axis=1
-        ).astype(np.int64)
-        return pd.Series(list(stacked))
+        sim = simhash64(*lane_hashes)
+    else:
+        @arrow_udf(T.ArrayType(T.LongType()))
+        def simhash_lanes(c0: pa.Array, c1: pa.Array) -> pa.Array:
+            return matrix_rows(np.stack(
+                [_simhash_batch(*list_views(c)) for c in (c0, c1)], axis=1))
 
-    return df.select(
-        F.col(id_col).cast("string").alias("id"),
-        simhash_lanes(*lane_hashes).alias("simhash"),
-    )
+        sim = simhash_lanes(*lane_hashes)
+    return df.select(F.col(id_col).cast("string").alias("id"), sim.alias("simhash"))
 
 
 def hamming_block_table(simhash_df: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -234,10 +217,14 @@ def simhash_candidates(simhash_df: DataFrame, cfg: DedupConfig,
         cfg.bucket_cap,
         bucket_cols=("table_id", "key_hash"),
         channel="simhash",
+        hot_policy=cfg.hot_bucket_policy,
+        salt_seed=cfg.seed,
         payload_cols=("simhash",),
+        regime=regime,
     )
 
 
 def simhash_local(token_hash_sets: list[list[int]]) -> np.ndarray:
     """Driver-local golden implementation for tests."""
-    return _simhash_batch(pd.Series([np.asarray(x) for x in token_hash_sets])).to_numpy()
+    return _simhash_batch(*ragged(
+        [np.asarray(x, dtype=np.int64) for x in token_hash_sets], np.int64))

@@ -1,5 +1,5 @@
 """Fused text featurization kernel: text -> (shingles, minhash sig,
-simhash) in ONE Arrow-batched numpy pass via mapInPandas.
+simhash) in ONE Arrow-batched numpy pass via mapInArrow.
 
 Why this exists (measured on the 554k-turn corpus): the pure-SQL paths
 (shingle.py / simhash.py token hashing) evaluate higher-order-function
@@ -7,7 +7,9 @@ lambdas INTERPRETED, one expression-tree eval per array element —
 ~20-30us per token, ~5,000 CPU-s for 64M tokens. This kernel computes
 the same features at memory bandwidth:
 
-  - normalization: pandas vectorized str ops (C-backed)
+  - normalization: the JVM normalizer every channel shares
+    (normalize.norm_text_col), NULL text as ""; the kernel reads each
+    batch's utf-8 buffer as numpy (arrowbuf.utf8_views), no copy
   - token k-gram hashes: polynomial rolling prefix hashes over the raw
     bytes — hash(span) = (pref[end]-pref[start]) * B^-start, O(1) per
     gram after an O(n) prefix pass (same machinery as suffixes.py)
@@ -26,40 +28,24 @@ distinct-shingle counts and pairwise exact Jaccard.
 
 from __future__ import annotations
 
-import functools
-import re
-import sys
-import unicodedata
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .arrowbuf import list_array, matrix_rows, ragged, utf8_views
 from .config import DedupConfig
-from .minhash import _coeffs, _oph_batch, _sig_batch
+from .minhash import _coeffs, _oph_batch
+from .normalize import norm_text_col
 from .simhash import _simhash_batch
 
 _B = np.uint64(1000003)
 _BINV = np.uint64(pow(1000003, -1, 1 << 64))
 _MIX1 = np.uint64(0xFF51AFD7ED558CCD)
 _MIX2 = np.uint64(0xC4CEB9FE1A85EC53)
-
-
-@functools.cache
-def _punct_pattern() -> str:
-    r"""strip_punct's regex: non-word, non-space characters, where word
-    characters are Python's Unicode \w PLUS the combining marks
-    (Mn/Mc/Me) that Java's (?U)\w — the SQL path, normalize.py — also
-    counts. Python's \w alone drops them, splitting NFD-accented words
-    and Indic words at every vowel sign."""
-    marks = "".join(
-        chr(c) for c in range(sys.maxunicode + 1)
-        if unicodedata.category(chr(c)).startswith("M")
-    )
-    return f"[^\\w\\s{re.escape(marks)}]"
 
 
 def _features_schema(simhash_bits: int) -> T.StructType:
@@ -153,65 +139,35 @@ def _doc_features(data: np.ndarray, k: int, seed: np.uint64) -> tuple[np.ndarray
 
 def featurize(df: DataFrame, id_col: str, text_col: str, cfg: DedupConfig) -> DataFrame:
     """(id, text) -> (id, shingles, sig, simhash), one fused numpy pass."""
-    k, seed, num_perm, variant = cfg.shingle_k, cfg.seed, cfg.num_perm, cfg.minhash_variant
-    lowercase, collapse, nfc = cfg.lowercase, cfg.collapse_ws, cfg.nfc
-    strip_punct = cfg.strip_punct
+    k, seed, num_perm = cfg.shingle_k, cfg.seed, cfg.num_perm
     sim_lanes = cfg.simhash_bits // 64
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         a, b = _coeffs(num_perm, seed)
         seed64 = np.uint64(seed)
-        for pdf in batches:
-            texts = pdf[text_col].astype("string").fillna("")
-            if nfc:
-                texts = texts.str.normalize("NFC")
-            if lowercase:
-                texts = texts.str.lower()
-            if strip_punct:
-                # replace with space, collapse handles runs
-                texts = texts.str.replace(_punct_pattern(), " ", regex=True)
-            if collapse:
-                texts = texts.str.replace(r"\s+", " ", regex=True).str.strip()
-            sh_list, tok_list = [], []
-            for s in texts:
-                data = np.frombuffer(s.encode("utf-8"), dtype=np.uint8)
-                sh, th = _doc_features(data, k, seed64)
-                sh_list.append(sh.view(np.int64))
-                tok_list.append(th.view(np.int64))
-            sh_series = pd.Series(sh_list)
-            if variant == "oph":
-                sigs = _oph_batch(sh_series, num_perm, a[0], b[0])
-            else:
-                sigs = _sig_batch(sh_series, a, b)
-            if sim_lanes == 1:
-                sims = _simhash_batch(pd.Series(tok_list)).astype(np.int64)
-            else:
-                # lane l votes over remixed token hashes (lane 0 = the
-                # base hashes, matching the 64-bit output bit-for-bit);
-                # mirrors attach_simhash's per-lane independent seeding
-                lane_vals = []
-                for lane in range(sim_lanes):
-                    if lane == 0:
-                        tl = tok_list
-                    else:
-                        lseed = np.uint64((seed + 0x9E3779B9 * lane) & (2**64 - 1))
-                        tl = [
-                            _mix(t.view(np.uint64), lseed).view(np.int64)
-                            for t in tok_list
-                        ]
-                    lane_vals.append(_simhash_batch(pd.Series(tl)).to_numpy())
-                sims = list(np.stack(lane_vals, axis=1).astype(np.int64))
-            # numpy arrays pass straight through Arrow list conversion —
-            # never box 40M shingle hashes into Python ints
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].astype(str),
-                    "shingles": sh_list,
-                    "sig": list(sigs),
-                    "simhash": sims,
-                }
+        for batch in batches:
+            offsets, data = utf8_views(batch.column(1))
+            feats = [_doc_features(data[offsets[i]:offsets[i + 1]], k, seed64)
+                     for i in range(batch.num_rows)]
+            sh, sh_lens = ragged([f[0] for f in feats], np.uint64)
+            tok, tok_lens = ragged([f[1] for f in feats], np.uint64)
+            sigs = _oph_batch(sh, sh_lens, num_perm, a[0], b[0])
+            # lane l votes over remixed token hashes (lane 0 = the base
+            # hashes, matching the 64-bit output bit-for-bit); mirrors
+            # attach_simhash's per-lane independent seeding
+            lanes = [tok] + [
+                _mix(tok, np.uint64((seed + 0x9E3779B9 * lane) & (2**64 - 1)))
+                for lane in range(1, sim_lanes)
+            ]
+            sims = np.stack([_simhash_batch(t, tok_lens) for t in lanes], axis=1)
+            sim_col = pa.array(sims[:, 0]) if sim_lanes == 1 else matrix_rows(sims)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), list_array(sh.view(np.int64), sh_lens),
+                 matrix_rows(sigs), sim_col],
+                names=["id", "shingles", "sig", "simhash"],
             )
 
-    return df.select(F.col(id_col).cast("string").alias(id_col), text_col).mapInPandas(
+    text = F.coalesce(norm_text_col(text_col, cfg), F.lit(""))
+    return df.select(F.col(id_col).cast("string").alias(id_col), text).mapInArrow(
         run, schema=_features_schema(cfg.simhash_bits)
     )

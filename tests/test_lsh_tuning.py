@@ -87,3 +87,22 @@ def test_weighted_channel_rides_banding(spark):
     assert ("a1", "a2", "wminhash") in got
     assert all({p[0], p[1]} != {"a1", "z1"} for p in got)
     assert all({p[0], p[1]} != {"a2", "z1"} for p in got)
+
+
+def test_tuned_config_runs_the_text_pipeline(spark):
+    """tuned_config(0.8) snaps num_perm to bands*rows = 117, not a power
+    of two: featurize's one-permutation kernel must bin at any num_perm
+    (it asserted a power of two inside the executor), and the planted
+    near-duplicate must cluster."""
+    from hsip.pipeline import run_documents
+
+    cfg = tuned_config(0.8)
+    assert cfg.num_perm == 117
+    text = " ".join(f"tok{i}" for i in range(60))
+    docs = spark.createDataFrame(
+        [("a", text), ("b", text + " extra"), ("c", "unrelated words " * 20)],
+        "doc_id string, text string",
+    )
+    res = run_documents(spark, docs, "doc_id", "text", cfg, channels=("minhash_lsh",))
+    labels = {r["id"]: r["cluster_id"] for r in res.clusters.collect()}
+    assert labels["a"] == labels["b"] != labels["c"]

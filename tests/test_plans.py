@@ -267,7 +267,7 @@ def test_latency_substr_prune_broadcasts_pair_ids(spark):
 def test_featurize_boundary_is_arrow_batched(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     p = plan(featurize(docs, "doc_id", "text", DedupConfig()))
-    assert "MapInPandas" in p, p
+    assert "MapInArrow" in p, p
     assert "BatchEvalPython" not in p
 
 

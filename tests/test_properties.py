@@ -8,6 +8,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from hsip.arrowbuf import ragged
 from hsip.config import DedupConfig
 from hsip.minhash import _coeffs, _oph_batch
 from hsip.simhash import _simhash_batch
@@ -16,6 +17,12 @@ from hsip.textkernel import _doc_features
 
 import pandas as pd
 import pytest
+
+
+def _rows(*rows):
+    """List-layout (flat, lens) of int64 rows, as the Arrow boundary hands
+    the kernels a batch."""
+    return ragged([np.asarray(r, dtype=np.int64) for r in rows], np.int64)
 
 _text = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=0x24F),
@@ -49,15 +56,14 @@ def test_doc_features_position_independence(t, k):
 def test_oph_deterministic_and_shape(xs, seed):
     cfg = DedupConfig(num_perm=64, lsh_bands=64, lsh_rows=1, seed=seed)
     a, b = _coeffs(cfg.num_perm, cfg.seed)
-    s = pd.Series([np.asarray(xs, dtype=np.int64)])
-    r1 = _oph_batch(s, 64, a[0], b[0])
-    r2 = _oph_batch(s, 64, a[0], b[0])
+    r1 = _oph_batch(*_rows(xs), 64, a[0], b[0])
+    r2 = _oph_batch(*_rows(xs), 64, a[0], b[0])
     assert len(r1[0]) == 64
     assert list(r1[0]) == list(r2[0])
     if xs:
         # identical sets (order shuffled) -> identical signatures
-        s2 = pd.Series([np.asarray(list(reversed(xs)), dtype=np.int64)])
-        assert list(_oph_batch(s2, 64, a[0], b[0])[0]) == list(r1[0])
+        r3 = _oph_batch(*_rows(list(reversed(xs))), 64, a[0], b[0])
+        assert list(r3[0]) == list(r1[0])
 
 
 @settings(max_examples=40, deadline=None)
@@ -65,10 +71,9 @@ def test_oph_deterministic_and_shape(xs, seed):
                 min_size=1, max_size=12))
 def test_simhash_batch_matches_rowwise(rows):
     """Batched segmented bit-vote == computing each row alone."""
-    arrs = pd.Series([np.asarray(r, dtype=np.int64) for r in rows])
-    batched = list(_simhash_batch(arrs))
+    batched = list(_simhash_batch(*_rows(*rows)))
     for i, r in enumerate(rows):
-        alone = _simhash_batch(pd.Series([np.asarray(r, dtype=np.int64)]))[0]
+        alone = _simhash_batch(*_rows(r))[0]
         assert batched[i] == alone
 
 
@@ -180,6 +185,14 @@ _REF_TEXTS = [
     "हिन्दी में कुछ पाठ, और कुछ हिन्दी में",
     "中文 文本 测试 中文", "don't stop-me now", "don t stop me now",
     "one two three four five six seven", "one two three four five six eight",
+    # characters the normalizers of other engines classify differently:
+    # No numerics (word characters to Python only), Pc other than "_" and
+    # ZWJ/ZWNJ (word characters to Java only), U+001C-U+001F (whitespace
+    # to Python only) and NBSP (outside Java's ASCII \s)
+    "x\u00b2 \u00bd one two three four", "a\u203fb one two three four",
+    "a\u200db one two three four", "a\u200cb one two three four",
+    "a\u001cb\u001dc\u001ed\u001fe one two",
+    "a\u00a0b one two three four", "a b one two three four",
 ]
 
 
@@ -277,3 +290,22 @@ def test_config_rejects_degenerate_banding_and_winnowing():
         DedupConfig(min_substr_len=100, winnow_window=0)
     DedupConfig(num_perm=64, lsh_bands=16, lsh_rows=4)  # ok
     DedupConfig(min_substr_len=100)  # k_sa = 1, boundary ok
+
+
+def test_arrow_views_honour_offset_and_64bit_offsets():
+    """The Arrow boundary reads sliced arrays at their offset, with 32-
+    and 64-bit offsets alike, and an empty batch as zero rows."""
+    import pyarrow as pa
+
+    from hsip.arrowbuf import list_views, utf8_views
+
+    texts = ["pad", "héllo", "", "wörld"]
+    for typ in (pa.string(), pa.large_string()):
+        offsets, data = utf8_views(pa.array(texts, typ).slice(1))
+        got = [data[offsets[i]:offsets[i + 1]].tobytes() for i in range(3)]
+        assert got == [t.encode("utf-8") for t in texts[1:]]
+        offsets, data = utf8_views(pa.array([], typ))
+        assert offsets.tolist() == [0] and len(data) == 0
+    for typ in (pa.list_(pa.int64()), pa.large_list(pa.int64())):
+        flat, lens = list_views(pa.array([[9], [1, 2], [], [3]], typ).slice(1))
+        assert flat.tolist() == [1, 2, 3] and lens.tolist() == [2, 0, 1]

@@ -163,3 +163,22 @@ def test_pipeline_emits_entropy_advisory(spark, tmp_path):
         )
     ent = res.stats["probe_key_entropy"]
     assert ent["ok"] and ent["key_bits"] == 40.0
+
+
+def test_hot_bucket_salt_policy_is_honoured(spark):
+    """simhash_candidates passes cfg.hot_bucket_policy and cfg.seed to the
+    bucket expansion: under "salt", a hot bucket of identical fingerprints
+    pairs all members within each salt sub-bucket
+    (pmod(xxhash64(id, seed), ceil(size / cap))), not every member with
+    the bucket minimum (star)."""
+    cfg = DedupConfig(bucket_cap=4, hot_bucket_policy="salt")
+    ids = [f"d{i:02d}" for i in range(12)]
+    df = spark.createDataFrame([(i, 12345) for i in ids], "id string, simhash long")
+    salt_col = F.pmod(F.xxhash64("id", F.lit(cfg.seed)), F.lit(3)).alias("s")
+    salt = {r.id: r.s for r in df.select("id", salt_col).collect()}
+    want = {(a, b) for a in ids for b in ids if a < b and salt[a] == salt[b]}
+    with Regime() as regime:
+        pairs, _ = simhash_candidates(df, cfg, regime)
+        got = {(r.a, r.b) for r in pairs.collect()}
+    assert got == want
+    assert any(a != ids[0] for a, _ in got), "star pairs: hot policy ignored"

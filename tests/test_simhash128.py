@@ -95,7 +95,7 @@ def test_hamming_verify_array_lanes(spark):
 def test_pipeline_e2e_128_both_featurize_paths(spark):
     """run_documents at simhash_bits=128 clusters planted near-identical
     docs through BOTH physical featurizations: simhash-only (SQL+attach
-    path) and all-channels (fused mapInPandas kernel). The planted pair
+    path) and all-channels (fused mapInArrow kernel). The planted pair
     differs only by case + whitespace (normalizer-invariant -> Hamming 0
     on every lane in both paths — a one-token edit flips ~7 of 128 bits
     in expectation, past d=3, so nonzero-distance recall is pinned by the
