@@ -1493,7 +1493,7 @@ def simhash_hamming_pairs(spark, sf_dir):
     with Regime.for_run(cfg) as regime:
         pairs, _ = simhash_candidates(sims, cfg, regime)
         return regime.barrier(
-            verify_hamming(pairs, sims, cfg).filter("verdict").select("a", "b", "hamming"))
+            verify_hamming(pairs, cfg).filter("verdict").select("a", "b", "hamming"))
 
 
 def substr_duplicate_spans(spark, sf_dir):

@@ -1,8 +1,7 @@
-"""The eager-path rung: run_transcripts on the seeded transcript corpus
-(n_base=20000 -> 554,505 turns / 27,203 conversations, above
-eager_barrier_min_docs, so the scale-mode physical plans run). Prints one
-JSON line: wall, stage walls, regime, and a label-exact checksum of the
-cluster table for cross-tree comparison.
+"""The scale rung: run_transcripts on the seeded transcript corpus
+(n_base=20000 -> 554,505 turns / 27,203 conversations). Prints one JSON
+line: wall, stage walls, and a label-exact checksum of the cluster table
+for cross-tree comparison.
 
     python bench/eager_rung.py [n_base] [--trace] [--conf KEY=VALUE ...] [--work DIR]
 
@@ -123,7 +122,6 @@ def main(argv: list[str] | None = None) -> int:
     out = {
         "n_base": args.n_base, "n_turns": n_turns, "wall_s": round(t1 - t0, 3),
         "stage_walls": res.stats.get("stage_walls", {}),
-        "eager_barriers": res.stats.get("eager_barriers"),
         "n_rows": chk["n"], "label_checksum": chk["h"],
         "duplicate_pairs": res.stats.get("duplicate_pairs"),
         "verified_candidates": res.stats.get("verified_candidates"),

@@ -44,7 +44,7 @@ def channel_outputs(docs: DataFrame, id_col: str, text_col: str,
     them: featurize -> mh_sh_candidates -> verify_jaccard_hamming, split
     by channel; fingerprint_table -> substr_candidates -> verify_substr."""
     channels = ("minhash_lsh", "simhash")
-    with Regime.for_run(cfg) as regime:  # eager
+    with Regime.for_run(cfg) as regime:
         feats = regime.reused(featurize(docs, id_col, text_col, cfg))
         pairs = mh_sh_candidates(feats, cfg, channels, regime)
         v = V.verify_jaccard_hamming(pairs, feats, cfg, regime)

@@ -26,8 +26,7 @@ What the flat barrier keeps from the cache+count barrier it replaces:
 - the release. ``unpersist()`` on the returned frame drops its blocks
   (``DataFrame.unpersist`` alone does nothing on a checkpointed frame).
 
-A regime holds three values, decided once per run (``for_run``, then
-``fit`` from the run's document count):
+A regime holds two values, decided once per run (``for_run``):
 
 - ``keep_lineage``: ``barrier`` is ``cache()`` + ``count()``, which keeps
   lineage, so a lost executor's partitions are recomputed. Warehouse
@@ -39,9 +38,9 @@ A regime holds three values, decided once per run (``for_run``, then
 - ``checkpoint_dir`` (``DedupConfig.cc_checkpoint_dir``): every flat
   barrier also writes a reliable checkpoint there, read back from the
   frame's blocks rather than recomputed; release deletes its files.
-- ``width``: unset, the run is eager (nested barriers on reused frames
-  and join-backs, the session conf kept); set, it runs the latency
-  regime at that shuffle width (``Regime``).
+
+Every run executes under the session's own conf (AQE on): there is one
+physical regime, whatever the corpus size.
 
 Iterative loops (connected components) cut their lineage with
 ``truncate``: always the flat barrier, reliable when ``checkpoint_dir``
@@ -50,7 +49,7 @@ grow every round.
 
 A regime is also the one block lifecycle of the library: every builder
 that materializes a frame does it through its caller's regime
-(``reused``, ``join_back``, ``truncate``, or ``barrier`` with
+(``reused``, ``truncate``, or ``barrier`` with
 ``release=regime.sweep``) and never releases anything itself. The
 caller keeps what it needs past the call by passing it through
 ``regime.barrier`` (not swept), and the regime releases the rest when
@@ -105,16 +104,8 @@ def session_conf(spark, overrides: dict[str, str]):
 
 
 class Regime:
-    """One run's materialization policy (module docstring) and physical
-    regime; the builders branch on it, not on flags of their own.
-
-    - eager (``width`` unset): reused frames and bucket join-backs pass
-      the barrier; the session conf is kept.
-    - latency (``width`` set): the chains are dozens of tiny exchanges,
-      and under AQE each becomes its own query-stage job — a serial floor
-      of driver round-trips no executor count amortizes. Reused frames
-      are lazy caches, join-backs stay lazy, and the run executes with
-      AQE off at ``width`` shuffle partitions.
+    """One run's materialization policy (module docstring); the builders
+    branch on it, not on flags of their own.
 
     ``sweep`` collects what the builders materialize, for ``release``,
     which also runs when a ``with regime:`` block exits, failed or not;
@@ -122,10 +113,9 @@ class Regime:
     (``broadcastable``)."""
 
     def __init__(self, *, checkpoint_dir: str | None = None,
-                 keep_lineage: bool = False, width: int | None = None):
+                 keep_lineage: bool = False):
         self.checkpoint_dir = checkpoint_dir
         self.keep_lineage = keep_lineage
-        self.width = width
         self.sweep: list[DataFrame] = []
         self.hydration: dict[str, dict] = {}
 
@@ -136,18 +126,6 @@ class Regime:
         ``truncate`` are reliable when ``cfg.cc_checkpoint_dir`` is set."""
         return cls(checkpoint_dir=cfg.cc_checkpoint_dir,
                    keep_lineage=warehouse is not None)
-
-    @property
-    def eager(self) -> bool:
-        return self.width is None
-
-    def fit(self, spark, cfg, n_docs: int) -> None:
-        """Pick the run's regime from its document count: eager at or above
-        ``cfg.eager_barrier_min_docs``, else latency at ~500 docs per
-        shuffle partition (floor 8, capped at the session's own width)."""
-        if n_docs < cfg.eager_barrier_min_docs:
-            ambient = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-            self.width = max(8, min(ambient, -(-n_docs // 500)))
 
     def barrier(self, df: DataFrame, name: str | None = None,
                 release: list | None = None) -> DataFrame:
@@ -173,32 +151,17 @@ class Regime:
             return _flat(df, self.checkpoint_dir)
 
     def reused(self, df: DataFrame) -> DataFrame:
-        """A frame several plan branches scan: a barrier when eager (AQE
-        rebuilds a lazy subtree once per concurrent consumer), a lazy cache
-        in latency mode (cheaper than the extra job at that size)."""
-        if self.eager:
-            return self.barrier(df, release=self.sweep)
-        out = df.cache()
-        self.sweep.append(out)
-        return out
+        """A frame several plan branches scan, through the barrier (AQE
+        rebuilds a lazy subtree once per concurrent consumer); it joins
+        the sweep."""
+        return self.barrier(df, release=self.sweep)
 
-    def join_back(self, df: DataFrame) -> DataFrame:
-        """A bucket-size join-back: materialized for its pair legs when eager."""
-        return self.barrier(df, release=self.sweep) if self.eager else df
-
-    def spread(self, df: DataFrame) -> DataFrame:
-        """Latency mode: re-spread narrow pair rows to the core count before a
-        CPU-bound verify projection, which would otherwise run ``width`` wide."""
-        if self.eager:
-            return df
-        return df.repartition(max(df.sparkSession.sparkContext.defaultParallelism, 8))
-
-    def broadcastable(self, name: str, df: DataFrame, limit: int | None = None) -> bool:
-        """``fits_broadcast(df, limit)``, with the decision and the measured
-        bytes behind it kept as ``hydration[name]``, so a run's stats show
-        which hydration joins broadcast and why."""
+    def broadcastable(self, name: str, df: DataFrame) -> bool:
+        """``fits_broadcast(df)``, with the decision and the measured bytes
+        behind it kept as ``hydration[name]``, so a run's stats show which
+        hydration joins broadcast and why."""
         n = measured_size_bytes(df)
-        ok = _within_broadcast(df, n, limit)
+        ok = _within_broadcast(df, n, None)
         self.hydration[name] = {"broadcast": ok, "measured_size_bytes": n}
         return ok
 
@@ -212,25 +175,6 @@ class Regime:
 
     def __exit__(self, *exc) -> None:
         self.release()
-
-    @contextlib.contextmanager
-    def applied(self, spark, base: DataFrame):
-        """Run the block under this regime, yielding the view of ``base`` the
-        channels scan: in latency mode coalesced to ``width`` (narrow, no
-        shuffle), so scans don't schedule dozens of near-empty tasks. On
-        exit, failed or not, the conf is restored and the sweep and
-        ``base`` release their blocks."""
-        view, conf = base, {}
-        if not self.eager:
-            conf = {"spark.sql.adaptive.enabled": "false",
-                    "spark.sql.shuffle.partitions": str(self.width)}
-            if base.rdd.getNumPartitions() > 2 * self.width:
-                view = base.coalesce(self.width)
-        try:
-            with self, session_conf(spark, conf):
-                yield view
-        finally:
-            base.unpersist()
 
 
 def measured_size_bytes(df: DataFrame) -> int | None:

@@ -138,9 +138,8 @@ def connected_components(
     (``regime.truncate``, the ``cc_edges`` job, which also counts it)
     before either physical path consumes it. Counting the raw plan
     instead would re-execute the whole upstream pair DAG per action —
-    below the pipeline's eager-barrier threshold that DAG is
-    cached-but-not-checkpointed and its feature caches are already
-    released, so every extra action re-ran the 3-channel verify
+    when that DAG was cached-but-not-checkpointed with its feature caches
+    already released, every extra action re-ran the 3-channel verify
     (measured ~3.2 s per action on the 57k-turn bench corpus, turning
     the fast path into a net loss before this ordering).
 

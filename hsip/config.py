@@ -121,26 +121,12 @@ class DedupConfig:
     nfc: bool = False
     # ops
     max_turns_per_conv: int = 10_000  # spill guard, logged when hit (§4.2.5)
-    # scale-proportional physical regime (VERDICT r4 item 1): at/above
-    # this doc count the pipeline runs the eager regime — AQE on at the
-    # ambient shuffle width, the channel-aware split verify, and the extra
-    # eager barriers (hsip/barrier.py) on the bucket join-backs and
-    # pruned hydration tables that stop AQE's concurrent query-stage
-    # futures from rebuilding a shared subtree N times, a 2x win at 2.76M
-    # turns (BENCH/BASELINE.md r4). Below it the latency regime runs: AQE
-    # off, a corpus-derived shuffle width, the fused verify and lazy
-    # caches in place of those extra barriers, whose jobs cost more than
-    # the rebuilt subtrees on small corpora (same-session A/B r5: +26% on
-    # the 57k bench). The reused stages (base, features, fingerprints,
-    # channel outputs, results) pass the barrier in both regimes.
-    # Calibrated between the measured regimes: the 57k-turn/2.8k-conv and
-    # 5k-doc bench corpora sit in the latency regime; the 554k-turn/27k-
-    # conv and 2.76M-turn/136k-conv scaling ladders sit eager.
-    # NON-SEMANTIC — identical output either way (pinned by
-    # tests/test_pipeline_e2e.py just below and just above the threshold).
-    # Read once per run, by hsip/barrier.py Regime.fit.
+    # IGNORED: nothing reads it; every run takes the one physical regime
+    # (hsip/barrier.py). It remains only so configs that still set it
+    # construct unchanged (the benchmark's workloads pass 0). NON-SEMANTIC
+    # (_NON_SEMANTIC), so no fingerprint or checkpoint depends on it.
     eager_barrier_min_docs: int = 25_000
-    # reliable barriers: when set, every eager barrier of an EPHEMERAL run
+    # reliable barriers: when set, every flat barrier of an EPHEMERAL run
     # (hsip/barrier.py: base, features, bucket tables, channel outputs,
     # results) and every connected-components round (both modes) also
     # writes a reliable checkpoint to this fault-tolerant dir, so an

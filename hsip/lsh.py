@@ -144,18 +144,17 @@ def _bucket_legs(
             hot_ch &= F.col("channel") == ch
         sizes = sizes.observe(obs, F.count_if(hot_ch).alias("hot_buckets"))
     tagged = bucketed.join(sizes, cols)
-    # ``regime``: an eager run materializes the join-back ONCE for its four
-    # consumer legs (small x/y self-join, hot, hot_min; hot_stats is a
-    # fifth). Without it each leg re-runs the size join over the full
-    # bucket table — r6 rung (VERDICT.md item 4): the tagged table is
-    # 1.9M rows where the bucket table is 8.4M, and materializing it cut
-    # the substr expansion 10.5 s -> 8.4 s with identical pairs. The
-    # flat barrier keeps the bucket table's hash layout, so the legs join
-    # it with no exchange; it joins the regime's sweep. A latency regime
-    # (or None) leaves it lazy — at kB scale the extra materialization
-    # job costs more than the duplicated tiny joins it saves.
+    # ``regime`` materializes the join-back ONCE for its four consumer
+    # legs (small x/y self-join, hot, hot_min; hot_stats is a fifth).
+    # Without it each leg re-runs the size join over the full bucket
+    # table — r6 rung (VERDICT.md item 4): the tagged table is 1.9M rows
+    # where the bucket table is 8.4M, and materializing it cut the substr
+    # expansion 10.5 s -> 8.4 s with identical pairs. The flat barrier
+    # keeps the bucket table's hash layout, so the legs join it with no
+    # exchange; it joins the regime's sweep. Without a regime it stays
+    # lazy.
     if regime is not None:
-        tagged = regime.join_back(tagged)
+        tagged = regime.reused(tagged)
 
     small = tagged.filter(F.col("bsz") <= cap).drop("bsz")
     x = small.alias("x")

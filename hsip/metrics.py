@@ -52,7 +52,10 @@ class Recorder:
         action to execute the observed plan, and a checkpointed stage that
         is skipped executes nothing. The first action to execute the plan
         fills it in, so that action must consume every row (a write, a
-        barrier, a join) — never ``isEmpty``/``first``/``limit``."""
+        barrier, a join) — never ``isEmpty``/``first``/``limit``. Attach it
+        on top of the branch whose rows it counts: when that branch runs
+        empty, AQE may drop it from the final plan, and the observation
+        then reads as 0 (``observed``)."""
         obs = Observation()
         self._observed.append((stage, key, obs))
         return obs
@@ -65,9 +68,9 @@ class Recorder:
         have run."""
         out: dict[str, dict[str, float]] = {}
         for stage, key, obs in self._observed:
-            (value,) = observed(obs, f"{stage}.{key}").values()
+            value = sum(v or 0 for v in observed(obs, f"{stage}.{key}").values())
             per = out.setdefault(stage, {})
-            per[key] = per.get(key, 0) + (value or 0)
+            per[key] = per.get(key, 0) + value
         for stage, per in out.items():
             for key, value in per.items():
                 self.metric(stage, key, value)
@@ -107,7 +110,13 @@ class Recorder:
 
 def observed(obs: Observation, what: str) -> dict:
     """The metrics of ``obs`` ({name: value}), waiting for its action's
-    report; ``what`` names it in the error raised if none ever comes."""
+    report; ``what`` names it in the error raised if none ever comes.
+
+    ``{}`` when the action ran but its final plan no longer held the
+    observed node: AQE replaces a join with an empty relation once one
+    side materializes empty, dropping that side's observation with it
+    (Spark then reports an empty row). An observation on top of the empty
+    side saw no rows."""
     deadline = time.monotonic() + _OBSERVED_WAIT_S
     while not obs._jo.future().isCompleted():
         if time.monotonic() > deadline:
@@ -115,6 +124,8 @@ def observed(obs: Observation, what: str) -> dict:
                 f"observed metric {what} never reported: no action executed "
                 "the frame it was attached to")
         time.sleep(0.01)
+    if obs._jo.getRow().length() == 0:
+        return {}
     return obs.get
 
 

@@ -216,7 +216,7 @@ def phash_near_dup_pairs(feats: DataFrame, max_hamming: int = 3,
     )
     pairs, _truncated = simhash_candidates(sim, cfg, regime)
     return (
-        verify_hamming(pairs, sim, cfg)
+        verify_hamming(pairs, cfg)
         .filter("verdict")
         .select(F.col("a").alias("media_a"), F.col("b").alias("media_b"), "hamming")
     )

@@ -21,6 +21,7 @@ pair expansion and one verify; substr runs beside it on its own thread.
 
 from __future__ import annotations
 
+import contextlib
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -52,8 +53,6 @@ class PipelineResult:
     and warehouse runs unless noted:
 
     - ``stage_walls``: {stage: driver-observed seconds};
-    - ``eager_barriers``, ``shuffle_width``: the run's Regime (eager, or
-      latency at that shuffle width);
     - ``probe_key_entropy``: the simhash probe-key sizing check (simhash
       runs only);
     - ``n_docs``, ``verified_candidates``, ``duplicate_pairs``,
@@ -230,14 +229,9 @@ def run_documents(
     stats: dict = {"stage_walls": stage_walls}
     mh_sh = tuple(c for c in ("minhash_lsh", "simhash") if c in channels)
 
-    # the run's physical regime, decided once from its size (hsip/barrier.py
-    # Regime.fit; r6 A/B at 57k turns: latency 10.4 s -> 7.8 s, identical
-    # output)
-    regime.fit(spark, cfg, n_docs)
-    stats["eager_barriers"] = regime.eager
-    stats["shuffle_width"] = regime.width
     # the sweep and base release on exit, whether or not the run succeeds
-    with regime.applied(spark, base) as base:
+    with regime, contextlib.ExitStack() as on_exit:
+        on_exit.callback(base.unpersist)
 
         if "simhash" in channels:
             # key-entropy advisory (config.py simhash_bits sizing rule): fail

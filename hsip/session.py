@@ -130,15 +130,13 @@ def get_spark(
         # cached table (r6 event log at the 554k-turn rung: 4.7 GB
         # shuffle-written vs 1.8 GB, 75 jobs vs 48, wall 63-77 s vs
         # 41.7 s, alternating A/B recorded in BENCH/ab_r06_session2.json
-        # and OPTIMIZATION_r06.md §2.8; bit-identical labels). The eager
+        # and OPTIMIZATION_r06.md §2.8; bit-identical labels). The flat
         # barriers (hsip/barrier.py) now keep the layout on their own,
         # planning in a session clone with the same final-stage posture
         # the false setting gives the CacheManager; the flag still
-        # governs the remaining caches (per-channel builders,
-        # latency-mode lazy caches). The small-corpus
-        # task-count problem it once solved is owned by the pipeline's
-        # latency mode (AQE off + derived width below
-        # eager_barrier_min_docs), where this flag is never consulted.
+        # governs the remaining caches (warehouse runs' cache+count
+        # barriers, callers' own caches). The small-corpus task-count
+        # problem it once solved is left to AQE's partition coalescing.
         # The bench-scale neutrality A/B (OPTIMIZATION_r06.md §2.8, §3)
         # was measured on the tree before the revert. To re-measure, run
         # bench/eager_rung.py with and without --conf setting this key.

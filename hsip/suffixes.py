@@ -47,6 +47,7 @@ from .barrier import Regime
 from .config import DedupConfig
 from .lsh import _bucket_legs
 from .normalize import norm_text_col
+from .verify import hydrate
 
 _B = np.uint64(1000003)           # odd multiplier -> invertible mod 2^64
 _BINV = np.uint64(pow(1000003, -1, 1 << 64))
@@ -202,11 +203,8 @@ def substr_candidates(
     # query-stage futures CONCURRENTLY, so each branch recomputes it —
     # event-log r4 at 2.76M turns: EIGHT copies of the 41.7M-row
     # fingerprint exchange (4.1 GB written, 333M records re-read, 820 s
-    # of the hi rung's executor time). The eager barrier is the same
-    # contract pairs_from_buckets documents for its bucket table. The
-    # latency regime keeps a lazy cache instead: the rebuilt exchange is
-    # cheaper there than the extra materialization action (VERDICT r4
-    # item 1 A/B).
+    # of the hi rung's executor time). The barrier is the same contract
+    # pairs_from_buckets documents for its bucket table.
     fp = regime.reused(fp_df.repartition("fp_hash"))
     # (id, fp_hash) is unique (per-doc hash dedupe in fingerprint_table),
     # so a bucket's row count is its distinct-doc size, and each row of
@@ -367,65 +365,21 @@ def verify_substr(pairs: DataFrame, docs: DataFrame, id_col: str, text_col: str,
     verdict = (max span over anchors) >= min_substr_len.
     ``regime`` (barrier.Regime): the pair and text tables join its sweep,
     for the caller to release once the output has materialized (VERDICT.md
-    r3 item 5). The latency regime keeps the pruned text table a lazily-cached
-    semi-join — no repartition exchange, no barrier. At that scale both
-    hydration joins broadcast the (tiny) pruned table and the two
-    broadcast subtrees canonicalize identically, so one build serves
-    both; the eager barrier + explicit hash layout only pay off once the
-    pruned table is big enough to sort-merge (same scale-adaptive split
-    as verify_jaccard_hamming). Output rows identical either way.
+    r3 item 5); the text hydration's broadcast decision is
+    ``regime.hydration["verify_substr"]``.
     """
     k, min_len = cfg.substr_gram, cfg.min_substr_len
     # The normalized-text table is the fattest thing this stage touches
-    # (~= corpus bytes), and a computed Alias (norm_text_col) breaks
-    # canonical exchange reuse between the two join branches — naively
-    # Spark ships the WHOLE corpus through the shuffle twice (event-log
-    # measured 2 x 478 MB on the 554k-turn bench). Two fixes compose:
-    #   1. only docs that actually appear in a candidate pair need text —
-    #      a semi-join prunes the table to the candidate-touched subset
-    #      (bounds cache/shuffle by candidates, not corpus; a 6g 1-core
-    #      executor OOM'd at 2.76M turns caching the full corpus);
-    #   2. hash-partition by id once and materialize the post-shuffle
-    #      layout so both joins consume its partitioning — one pruned
-    #      exchange total, and when the pruned table measures under the
-    #      broadcast threshold, no exchange of the pair rows either.
-    # the pair table feeds the id prune and both hydration joins: eager
-    # runs materialize it (one leaf to plan over, as in
-    # verify_jaccard_hamming), latency runs keep a lazy cache
-    pairs = regime.reused(pairs)
-    # one explode scan, not a two-branch union: under AQE the union legs
-    # materialize as separate query-stage futures, each re-executing the
-    # uncached candidate chain (r6 event-log job swarm)
-    pair_ids = pairs.select(F.explode(F.array("a", "b")).alias("id")).distinct()
-    if not regime.eager:
-        # latency mode (n_docs < eager_barrier_min_docs): the distinct
-        # pair-id set is bounded by the corpus (< 25k short strings) —
-        # broadcast it so the prune is a map-side semi-join instead of a
-        # sort-merge that exchanges + sorts the whole corpus text at the
-        # narrow latency shuffle width (guide §3; r6 live transcript plan)
-        pair_ids = F.broadcast(pair_ids)
+    # (~= corpus bytes): verify.hydrate prunes it to the candidate-touched
+    # docs and ships it once, or broadcasts it when it measures small.
+    # The pair table feeds the id prune and both hydration joins, so it
+    # is materialized once (one leaf to plan over, as in
+    # verify_jaccard_hamming).
     normed = docs.select(
         F.col(id_col).cast("string").alias("id"),
         F.coalesce(norm_text_col(text_col, cfg), F.lit("")).alias("t"),
-    ).join(pair_ids, "id", "left_semi")
-    if regime.eager:
-        normed = normed.repartition("id")
-    normed = regime.reused(normed)
-    # the barrier measured it; a latency-mode cache is unmeasured and
-    # declines (Catalyst broadcasts it on its own at that size)
-    n_side = F.broadcast(normed) if regime.broadcastable("verify_substr", normed) \
-        else normed
-    # the span-extension UDF below is CPU-bound: in latency mode the
-    # NARROW pair rows (ids + anchor offset arrays, a few MB) re-spread
-    # to the core count before the text attaches, so the compute stage
-    # uses every slot instead of the ~8-wide derived width (r6)
-    h_pairs = regime.spread(pairs)
-    h = (
-        h_pairs.join(n_side, h_pairs["a"] == n_side["id"]).drop("id")
-        .withColumnRenamed("t", "t_a")
     )
-    nb = n_side.alias("nb")
-    h = h.join(nb, h["b"] == nb["id"]).drop("id").withColumnRenamed("t", "t_b")
+    h = hydrate(regime.reused(pairs), normed, ["t"], regime, "verify_substr")
 
     @arrow_udf(T.IntegerType())
     def span_len(ta: pa.Array, tb: pa.Array, pas: pa.Array, pbs: pa.Array) -> pa.Array:
@@ -740,7 +694,6 @@ def substr_cross_candidates(
     fp_eval: DataFrame,
     cfg: DedupConfig,
     eval_fp_cap: int = 8,
-    broadcast_eval: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """A x B fingerprint pairing for DECONTAMINATION: candidates are
     (train doc, eval doc) sharing a winnowed fingerprint — never a pair
@@ -756,11 +709,11 @@ def substr_cross_candidates(
     extra eval witnesses only add evidence). Capped fingerprints are
     returned as stats — no silent caps.
 
-    ``broadcast_eval``: eval/benchmark sets are tiny next to a training
-    corpus, so broadcasting their fingerprint table turns the candidate
-    join into a map-side hash join — the training fingerprints are
-    scanned once and NEVER shuffled, the decontamination pass costs one
-    corpus scan plus verify on flagged pairs.
+    Eval/benchmark sets are tiny next to a training corpus, so their
+    fingerprint table is broadcast: the candidate join is a map-side hash
+    join, the training fingerprints are scanned once and NEVER shuffled,
+    and the decontamination pass costs one corpus scan plus verify on
+    flagged pairs.
     """
     grouped = (
         fp_eval.groupBy("fp_hash")
@@ -777,10 +730,7 @@ def substr_cross_candidates(
         grouped.filter(F.col("n_eval") > eval_fp_cap)
         .groupBy("fp_hash").agg(F.max("n_eval").alias("bucket_size"))
     )
-    eval_side = grouped.drop("n_eval")
-    if broadcast_eval:
-        eval_side = F.broadcast(eval_side)
-    anchors = fp_train.join(eval_side, "fp_hash").select(
+    anchors = fp_train.join(F.broadcast(grouped.drop("n_eval")), "fp_hash").select(
         F.col("id").alias("a"), "b",
         F.col("pos").alias("pos_a"), "pos_b",
     )
@@ -797,7 +747,6 @@ def substr_decontaminate(
     cfg: DedupConfig,
     regime: Regime,
     eval_fp_cap: int = 8,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Cross-corpus substring decontamination (the Lee et al. ACL'22 /
     GPT-3-appendix use-case): flag every training doc sharing an exact
@@ -814,9 +763,7 @@ def substr_decontaminate(
     """
     fpt = fingerprint_table(train, train_id, train_text, cfg)
     fpe = fingerprint_table(evals, eval_id, eval_text, cfg)
-    pairs, _capped = substr_cross_candidates(
-        fpt, fpe, cfg, eval_fp_cap=eval_fp_cap, broadcast_eval=broadcast_eval
-    )
+    pairs, _capped = substr_cross_candidates(fpt, fpe, cfg, eval_fp_cap=eval_fp_cap)
     prefixed = pairs.withColumn("a", F.concat(F.lit("T|"), F.col("a"))) \
                     .withColumn("b", F.concat(F.lit("E|"), F.col("b")))
     docs_all = train.select(

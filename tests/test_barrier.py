@@ -179,21 +179,6 @@ def test_barrier_policy_for_run(spark, tmp_path):
     assert not any(tmp_path.rglob("part-*"))
 
 
-def test_regime_fit_sets_width_from_doc_count(spark):
-    """Eager (no width) at or above eager_barrier_min_docs; below it the
-    latency width, ~500 docs per partition with a floor of 8, capped at
-    the session's shuffle width."""
-    from hsip.barrier import session_conf
-
-    cfg = DedupConfig(eager_barrier_min_docs=50_000)
-    cases = ((50_000, None), (60_000, None), (100, 8), (9_000, 18), (40_000, 64))
-    with session_conf(spark, {"spark.sql.shuffle.partitions": "64"}):
-        for n_docs, width in cases:
-            regime = Regime()
-            regime.fit(spark, cfg, n_docs)
-            assert regime.width == width and regime.eager == (width is None), n_docs
-
-
 def test_measured_size_bytes_reads_parquet_scans(spark, tmp_path):
     """A plain scan of parquet files (a warehouse stage read back) is
     sized from its files, as Catalyst sizes it; a derived frame over the
@@ -226,8 +211,8 @@ def test_regime_records_broadcast_hydration_decisions(spark):
     """Regime.broadcastable gates like fits_broadcast and keeps each
     decision with the measured bytes behind it, for the run's stats: a
     measured small frame is taken, an unmeasured (lazy) one declined with
-    None, and a limit under the measured size declines."""
-    from hsip.barrier import Regime
+    None, and a session threshold under the measured size declines."""
+    from hsip.barrier import Regime, session_conf
 
     regime = Regime()
     small = regime.reused(_keyed(spark, 500))
@@ -235,7 +220,8 @@ def test_regime_records_broadcast_hydration_decisions(spark):
         n = measured_size_bytes(small)
         assert regime.broadcastable("a", small)
         assert not regime.broadcastable("b", _keyed(spark, 500))
-        assert not regime.broadcastable("c", small, limit=n - 1)
+        with session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": str(n - 1)}):
+            assert not regime.broadcastable("c", small)
         assert regime.hydration == {
             "a": {"broadcast": True, "measured_size_bytes": n},
             "b": {"broadcast": False, "measured_size_bytes": None},

@@ -114,17 +114,6 @@ def test_eval_fp_cap_keeps_train_recall(spark):
     assert capped.agg(F.max("bucket_size")).first()[0] == 6
 
 
-def test_broadcast_toggle_same_answer(spark, corpora):
-    train, evals, _ = corpora
-    a = _decontam(train, evals, _cfg(), broadcast_eval=True)
-    b = _decontam(train, evals, _cfg(), broadcast_eval=False)
-    key = lambda rows: sorted(
-        (r["train_id"], r["eval_id"], r["substr_len"], r["verdict"])
-        for r in rows
-    )
-    assert key(a) == key(b)
-
-
 def test_empty_eval_set_flags_nothing(spark, corpora):
     train, evals, _ = corpora
     empty = evals.filter("doc_id = 'nope'")

@@ -102,21 +102,21 @@ def test_incremental_hot_index_bucket(spark):
 def test_incremental_regime_releases_caches(spark, corpus):
     """Long-session hygiene (VERDICT r4 #3): releasing the caller's regime
     drains every cache incremental_verified_pairs creates internally
-    (delta bands, semi-joined index slice, delta features). A latency
-    regime keeps them as lazy caches, which the CacheManager lists."""
+    (delta bands, semi-joined index slice, delta features)."""
     old, new = corpus
     cfg = DedupConfig(jaccard_threshold=0.55)
     old_df = spark.createDataFrame(old, "doc_id string, text string")
     new_df = spark.createDataFrame(new, "doc_id string, text string")
     idx = build_index(old_df, "doc_id", "text", cfg)
     spark.catalog.clearCache()
-    with Regime(width=8) as regime:
+    with Regime() as regime:
         verified = incremental_verified_pairs(
             new_df, "doc_id", "text", idx["features"], idx["bands"], cfg, regime,
         )
         n = verified.filter("verdict").count()
-        # feats + bands + idx_hit + verify_jaccard's pair materialization
-        assert n >= 3 and len(regime.sweep) == 4
+        # feats + bands + idx_hit + verify_jaccard's pair and pruned
+        # shingle tables
+        assert n >= 3 and len(regime.sweep) == 5
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
         "incremental path leaked caches beyond the caller's regime"
     )

@@ -5,9 +5,9 @@ Pins: (1) the contract queries that build candidates leave a session as
 they found it, call after call: once the returned result is released
 the session's CacheManager holds nothing and no persisted RDD was added;
 (2) every builder that materializes anything, run under a regime that
-is then released, leaves no cached plan and no persisted RDD behind, in
-the eager regime (flat barriers) and in the latency regime (lazy caches,
-which the CacheManager lists)."""
+is then released, leaves no cached plan and no persisted RDD behind,
+with flat barriers and with cache+count barriers (``keep_lineage``, whose
+caches the CacheManager lists)."""
 
 from __future__ import annotations
 
@@ -230,12 +230,14 @@ BUILDERS = {
 }
 
 
-@pytest.mark.parametrize("width", [None, 8], ids=["eager", "latency"])
+# the ids name the two barrier kinds by the run modes that once selected
+# them; they stay so results compare across versions of the suite
+@pytest.mark.parametrize("keep_lineage", [False, True], ids=["eager", "latency"])
 @pytest.mark.parametrize("name", list(BUILDERS))
-def test_builder_leaves_nothing_after_release(spark, name, width):
+def test_builder_leaves_nothing_after_release(spark, name, keep_lineage):
     spark.catalog.clearCache()
     before = _persisted(spark)
-    with Regime(width=width) as regime:
+    with Regime(keep_lineage=keep_lineage) as regime:
         out = BUILDERS[name](spark, regime)
         assert out.count() > 0
         assert regime.sweep, f"{name} materialized nothing on the regime"

@@ -202,38 +202,3 @@ def test_verify_jaccard_hamming_payload_and_fallback(spark):
     assert by_key[("a", "b", "minhash_lsh")] == (0.6, None, True)
     assert by_key[("a", "b", "simhash")] == (None, 1, True)
     assert by_key[("a", "c", "simhash")] == (None, 6, False)
-
-
-def test_verify_shapes_fused_small_equals_split(spark):
-    """Scale-adaptive verify (round 5): the small-corpus fused CASE shape
-    (latency regime) and the large-corpus channel-aware split (eager
-    regime) must emit identical rows."""
-    from hsip.barrier import Regime
-    from hsip.config import DedupConfig
-    from hsip.verify import verify_jaccard_hamming
-
-    cfg = DedupConfig(jaccard_threshold=0.5, hamming_d=3)
-    feats = spark.createDataFrame(
-        [("a", [1, 2, 3, 4], 0b0000), ("b", [1, 2, 3, 9], 0b0001),
-         ("c", [7, 8], 0b111111)],
-        "id string, shingles array<long>, simhash long",
-    )
-    sims = {"a": 0b0000, "b": 0b0001, "c": 0b111111}
-    base = [("a", "b", "minhash_lsh"), ("a", "b", "simhash"),
-            ("a", "c", "simhash"), ("b", "c", "minhash_lsh")]
-    payload = spark.createDataFrame(
-        [(a, b, ch,
-          sims[a] if ch == "simhash" else None,
-          sims[b] if ch == "simhash" else None) for a, b, ch in base],
-        "a string, b string, channel string, simhash_a long, simhash_b long",
-    )
-    cols = ["a", "b", "channel", "jaccard", "hamming", "verdict"]
-    eager, latency = Regime(), Regime(width=8)
-    split, fused = (
-        {tuple(r) for r in
-         verify_jaccard_hamming(payload, feats, cfg, regime)
-         .select(*cols).collect()}
-        for regime in (eager, latency)
-    )
-    eager.release()
-    assert split == fused and len(split) == len(base), (split, fused)

@@ -230,13 +230,11 @@ def test_pipeline_releases_intermediate_caches(spark):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-@pytest.mark.parametrize("min_docs", [25_000, 0], ids=["latency", "eager"])
-def test_failed_run_releases_blocks_and_restores_conf(spark, monkeypatch, min_docs):
+def test_failed_run_releases_blocks_and_restores_conf(spark, monkeypatch):
     """A run that fails part-way (a planted failure where the channel
     verdicts combine) leaves no blocks behind and the session's AQE and
-    shuffle width as it found them, in either regime; a successful run
-    restores them too. The ambient width is set apart from the latency
-    regime's derived 8, so a missed restore shows."""
+    shuffle width as it found them; so does a successful run. The ambient
+    width is set apart from the default, so a changed width shows."""
     from hsip import pipeline
     from hsip.barrier import session_conf
 
@@ -250,13 +248,12 @@ def test_failed_run_releases_blocks_and_restores_conf(spark, monkeypatch, min_do
         [(f"d{i}", f"alpha beta gamma delta {i % 7} " * 30) for i in range(40)],
         "id string, text string",
     )
-    cfg = DedupConfig(eager_barrier_min_docs=min_docs)
+    cfg = DedupConfig()
     with session_conf(spark, {"spark.sql.shuffle.partitions": "13"}):
         conf = {k: spark.conf.get(k) for k in keys}
         spark.catalog.clearCache()
         before = persisted()
         res = run_documents(spark, docs, "id", "text", cfg)
-        assert res.stats["eager_barriers"] == (min_docs == 0)
         assert {k: spark.conf.get(k) for k in keys} == conf
         for df in (res.verified, res.clusters, res.representatives):
             df.unpersist()
@@ -270,31 +267,6 @@ def test_failed_run_releases_blocks_and_restores_conf(spark, monkeypatch, min_do
             run_documents(spark, docs, "id", "text", cfg)
         assert persisted() - before == set(), "a failed run leaked blocks"
         assert {k: spark.conf.get(k) for k in keys} == conf
-
-
-def test_same_clusters_either_side_of_eager_barrier_min_docs(spark, corpus, result):
-    """The barrier threshold is NON-SEMANTIC (config.py): the same corpus
-    run just below it (eager regime: AQE on, split verify, materialized
-    bucket join-backs) and just above it (latency regime: AQE off, derived
-    width, fused verify) gives identical (id, cluster_id) rows — for every
-    channel subset the mh/sh chain serves, and for all three channels."""
-    turns, _ = corpus
-    n = result.stats["n_docs"]
-    for channels in (("minhash_lsh",), ("simhash",), ("minhash_lsh", "simhash"),
-                     ("minhash_lsh", "simhash", "substr")):
-        eager = run_transcripts(spark, turns, DedupConfig(eager_barrier_min_docs=n),
-                                channels=channels)
-        latency = run_transcripts(spark, turns,
-                                  DedupConfig(eager_barrier_min_docs=n + 1),
-                                  channels=channels)
-        assert eager.stats["eager_barriers"] and not latency.stats["eager_barriers"]
-        # the regime's derived width: none when eager, the floor of 8 here
-        assert eager.stats["shuffle_width"] is None
-        assert latency.stats["shuffle_width"] == 8
-        a = {(r.id, r.cluster_id) for r in eager.clusters.collect()}
-        b = {(r.id, r.cluster_id) for r in latency.clusters.collect()}
-        assert a == b, channels
-        assert len(a) == n
 
 
 def test_simhash_only_edges_equal_brute_force_hamming(spark, corpus):
@@ -361,9 +333,9 @@ def test_hot_bucket_metric_recorded_for_every_requested_channel(spark, tmp_path)
 @pytest.mark.parametrize("reliable_cc", [False, True], ids=["cc_local", "cc_reliable"])
 def test_warehouse_run_keeps_lineage_barriers(spark, corpus, tmp_path_factory,
                                              monkeypatch, reliable_cc):
-    """Warehouse runs are the fault-tolerant mode: in the eager regime,
-    where the nested bucket/join-back/hydration barriers engage, every
-    barrier outside connected components is cache+count (lineage kept, so
+    """Warehouse runs are the fault-tolerant mode: every barrier outside
+    connected components, the nested bucket/join-back/hydration ones
+    included, is cache+count (lineage kept, so
     a lost executor recomputes instead of failing the run), with or
     without cc_checkpoint_dir. CC still truncates its lineage:
     executor-local without cc_checkpoint_dir, reliable with it
@@ -388,16 +360,13 @@ def test_warehouse_run_keeps_lineage_barriers(spark, corpus, tmp_path_factory,
     turns, _ = corpus
     wh = str(tmp_path_factory.mktemp("wh_kinds"))
     ckpt = tmp_path_factory.mktemp("cc_ckpt") if reliable_cc else None
-    cfg = DedupConfig(eager_barrier_min_docs=0,
-                      cc_checkpoint_dir=ckpt and str(ckpt))
-    res = run_transcripts(spark, turns, cfg, warehouse=wh,
-                          run_id=f"kinds_{reliable_cc}")
-    assert res.stats["eager_barriers"]
+    cfg = DedupConfig(cc_checkpoint_dir=ckpt and str(ckpt))
+    run_transcripts(spark, turns, cfg, warehouse=wh, run_id=f"kinds_{reliable_cc}")
     is_cc = [lbl.removeprefix("hsip:").startswith("cc_") for _, _, lbl in seen]
     outside = [s for s, cc in zip(seen, is_cc) if not cc]
     inside = [s for s, cc in zip(seen, is_cc) if cc]
     # base, the bucket table, both join-backs, the fingerprint table, the
-    # substr pairs, the eager verify pair and hydration tables
+    # substr pairs, the verify pair and hydration tables
     assert len(outside) >= 8, seen
     assert all(keep and not rel for keep, rel, _ in outside), seen
     assert inside and all(not keep and rel == reliable_cc
@@ -594,19 +563,17 @@ def _planted_caps_docs(spark):
     return spark.createDataFrame(rows, "id string, text string")
 
 
-def _planted_caps_cfg(min_docs):
+def _planted_caps_cfg():
     return DedupConfig(bucket_cap=4, substr_bucket_cap=4, max_anchors_per_pair=2,
-                       min_substr_len=60, winnow_window=20,
-                       eager_barrier_min_docs=min_docs)
+                       min_substr_len=60, winnow_window=20)
 
 
-@pytest.mark.parametrize("min_docs", [0, 25_000])
-def test_cap_counts_identical_in_ephemeral_and_warehouse_runs(spark, tmp_path, min_docs):
+def test_cap_counts_identical_in_ephemeral_and_warehouse_runs(spark, tmp_path):
     """"No silent caps" in both modes: a planted hot bucket and anchor
-    overflow give the same counts in an ephemeral and a warehouse run, in
-    the eager and the latency regime, equal to the direct counts over the
-    hot-bucket stats (``hot.count()``) and the anchor-truncation filter.
-    The counts land in stats and, with a warehouse, in the metrics table;
+    overflow give the same counts in an ephemeral and a warehouse run,
+    equal to the direct counts over the hot-bucket stats (``hot.count()``)
+    and the anchor-truncation filter. The counts land in stats and, with
+    a warehouse, in the metrics table;
     the broadcast-hydration decisions land in stats in both modes."""
     from hsip.barrier import Regime
     from hsip.catalog import Catalog
@@ -615,7 +582,7 @@ def test_cap_counts_identical_in_ephemeral_and_warehouse_runs(spark, tmp_path, m
     from hsip.textkernel import featurize
 
     docs = _planted_caps_docs(spark)
-    cfg = _planted_caps_cfg(min_docs)
+    cfg = _planted_caps_cfg()
     both = channel_bucket_table(featurize(docs, "id", "text", cfg), cfg,
                                 ("minhash_lsh", "simhash")).cache()
     _, hot = pairs_from_buckets(both, cfg.bucket_cap,
@@ -665,7 +632,7 @@ def test_resumed_completed_run_skips_everything_and_keeps_lineage(spark, tmp_pat
     from hsip.catalog import Catalog
 
     docs = _planted_caps_docs(spark)
-    cfg = _planted_caps_cfg(25_000)
+    cfg = _planted_caps_cfg()
     wh = str(tmp_path / "wh")
     first = run_documents(spark, docs, "id", "text", cfg, warehouse=wh, run_id="rs")
     cat = Catalog(spark, wh)

@@ -112,15 +112,15 @@ def test_char_entropy_is_pure_projection(spark):
 
 
 def test_latency_verify_hydration_broadcasts_known_small_features(spark):
-    """r6: the small-corpus fused verify broadcasts the feature side when
-    the features frame's MEASURED size fits the gate — both hydration
-    joins become BroadcastHashJoin (no SortMergeJoin, so the pair rows
-    keep their re-spread partitioning into the Jaccard projection). The
-    features reach verify the way the pipeline hands them over: through
-    the barrier (hsip/barrier.py), whose block-manager measurement is
-    what the gate reads. An unmeasured frame declines — fail-safe."""
+    """verify_jaccard_hamming broadcasts the pruned feature side when its
+    MEASURED size fits the gate: both hydration joins become
+    BroadcastHashJoin (no SortMergeJoin, so the pair rows never shuffle).
+    The gate reads the barrier's block-manager measurement
+    (hsip/barrier.py) of the pruned table; an unmeasured frame declines
+    — fail-safe. The plan is printed with Catalyst's own auto-broadcast
+    off, so the broadcast can only come from the gate's hint."""
     from hsip.barrier import Regime, fits_broadcast
-    from hsip.verify import _BCAST_HYDRATE_MAX_BYTES, verify_jaccard_hamming
+    from hsip.verify import verify_jaccard_hamming
 
     cfg = DedupConfig(jaccard_threshold=0.5, hamming_d=3)
     raw = spark.createDataFrame(
@@ -134,19 +134,22 @@ def test_latency_verify_hydration_broadcasts_known_small_features(spark):
         "a string, b string, channel string, simhash_a long, simhash_b long",
     )
     try:
-        with _no_auto_broadcast(spark):
-            p = plan(verify_jaccard_hamming(pairs, feats, cfg, _latency()))
+        with Regime() as regime:
+            out = verify_jaccard_hamming(pairs, feats, cfg, regime)
+            with _no_auto_broadcast(spark):
+                p = plan(out)
+            assert regime.hydration["verify_mh_sh"]["broadcast"]
         assert "BroadcastHashJoin" in p, p
         assert "SortMergeJoin" not in p, p
-        assert not fits_broadcast(raw, _BCAST_HYDRATE_MAX_BYTES)
+        assert not fits_broadcast(raw)
     finally:
         feats.unpersist()
 
 
 def test_pipeline_latency_features_broadcast_through_barrier(spark):
-    """The pipeline's own latency path: featurize, then the barrier the
-    features stage uses, then the fused verify — still BroadcastHashJoin
-    only, with the gate reading the barrier's measured bytes."""
+    """The pipeline's own path: featurize, then the barrier the features
+    stage uses, then verify — BroadcastHashJoin only, with the gate
+    reading the pruned table's barrier measurement."""
     from hsip.barrier import Regime
     from hsip.verify import verify_jaccard_hamming
 
@@ -154,9 +157,10 @@ def test_pipeline_latency_features_broadcast_through_barrier(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     feats = Regime().barrier(featurize(docs, "doc_id", "text", cfg))
     try:
-        with _no_auto_broadcast(spark):
-            p = plan(verify_jaccard_hamming(_pairs_over(spark, feats), feats,
-                                            cfg, _latency()))
+        with Regime() as regime:
+            out = verify_jaccard_hamming(_pairs_over(spark, feats), feats, cfg, regime)
+            with _no_auto_broadcast(spark):
+                p = plan(out)
         assert "BroadcastHashJoin" in p, p
         assert "SortMergeJoin" not in p, p
     finally:
@@ -165,9 +169,10 @@ def test_pipeline_latency_features_broadcast_through_barrier(spark):
 
 def test_pipeline_latency_features_broadcast_from_warehouse(spark, tmp_path):
     """Warehouse runs hand verify the features stage read back from its
-    parquet checkpoint (Catalog.read), not a barrier frame: the gate sizes
-    it from the files, so the fused verify still broadcasts it."""
-    from hsip.barrier import measured_size_bytes
+    parquet checkpoint (Catalog.read), not a barrier frame, and their
+    regime keeps lineage: the pruned table passes a cache+count barrier,
+    which measures it, so verify still broadcasts it."""
+    from hsip.barrier import Regime, measured_size_bytes
     from hsip.catalog import Catalog
     from hsip.verify import verify_jaccard_hamming
 
@@ -177,9 +182,10 @@ def test_pipeline_latency_features_broadcast_from_warehouse(spark, tmp_path):
     catalog.write(featurize(docs, "doc_id", "text", cfg), "ckpt.plan.features")
     feats = catalog.read("ckpt.plan.features")
     assert 0 < measured_size_bytes(feats) < 256 * 1024 * 1024
-    with _no_auto_broadcast(spark):
-        p = plan(verify_jaccard_hamming(_pairs_over(spark, feats), feats,
-                                        cfg, _latency()))
+    with Regime(keep_lineage=True) as regime:
+        out = verify_jaccard_hamming(_pairs_over(spark, feats), feats, cfg, regime)
+        with _no_auto_broadcast(spark):
+            p = plan(out)
     assert "BroadcastHashJoin" in p, p
     assert "SortMergeJoin" not in p, p
 
@@ -203,18 +209,10 @@ def _no_auto_broadcast(spark):
     return session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"})
 
 
-def _latency():
-    """A latency regime, as run_documents builds below
-    eager_barrier_min_docs."""
-    from hsip.barrier import Regime
-
-    return Regime(width=8)
-
-
 def test_eager_substr_hydration_broadcasts_known_small_text(spark):
-    """Eager-regime verify_substr: the pruned text table goes through the
-    barrier, which keeps its hash layout and measures it; known small, it
-    is broadcast into both hydration joins, so neither the pair rows nor
+    """verify_substr: the pruned text table goes through the barrier,
+    which keeps its hash layout and measures it; known small, it is
+    broadcast into both hydration joins, so neither the pair rows nor
     the corpus text is re-shuffled (no SortMergeJoin over the text)."""
     from hsip.barrier import Regime
     from hsip.suffixes import verify_substr
@@ -237,27 +235,6 @@ def test_eager_substr_hydration_broadcasts_known_small_text(spark):
         assert [(r.a, r.b, r.verdict) for r in out.collect()] == [("a", "b", True)]
     finally:
         regime.release()
-
-
-def test_latency_substr_prune_broadcasts_pair_ids(spark):
-    """r6: verify_substr's latency path broadcasts the (corpus-bounded)
-    distinct pair-id set, so the semi-join prune never exchanges the
-    corpus text; rows are pinned elsewhere (e2e oracle tests)."""
-    from hsip.suffixes import verify_substr
-
-    cfg = DedupConfig()
-    docs = spark.createDataFrame(
-        [("a", "x" * 300), ("b", "x" * 300)], "id string, text string"
-    )
-    pairs = spark.createDataFrame(
-        [("a", "b", [0], [0])],
-        "a string, b string, pos_as array<int>, pos_bs array<int>",
-    )
-    regime = _latency()
-    p = plan(verify_substr(pairs, docs, "id", "text", cfg, regime))
-    regime.release()
-    # the LeftSemi prune must be broadcast (build side = pair ids)
-    assert re.search(r"BroadcastHashJoin LeftSemi", p), p
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,7 @@
 """G5/G6: SimHash golden + monotonicity, Hamming block probing."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from hsip.barrier import Regime
@@ -142,11 +143,11 @@ def test_probe_key_entropy_rule():
     assert at_1e12["expected_random_collisions"] > 1e9
 
 
-def test_pipeline_emits_entropy_advisory(spark, tmp_path):
-    """run_documents records the advisory in stats and warns when the
-    corpus outgrows the probe keys (forced here via a tiny margin by
-    monkeypatching n/a — instead assert the stats payload shape on a
-    small corpus where the rule passes silently)."""
+def test_pipeline_emits_entropy_advisory(spark):
+    """run_documents records the probe-key advisory in stats and warns
+    when the corpus outgrows the probe keys: silent with the default
+    40-bit keys at n=8, a UserWarning with 8-bit keys
+    (hamming_blocks=8, hamming_d=7), where n=8 needs 11 bits."""
     import warnings
 
     from hsip.pipeline import run_documents
@@ -156,13 +157,22 @@ def test_pipeline_emits_entropy_advisory(spark, tmp_path):
         "doc_id int, text string",
     )
     with warnings.catch_warnings():
-        warnings.simplefilter("error")  # rule passes at n=8 -> no warning
+        warnings.simplefilter("error", UserWarning)
         res = run_documents(
             spark, docs, "doc_id", "text", DedupConfig(),
             channels=("simhash",),
         )
     ent = res.stats["probe_key_entropy"]
     assert ent["ok"] and ent["key_bits"] == 40.0
+
+    with pytest.warns(UserWarning, match="probe keys"):
+        res = run_documents(
+            spark, docs, "doc_id", "text",
+            DedupConfig(hamming_blocks=8, hamming_d=7), channels=("simhash",),
+        )
+    ent = res.stats["probe_key_entropy"]
+    assert ent["ok"] is False
+    assert ent["key_bits"] == 8.0 and ent["needed_bits"] > ent["key_bits"]
 
 
 def test_hot_bucket_salt_policy_is_honoured(spark):

@@ -107,13 +107,12 @@ def test_ann_contract_query_cache_hygiene(spark):
     """The ANN contract query (__spark_entry__.ann_rhp_lsh_topk) must
     leave only its materialized RESULT cached — the corpus-sized
     signature/band caches are released with the regime before it
-    returns (VERDICT r4 #3). A latency regime keeps them as lazy caches,
-    which the session's CacheManager lists."""
+    returns (VERDICT r4 #3)."""
     rows = [(i, [float(x) for x in np.random.default_rng(i).standard_normal(8)])
             for i in range(30)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     spark.catalog.clearCache()
-    with Regime(width=8) as regime:
+    with Regime() as regime:
         out = rhp_lsh_topk(emb, k=2, dim=8, band_bits=4, seed=7, regime=regime)
         out = out.cache()
         out.count()

@@ -260,22 +260,18 @@ def test_shared_expansion_anchors_and_layout(spark):
     assert want_hot and any(2 <= len(r) <= cfg.substr_bucket_cap for r in buckets.values())
     assert any(n > acap for n, _, _ in want.values())
 
-    for regime in (Regime(), Regime(width=8)):
-        try:
-            pairs, hot = substr_candidates(fps, cfg, regime)
-            rows = pairs.collect()
-            assert {r.channel for r in rows} == {"substr"}
-            got = {(r.a, r.b): (r.n_anchors, list(r.pos_as), list(r.pos_bs)) for r in rows}
-            assert got == want
-            assert {r.fp_hash: r.bucket_size for r in hot.collect()} == want_hot
-            if regime.eager:
-                for q in (pairs, hot):
-                    plan = q._jdf.queryExecution().executedPlan().toString()
-                    assert not re.search(r"Exchange hashpartitioning\(fp_hash", plan), plan
-                plan = pairs._jdf.queryExecution().executedPlan().toString()
-                assert re.search(r"Exchange hashpartitioning\(a#", plan), plan
-        finally:
-            regime.release()
+    with Regime() as regime:
+        pairs, hot = substr_candidates(fps, cfg, regime)
+        rows = pairs.collect()
+        assert {r.channel for r in rows} == {"substr"}
+        got = {(r.a, r.b): (r.n_anchors, list(r.pos_as), list(r.pos_bs)) for r in rows}
+        assert got == want
+        assert {r.fp_hash: r.bucket_size for r in hot.collect()} == want_hot
+        for q in (pairs, hot):
+            plan = q._jdf.queryExecution().executedPlan().toString()
+            assert not re.search(r"Exchange hashpartitioning\(fp_hash", plan), plan
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"Exchange hashpartitioning\(a#", plan), plan
 
 
 def test_span_batch_kernel_equals_scalar_loop():

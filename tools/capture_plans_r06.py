@@ -4,16 +4,12 @@ Usage:  python tools/capture_plans_r06.py <outdir> <suffix>
         (run once against the round-5 tree with suffix "before" and once
         against the round-6 tree with suffix "after")
 
-Builds the logical chains the pipeline wires up, in the latency regime
-the sf0.1 corpus runs in (`hsip.barrier.Regime`), and prints their
-physical plans without executing them, plus the headline relational
-queries; the fused mh+sh bucket table comes from
-`hsip.lsh.channel_bucket_table`. Then the same chains in the eager
-regime of the `transcripts-eager` benchmark workload
-(`gen_transcripts(42, 1000)`, reassembled): those barriers execute, as
-in a run, so the `eager_*` plans show the join strategies chosen over
-the materialized leaves. Each written plan's line reports its join
-operators.
+Builds the chains the pipeline wires up on the `transcripts-eager`
+benchmark workload's corpus (`gen_transcripts(42, 1000)`, reassembled),
+under an ephemeral run's `hsip.barrier.Regime`: the barriers execute, as
+in a run, so the `eager_*` plans show the join strategies chosen over the
+materialized leaves. Then the headline relational queries. Each written
+plan's line reports its join operators.
 """
 
 from __future__ import annotations
@@ -47,7 +43,7 @@ def explain_to(df, name: str) -> None:
 
 
 def explain_eager_transcripts(spark) -> None:
-    """The mh/sh and substr chains as an ephemeral eager run places them
+    """The mh/sh and substr chains as an ephemeral run places them
     (hsip/pipeline.py), hot-bucket and truncation counts observed."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
@@ -65,7 +61,7 @@ def explain_eager_transcripts(spark) -> None:
     pdf = gen_transcripts(seed=42, n_base=1000).transcripts
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     turns = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
-    cfg = DedupConfig(eager_barrier_min_docs=0)
+    cfg = DedupConfig()
     regime = Regime()
     try:
         base = regime.reused(reassemble(dedupe_turn_versions(turns)).select(
@@ -95,44 +91,10 @@ def explain_eager_transcripts(spark) -> None:
 def main() -> None:
     os.makedirs(OUT, exist_ok=True)
     import __spark_entry__ as E
-    from pyspark.sql import functions as F
 
-    from hsip.barrier import Regime
-    from hsip.config import DedupConfig
-    from hsip.lsh import channel_bucket_table, pairs_from_buckets
     from hsip.session import get_spark
-    from hsip.suffixes import fingerprint_table, substr_candidates, verify_substr
-    from hsip.textkernel import featurize
-    from hsip import verify as V
 
     spark = get_spark(app_name=f"plans-{SUFFIX}", master="local[4]")
-    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    cfg = DedupConfig(jaccard_threshold=0.7)
-    base = docs.select(
-        F.col("doc_id").cast("string").alias("id"), F.col("text")
-    )
-
-    # --- substr channel: candidates -> span verify (the V4 chain) ---
-    regime = Regime(width=8)
-    fps = fingerprint_table(base, "id", "text", cfg)
-    pairs, _hot = substr_candidates(fps, cfg, regime)
-    sub_verified = verify_substr(pairs, base, "id", "text", cfg, regime)
-    explain_to(sub_verified, "verify_substr")
-
-    # --- fused mh+sh channel: union buckets -> pairs -> verify ---
-    feats = featurize(base, "id", "text", cfg)
-    both = channel_bucket_table(feats, cfg, ("minhash_lsh", "simhash"))
-    mhsh_pairs, _hot2 = pairs_from_buckets(
-        both, cfg.bucket_cap, bucket_cols=("channel", "bkt_id", "bkt_hash"),
-        channel=None, hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
-        payload_cols=("simhash",), regime=regime,
-    )
-    mhsh_verified = V.verify_jaccard_hamming(mhsh_pairs, feats, cfg, regime)
-    explain_to(mhsh_verified, "verify_mh_sh")
-
-    # --- combined verdict table (pre-checkpoint logical shape) ---
-    explain_to(V.combine_verified(mhsh_verified, sub_verified), "verified")
-
     explain_eager_transcripts(spark)
 
     # --- headline relational queries (declared contract queries) ---
