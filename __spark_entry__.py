@@ -1460,13 +1460,12 @@ def doc_minhash_signatures(spark, sf_dir):
     signature values. The VALUES are hash-kernel-specific (no oracle can
     reproduce them); the shape is the part DuckDB can pin."""
     from hsip.config import DedupConfig
-    from hsip.minhash import attach_minhash
-    from hsip.shingle import shingle_docs
+    from hsip.textkernel import featurize
 
     cfg = DedupConfig()
     docs = _t(spark, sf_dir, "documents")
-    sigs = attach_minhash(shingle_docs(docs, "doc_id", "text", cfg), cfg)
-    return sigs.select("id", F.size("sig").alias("sig_len"))
+    feats = featurize(docs, "doc_id", "text", cfg)
+    return feats.select("id", F.size("sig").alias("sig_len"))
 
 
 def minhash_lsh_clusters(spark, sf_dir):
@@ -1484,14 +1483,15 @@ def minhash_lsh_clusters(spark, sf_dir):
 def simhash_hamming_pairs(spark, sf_dir):
     from hsip.barrier import Regime
     from hsip.config import DedupConfig
-    from hsip.simhash import attach_simhash, simhash_candidates
+    from hsip.lsh import mh_sh_candidates
+    from hsip.textkernel import featurize
     from hsip.verify import verify_hamming
 
     cfg = DedupConfig()
     docs = _t(spark, sf_dir, "documents")
-    sims = attach_simhash(docs, "doc_id", "text", cfg)
+    feats = featurize(docs, "doc_id", "text", cfg)
     with Regime.for_run(cfg) as regime:
-        pairs, _ = simhash_candidates(sims, cfg, regime)
+        pairs = mh_sh_candidates(feats, cfg, ("simhash",), regime)
         return regime.barrier(
             verify_hamming(pairs, cfg).filter("verdict").select("a", "b", "hamming"))
 

@@ -20,7 +20,7 @@ What the flat barrier keeps from the cache+count barrier it replaces:
   with the partitioning the final physical plan produced.
 - the measured size. The leaf's blocks are measured from the block
   manager's storage info; ``measured_size_bytes`` returns that number,
-  the broadcast gates read it (``fits_broadcast``), and the leaf carries
+  the broadcast gate reads it (``Regime.broadcastable``), and the leaf carries
   it as its Catalyst ``sizeInBytes``, so join planning over the leaf does
   not depend on what the materialized plan contained.
 - the release. ``unpersist()`` on the returned frame drops its blocks
@@ -56,7 +56,7 @@ caller keeps what it needs past the call by passing it through
 its ``with`` block exits::
 
     with Regime.for_run(cfg) as regime:
-        out = regime.barrier(simhash_candidates(sims, cfg, regime)[0])
+        out = regime.barrier(mh_sh_candidates(feats, cfg, ("simhash",), regime))
 """
 
 from __future__ import annotations
@@ -157,11 +157,16 @@ class Regime:
         return self.barrier(df, release=self.sweep)
 
     def broadcastable(self, name: str, df: DataFrame) -> bool:
-        """``fits_broadcast(df)``, with the decision and the measured bytes
-        behind it kept as ``hydration[name]``, so a run's stats show which
-        hydration joins broadcast and why."""
+        """True when ``df`` was measured at or under the session's
+        ``spark.sql.autoBroadcastJoinThreshold`` (off when negative): the
+        budget Catalyst applied to a materialized cache's measured size
+        before the barriers went flat. The decision and the measured bytes
+        behind it are kept as ``hydration[name]``, so a run's stats show
+        which hydration joins broadcast and why."""
         n = measured_size_bytes(df)
-        ok = _within_broadcast(df, n, None)
+        limit = df.sparkSession._jsparkSession.sessionState().conf() \
+            .autoBroadcastJoinThreshold()
+        ok = n is not None and 0 <= n <= limit
         self.hydration[name] = {"broadcast": ok, "measured_size_bytes": n}
         return ok
 
@@ -188,21 +193,6 @@ def measured_size_bytes(df: DataFrame) -> int | None:
     if n is None and _is_file_scan(df):
         n = _catalyst_bytes(df)
     return n
-
-
-def fits_broadcast(df: DataFrame, limit: int | None = None) -> bool:
-    """True when ``df`` was measured at or under ``limit`` bytes. The
-    default limit is the session's ``spark.sql.autoBroadcastJoinThreshold``
-    (off when negative): the budget Catalyst applied to a materialized
-    cache's measured size before the barriers went flat."""
-    return _within_broadcast(df, measured_size_bytes(df), limit)
-
-
-def _within_broadcast(df: DataFrame, n: int | None, limit: int | None) -> bool:
-    if limit is None:
-        limit = df.sparkSession._jsparkSession.sessionState().conf() \
-            .autoBroadcastJoinThreshold()
-    return n is not None and 0 <= n <= limit
 
 
 def _flat(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:

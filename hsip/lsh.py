@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from .barrier import Regime
 from .config import DedupConfig
+from .simhash import hamming_block_table
 
 
 def band_table(sig_df: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -237,9 +238,6 @@ def channel_bucket_table(features: DataFrame, cfg: DedupConfig,
     table: no join for the channel whose candidate count can go
     quadratic (verify.py r4 note).
     """
-    # simhash.py imports this module
-    from .simhash import hamming_block_table
-
     legs = []
     if "minhash_lsh" in channels:
         legs.append(band_table(features, cfg).select(
@@ -260,40 +258,24 @@ def channel_bucket_table(features: DataFrame, cfg: DedupConfig,
         "channel", "bkt_id", "bkt_hash")
 
 
-def lsh_candidates(sig_df: DataFrame, cfg: DedupConfig, regime: Regime,
-                   channel: str = "minhash_lsh") -> tuple[DataFrame, DataFrame]:
-    """(id, sig) -> (candidate pairs, hot-bucket stats).
-
-    The band table is materialized through ``regime`` (``reused``: both
-    the sizes groupBy and the join-back scan it) and joins its sweep, for
-    the caller to release once the pairs have materialized.
-    ``channel`` labels the pair rows — any signature with MinHash's
-    (id, sig array<long>) layout rides the same machinery (e.g. ICWS
-    weighted MinHash, hsip/wminhash.py, channel="wminhash").
-    """
-    # co-locate bucket members before the self-join; AQE coalesces after
-    bands = regime.reused(band_table(sig_df, cfg).repartition("band_id", "band_hash"))
-    return pairs_from_buckets(
-        bands, cfg.bucket_cap, channel=channel,
-        hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed, regime=regime,
-    )
-
-
 def mh_sh_candidates(features: DataFrame, cfg: DedupConfig,
                      channels: tuple[str, ...], regime: Regime,
                      hot_counts: dict[str, Observation] | None = None) -> DataFrame:
-    """(id, sig, simhash) features -> the MinHash+SimHash candidate pairs
-    (a, b, channel, simhash_a, simhash_b) of the requested ``channels``,
-    for ``verify.verify_jaccard_hamming``: the pipeline's chain, and the
-    one ``audit.channel_outputs`` scores.
+    """Features -> the MinHash+SimHash candidate pairs (a, b, channel,
+    simhash_a, simhash_b) of the requested ``channels``: the one
+    MinHash/SimHash candidate builder, the pipeline's chain and the one
+    ``audit.channel_outputs`` scores. The input carries ``sig`` when
+    ``minhash_lsh`` is requested and ``simhash`` when ``simhash`` is (both
+    for textkernel.featurize's output); any (id, sig array<long>) or
+    (id, simhash) frame rides it, e.g. ICWS signatures (wminhash.py,
+    which relabels its rows) or image perceptual hashes (multimodal.py).
 
     The unified bucket table passes a barrier (pairs_from_buckets
     contract: the sizes groupBy and the join-back both scan it, and it
     keeps its hash layout through the barrier) that joins ``regime``'s
     sweep. ``hot_counts`` as in pairs_from_buckets, one per channel.
     """
-    both = regime.barrier(channel_bucket_table(features, cfg, channels),
-                          release=regime.sweep)
+    both = regime.reused(channel_bucket_table(features, cfg, channels))
     pairs, _ = pairs_from_buckets(
         both, cfg.bucket_cap,
         bucket_cols=("channel", "bkt_id", "bkt_hash"), channel=None,

@@ -9,24 +9,17 @@ validates collision probability == Jaccard. Coefficients are seeded from
 the config so signatures are deterministic across runs/partitions
 (resume + recall invariants, BASELINE.json:6).
 
-Vectorization: each Arrow batch is ONE numpy pass over the list array's
-flat shingle buffer (arrowbuf.list_views) with a scatter-min into bins —
-no per-row Python in the hot loop (input_hint "no per-row Python",
-BASELINE.json:15).
+Vectorization: textkernel.featurize runs ``_oph_batch`` once per Arrow
+batch, ONE numpy pass over the batch's flat shingle buffer with a
+scatter-min into bins — no per-row Python in the hot loop (input_hint
+"no per-row Python", BASELINE.json:15).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pyarrow as pa
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import arrow_udf
 
-from .arrowbuf import list_views, matrix_rows, ragged
+from .arrowbuf import ragged
 from .config import DedupConfig
 
 _EMPTY_SENTINEL = np.uint64(0xFFFFFFFFFFFFFFFF)
@@ -79,20 +72,6 @@ def _oph_batch(flat: np.ndarray, lens: np.ndarray, num_perm: int,
             np.arange(len(rows_any))[:, None], src
         ]
     return out.view(np.int64)
-
-
-def attach_minhash(shingles_df: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(id, shingles) -> (id, sig: array<long> length num_perm)."""
-    num_perm, seed = cfg.num_perm, cfg.seed
-
-    @arrow_udf(T.ArrayType(T.LongType()))
-    def minhash_sig(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        a, b = _coeffs(num_perm, seed)
-        for arr in it:
-            yield matrix_rows(_oph_batch(*list_views(arr), num_perm, a[0], b[0]))
-
-    shingles = F.coalesce(F.col("shingles"), F.array().cast("array<bigint>"))
-    return shingles_df.select("id", minhash_sig(shingles).alias("sig"))
 
 
 def minhash_signatures_local(shingle_sets: list[list[int]], cfg: DedupConfig) -> np.ndarray:

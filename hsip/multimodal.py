@@ -202,19 +202,20 @@ def phash_near_dup_pairs(feats: DataFrame, max_hamming: int = 3,
     phash rides through hamming_block_table's C(B, B-d) multi-table keys
     (guaranteed recall within max_hamming by pigeonhole), bucket pairing
     inherits the hot-bucket cap, and verification is a projection over
-    the payload the pair rows already carry — the same scale shape that
-    cleared the text channels' audits applies to images for free. The
-    block table joins ``regime``'s sweep.
+    the payload the pair rows already carry — the SimHash channel of
+    lsh.mh_sh_candidates, so the scale shape that cleared the text
+    channels' audits applies to images for free. The bucket table joins
+    ``regime``'s sweep.
     """
     from hsip.config import DedupConfig
-    from hsip.simhash import simhash_candidates
+    from hsip.lsh import mh_sh_candidates
     from hsip.verify import verify_hamming
 
     cfg = DedupConfig(hamming_d=max_hamming, bucket_cap=bucket_cap)
     sim = feats.filter(F.col("ok") & F.col("phash").isNotNull()).select(
         F.col("media_id").alias("id"), F.col("phash").alias("simhash")
     )
-    pairs, _truncated = simhash_candidates(sim, cfg, regime)
+    pairs = mh_sh_candidates(sim, cfg, ("simhash",), regime)
     return (
         verify_hamming(pairs, cfg)
         .filter("verdict")

@@ -37,13 +37,6 @@ CONVERSATIONS = T.StructType(
     ]
 )
 
-SHINGLES = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("shingles", T.ArrayType(T.LongType()), False),
-    ]
-)
-
 MINHASH_SIGS = T.StructType(
     [
         T.StructField("id", T.StringType(), False),

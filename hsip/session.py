@@ -13,12 +13,13 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-_FAIR_POOLS = ("mh_sh", "minhash_lsh", "simhash", "substr")
+_FAIR_POOLS = ("mh_sh", "substr")
 
 
 def _fair_pool_file() -> str:
     """Materialize the FAIR pool definitions the pipeline's channel
-    threads use (pipeline._run_channels names them hsip-<channel>).
+    threads use (pipeline._run_channels runs two: hsip-mh_sh and
+    hsip-substr).
 
     Without an allocation file every pool is created ad hoc with
     FIFO/minShare 0/weight 1 (FairSchedulableBuilder warning — VERDICT.md

@@ -3,30 +3,24 @@
 SimHash (Charikar, STOC 2002; web near-dup application: Manku/Jain/Das
 Sarma, WWW 2007): each token's 64-bit hash votes ±1 per bit position,
 weighted by term frequency; the sign vector packs into a 64-bit
-fingerprint. Token hashing stays JVM-side (xxhash64 inside transform);
-the Python crossing carries only array<long>, and the bit-vote is one
-numpy pass per Arrow batch (segmented reduceat — no per-row Python).
+fingerprint. textkernel.featurize hashes the tokens (the same poly-hash
+pass that yields the shingles) and runs ``_simhash_batch``, the
+bit-vote, once per Arrow batch (segmented reduceat — no per-row Python).
 
 Probing (Manku'07 §3, pigeonhole): for Hamming distance <= d, split the
-64 bits into d+1 blocks — two fingerprints within distance d agree
-exactly on at least one block. Self-equi-join per (block_id, block_bits)
-bucket generates candidates; bit_count(xor) <= d verifies (verify.py V3).
+bits into blocks so that two fingerprints within distance d agree
+exactly on at least one probe key (``hamming_block_table``); the
+``simhash`` channel of lsh.mh_sh_candidates self-joins each key's bucket
+into candidates, and bit_count(xor) <= d verifies (verify.py V3).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import arrow_udf
 
-from .arrowbuf import list_views, matrix_rows, ragged
-from .barrier import Regime
 from .config import DedupConfig
-from .lsh import pairs_from_buckets
-from .normalize import norm_text_col, tokens_col
 
 _BIT_SHIFTS = np.arange(64, dtype=np.uint64)
 
@@ -73,44 +67,6 @@ def _simhash_batch(flat: np.ndarray, lens: np.ndarray) -> np.ndarray:
     )
     out[nz] = packed
     return out.view(np.int64)
-
-
-def attach_simhash(df: DataFrame, id_col: str, text_col: str, cfg: DedupConfig) -> DataFrame:
-    """(id, text) -> (id, simhash).
-
-    64-bit config: ``simhash: long`` (unchanged layout). 128-bit config
-    (the 10^9+-distinct-docs key-entropy remedy — config.py): ``simhash:
-    array<bigint>`` of ``simhash_bits/64`` lanes, where lane ``l`` is the
-    64-bit bit-vote over independently-seeded token hashes
-    ``xxhash64(token, seed + l)`` — lane 0 is bit-identical to the 64-bit
-    fingerprint, so widening never changes the low lane's semantics.
-    NULL text votes like "" (fingerprint 0), as in featurize.
-    """
-    seed = cfg.seed
-    toks = tokens_col(F.coalesce(norm_text_col(text_col, cfg), F.lit("")))
-    lanes = cfg.simhash_bits // 64
-    assert lanes in (1, 2)  # config validates simhash_bits in (64, 128)
-
-    def _lane_hash(lane_seed: int):
-        # single-param lambda: a 2-param one would receive F.transform's
-        # (element, index) calling convention and hash the array INDEX
-        return F.transform(toks, lambda t: F.xxhash64(t, F.lit(lane_seed)))
-
-    lane_hashes = [_lane_hash(seed + l) for l in range(lanes)]
-    if lanes == 1:
-        @arrow_udf(T.LongType())
-        def simhash64(hashes: pa.Array) -> pa.Array:
-            return pa.array(_simhash_batch(*list_views(hashes)))
-
-        sim = simhash64(*lane_hashes)
-    else:
-        @arrow_udf(T.ArrayType(T.LongType()))
-        def simhash_lanes(c0: pa.Array, c1: pa.Array) -> pa.Array:
-            return matrix_rows(np.stack(
-                [_simhash_batch(*list_views(c)) for c in (c0, c1)], axis=1))
-
-        sim = simhash_lanes(*lane_hashes)
-    return df.select(F.col(id_col).cast("string").alias("id"), sim.alias("simhash"))
 
 
 def hamming_block_table(simhash_df: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -201,30 +157,3 @@ def probe_key_entropy(cfg: DedupConfig, n_docs: int, margin_bits: float = 8.0) -
         "expected_random_collisions": exp_pairs,
         "ok": key_bits >= needed,
     }
-
-
-def simhash_candidates(simhash_df: DataFrame, cfg: DedupConfig,
-                       regime: Regime) -> tuple[DataFrame, DataFrame]:
-    # the block table goes through ``regime.reused`` (joining its sweep):
-    # the sizes-groupBy and the join-back both scan it, and it is C(B, B-d)
-    # rows per doc — 56x at B=8,d=3 — so recomputing the posexplode +
-    # repartition per consumer doubles the channel's dominant exchange
-    # (mirrors hsip/lsh.py lsh_candidates)
-    blocks = regime.reused(
-        hamming_block_table(simhash_df, cfg).repartition("table_id", "key_hash"))
-    return pairs_from_buckets(
-        blocks,
-        cfg.bucket_cap,
-        bucket_cols=("table_id", "key_hash"),
-        channel="simhash",
-        hot_policy=cfg.hot_bucket_policy,
-        salt_seed=cfg.seed,
-        payload_cols=("simhash",),
-        regime=regime,
-    )
-
-
-def simhash_local(token_hash_sets: list[list[int]]) -> np.ndarray:
-    """Driver-local golden implementation for tests."""
-    return _simhash_batch(*ragged(
-        [np.asarray(x, dtype=np.int64) for x in token_hash_sets], np.int64))

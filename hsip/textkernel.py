@@ -1,11 +1,11 @@
 """Fused text featurization kernel: text -> (shingles, minhash sig,
 simhash) in ONE Arrow-batched numpy pass via mapInArrow.
 
-Why this exists (measured on the 554k-turn corpus): the pure-SQL paths
-(shingle.py / simhash.py token hashing) evaluate higher-order-function
-lambdas INTERPRETED, one expression-tree eval per array element —
-~20-30us per token, ~5,000 CPU-s for 64M tokens. This kernel computes
-the same features at memory bandwidth:
+Why this exists (measured on the 554k-turn corpus): pure-SQL
+featurization (shingle.py's xxhash64 token hashing) evaluates
+higher-order-function lambdas INTERPRETED, one expression-tree eval per
+array element — ~20-30us per token, ~5,000 CPU-s for 64M tokens. This
+kernel computes the same features at memory bandwidth:
 
   - normalization: the JVM normalizer every channel shares
     (normalize.norm_text_col), NULL text as ""; the kernel reads each
@@ -19,10 +19,11 @@ the same features at memory bandwidth:
 
 ~100-200 CPU-s for the same corpus — a ~30x reduction, and the
 difference between feasible and not at 10^12 turns, so this is the
-pipeline's only featurization; the SQL paths stay as library functions
-for direct callers. Hash values differ from the SQL path (poly-hash vs
-xxhash64) by design; both are config-seeded and internally consistent,
-and tests/test_properties.py pins what the two must share: per-doc
+library's only MinHash/SimHash featurizer: the pipeline, the audit and
+the contract queries all read its (sig, simhash) through
+lsh.mh_sh_candidates. shingle.shingle_docs stays as the SQL reference:
+its hash values differ (xxhash64 vs poly-hash) by design, and
+tests/test_properties.py pins what the two must share: per-doc
 distinct-shingle counts and pairwise exact Jaccard.
 """
 
@@ -50,7 +51,7 @@ _MIX2 = np.uint64(0xC4CEB9FE1A85EC53)
 
 def _features_schema(simhash_bits: int) -> T.StructType:
     """simhash is one long at 64 bits, array<bigint> lanes at 128
-    (matching attach_simhash's layouts — verify dispatches on dtype)."""
+    (simhash_bits/64 lanes; verify dispatches on dtype)."""
     sim_t = T.LongType() if simhash_bits == 64 else T.ArrayType(T.LongType())
     return T.StructType(
         [
@@ -91,10 +92,10 @@ def _doc_features(data: np.ndarray, k: int, seed: np.uint64) -> tuple[np.ndarray
     n = len(data)
     if n == 0:
         # empty normalized doc: the WHOLE-DOC hash singleton, mirroring
-        # the nt<k branch below and the SQL path's `short` fallback
+        # the nt<k branch below and the SQL reference's `short` fallback
         # (shingle.shingles_col) — an empty shingle ARRAY here would
-        # make two empty docs verify at jaccard 0 in fused runs while
-        # the SQL path clusters them at 1.0 (same text, same config)
+        # make two empty docs verify at jaccard 0 where the reference
+        # puts them at 1.0 (same text, same config)
         whole = _mix(np.zeros(1, dtype=np.uint64), seed)
         return whole, np.empty(0, dtype=np.uint64)
     pref = np.zeros(n + 1, dtype=np.uint64)
@@ -152,9 +153,9 @@ def featurize(df: DataFrame, id_col: str, text_col: str, cfg: DedupConfig) -> Da
             sh, sh_lens = ragged([f[0] for f in feats], np.uint64)
             tok, tok_lens = ragged([f[1] for f in feats], np.uint64)
             sigs = _oph_batch(sh, sh_lens, num_perm, a[0], b[0])
-            # lane l votes over remixed token hashes (lane 0 = the base
-            # hashes, matching the 64-bit output bit-for-bit); mirrors
-            # attach_simhash's per-lane independent seeding
+            # lane l votes over independently remixed token hashes (lane
+            # 0 = the base hashes, matching the 64-bit output bit-for-bit,
+            # so widening never moves the low lane)
             lanes = [tok] + [
                 _mix(tok, np.uint64((seed + 0x9E3779B9 * lane) & (2**64 - 1)))
                 for lane in range(1, sim_lanes)

@@ -108,9 +108,8 @@ def verify_jaccard(pairs: DataFrame, shingles_df: DataFrame, cfg: DedupConfig,
 
 def verify_hamming(pairs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """V3: bit_count(xor) <= d over SimHash fingerprints. The pairs carry
-    (simhash_a, simhash_b) — the payload_cols path through
-    pairs_from_buckets (simhash.simhash_candidates) — so the verdict is a
-    pure projection."""
+    (simhash_a, simhash_b) — the payload lsh.mh_sh_candidates carries
+    through pairs_from_buckets — so the verdict is a pure projection."""
     return (
         pairs.withColumn("hamming", hamming_col(pairs))
         .drop("simhash_a", "simhash_b")

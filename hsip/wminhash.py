@@ -163,8 +163,8 @@ def attach_weighted_minhash(
     df: DataFrame, id_col: str, text_col: str, cfg: DedupConfig
 ) -> DataFrame:
     """(id, text) -> (id, sig: array<long>) ICWS signatures over
-    tf-weighted normalized tokens. Drop-in for attach_minhash's output
-    shape, so band_table/pairs_from_buckets/LSH run unchanged on it."""
+    tf-weighted normalized tokens, in featurize's ``sig`` layout, so
+    lsh.mh_sh_candidates bands them unchanged."""
     num_perm, seed = cfg.num_perm, cfg.seed
     toks = tokens_col(norm_text_col(text_col, cfg))
     token_hashes = F.transform(toks, lambda t: F.xxhash64(t, F.lit(seed)))
@@ -267,20 +267,21 @@ def weighted_near_dup_pairs(
     threshold: float | None = None,
 ) -> DataFrame:
     """End-to-end weighted near-dup channel: ICWS signatures -> the
-    shared LSH banding/bucket machinery -> exact multiset-Jaccard
+    MinHash channel of lsh.mh_sh_candidates -> exact multiset-Jaccard
     verification of candidates only. Output (a, b, channel='wminhash',
     wjaccard, verdict) matches the other channels' verified-pair shape;
-    the band table joins ``regime``'s sweep.
+    the bucket table joins ``regime``'s sweep.
 
     ``threshold`` defaults to cfg.jaccard_threshold; pick (lsh_bands,
     lsh_rows) for it with lsh.tuned_config. Scale: sketch O(distinct
     tokens x num_perm)/doc; verify volume ~ candidate shared-token mass
     (semi-join-pruned hydration), never corpus^2."""
-    from .lsh import lsh_candidates
+    from .lsh import mh_sh_candidates
 
     t = cfg.jaccard_threshold if threshold is None else threshold
     sigs = attach_weighted_minhash(df, id_col, text_col, cfg)
-    pairs, _hot = lsh_candidates(sigs, cfg, regime, channel="wminhash")
+    pairs = mh_sh_candidates(sigs, cfg, ("minhash_lsh",), regime) \
+        .withColumn("channel", F.lit("wminhash"))
     tok = token_count_table(df, id_col, text_col, cfg)
     return verify_weighted_jaccard(pairs, tok, t)
 

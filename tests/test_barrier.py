@@ -10,7 +10,7 @@ import re
 
 from pyspark.sql import functions as F
 
-from hsip.barrier import Regime, fits_broadcast, measured_size_bytes
+from hsip.barrier import Regime, measured_size_bytes, session_conf
 from hsip.config import DedupConfig
 
 materialize = Regime().barrier  # the ephemeral default: executor-local blocks
@@ -94,15 +94,23 @@ def test_measured_size_bytes_reads_the_barrier(spark):
         out.unpersist()
 
 
-def test_fits_broadcast_gate(spark):
+def test_broadcastable_gate(spark):
+    """The gate reads the session's autoBroadcastJoinThreshold: at or
+    under it broadcasts, one byte over declines, negative is off."""
+    regime = Regime()
     out = materialize(_keyed(spark, 500))
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
     try:
         n = measured_size_bytes(out)
-        assert fits_broadcast(out)  # session threshold: 32 MB
-        assert fits_broadcast(out, limit=n)
-        assert not fits_broadcast(out, limit=n - 1)
-        assert not fits_broadcast(out, limit=-1)  # broadcasts disabled
-        assert not fits_broadcast(_keyed(spark, 500))  # unmeasured: decline
+        assert regime.broadcastable("default", out)  # session threshold: 32 MB
+        with session_conf(spark, {threshold: str(n)}):
+            assert regime.broadcastable("at", out)
+        with session_conf(spark, {threshold: str(n - 1)}):
+            assert not regime.broadcastable("over", out)
+        with session_conf(spark, {threshold: "-1"}):
+            assert not regime.broadcastable("off", out)  # broadcasts disabled
+        # unmeasured: decline
+        assert not regime.broadcastable("lazy", _keyed(spark, 500))
     finally:
         out.unpersist()
 
@@ -148,7 +156,7 @@ def test_keep_lineage_is_cache_and_count(spark):
         assert cm.lookupCachedData(out._jdf).isDefined()
         n = measured_size_bytes(out)
         assert isinstance(n, int) and 0 < n < 1024 * 1024
-        assert fits_broadcast(out)
+        assert Regime().broadcastable("cached", out)
     finally:
         out.unpersist()
     assert cm.lookupCachedData(src._jdf).isEmpty()
@@ -208,12 +216,10 @@ def test_job_label_restores_the_outer_label(spark):
 
 
 def test_regime_records_broadcast_hydration_decisions(spark):
-    """Regime.broadcastable gates like fits_broadcast and keeps each
-    decision with the measured bytes behind it, for the run's stats: a
-    measured small frame is taken, an unmeasured (lazy) one declined with
-    None, and a session threshold under the measured size declines."""
-    from hsip.barrier import Regime, session_conf
-
+    """Regime.broadcastable keeps each decision with the measured bytes
+    behind it, for the run's stats: a measured small frame is taken, an
+    unmeasured (lazy) one declined with None, and a session threshold
+    under the measured size declines."""
     regime = Regime()
     small = regime.reused(_keyed(spark, 500))
     try:

@@ -76,23 +76,21 @@ def _feats(spark):
     return featurize(_docs(spark), "doc_id", "text", CFG)
 
 
-def _lsh(spark, regime):
-    from hsip.lsh import lsh_candidates
+def _mh_sh(*channels):
+    def build(spark, regime):
+        from hsip.lsh import mh_sh_candidates
 
-    return lsh_candidates(_feats(spark).select("id", "sig"), CFG, regime)[0]
+        return mh_sh_candidates(_feats(spark), CFG, channels, regime)
 
-
-def _simhash(spark, regime):
-    from hsip.simhash import simhash_candidates
-
-    return simhash_candidates(_feats(spark).select("id", "simhash"), CFG, regime)[0]
+    return build
 
 
 def _verify_jaccard(spark, regime):
     from hsip.verify import verify_jaccard
 
     feats = _feats(spark)
-    return verify_jaccard(_lsh(spark, regime), feats.select("id", "shingles"), CFG, regime)
+    pairs = _mh_sh("minhash_lsh")(spark, regime)
+    return verify_jaccard(pairs, feats.select("id", "shingles"), CFG, regime)
 
 
 def _substr(spark, regime):
@@ -210,8 +208,9 @@ def _assign(spark, regime):
 
 
 BUILDERS = {
-    "lsh_candidates": _lsh,
-    "simhash_candidates": _simhash,
+    "mh_sh_candidates:minhash_lsh": _mh_sh("minhash_lsh"),
+    "mh_sh_candidates:simhash": _mh_sh("simhash"),
+    "mh_sh_candidates:minhash_lsh+simhash": _mh_sh("minhash_lsh", "simhash"),
     "verify_jaccard": _verify_jaccard,
     "substr_candidates+verify_substr": _substr,
     "incremental_verified_pairs": _incremental,

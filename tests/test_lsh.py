@@ -1,11 +1,13 @@
 """G3/G4: band arithmetic, bucket pairing, hot-bucket star mode, S-curve."""
 
 import numpy as np
+from pyspark.sql import Observation
 
 from hsip import schemas
 from hsip.barrier import Regime
 from hsip.config import DedupConfig
-from hsip.lsh import band_table, channel_bucket_table, lsh_candidates, pairs_from_buckets
+from hsip.lsh import band_table, mh_sh_candidates, pairs_from_buckets
+from hsip.metrics import observed
 from hsip.minhash import minhash_signatures_local
 
 
@@ -23,10 +25,12 @@ def test_identical_sigs_all_bands_collide(spark):
     df = spark.createDataFrame(
         [("a", sig), ("b", list(sig))], schema=schemas.MINHASH_SIGS
     )
+    hot = Observation()
     with Regime() as regime:
-        pairs, hot = lsh_candidates(df, cfg, regime)
+        pairs = mh_sh_candidates(df, cfg, ("minhash_lsh",), regime,
+                                 {"minhash_lsh": hot})
         assert [(r.a, r.b) for r in pairs.collect()] == [("a", "b")]
-        assert hot.count() == 0
+    assert observed(hot, "hot buckets").get("hot_buckets", 0) == 0
 
 
 def test_bucket_pairing_small(spark):
@@ -88,7 +92,7 @@ def test_s_curve_candidate_probability(spark):
         schema=schemas.MINHASH_SIGS,
     )
     with Regime() as regime:
-        pairs, _ = lsh_candidates(df, cfg, regime)
+        pairs = mh_sh_candidates(df, cfg, ("minhash_lsh",), regime)
         got = {(r.a, r.b) for r in pairs.collect()}
     hits = sum(
         1 for i in range(n_pairs) if (f"p{i:03d}_a", f"p{i:03d}_b") in got
@@ -101,9 +105,10 @@ def test_s_curve_candidate_probability(spark):
 
 def test_unified_channel_pairs_equal_separate(spark):
     """The fused mh+sh bucket expansion (one union table, dynamic channel
-    column) must produce exactly the per-channel union of the separate
-    lsh_candidates + simhash_candidates runs."""
-    from hsip.simhash import attach_simhash, simhash_candidates
+    column) must produce exactly the per-channel union of separate
+    expansions of the LSH band table and the Hamming probe-key table;
+    each one-channel request produces exactly its own channel's pairs."""
+    from hsip.simhash import hamming_block_table
     from hsip.textkernel import featurize
 
     cfg = DedupConfig(bucket_cap=64)
@@ -117,30 +122,23 @@ def test_unified_channel_pairs_equal_separate(spark):
     docs = spark.createDataFrame(rows, "doc_id string, text string")
     feats = featurize(docs, "doc_id", "text", cfg).cache()
     feats.count()
-    sigs = feats.select("id", "sig")
-    sims = feats.select("id", "simhash")
+
+    def triples(df):
+        return {(r.a, r.b, r.channel) for r in df.collect()}
+
+    sep_mh, _ = pairs_from_buckets(band_table(feats, cfg), cfg.bucket_cap)
+    sep_sh, _ = pairs_from_buckets(
+        hamming_block_table(feats.select("id", "simhash"), cfg), cfg.bucket_cap,
+        bucket_cols=("table_id", "key_hash"), channel="simhash")
+    sep = {"minhash_lsh": triples(sep_mh), "simhash": triples(sep_sh)}
 
     with Regime() as regime:
-        sep_mh, _ = lsh_candidates(sigs, cfg, regime)
-        sep_sh, _ = simhash_candidates(sims, cfg, regime)
-        sep = {(r.a, r.b, r.channel) for df in (sep_mh, sep_sh) for r in df.collect()}
-
-    both = channel_bucket_table(feats, cfg, ("minhash_lsh", "simhash")).cache()
-    both.count()
-    uni_pairs, _ = pairs_from_buckets(
-        both, cfg.bucket_cap, bucket_cols=("channel", "bkt_id", "bkt_hash"),
-        channel=None,
-    )
-    uni = {(r.a, r.b, r.channel) for r in uni_pairs.collect()}
-    assert uni == sep and uni, uni ^ sep
-    # one leg per requested channel
-    for ch, want in (("minhash_lsh", sep_mh), ("simhash", sep_sh)):
-        one, _ = pairs_from_buckets(
-            channel_bucket_table(feats, cfg, (ch,)), cfg.bucket_cap,
-            bucket_cols=("channel", "bkt_id", "bkt_hash"), channel=None,
-        )
-        assert {(r.a, r.b, r.channel) for r in one.collect()} == {
-            (r.a, r.b, r.channel) for r in want.collect()}
+        uni = triples(mh_sh_candidates(feats, cfg, ("minhash_lsh", "simhash"), regime))
+        one = {ch: triples(mh_sh_candidates(feats, cfg, (ch,), regime)) for ch in sep}
+    feats.unpersist()
+    want = sep["minhash_lsh"] | sep["simhash"]
+    assert uni == want and uni, uni ^ want
+    assert one == sep and all(one.values())
 
 
 def test_payload_passthrough_small_star_salt(spark):

@@ -2,13 +2,12 @@
 channel riding the standard banding machinery."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from hsip.barrier import Regime
 from hsip.config import DedupConfig
 from hsip.lsh import (
     lsh_candidate_prob,
-    lsh_candidates,
+    mh_sh_candidates,
     optimal_bands,
     tuned_config,
 )
@@ -68,9 +67,9 @@ def test_tuned_config_snaps_num_perm():
 
 
 def test_weighted_channel_rides_banding(spark):
-    """attach_weighted_minhash output flows through the SAME
-    band_table/pairs_from_buckets path (lsh_candidates channel param):
-    exact-multiset dups must pair; disjoint docs must not."""
+    """attach_weighted_minhash output flows through the SAME MinHash
+    channel of mh_sh_candidates as featurize's signatures: exact-multiset
+    dups must pair; disjoint docs must not."""
     from hsip.wminhash import attach_weighted_minhash
 
     rows = [
@@ -82,9 +81,9 @@ def test_weighted_channel_rides_banding(spark):
     cfg = DedupConfig(num_perm=32, lsh_bands=8, lsh_rows=4)
     sigs = attach_weighted_minhash(docs, "doc_id", "text", cfg)
     with Regime() as regime:
-        pairs, _ = lsh_candidates(sigs, cfg, regime, channel="wminhash")
+        pairs = mh_sh_candidates(sigs, cfg, ("minhash_lsh",), regime)
         got = {(r["a"], r["b"], r["channel"]) for r in pairs.collect()}
-    assert ("a1", "a2", "wminhash") in got
+    assert ("a1", "a2", "minhash_lsh") in got
     assert all({p[0], p[1]} != {"a1", "z1"} for p in got)
     assert all({p[0], p[1]} != {"a2", "z1"} for p in got)
 

@@ -3,11 +3,10 @@ Spark/local golden equality."""
 
 import numpy as np
 import pytest
-from pyspark.sql import types as T
 
-from hsip import schemas
 from hsip.config import DedupConfig
-from hsip.minhash import attach_minhash, minhash_signatures_local
+from hsip.minhash import minhash_signatures_local
+from hsip.textkernel import featurize
 
 
 def _sets_with_jaccard(rng, jaccard, size=400):
@@ -37,30 +36,36 @@ def test_unbiasedness(jacc, num_perm):
     assert abs(bias) < 3 * 0.5 / np.sqrt(num_perm * 8)  # 3 sigma
 
 
+def _random_docs(spark, rng, n_docs, n_words):
+    """Docs of random words from a 500-word vocabulary, with an empty and
+    a NULL text among them (both featurize to the whole-doc singleton)."""
+    vocab = [f"w{i}" for i in range(500)]
+    rows = [(str(i), " ".join(vocab[j] for j in rng.integers(0, 500, n_words)))
+            for i in range(n_docs)]
+    rows += [("empty", ""), ("null", None)]
+    return spark.createDataFrame(rows, "doc_id string, text string")
+
+
 def test_spark_matches_local(spark):
+    """featurize's sig is the local kernel run over its own shingles."""
     cfg = DedupConfig(num_perm=64, lsh_bands=64, lsh_rows=1)
-    rng = np.random.default_rng(3)
-    sets = [rng.integers(-(2**62), 2**62, size=50).tolist() for _ in range(20)]
-    df = spark.createDataFrame(
-        [(str(i), s) for i, s in enumerate(sets)], schema=schemas.SHINGLES
-    )
-    got = {r.id: list(r.sig) for r in attach_minhash(df, cfg).collect()}
-    want = minhash_signatures_local(sets, cfg)
-    for i in range(20):
-        assert got[str(i)] == list(want[i])
+    df = _random_docs(spark, np.random.default_rng(3), 20, 54)
+    rows = featurize(df, "doc_id", "text", cfg).collect()
+    want = minhash_signatures_local([list(r.shingles) for r in rows], cfg)
+    for r, w in zip(rows, want):
+        assert list(r.sig) == list(w), r.id
 
 
 def test_partitioning_invariance(spark):
     """Signatures identical under repartition(1) vs repartition(7)."""
     cfg = DedupConfig(num_perm=32, lsh_bands=32, lsh_rows=1)
-    rng = np.random.default_rng(5)
-    sets = [rng.integers(-(2**62), 2**62, size=30).tolist() for _ in range(50)]
-    df = spark.createDataFrame(
-        [(str(i), s) for i, s in enumerate(sets)], schema=schemas.SHINGLES
-    )
-    a = {r.id: tuple(r.sig) for r in attach_minhash(df.repartition(1), cfg).collect()}
-    b = {r.id: tuple(r.sig) for r in attach_minhash(df.repartition(7), cfg).collect()}
-    assert a == b
+    df = _random_docs(spark, np.random.default_rng(5), 50, 34)
+
+    def sigs(frame):
+        return {r.id: tuple(r.sig)
+                for r in featurize(frame, "doc_id", "text", cfg).collect()}
+
+    assert sigs(df.repartition(1)) == sigs(df.repartition(7))
 
 
 def test_identical_sets_identical_sigs():

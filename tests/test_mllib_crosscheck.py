@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from hsip.barrier import Regime
 from hsip.config import DedupConfig
-from hsip.lsh import lsh_candidates
+from hsip.lsh import mh_sh_candidates
 from hsip.textkernel import featurize
 from hsip.verify import verify_jaccard
 
@@ -81,7 +81,7 @@ def test_minhash_channel_matches_mllib_minhashlsh(spark):
     feats = featurize(docs, "doc_id", "text", cfg).cache()
     feats.count()
     with Regime() as regime:
-        cand, _stats = lsh_candidates(feats.select("id", "sig"), cfg, regime)
+        cand = mh_sh_candidates(feats.select("id", "sig"), cfg, ("minhash_lsh",), regime)
         ver = verify_jaccard(cand, feats.select("id", "shingles"), cfg, regime)
         ours = {(r["a"], r["b"])
                 for r in ver.filter("verdict").select("a", "b").collect()}

@@ -119,7 +119,7 @@ def test_latency_verify_hydration_broadcasts_known_small_features(spark):
     (hsip/barrier.py) of the pruned table; an unmeasured frame declines
     — fail-safe. The plan is printed with Catalyst's own auto-broadcast
     off, so the broadcast can only come from the gate's hint."""
-    from hsip.barrier import Regime, fits_broadcast
+    from hsip.barrier import Regime
     from hsip.verify import verify_jaccard_hamming
 
     cfg = DedupConfig(jaccard_threshold=0.5, hamming_d=3)
@@ -141,7 +141,7 @@ def test_latency_verify_hydration_broadcasts_known_small_features(spark):
             assert regime.hydration["verify_mh_sh"]["broadcast"]
         assert "BroadcastHashJoin" in p, p
         assert "SortMergeJoin" not in p, p
-        assert not fits_broadcast(raw)
+        assert not Regime().broadcastable("raw", raw)
     finally:
         feats.unpersist()
 

@@ -6,16 +6,22 @@ from pyspark.sql import functions as F
 
 from hsip.barrier import Regime
 from hsip.config import DedupConfig
-from hsip.simhash import (
-    attach_simhash,
-    hamming_block_table,
-    simhash_candidates,
-    simhash_local,
-)
+from hsip.lsh import mh_sh_candidates
+from hsip.simhash import hamming_block_table
+from hsip.textkernel import featurize
 
 
 def _hamming(a: int, b: int) -> int:
     return bin((a ^ b) & ((1 << 64) - 1)).count("1")
+
+
+def _simhash(df, cfg):
+    """featurize's (id, simhash) columns."""
+    return featurize(df, "doc_id", "text", cfg).select("id", "simhash")
+
+
+def _candidates(df, cfg, regime):
+    return mh_sh_candidates(df, cfg, ("simhash",), regime)
 
 
 def test_identical_text_identical_simhash(spark):
@@ -24,7 +30,7 @@ def test_identical_text_identical_simhash(spark):
         [(1, "the quick brown fox jumps"), (2, "the quick brown fox jumps")],
         "doc_id int, text string",
     )
-    rows = attach_simhash(df, "doc_id", "text", cfg).collect()
+    rows = _simhash(df, cfg).collect()
     assert rows[0].simhash == rows[1].simhash
 
 
@@ -46,7 +52,7 @@ def test_hamming_monotone_in_overlap(spark):
         [(0, " ".join(base)), (1, variant(0.05)), (2, variant(0.3)), (3, variant(0.9))],
         "doc_id int, text string",
     )
-    sh = {r.id: r.simhash for r in attach_simhash(df, "doc_id", "text", cfg).collect()}
+    sh = {r.id: r.simhash for r in _simhash(df, cfg).collect()}
     d = [_hamming(sh["0"], sh[str(i)]) for i in (1, 2, 3)]
     assert d[0] < d[1] < d[2]
 
@@ -74,11 +80,8 @@ def test_probing_guarantee_within_d(spark):
             flipped -= 2**64
         rows += [(f"p{i:02d}_a", base), (f"p{i:02d}_b", flipped)]
     df = spark.createDataFrame(rows, "id string, simhash long")
-    from hsip.simhash import simhash_candidates
-
     with Regime() as regime:
-        pairs, _ = simhash_candidates(df, cfg, regime)
-        got = {(r.a, r.b) for r in pairs.collect()}
+        got = {(r.a, r.b) for r in _candidates(df, cfg, regime).collect()}
     for i in range(30):
         assert (f"p{i:02d}_a", f"p{i:02d}_b") in got, f"pair {i} missed"
 
@@ -92,16 +95,15 @@ def test_near_identical_found_by_blocks(spark):
     df = spark.createDataFrame(
         [(1, text), (2, " ".join(toks))], "doc_id int, text string"
     )
-    sims = attach_simhash(df, "doc_id", "text", cfg)
     with Regime() as regime:
-        pairs, _ = simhash_candidates(sims, cfg, regime)
+        pairs = _candidates(_simhash(df, cfg), cfg, regime)
         assert {(r.a, r.b) for r in pairs.collect()} == {("1", "2")}
 
 
 def test_empty_text_zero(spark):
     cfg = DedupConfig()
     df = spark.createDataFrame([(1, ""), (2, None)], "doc_id int, text string")
-    rows = attach_simhash(df, "doc_id", "text", cfg).collect()
+    rows = _simhash(df, cfg).collect()
     assert all(r.simhash == 0 for r in rows)
 
 
@@ -176,7 +178,7 @@ def test_pipeline_emits_entropy_advisory(spark):
 
 
 def test_hot_bucket_salt_policy_is_honoured(spark):
-    """simhash_candidates passes cfg.hot_bucket_policy and cfg.seed to the
+    """mh_sh_candidates passes cfg.hot_bucket_policy and cfg.seed to the
     bucket expansion: under "salt", a hot bucket of identical fingerprints
     pairs all members within each salt sub-bucket
     (pmod(xxhash64(id, seed), ceil(size / cap))), not every member with
@@ -188,7 +190,26 @@ def test_hot_bucket_salt_policy_is_honoured(spark):
     salt = {r.id: r.s for r in df.select("id", salt_col).collect()}
     want = {(a, b) for a in ids for b in ids if a < b and salt[a] == salt[b]}
     with Regime() as regime:
-        pairs, _ = simhash_candidates(df, cfg, regime)
-        got = {(r.a, r.b) for r in pairs.collect()}
+        got = {(r.a, r.b) for r in _candidates(df, cfg, regime).collect()}
     assert got == want
     assert any(a != ids[0] for a, _ in got), "star pairs: hot policy ignored"
+
+
+def test_contract_query_is_the_pipelines_simhash_channel(spark):
+    """The simhash_hamming_pairs contract query returns exactly the
+    verified (a, b, hamming) edges of a SimHash-only pipeline run on the
+    same documents: one featurizer and one candidate builder, so the
+    contract pins the fingerprints every run computes."""
+    import __spark_entry__ as E
+    from hsip.pipeline import run_documents
+    from tests.test_semantic_dedup import SF_DIR
+
+    out = E.queries()["simhash_hamming_pairs"](spark, SF_DIR)
+    got = sorted(tuple(r) for r in out.collect())
+    out.unpersist()
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    res = run_documents(spark, docs, "doc_id", "text", DedupConfig(),
+                        channels=("simhash",))
+    want = sorted(tuple(r) for r in res.verified.filter("verdict")
+                  .select("a", "b", "hamming").collect())
+    assert got == want and got

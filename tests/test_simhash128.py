@@ -3,23 +3,16 @@
 
 Pins: lane-0 compatibility with the 64-bit fingerprint, the probing
 guarantee over lane-local blocks, the array-lane Hamming verify
-expression, end-to-end pipeline equality on planted near-dups through
-BOTH featurization paths (fused kernel and SQL+attach), and the entropy
-advisory reading 80-bit keys.
+expression, end-to-end pipeline equality on planted near-dups with the
+SimHash channel alone and with all three, and the entropy advisory
+reading 80-bit keys.
 """
-
-import numpy as np
-import pytest
-from pyspark.sql import functions as F
 
 from hsip.barrier import Regime
 from hsip.config import DedupConfig
-from hsip.simhash import (
-    attach_simhash,
-    hamming_block_table,
-    probe_key_entropy,
-    simhash_candidates,
-)
+from hsip.lsh import mh_sh_candidates
+from hsip.simhash import hamming_block_table, probe_key_entropy
+from hsip.textkernel import featurize
 
 CFG64 = DedupConfig()
 CFG128 = DedupConfig(simhash_bits=128)
@@ -29,13 +22,18 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id int, text string")
 
 
+def _simhash(df, cfg):
+    """featurize's (id, simhash) columns."""
+    return featurize(df, "doc_id", "text", cfg).select("id", "simhash")
+
+
 def test_lane0_matches_64bit_fingerprint(spark):
     """Widening to 128 bits must not move the low lane: lane 0 votes over
-    the same xxhash64(token, seed) hashes as the 64-bit kernel."""
+    the same token hashes as the 64-bit kernel."""
     text = " ".join(f"tok{i}" for i in range(150))
     df = _docs(spark, [(1, text), (2, text + " extra tail")])
-    r64 = {r.id: r.simhash for r in attach_simhash(df, "doc_id", "text", CFG64).collect()}
-    r128 = {r.id: r.simhash for r in attach_simhash(df, "doc_id", "text", CFG128).collect()}
+    r64 = {r.id: r.simhash for r in _simhash(df, CFG64).collect()}
+    r128 = {r.id: r.simhash for r in _simhash(df, CFG128).collect()}
     for i in ("1", "2"):
         assert len(r128[i]) == 2
         assert r128[i][0] == r64[i]
@@ -48,8 +46,7 @@ def test_block_table_geometry_128(spark):
     keys must cover C(8,5)=56 tables, and reconstructing the fingerprint
     from the block slices must round-trip both lanes."""
     df = _docs(spark, [(1, " ".join(f"w{i}" for i in range(120)))])
-    sims = attach_simhash(df, "doc_id", "text", CFG128)
-    blocks = hamming_block_table(sims, CFG128)
+    blocks = hamming_block_table(_simhash(df, CFG128), CFG128)
     rows = blocks.collect()
     assert {r.table_id for r in rows} == set(range(56))
     # every row keeps the full lane array as payload
@@ -58,21 +55,21 @@ def test_block_table_geometry_128(spark):
 
 def test_probing_guarantee_within_d_128(spark):
     """Two 128-bit fingerprints within Hamming distance d must share a
-    probe key (pigeonhole over lane-local blocks) and verify as a pair."""
+    probe key (pigeonhole over lane-local blocks) and verify as a pair:
+    featurize's fingerprint of a doc, and a copy with d bits flipped
+    across both lanes."""
+    from hsip.verify import verify_hamming
+
     text = " ".join(f"tok{i}" for i in range(200))
-    toks = text.split()
-    toks[5] = "xxx"  # small perturbation -> small Hamming distance
-    df = _docs(spark, [(1, text), (2, " ".join(toks))])
-    sims = attach_simhash(df, "doc_id", "text", CFG128)
-    a, b = [r.simhash for r in sims.orderBy("id").collect()]
-    d = sum(
-        bin((la ^ lb) & (2**64 - 1)).count("1") for la, lb in zip(a, b)
-    )
-    if d > CFG128.hamming_d:
-        pytest.skip(f"perturbation landed at distance {d} > d")
+    (fp,) = [r.simhash for r in _simhash(_docs(spark, [(1, text)]), CFG128).collect()]
+    near = [fp[0] ^ (1 << 5), fp[1] ^ (1 << 17) ^ (1 << 40)]
+    assert CFG128.hamming_d == 3
+    sims = spark.createDataFrame(
+        [("1", fp), ("2", near)], "id string, simhash array<bigint>")
     with Regime() as regime:
-        pairs, _ = simhash_candidates(sims, CFG128, regime)
-        assert {(r.a, r.b) for r in pairs.collect()} == {("1", "2")}
+        pairs = mh_sh_candidates(sims, CFG128, ("simhash",), regime)
+        got = verify_hamming(pairs, CFG128).collect()
+    assert [(r.a, r.b, r.hamming, r.verdict) for r in got] == [("1", "2", 3, True)]
 
 
 def test_hamming_verify_array_lanes(spark):
@@ -94,10 +91,11 @@ def test_hamming_verify_array_lanes(spark):
 
 def test_pipeline_e2e_128_both_featurize_paths(spark):
     """run_documents at simhash_bits=128 clusters planted near-identical
-    docs through BOTH physical featurizations: simhash-only (SQL+attach
-    path) and all-channels (fused mapInArrow kernel). The planted pair
-    differs only by case + whitespace (normalizer-invariant -> Hamming 0
-    on every lane in both paths — a one-token edit flips ~7 of 128 bits
+    docs with the SimHash channel alone and with all three channels, both
+    through featurize -> mh_sh_candidates (the name predates the retired
+    SQL featurizer). The planted pair differs only by case + whitespace
+    (normalizer-invariant -> Hamming 0 on every lane in both runs — a
+    one-token edit flips ~7 of 128 bits
     in expectation, past d=3, so nonzero-distance recall is pinned by the
     skip-guarded probing test above, not here). This test pins the
     wiring: array fingerprints through blocks -> union -> lane-aware

@@ -53,7 +53,7 @@ def explain_eager_transcripts(spark) -> None:
     from hsip.barrier import Regime
     from hsip.config import DedupConfig
     from hsip.fixtures.gen import gen_transcripts
-    from hsip.lsh import channel_bucket_table, pairs_from_buckets
+    from hsip.lsh import mh_sh_candidates
     from hsip.reassemble import dedupe_turn_versions, reassemble
     from hsip.suffixes import fingerprint_table, substr_candidates, verify_substr
     from hsip.textkernel import featurize
@@ -67,14 +67,9 @@ def explain_eager_transcripts(spark) -> None:
         base = regime.reused(reassemble(dedupe_turn_versions(turns)).select(
             F.col("conv_id").alias("id"), F.col("doc_text").alias("text")))
         feats = regime.reused(featurize(base, "id", "text", cfg))
-        both = regime.reused(
-            channel_bucket_table(feats, cfg, ("minhash_lsh", "simhash")))
-        pairs, _ = pairs_from_buckets(
-            both, cfg.bucket_cap, bucket_cols=("channel", "bkt_id", "bkt_hash"),
-            channel=None, hot_policy=cfg.hot_bucket_policy, salt_seed=cfg.seed,
-            payload_cols=("simhash",), regime=regime,
-            hot_counts={"minhash_lsh": Observation(), "simhash": Observation()},
-        )
+        pairs = mh_sh_candidates(
+            feats, cfg, ("minhash_lsh", "simhash"), regime,
+            {"minhash_lsh": Observation(), "simhash": Observation()})
         explain_to(pairs, "eager_candidates_mh_sh")
         explain_to(V.verify_jaccard_hamming(pairs, feats, cfg, regime),
                    "eager_verify_mh_sh")
