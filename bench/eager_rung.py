@@ -3,19 +3,27 @@
 line: wall, stage walls, and a label-exact checksum of the cluster table
 for cross-tree comparison.
 
-    python bench/eager_rung.py [n_base] [--trace] [--conf KEY=VALUE ...] [--work DIR]
+    python bench/eager_rung.py [n_base] [--master MASTER] [--collapse-exact]
+        [--trace] [--conf KEY=VALUE ...] [--work DIR]
 
 ``--conf`` (repeatable) adds a Spark setting to the session: one arm of an
-A/B. Run the arms in alternating fresh processes. ``--work`` holds the
-cached corpus and the event log (default ``.bench_cache/`` in the
-checkout). ``--trace`` turns on the benchmark's rolled event log
-(``perfbench/run.py`` ``event_log_conf``), stops the session after the run
-so the log is complete, and adds the per-stage ledger of the jobs submitted
-during the run (``perfbench/ledger.py``) to the line; the exit code is
-nonzero when that ledger cannot be trusted (``ledger_problems``).
+A/B. Run the arms in alternating fresh processes. ``--master`` defaults to
+``local[SPARK_GRAFT_CPUS]`` (else the cores this process may run on); a
+``local-cluster[workers,cores,MB]`` master gets hsip shipped as a
+``--py-files`` zip (``tools/build_pyfiles.py``), and its executors' memory
+comes from ``--conf spark.executor.memory=...`` (at most the worker's MB).
+``--collapse-exact`` runs the exact-collapse pre-pass (DEPLOYMENT.md).
+``--work`` holds the cached corpus and the event log (default
+``.bench_cache/`` in the checkout). ``--trace`` turns on the benchmark's
+rolled event log (``perfbench/run.py`` ``event_log_conf``) and adds the
+per-stage ledger of the jobs submitted during the run
+(``perfbench/ledger.py``) to the line; the exit code is nonzero when that
+ledger cannot be trusted (``ledger_problems``).
 
-The local master's width is ``SPARK_GRAFT_CPUS``, else the cores this
-process may run on.
+N -> kN scaling: run the rung at two masters (same ``n_base`` for strong
+scaling, k times the ``n_base`` at kN for weak scaling), several
+alternating runs each, collect each level's lines in one file and pass the
+two files to ``tools/bench_compare.py``, which prints ``efficiency``.
 """
 
 from __future__ import annotations
@@ -23,7 +31,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import shutil
+import statistics
 import sys
 import time
 
@@ -54,6 +64,9 @@ def conf_item(text: str) -> tuple[str, str]:
 def parse_args(argv: list[str] | None) -> argparse.Namespace:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("n_base", nargs="?", type=int, default=20000)
+    p.add_argument("--master", help="Spark master (default local[SPARK_GRAFT_CPUS])")
+    p.add_argument("--collapse-exact", action="store_true",
+                   help="run with DedupConfig(collapse_exact=True)")
     p.add_argument("--trace", action="store_true",
                    help="add the event-log ledger of the run")
     p.add_argument("--conf", type=conf_item, action="append", default=[],
@@ -61,6 +74,64 @@ def parse_args(argv: list[str] | None) -> argparse.Namespace:
     p.add_argument("--work", default=os.path.join(ROOT, ".bench_cache"),
                    help="corpus cache and event-log directory")
     return p.parse_args(argv)
+
+
+def master_cores(master: str) -> int:
+    """Task slots of a ``local[n]`` or ``local-cluster[workers,cores,MB]``
+    master."""
+    m = re.fullmatch(r"local\[(\d+)\]", master)
+    if m:
+        return int(m.group(1))
+    m = re.fullmatch(r"local-cluster\[(\d+),\s*(\d+),\s*\d+\]", master)
+    if m:
+        return int(m.group(1)) * int(m.group(2))
+    raise ValueError(f"cannot count the cores of master {master!r}")
+
+
+def efficiency(lo: list[dict], hi: list[dict]) -> dict:
+    """N -> kN scaling efficiency from the rung lines of two levels.
+
+    Each level is one or more lines of one master, corpus, config and
+    label checksum; its wall is the median. k is the ratio of the masters'
+    cores. Strong scaling (same ``n_base``) requires equal label checksums;
+    weak scaling requires ``n_base`` to grow by exactly k. ``efficiency`` is
+    turns/s per core at kN over turns/s per core at N; ``efficiency_work``
+    is the same ratio over ``verified_candidates``/s, which tells a wall
+    ratio that fell because the work grew faster than the corpus from one
+    that fell because the engine scaled badly.
+    """
+    def level(lines: list[dict]) -> tuple[dict, float]:
+        keys = {(r["master"], r["n_base"], r.get("collapse_exact"), r["label_checksum"])
+                for r in lines}
+        if len(keys) != 1:
+            raise ValueError(f"a level's lines must share master, n_base, "
+                             f"collapse_exact and label_checksum, got {sorted(keys)}")
+        return lines[0], statistics.median(r["wall_s"] for r in lines)
+
+    (a, wall_a), (b, wall_b) = level(lo), level(hi)
+    k = master_cores(b["master"]) / master_cores(a["master"])
+    if a["n_base"] == b["n_base"]:
+        mode = "strong"
+        if a["label_checksum"] != b["label_checksum"]:
+            raise ValueError(f"strong levels label differently: "
+                             f"{a['label_checksum']} vs {b['label_checksum']}")
+    elif b["n_base"] == k * a["n_base"]:
+        mode = "weak"
+    else:
+        raise ValueError(f"corpus ratio {b['n_base'] / a['n_base']:g} is not "
+                         f"the core ratio {k:g}")
+
+    def per_core(key: str) -> float:
+        return (b[key] / wall_b) / (k * a[key] / wall_a)
+
+    return {
+        "mode": mode, "core_ratio": k,
+        "masters": [a["master"], b["master"]], "n_base": [a["n_base"], b["n_base"]],
+        "runs": [len(lo), len(hi)], "median_wall_s": [wall_a, wall_b],
+        "label_checksums": [a["label_checksum"], b["label_checksum"]],
+        "efficiency": round(per_core("n_turns"), 3),
+        "efficiency_work": round(per_core("verified_candidates"), 3),
+    }
 
 
 def ledger_fields(log_dir: str, window_ms: tuple[float, float],
@@ -99,6 +170,7 @@ def main(argv: list[str] | None = None) -> int:
     from hsip.session import get_spark
 
     path = ensure_corpus(args.work, args.n_base)
+    master = args.master or f"local[{cpus}]"
     conf = dict(args.conf)
     log_dir = os.path.join(args.work, "eventlog")
     if args.trace:
@@ -107,26 +179,36 @@ def main(argv: list[str] | None = None) -> int:
         shutil.rmtree(log_dir, ignore_errors=True)
         os.makedirs(log_dir)
         conf.update(event_log_conf(log_dir))
-    spark = get_spark(app_name="eager-rung", master=f"local[{cpus}]", extra_conf=conf)
-    turns = spark.read.schema(schemas.TRANSCRIPTS).parquet(path)
-    n_turns = turns.cache().count()
-    t0 = time.time()
-    res = run_transcripts(spark, turns, DedupConfig())
-    t1 = time.time()
-    chk = res.clusters.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.xxhash64("id", "cluster_id").cast("decimal(38,0)")
-        ).cast("string").alias("h"),
-    ).collect()[0]
+    spark = get_spark(app_name="eager-rung", master=master, extra_conf=conf)
+    try:
+        if master.startswith("local-cluster["):
+            # executor processes import hsip only from what is shipped to them
+            from tools.build_pyfiles import build
+
+            spark.sparkContext.addPyFile(build(os.path.join(args.work, "hsip.zip")))
+        turns = spark.read.schema(schemas.TRANSCRIPTS).parquet(path)
+        n_turns = turns.cache().count()
+        t0 = time.time()
+        res = run_transcripts(spark, turns, DedupConfig(collapse_exact=args.collapse_exact))
+        t1 = time.time()
+        chk = res.clusters.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(
+                F.xxhash64("id", "cluster_id").cast("decimal(38,0)")
+            ).cast("string").alias("h"),
+        ).collect()[0]
+    finally:
+        # writes the application-end event, closes the log and, on a
+        # local-cluster master, stops the executor processes
+        spark.stop()
     out = {
+        "master": master, "collapse_exact": args.collapse_exact,
         "n_base": args.n_base, "n_turns": n_turns, "wall_s": round(t1 - t0, 3),
         "stage_walls": res.stats.get("stage_walls", {}),
         "n_rows": chk["n"], "label_checksum": chk["h"],
         "duplicate_pairs": res.stats.get("duplicate_pairs"),
         "verified_candidates": res.stats.get("verified_candidates"),
     }
-    spark.stop()  # writes the application-end event and closes the log
     if args.trace:
         out.update(ledger_fields(log_dir, (t0 * 1e3, t1 * 1e3), res.stats, t1 - t0))
     print(json.dumps(out))

@@ -48,13 +48,12 @@ def fingerprint_str(values) -> str:
 
 class Checkpointer:
     def __init__(self, catalog: Catalog, run_id: str, fingerprint: str,
-                 enabled: bool = True, reuse: bool = True):
+                 reuse: bool = True):
         """``reuse=False`` (jobs run without --resume) recomputes every
         stage, overwriting stale checkpoints for the run_id."""
         self.catalog = catalog
         self.run_id = run_id
         self.fingerprint = fingerprint
-        self.enabled = enabled
         self.reuse = reuse
         self.skipped: list[str] = []
         self.computed: list[str] = []
@@ -76,8 +75,6 @@ class Checkpointer:
 
     def materialize(self, stage: str, build: Callable[[], DataFrame]) -> DataFrame:
         """Return the stage output, recomputing only if not checkpointed."""
-        if not self.enabled:
-            return build()
         if self.done(stage):
             self.skipped.append(stage)
             return self.catalog.read(self._ident(stage))

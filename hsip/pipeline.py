@@ -54,13 +54,16 @@ class PipelineResult:
 
     - ``stage_walls``: {stage: driver-observed seconds};
     - ``probe_key_entropy``: the simhash probe-key sizing check (simhash
-      runs only);
+      runs only; the metrics table has its bits under stage
+      ``candidates_mh_sh``, keys ``simhash.probe_key_bits`` and
+      ``simhash.probe_key_bits_needed``);
     - ``n_docs``, ``verified_candidates``, ``duplicate_pairs``,
       ``dup_pairs_by_channel``: work counters over ``verified``;
     - ``caps``: {metric stage: {key: count}} for every cap a computed
-      stage hit, 0 included: ``hot_buckets_star_paired`` per mh/sh
-      channel, ``hot_fingerprints_star_paired`` and
-      ``anchor_truncated_pairs`` for substr, and the span stages'
+      stage hit, 0 included: ``<channel>.hot_buckets_star_paired`` per
+      requested mh/sh channel under ``candidates_mh_sh``,
+      ``hot_fingerprints_star_paired`` and ``anchor_truncated_pairs``
+      under ``substr_candidates``, and the span stages'
       ``groups_sub_bucketed`` and ``max_group_bytes``. Stages a resume
       skipped record none;
     - ``broadcast_hydration``: {verify stage: {"broadcast": taken or
@@ -189,11 +192,7 @@ def run_documents(
     fp = cfg.fingerprint()
     if use_ckpt:
         fp = f"{fp}-{fingerprint_str(seen)}"
-    ckpt = (
-        Checkpointer(catalog, run_id, fp, enabled=use_ckpt, reuse=resume)
-        if use_ckpt
-        else None
-    )
+    ckpt = Checkpointer(catalog, run_id, fp, reuse=resume) if use_ckpt else None
     # in memory without a warehouse: both modes record the same counts
     rec = Recorder(spark, catalog, run_id)
 
@@ -241,10 +240,9 @@ def run_documents(
 
             entropy = probe_key_entropy(cfg, n_docs)
             stats["probe_key_entropy"] = entropy
-            rec.metric("simhash_candidates", "probe_key_bits", entropy["key_bits"])
-            rec.metric(
-                "simhash_candidates", "probe_key_bits_needed", entropy["needed_bits"]
-            )
+            rec.metric("candidates_mh_sh", "simhash.probe_key_bits", entropy["key_bits"])
+            rec.metric("candidates_mh_sh", "simhash.probe_key_bits_needed",
+                       entropy["needed_bits"])
             if not entropy["ok"]:
                 import warnings
 
@@ -319,8 +317,8 @@ def run_documents(
                 # a count per requested channel, so a 0 reads as "measured,
                 # none hot" rather than "not measured"; observed by the
                 # action that runs the pairs (checkpoint write or verify)
-                hot_counts = {ch: rec.observation(f"{ch}_candidates",
-                                                  "hot_buckets_star_paired")
+                hot_counts = {ch: rec.observation("candidates_mh_sh",
+                                                  f"{ch}.hot_buckets_star_paired")
                               for ch in mh_sh}
                 return mh_sh_candidates(feats, cfg, mh_sh, regime, hot_counts)
 
@@ -338,10 +336,10 @@ def run_documents(
                 cands, feats, cfg, regime), swept=True)
 
         def _sub_channel() -> DataFrame:
-            # materialized: the bucket expansion filters this table along two
-            # branches
+            # lazy: substr_candidates barriers its fp_hash repartition of this
+            # table, its only consumer (a checkpointed run still writes it)
             fps = stage("substr_fps", lambda: fingerprint_table(chan_base, "id", "text", cfg),
-                        swept=True)
+                        reuse=False)
 
             def build_substr():
                 pairs, _ = substr_candidates(

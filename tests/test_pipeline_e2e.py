@@ -324,8 +324,8 @@ def test_hot_bucket_metric_recorded_for_every_requested_channel(spark, tmp_path)
                         channels=("minhash_lsh",), warehouse=wh, run_id="hot")
     rows = {(r.stage, r.key): r.value
             for r in Catalog(spark, wh).read("metrics").collect()}
-    assert rows[("minhash_lsh_candidates", "hot_buckets_star_paired")] == 0
-    assert ("simhash_candidates", "hot_buckets_star_paired") not in rows
+    assert rows[("candidates_mh_sh", "minhash_lsh.hot_buckets_star_paired")] == 0
+    assert ("candidates_mh_sh", "simhash.hot_buckets_star_paired") not in rows
     assert rows[("pipeline", "n_docs")] == res.stats["n_docs"] == 12
     assert rows[("pipeline", "n_verified_edges")] == res.stats["duplicate_pairs"]
 
@@ -593,8 +593,10 @@ def test_cap_counts_identical_in_ephemeral_and_warehouse_runs(spark, tmp_path):
         sub_pairs, sub_hot = substr_candidates(
             fingerprint_table(docs, "id", "text", cfg), cfg, regime)
         want = {
-            "minhash_lsh_candidates": {"hot_buckets_star_paired": n_hot["minhash_lsh"]},
-            "simhash_candidates": {"hot_buckets_star_paired": n_hot["simhash"]},
+            "candidates_mh_sh": {
+                "minhash_lsh.hot_buckets_star_paired": n_hot["minhash_lsh"],
+                "simhash.hot_buckets_star_paired": n_hot["simhash"],
+            },
             "substr_candidates": {
                 "hot_fingerprints_star_paired": sub_hot.count(),
                 "anchor_truncated_pairs": sub_pairs.filter(

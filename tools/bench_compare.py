@@ -3,7 +3,7 @@ benchmark outputs.
 
 Usage: python tools/bench_compare.py OLD NEW [--update-md]
 
-OLD and NEW are either
+OLD and NEW are one of
 
 - ``bench.py`` JSONs (VERDICT.md r1 item 10): a per-query table, and
   ``--update-md`` rewrites the block between ``<!-- bench-delta:begin -->``
@@ -17,7 +17,11 @@ OLD and NEW are either
   per-layer ledger. Each row: old and new median with unit, the delta in
   percent, and the old arm's quartile range, so a delta inside it reads
   as noise. ``better`` (lower/higher) and the bound come from
-  BENCHMARK.json when it names the metric.
+  BENCHMARK.json when it names the metric; or
+- ``bench/eager_rung.py`` output: files of its result lines, one file per
+  scaling level (N, then kN). Prints ``eager_rung.efficiency`` of the two
+  levels as one JSON line: strong or weak, per-level median walls, label
+  checksums, efficiency and work-normalized efficiency.
 
 Reading the deltas: the host is shared (±2x run-to-run noise on small
 queries — see BENCH/BASELINE.md) so single-digit-percent moves are
@@ -56,8 +60,8 @@ def delta_table(old: dict, new: dict, old_name: str, new_name: str) -> str:
     return "\n".join(lines)
 
 
-def result_lines(path: str) -> list[dict]:
-    """The ``perfbench/run.py`` result lines in ``path``, in order."""
+def json_lines(path: str, keep) -> list[dict]:
+    """The JSON object lines in ``path`` that ``keep`` accepts, in order."""
     out = []
     with open(path) as f:
         for line in f:
@@ -68,9 +72,19 @@ def result_lines(path: str) -> list[dict]:
                 d = json.loads(line)
             except ValueError:
                 continue
-            if isinstance(d.get("metrics"), dict):
+            if keep(d):
                 out.append(d)
     return out
+
+
+def result_lines(path: str) -> list[dict]:
+    """The ``perfbench/run.py`` result lines in ``path``, in order."""
+    return json_lines(path, lambda d: isinstance(d.get("metrics"), dict))
+
+
+def rung_lines(path: str) -> list[dict]:
+    """The ``bench/eager_rung.py`` result lines in ``path``, in order."""
+    return json_lines(path, lambda d: "master" in d and "label_checksum" in d)
 
 
 def _declared() -> dict[str, dict]:
@@ -138,6 +152,13 @@ def main():
     old_runs, new_runs = result_lines(old_p), result_lines(new_p)
     if old_runs and new_runs:
         print(metrics_table(old_runs, new_runs, name(old_p), name(new_p)))
+        return
+    old_rungs, new_rungs = rung_lines(old_p), rung_lines(new_p)
+    if old_rungs and new_rungs:
+        sys.path.insert(0, os.path.join(REPO, "bench"))
+        from eager_rung import efficiency
+
+        print(json.dumps(efficiency(old_rungs, new_rungs)))
         return
 
     def load(p):
